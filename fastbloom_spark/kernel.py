@@ -389,36 +389,38 @@ _TAG_RAW = b"R"
 _TAG_ZLIB = b"Z"
 
 
+def _envelope(raw: bytes, min_len: int, min_ratio: int, level: int) -> bytes:
+    """Tag ``raw`` as ``R`` + raw, or as ``Z`` + zlib when it is at least
+    ``min_len`` bytes and zlib shrinks it at least ``min_ratio`` times:
+    below that ratio the merge-side decompress costs more than the
+    transport it saves."""
+    if len(raw) >= min_len:
+        z = zlib.compress(raw, level)
+        if len(z) * min_ratio < len(raw):
+            return _TAG_ZLIB + z
+    return _TAG_RAW + raw
+
+
 def encode_words(words: np.ndarray, level: int = 1) -> bytes:
     """Shuffle/checkpoint payload codec for bit-vector state.
 
     Partial sketches are sparse (per-partition density ~ n*k / (P*m)), so a
     cheap zlib pass typically shrinks them 5-20x — the merge stages are
     transport-bound, not CPU-bound, so this is a straight win. Dense (final)
-    sketches stay raw. One tag byte distinguishes; :func:`decode_words`
-    inverts either form.
+    sketches stay raw (zlib is tried from 64 KiB and kept at >=5x). One tag
+    byte distinguishes; :func:`decode_words` inverts either form.
     """
-    raw = words.astype("<u8", copy=False).tobytes()
-    if len(raw) >= 65536:
-        z = zlib.compress(raw, level)
-        # keep zlib only when genuinely sparse (>=5x): at moderate density
-        # the decompress cost on the merge side exceeds the transport saving
-        if len(z) * 5 < len(raw):
-            return _TAG_ZLIB + z
-    return _TAG_RAW + raw
+    return _envelope(words.astype("<u8", copy=False).tobytes(), 65536, 5,
+                     level)
 
 
 def decode_words(buf: bytes, copy: bool = True) -> np.ndarray:
     """Inverse of :func:`encode_words`. With ``copy=False`` returns a
     read-only view over the buffer (merge paths only read)."""
     b = bytes(buf)
-    tag = b[:1]
-    if tag == _TAG_ZLIB:
-        arr = np.frombuffer(zlib.decompress(b[1:]), dtype="<u8")
-    elif tag == _TAG_RAW:
-        arr = np.frombuffer(b, dtype="<u8", offset=1)
-    else:
-        raise ValueError(f"unknown sketch payload tag {tag!r}")
+    if b[:1] not in (_TAG_RAW, _TAG_ZLIB):
+        raise ValueError(f"unknown sketch payload tag {b[:1]!r}")
+    arr = np.frombuffer(decode_state(b), dtype="<u8")
     return arr.astype(U64) if copy else arr.view(U64)
 
 
@@ -426,32 +428,34 @@ def encode_state(raw: bytes, level: int = 1) -> bytes:
     """Transport envelope for ANY serialized sketch state (the generic
     sibling of :func:`encode_words`, VERDICT r04 #6): near-empty partial
     states (HLL registers, CMS counters of a group seen on one partition)
-    are overwhelmingly zero bytes, so a cheap zlib pass shrinks the
-    map-side shuffle from 2^p bytes per (group, partition) to KBs at high
-    group counts. Tags: ``R`` = raw payload follows, ``Z`` = zlib. The
-    sketch impls' own magic bytes (H/C/K/T) never collide with the tags,
-    so :func:`decode_state` can pass bare impl buffers through untouched —
-    final outputs stay in each sketch's canonical self-describing format.
+    are overwhelmingly zero bytes, so a cheap zlib pass (from 1 KiB, kept
+    at >=3x) shrinks the map-side shuffle from 2^p bytes per (group,
+    partition) to KBs at high group counts. Tags: ``R`` = raw payload
+    follows, ``Z`` = zlib. The sketch impls' own magic bytes (H/C/K/T/S)
+    never collide with the tags, so :func:`decode_state` can pass bare impl
+    buffers through untouched — final outputs stay in each sketch's
+    canonical self-describing format. The mirror case: a buffer that
+    already carries a tag (an :func:`encode_words` payload, Bloom's
+    canonical format) passes through unchanged, never enveloped or
+    zlib-tried twice.
     """
-    if len(raw) >= 1024:
-        z = zlib.compress(raw, level)
-        # keep zlib only when genuinely sparse (>=3x): at real density the
-        # merge-side decompress cost exceeds the transport saving
-        if len(z) * 3 < len(raw):
-            return _TAG_ZLIB + z
-    return _TAG_RAW + raw
+    if raw[:1] in (_TAG_RAW, _TAG_ZLIB):
+        return raw
+    return _envelope(raw, 1024, 3, level)
 
 
-def decode_state(buf: bytes) -> bytes:
+def decode_state(buf: bytes) -> bytes | memoryview:
     """Inverse of :func:`encode_state`; bare (un-enveloped) impl buffers
     pass through unchanged, so merge surfaces accept both partial rows
-    (enveloped) and final sketch rows (canonical format)."""
+    (enveloped) and final sketch rows (canonical format). A raw payload
+    comes back as a zero-copy read-only view (a multi-MB Bloom partial is
+    not copied just to drop its tag byte)."""
     b = bytes(buf)
     tag = b[:1]
     if tag == _TAG_ZLIB:
-        return zlib.decompress(b[1:])
+        return zlib.decompress(memoryview(b)[1:])
     if tag == _TAG_RAW:
-        return b[1:]
+        return memoryview(b)[1:]
     return b
 
 

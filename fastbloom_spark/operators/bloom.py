@@ -1,28 +1,26 @@
-"""Distributed Bloom operators — partial build, associative merge, probe, semi-join.
+"""Distributed Bloom operators — the Bloom impl of the sketch protocol, its
+planned global build, probe, SQL registration and semi-join.
 
-Topology (SURVEY.md §3.3, §4):
-
-* **build** is map-side: each input partition folds its Arrow batches into a
-  private numpy bit array inside ``mapInPandas`` — the share-nothing analogue
-  of the reference's ``AtomicBloomFilter`` concurrent build (fastbloom
-  ``src/lib.rs:383-390``); no shared state, no contention, zero row shuffle.
-* **merge** shuffles only fixed-size sketch rows (m/8 bytes each), never rows:
-  a two-phase bucketed OR-reduce (groupBy(bucket) → groupBy(key)), the
-  DataFrame rendering of ``treeAggregate`` — depth-2 fan-in keeps any single
-  task's merge input bounded at ``fanin`` sketches regardless of the input
-  partition count. OR is associative + commutative word-wise (``src/
+* **build / merge / agg / rollup** run on the one mergeable-aggregator
+  topology of ``operators/sketch_agg.py``: :class:`BloomSketch` plugs the
+  filter in. Each input partition folds its Arrow batches into a private
+  numpy bit array inside ``mapInPandas`` — the share-nothing analogue of
+  the reference's ``AtomicBloomFilter`` concurrent build (fastbloom
+  ``src/lib.rs:383-390``); merges shuffle only m/8-byte sketch rows, never
+  rows. OR is associative + commutative word-wise (``src/
   bit_vector.rs:98-104``), so the result is bitwise-identical for every
-  partition count, ordering, and merge tree.
+  partition count, ordering, and merge tree. The filter geometry (m, k,
+  seed, layout, digest) rides as group-constant columns in every row.
+* **global build** (:func:`bloom_build`) adds the planner's choices
+  (``plans/planner.py``): build parallelism P*, coalesce vs digest shuffle,
+  and the driver fold vs the range-sharded merge for above-budget filters.
 * **probe** broadcasts the finished filter (tiny) and runs the vectorized
   short-circuit kernel inside a scalar pandas UDF; registered for SQL.
-* **skew**: per-partition partials absorb row-count skew on the map side
-  (a hot key's rows never shuffle — only its per-partition sketches do),
-  which is the two-phase/salted-merge the north rule asks for; the bucket
-  phase additionally caps merge fan-in for high-cardinality keys.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -45,52 +43,62 @@ from ..kernel import (
     words_from_bytes,
 )
 from ..local import BloomFilter
-
-#: sketch-row payload columns appended after the group keys
-SKETCH_FIELDS = ("m long, k int, seed long, layout string, "
-                 "digest string, rows_seen long, sketch binary")
+from .sketch_agg import (_collect_fold, _fold, _partials, _prepare,
+                         _rollup, sketch_agg, sketch_merge)
 
 
-def _key_schema(df: DataFrame, key_cols: Sequence[str]) -> str:
-    by_name = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return ", ".join(f"`{k}` {by_name[k]}" for k in key_cols)
+class BloomSketch:
+    """A Bloom filter as a :mod:`~fastbloom_spark.operators.sketch_agg`
+    impl. State is the u64 word array; payloads use the
+    :func:`~fastbloom_spark.kernel.encode_words` codec, whose R/Z tag is
+    already the transport envelope. ``cfg`` may be omitted for merge-only
+    use: merges read the geometry from the rows' header columns."""
 
+    name = "bloom"
+    input_kind = "digest"
+    #: word-wise OR is exact: bitwise-identical for any partition layout
+    order_invariant = True
+    #: partials are m/8 bytes each, so how many there are is the planner's
+    #: call (plans/planner.py), never a blanket widen of narrow inputs
+    widen = False
+    header = (("m", "long"), ("k", "int"), ("seed", "long"),
+              ("layout", "string"), ("digest", "string"))
 
-def _digests_to_u64(series: pd.Series) -> np.ndarray:
-    # exact_int64 (not a blind cast): one NULL in the column would have
-    # turned the whole Arrow batch float64, corrupting every digest above
-    # 2^53 BEFORE this code runs — refuse loudly (the build funnels filter
-    # NULL digests out, so this only fires on raw bloom_partials misuse)
-    return exact_int64(series, "bloom digest column").view(U64)
+    def __init__(self, cfg: BloomConfig | None = None):
+        self.cfg = cfg
+        self.digest = cfg.digest if cfg is not None else "sha256"
 
+    @property
+    def state_bytes(self) -> int:
+        return self.cfg.num_words * 8
 
-def _prepare_digests(df: DataFrame, keys: list, value_col, cfg,
-                     digest_precomputed: bool) -> DataFrame:
-    """(keys..., __digest64) rows with NULL VALUES dropped BEFORE the
-    digest is computed and BEFORE the Arrow transfer: one NULL would turn
-    the long batch float64 in pandas, silently corrupting every digest
-    >= 2^53 (kernel.exact_int64). The filter runs on the RAW column —
-    filtering on the computed digest would make Catalyst evaluate the
-    digest expression twice (once in Filter, once in Project: a measured
-    ~2x on sha256-dominated builds) and xxh64 hashes NULL to a non-null
-    constant anyway. NULL-in -> NULL-out: a NULL is never a member, so
-    zero-FN for real values is unaffected; rows_seen counts VALUES
-    folded."""
-    if digest_precomputed and isinstance(value_col, str):
-        return df.filter(F.col(value_col).isNotNull())             .select(*keys, F.col(value_col).alias("__digest64"))
-    col = F.col(value_col) if isinstance(value_col, str) else value_col
-    return df.filter(col.isNotNull())         .select(*keys, digest64(col, cfg.digest).alias("__digest64"))
+    def header_values(self) -> tuple:
+        c = self.cfg
+        return (c.num_bits, c.num_hashes, signed64(c.seed), c.layout,
+                c.digest)
 
+    def empty(self) -> np.ndarray:
+        return np.zeros(self.cfg.num_words, dtype=U64)
 
-def _norm_key_vals(key_vals: tuple) -> tuple:
-    """Canonicalize pandas group keys: a NULL numeric key arrives as a
-    FRESH float NaN object per batch, and NaN != NaN, so an accumulator
-    keyed on the raw tuple would fragment one logical key into one entry
-    per batch (partial sketches emitted twice for the same key). Map NaN
-    -> None so the dict key is stable and the emitted row is a real
-    SQL NULL."""
-    return tuple(None if (isinstance(v, float) and v != v) else v
-                 for v in key_vals)
+    def update(self, words: np.ndarray, digests: np.ndarray) -> np.ndarray:
+        insert_hashes(words, source_hash(digests.view(U64), self.cfg.seed),
+                      self.cfg.num_hashes, self.cfg.layout)
+        return words
+
+    @staticmethod
+    def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        # decoded states are read-only views over their payloads: merging
+        # onto one copies it first, and later merges OR into that one
+        # writable accumulator in place
+        if not a.flags.writeable:
+            a = a.copy()
+        return np.bitwise_or(a, b, out=a)
+
+    serialize = staticmethod(encode_words)
+
+    @staticmethod
+    def deserialize(buf) -> np.ndarray:
+        return words_from_bytes(buf, copy=False)
 
 
 def bloom_partials(
@@ -98,104 +106,18 @@ def bloom_partials(
     digest_col: str,
     cfg: BloomConfig,
     key_cols: Sequence[str] = (),
-    *,
-    report_dups: bool = False,
 ) -> DataFrame:
     """Per-partition partial sketches: one row per (keys..., partition).
 
     Map-side only — the output is a DataFrame of
-    ``(key_cols..., partition_id, m, k, seed, rows_seen, sketch)`` with at
-    most ``num_partitions * distinct_keys_in_partition`` rows, each m/8 bytes.
-
-    ``report_dups=True`` appends a ``dups_seen`` column: the per-partition
-    count of rows whose insert would have returned "may have been
-    previously present" (reference ``insert`` return,
-    fastbloom src/lib.rs:261-270). Batch linearization: each Arrow batch's
-    rows probe the pre-batch state, plus exact in-batch source-hash
-    duplicates count as present — the same relaxation the reference's
-    concurrent AtomicBloomFilter makes under simultaneous inserts; at
-    realistic m the count equals the serial-order count (asserted in
-    tests/test_spark_bloom.py).
+    ``(key_cols..., partition_id, m, k, seed, layout, digest, rows_seen,
+    sketch)`` with at most ``num_partitions * distinct_keys_in_partition``
+    rows, each m/8 bytes. ``digest_col`` holds precomputed digest64
+    values; NULL digests are dropped, and the input keeps its partitioning.
     """
     keys = list(key_cols)
-    key_schema = _key_schema(df, keys)
-    dup_field = ", dups_seen long" if report_dups else ""
-    schema = (key_schema + ", " if key_schema else "") + \
-        "partition_id int, build_ms double, " + SKETCH_FIELDS + dup_field
-    m, k, seed = cfg.num_bits, cfg.num_hashes, cfg.seed
-    num_words, layout = cfg.num_words, cfg.layout
-    digest_kind = cfg.digest
-    seed_signed = signed64(seed)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
-        from pyspark import TaskContext
-
-        t_start = time.perf_counter()
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        acc: dict[tuple, list] = {}  # key -> [words, rows_seen, dups_seen]
-
-        def fold(key_vals: tuple, hashes: np.ndarray) -> None:
-            state = acc.setdefault(
-                key_vals, [np.zeros(num_words, dtype=U64), 0, 0])
-            if report_dups:
-                pre = contains_hashes(state[0], hashes, k, layout)
-                _, first_idx = np.unique(hashes, return_index=True)
-                in_batch_dup = np.ones(hashes.size, dtype=bool)
-                in_batch_dup[first_idx] = False
-                state[2] += int(np.count_nonzero(pre | in_batch_dup))
-            insert_hashes(state[0], hashes, k, layout)
-            state[1] += int(hashes.size)
-
-        for pdf in batches:
-            hashes_all = source_hash(_digests_to_u64(pdf[digest_col]), seed)
-            if not keys:
-                fold((), hashes_all)
-            else:
-                for key_vals, idx in pdf.groupby(keys, sort=False,
-                                                 dropna=False).indices.items():
-                    if not isinstance(key_vals, tuple):
-                        key_vals = (key_vals,)
-                    fold(_norm_key_vals(key_vals), hashes_all[idx])
-        if not acc:
-            return
-        build_ms = (time.perf_counter() - t_start) * 1000.0
-        rows = []
-        for key_vals, (words, seen, dups) in acc.items():
-            base = (*key_vals, pid, round(build_ms, 3), m, k,
-                    seed_signed, layout, digest_kind, seen,
-                    encode_words(words))
-            rows.append(base + (dups,) if report_dups else base)
-        cols = [*keys, "partition_id", "build_ms", "m", "k",
-                "seed", "layout", "digest", "rows_seen", "sketch"]
-        if report_dups:
-            cols.append("dups_seen")
-        yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(build, schema)
-
-
-def _merge_fn(group_cols: Sequence[str]):
-    cols = list(group_cols)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for b in pdf["sketch"]:
-            w = decode_words(bytes(b))
-            merged = w if merged is None else np.bitwise_or(merged, w, out=merged)
-        out = {c: [pdf[c].iloc[0]] for c in cols}
-        out.update(
-            m=[int(pdf["m"].iloc[0])], k=[int(pdf["k"].iloc[0])],
-            seed=[int(pdf["seed"].iloc[0])],
-            layout=[str(pdf["layout"].iloc[0])],
-            digest=[str(pdf["digest"].iloc[0])],
-            rows_seen=[int(pdf["rows_seen"].sum())],
-            sketch=[encode_words(merged)],
-        )
-        return pd.DataFrame(out)
-
-    return merge
+    impl = BloomSketch(cfg)
+    return _partials(_prepare(df, digest_col, impl, keys, True), impl, keys)
 
 
 def bloom_partials_sharded(
@@ -218,21 +140,15 @@ def bloom_partials_sharded(
     Output: ``(partition_id int, shard int, rows_seen long, chunk binary)``;
     rows_seen is recorded on shard 0 only (so sums stay correct).
     """
-    m, k, seed = cfg.num_bits, cfg.num_hashes, cfg.seed
-    num_words, layout = cfg.num_words, cfg.layout
-    shards = num_shards or min(64, max(8, num_words // 131072))
-    bounds = np.linspace(0, num_words, shards + 1).astype(np.int64)
+    impl = BloomSketch(cfg)
+    shards = num_shards or min(64, max(8, cfg.num_words // 131072))
+    bounds = np.linspace(0, cfg.num_words, shards + 1).astype(np.int64)
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        words = np.zeros(num_words, dtype=U64)
-        seen = 0
-        for pdf in batches:
-            hashes = source_hash(_digests_to_u64(pdf[digest_col]), seed)
-            insert_hashes(words, hashes, k, layout)
-            seen += len(pdf)
+        words, seen = _fold(batches, impl, []).get((), (None, 0))
         if seen == 0:
             return
         rows = []
@@ -243,7 +159,7 @@ def bloom_partials_sharded(
         yield pd.DataFrame(
             rows, columns=["partition_id", "shard", "rows_seen", "chunk"])
 
-    return df.mapInPandas(
+    return _prepare(df, digest_col, impl, [], True).mapInPandas(
         build, "partition_id int, shard int, rows_seen long, chunk binary")
 
 
@@ -252,11 +168,9 @@ def bloom_merge_sharded(partials: DataFrame, cfg: BloomConfig) -> BloomFilter:
     reducers, then assemble the m/8-byte result on the driver."""
 
     def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["chunk"]:
-            w = np.frombuffer(bytes(b), dtype="<u8")
-            acc = w.astype(U64) if acc is None else np.bitwise_or(
-                acc, w.view(U64), out=acc)
+        acc = functools.reduce(BloomSketch.merge, (
+            np.frombuffer(bytes(b), dtype="<u8").view(U64)
+            for b in pdf["chunk"]))
         return pd.DataFrame({
             "shard": [int(pdf["shard"].iloc[0])],
             "rows_seen": [int(pdf["rows_seen"].sum())],
@@ -279,27 +193,9 @@ def bloom_merge(
     *,
     fanin: int = 16,
 ) -> DataFrame:
-    """Two-phase associative OR-merge of partial sketch rows.
-
-    Phase 1 merges within ``pmod(partition_id, fanin)`` buckets (map-side
-    skew-proof: every bucket sees ≤ ceil(P / fanin) sketches); phase 2 merges
-    the ≤ fanin bucket sketches per key. Equivalent to ``treeAggregate`` with
-    depth 2 but stays in the DataFrame API so AQE can coalesce.
-    """
-    keys = list(key_cols)
-    key_schema = _key_schema(partials, keys)
-    bucket_schema = (key_schema + ", " if key_schema else "") + \
-        "__fanin_bucket int, " + SKETCH_FIELDS
-    final_schema = (key_schema + ", " if key_schema else "") + SKETCH_FIELDS
-
-    with_bucket = partials.withColumn(
-        "__fanin_bucket",
-        F.pmod(F.col("partition_id"), F.lit(fanin)).cast("int"))
-    phase1 = with_bucket.groupBy(*keys, "__fanin_bucket").applyInPandas(
-        _merge_fn([*keys, "__fanin_bucket"]), bucket_schema)
-    if keys:
-        return phase1.groupBy(*keys).applyInPandas(_merge_fn(keys), final_schema)
-    return phase1.groupBy().applyInPandas(_merge_fn([]), final_schema)
+    """Two-phase associative OR-merge of partial sketch rows
+    (:func:`~fastbloom_spark.operators.sketch_agg.sketch_merge`)."""
+    return sketch_merge(partials, BloomSketch(), key_cols, fanin=fanin)
 
 
 def bloom_agg(
@@ -319,159 +215,15 @@ def bloom_agg(
     ``SELECT keys..., bloom_union_agg(digest64(value)) GROUP BY keys`` in
     spirit. Sketches are re-aggregable: per-repo outputs roll up to
     per-lang/global by further union (the reference's ``union``,
-    ``src/lib.rs:286-317``).
-
-    Strategies (SURVEY.md §2 #14 note):
-
-    * ``"partial"`` — per-(key, partition) map-side partials, then the
-      two-phase merge. Zero row shuffle; row-count skew is absorbed map-side
-      (a hot key's rows never move). Right for LOW-cardinality keys (lang):
-      partial volume = P * distinct_keys * m/8.
-    * ``"shuffle"`` — hash-repartition the (key, digest) pairs (16 B/row) by
-      key, build exactly ONE sketch per key in place. Right for
-      HIGH-cardinality keys (repo): partial volume equals the final output,
-      and the shuffled rows are digests, never content. Skewed hot keys cost
-      row movement but each task still builds serially at kernel speed.
-    * ``"auto"`` — shuffle when estimated partial inflation
-      (min(distinct_keys, P) * P * m/8) exceeds 1 GiB, else partial. Pass
-      ``distinct_keys_hint`` to avoid a countDistinct job.
-
-    ``salt`` (shuffle strategy only): with ``salt > 1`` the repartition key
-    becomes ``(keys..., pmod(xxhash64(digest), salt))``, so a hot key's rows
-    split across up to ``salt`` tasks — no single-task straggler when one
-    key owns most of the corpus. Each task builds sub-sketches; a two-phase
-    OR-merge per key reassembles them. OR is associative/commutative, so
-    the result is BITWISE-identical to unsalted (tested); the extra cost is
-    ≤ salt sketch rows (m/8 B each) per key through the merge.
-    ``salt="auto"`` derives the value from a hash-sampled top-key share
-    (one thin map-combined job; see :func:`_auto_salt`) — 1 when no key
-    dominates, ~share×shuffle-width when one does.
+    ``src/lib.rs:286-317``). ``strategy``, ``distinct_keys_hint`` and
+    ``salt`` are :func:`~fastbloom_spark.operators.sketch_agg.sketch_agg`'s
+    (SURVEY.md §2 #14 note): the shuffle strategy moves 16 B (key, digest)
+    rows, and salting is bitwise-identical to unsalted (OR is associative).
     """
-    keys = list(key_cols)
-    prepared = _prepare_digests(df, keys, value_col, cfg,
-                                digest_precomputed)
-
-    if strategy == "auto" and keys:
-        n_keys = distinct_keys_hint
-        if n_keys is None:
-            n_keys = prepared.select(*keys).distinct().count()
-        p_in = prepared.rdd.getNumPartitions()
-        # UPPER bound on partial volume: every partition can contain up to
-        # n_keys distinct keys (min(n_keys, P) underestimated by n_keys/P
-        # for high-cardinality keys and could never pick shuffle for small
-        # sketches). Overestimating only flips to "shuffle", whose cost is
-        # a safe 16 B/row digest shuffle. Threshold 256 MiB (round 7,
-        # was 1 GiB): at 512 MB of raw partial state the decode+OR merge
-        # already dominates — measured 3.1 s partial vs 1.9 s shuffle for
-        # 8 keys x 64 partitions x 1 MB sketches at sf1.0.
-        inflation = n_keys * p_in * cfg.num_words * 8
-        strategy = "shuffle" if inflation > (1 << 28) else "partial"
-    elif strategy == "auto":
-        strategy = "partial"
-    if strategy not in ("partial", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    if strategy == "shuffle" and keys:
-        if salt == "auto":
-            salt = _auto_salt(prepared, keys, "__digest64")
-        return _bloom_agg_shuffled(prepared, keys, cfg, fanin=fanin,
-                                   salt=salt)
-    if salt == "auto":
-        salt = 1  # partial strategy absorbs skew map-side; salt is a no-op
-    partials = bloom_partials(prepared, "__digest64", cfg, keys)
-    return bloom_merge(partials, keys, fanin=fanin)
-
-
-def _auto_salt(prepared: DataFrame, keys: list[str], value_col: str,
-               *, sample_mod: int = 16, max_salt: int | None = None) -> int:
-    """Derive the skew salt from a hash-sampled top-key share (VERDICT r04
-    #7) instead of a manual knob.
-
-    One thin job: rows are hash-subsampled (~1/sample_mod via
-    ``pmod(xxhash64(value), sample_mod) == 0`` — deterministic, no RNG;
-    uniform when values are digests, and per-key representative whenever a
-    key's values are diverse — a key of ONE repeated value samples all-or-
-    nothing, an accepted bias for a spread heuristic), the sampled
-    key histogram is map-side combined, and only (max, sum) come back.
-    The hot key's share decides how many tasks its rows NEED to match a
-    balanced layout: ``want = share * n_shuffle``; salt 1 when the top key
-    already fits in ~one task's fair share (want <= 1.5), else
-    ceil(want) capped at the shuffle width. Sampling error on a share
-    large enough to matter (>= a few % of rows) is negligible; a share
-    too small to sample reliably also cannot straggle a task."""
-    import math
-
-    from ..session import shuffle_partition_count
-
-    n_shuffle = shuffle_partition_count(prepared.sparkSession)
-    sampled = prepared.filter(
-        F.pmod(F.xxhash64(F.col(value_col)), F.lit(sample_mod)) == 0)
-    row = sampled.groupBy(*keys).agg(F.count("*").alias("__c")) \
-        .agg(F.max("__c").alias("top"), F.sum("__c").alias("tot")).first()
-    if row is None or not row.tot:
-        return 1
-    want = (row.top / row.tot) * n_shuffle
-    if want <= 1.5:
-        return 1
-    return int(min(math.ceil(want), max_salt or n_shuffle))
-
-
-def _bloom_agg_shuffled(
-    prepared: DataFrame, keys: list[str], cfg: BloomConfig,
-    *, fanin: int = 16, salt: int = 1,
-) -> DataFrame:
-    """One-shuffle grouped build: repartition (key, digest) rows by key,
-    then fold each co-located group into exactly one sketch.
-
-    ``salt > 1`` repartitions by (keys..., pmod(xxhash64(digest), salt))
-    instead — a skew-proof variant that splits hot keys over up to ``salt``
-    tasks and OR-merges the per-task sub-sketches per key (bitwise-equal
-    output; see :func:`bloom_agg`)."""
-    if salt > 1:
-        salt_col = F.pmod(F.xxhash64(F.col("__digest64")),
-                          F.lit(salt)).cast("int")
-        # explicit numPartitions: AQE coalesces column-only repartitions of
-        # small exchanges back into few tasks, silently undoing the salt —
-        # the caller asked for the spread, so pin it ("auto"-managed confs
-        # fall back to defaultParallelism)
-        from ..session import shuffle_partition_count
-
-        n_shuffle = shuffle_partition_count(prepared.sparkSession)
-        salted = prepared.repartition(
-            n_shuffle, *[F.col(c) for c in keys], salt_col)
-        partials = bloom_partials(salted, "__digest64", cfg, keys)
-        return bloom_merge(partials, keys, fanin=fanin)
-    key_schema = _key_schema(prepared, keys)
-    schema = key_schema + ", " + SKETCH_FIELDS
-    m, k, seed = cfg.num_bits, cfg.num_hashes, cfg.seed
-    num_words, layout = cfg.num_words, cfg.layout
-    digest_kind = cfg.digest
-    seed_signed = signed64(seed)
-
-    def build_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, tuple[np.ndarray, int]] = {}
-        for pdf in batches:
-            hashes_all = source_hash(_digests_to_u64(pdf["__digest64"]), seed)
-            for key_vals, idx in pdf.groupby(keys, sort=False,
-                                             dropna=False).indices.items():
-                if not isinstance(key_vals, tuple):
-                    key_vals = (key_vals,)
-                key_vals = _norm_key_vals(key_vals)
-                words, seen = acc.setdefault(
-                    key_vals, (np.zeros(num_words, dtype=U64), 0))
-                insert_hashes(words, hashes_all[idx], k, layout)
-                acc[key_vals] = (words, seen + len(idx))
-        if not acc:
-            return
-        yield pd.DataFrame(
-            [(*kv, m, k, seed_signed, layout, digest_kind, seen,
-              encode_words(words))
-             for kv, (words, seen) in acc.items()],
-            columns=[*keys, "m", "k", "seed", "layout", "digest",
-                     "rows_seen", "sketch"])
-
-    return prepared.repartition(*[F.col(c) for c in keys]) \
-        .mapInPandas(build_groups, schema)
+    return sketch_agg(df, key_cols, value_col, BloomSketch(cfg),
+                      digest_precomputed=digest_precomputed, fanin=fanin,
+                      strategy=strategy,
+                      distinct_keys_hint=distinct_keys_hint, salt=salt)
 
 
 def bloom_rollup(
@@ -497,40 +249,7 @@ def bloom_rollup(
     finest = bloom_agg(df, keys, value_col, cfg,
                        digest_precomputed=digest_precomputed, fanin=fanin,
                        distinct_keys_hint=distinct_keys_hint)
-    # eager localCheckpoint per level (sketch-row-sized frames): each
-    # coarser level reads the MATERIALIZED level below instead of
-    # re-executing every intermediate merge through lineage (O(n^2)
-    # stages), and nothing stays persisted past the call (a bare persist
-    # here leaked cached partitions for the session lifetime)
-    finest = finest.localCheckpoint(eager=True)
-    levels = [finest.withColumn("rollup_level", F.lit(len(keys)))]
-    current = finest
-    for level in range(len(keys) - 1, -1, -1):
-        coarser_keys = keys[:level]
-        grouped = (current.groupBy(*coarser_keys) if coarser_keys
-                   else current.groupBy())
-        key_schema = _key_schema(finest, coarser_keys)
-        merged = grouped.applyInPandas(
-            _merge_fn(coarser_keys),
-            (key_schema + ", " if key_schema else "") + SKETCH_FIELDS) \
-            .localCheckpoint(eager=True)
-        current = merged
-        padded = merged
-        for k_name in keys[level:]:
-            padded = padded.withColumn(
-                k_name, F.lit(None).cast(
-                    dict(finest.dtypes)[k_name]))
-        levels.append(padded.select(*keys, "m", "k", "seed", "layout",
-                                    "digest", "rows_seen", "sketch")
-                      .withColumn("rollup_level", F.lit(level)))
-    # Layout must ride through every level: dropping it would hydrate
-    # block64 rollup rows as flat (wrong membership) and diverge the
-    # schema from bloom_agg.
-    out = levels[0].select(*keys, "m", "k", "seed", "layout", "digest",
-                           "rows_seen", "sketch", "rollup_level")
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    return _rollup(finest, keys, BloomSketch(cfg))
 
 
 def bloom_build(
@@ -549,8 +268,9 @@ def bloom_build(
 
     The FPR-driven path without ``expected_items`` runs ``df.count()`` first —
     the distributed mirror of the reference's ``.items(iter)`` builder needing
-    ``iter.len()`` (``src/builder.rs:120-128``). Only the final merged sketch
-    row (m/8 bytes) is collected.
+    ``iter.len()`` (``src/builder.rs:120-128``). Only partial sketches
+    (m/8 bytes each, P* of them) or, above the driver budget, the final
+    m/8 bytes are collected.
 
     Seed convention: operator entry points default to a FIXED seed
     (deterministic-by-default — distributed jobs are rerun, diffed, and
@@ -566,8 +286,8 @@ def bloom_build(
         cfg = BloomConfig.from_false_pos(fp, expected_items=max(n_hint, 1),
                                          seed=seed, digest=digest)
 
-    prepared = _prepare_digests(df, [], value_col, cfg,
-                                digest_precomputed)
+    impl = BloomSketch(cfg)
+    prepared = _prepare(df, value_col, impl, [], digest_precomputed)
 
     # plan parallelism + merge topology (see plans/planner.py for the model)
     from ..plans import plan_bloom_build
@@ -588,32 +308,14 @@ def bloom_build(
             prepared = prepared.coalesce(plan.build_partitions)
 
     if plan.merge_strategy == "range_sharded":
-        sharded = bloom_partials_sharded(prepared, "__digest64", cfg)
+        sharded = bloom_partials_sharded(prepared, "__value", cfg)
         return bloom_merge_sharded(sharded, cfg)
 
-    partials = bloom_partials(prepared, "__digest64", cfg)
-    # global merge: partial payloads are zlib-compressed when sparse, and the
-    # Arrow collect path (toPandas) moves them at memory speed, so a
-    # driver-side collect-and-OR beats a shuffle round; grouped aggregations
-    # (bloom_agg) keep the distributed two-phase merge.
-    pdf = partials.select("rows_seen", "sketch").toPandas()
-    if pdf.empty:
-        return BloomFilter(cfg)
-    payloads = [bytes(b) for b in pdf["sketch"]]
-    # decode to zero-copy views (raw payloads) / parallel threads (zlib
-    # releases the GIL), then OR-reduce into one writable accumulator
-    decode_view = lambda b: decode_words(b, copy=False)
-    if len(payloads) > 4:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(payloads))) as ex:
-            decoded = list(ex.map(decode_view, payloads))
-    else:
-        decoded = [decode_view(b) for b in payloads]
-    acc = np.zeros(cfg.num_words, dtype=U64)
-    for w in decoded:
-        np.bitwise_or(acc, w, out=acc)
-    return BloomFilter(cfg, acc, rows_seen=int(pdf["rows_seen"].sum()))
+    # partial payloads travel raw or zlib (encode_words) and the Arrow
+    # collect moves them at memory speed, so the driver fold beats a
+    # shuffle round; grouped aggregations keep the two-phase merge
+    words, rows_seen = _collect_fold(_partials(prepared, impl, []), impl)
+    return BloomFilter(cfg, words, rows_seen=rows_seen)
 
 
 def sketch_row_to_filter(row) -> BloomFilter:
@@ -641,7 +343,8 @@ def _broadcast_probe_udf(spark: SparkSession, bloom: BloomFilter):
     @F.pandas_udf(BooleanType())
     def probe(digests: pd.Series) -> pd.Series:
         words = words_from_bytes(words_bc.value, copy=False)
-        hashes = source_hash(_digests_to_u64(digests), seed)
+        hashes = source_hash(
+            exact_int64(digests, "bloom digest column").view(U64), seed)
         return pd.Series(contains_hashes(words, hashes, k, layout))
 
     # asNondeterministic (guide §4.4): the probe is pure, but declaring it

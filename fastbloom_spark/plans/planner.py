@@ -9,13 +9,16 @@ more decisions join it, both driven by the same arithmetic:
   (< ~50k rows) are all fixed cost; huge partial states (> budget) are all
   transport.
 * **merge topology**: below ~1 GiB of raw partial state, a single Arrow
-  collect + driver OR is the fastest merge (zero shuffle). Above it, the
-  range-sharded merge keeps every node's footprint at m/8 / shards and the
-  driver's at exactly m/8.
+  collect + driver fold is the fastest merge (zero shuffle). Above it the
+  states must not converge on one node: sketches take the distributed
+  two-phase merge tree, and a Bloom build the range-sharded merge, which
+  keeps every node's footprint at m/8 / shards and the driver's at
+  exactly m/8.
 
-``plan_bloom_build`` centralizes those choices so the operator layer
-(`operators/bloom.py`) and any caller reasoning about a job (tests, bench,
-capacity planning) agree.
+``plan_global_merge`` makes the merge choice for every global build
+(``sketch_build`` and ``bloom_build``); ``plan_bloom_build`` adds Bloom's
+parallelism and scan choices. The operator layer and any caller reasoning
+about a job (tests, bench, capacity planning) agree through them.
 """
 
 from __future__ import annotations
@@ -29,6 +32,14 @@ MIN_ROWS_PER_TASK = 50_000
 
 #: raw partial-state bytes above which the merge must not converge on one node
 DRIVER_MERGE_BUDGET = 1 << 30
+
+#: estimated partial-state bytes (keys x partitions x state) above which a
+#: grouped sketch_agg / bloom_agg shuffles its rows instead of building
+#: per-(key, partition) partials. Round 7 lowered it from 1 GiB: at 512 MB
+#: of raw partial state the decode+merge already dominates — measured 3.1 s
+#: partial vs 1.9 s shuffle for 8 keys x 64 partitions x 1 MB Bloom
+#: sketches at sf1.0.
+PARTIAL_STATE_BUDGET = 1 << 28
 
 #: measured steady-state kernel rates (rows/s/core) on the bench box —
 #: coarse constants are fine: P* depends on their square root
@@ -61,6 +72,15 @@ class BuildPlan:
         return self.config.num_words * 8
 
 
+def plan_global_merge(partials: int, state_bytes: int) -> str:
+    """Where a global build's partial states converge: ``"driver_collect"``
+    (Arrow collect + driver fold) while ``partials * state_bytes`` fits
+    :data:`DRIVER_MERGE_BUDGET`, else ``"tree"`` (a distributed merge)."""
+    if partials * state_bytes <= DRIVER_MERGE_BUDGET:
+        return "driver_collect"
+    return "tree"
+
+
 def plan_bloom_build(
     cfg: BloomConfig,
     *,
@@ -89,7 +109,7 @@ def plan_bloom_build(
     else:
         p_star = p_max
 
-    if min(p_star, p_max) * m_bytes <= DRIVER_MERGE_BUDGET:
+    if plan_global_merge(min(p_star, p_max), m_bytes) == "driver_collect":
         # driver-merge regime: transport converges on one node, so the
         # cost-model optimum P* caps parallelism
         p_build = min(p_max, p_star)

@@ -71,6 +71,12 @@ class ThetaSketch:
         self.k = int(k)
         self.seed = int(seed)
 
+    @property
+    def state_bytes(self) -> int:
+        """Largest serialized state (k retained hashes): what the cost
+        models budget for, where an empty state would undercount."""
+        return struct.calcsize(self._HEADER) + 8 * self.k
+
     # -- state ----------------------------------------------------------------
 
     def empty(self) -> State:

@@ -83,8 +83,6 @@ def write_checkpoint(
     keys = list(group_cols)
     group_key = (F.to_json(F.struct(*[F.col(k) for k in keys]))
                  if keys else F.lit("__global__"))
-    build_ms = (F.col("build_ms") if "build_ms" in partials.columns
-                else F.lit(None).cast("double"))
     layout_col = (F.col("layout") if "layout" in partials.columns
                   else F.lit(layout))
     digest_col = (F.col("digest") if "digest" in partials.columns
@@ -97,7 +95,9 @@ def write_checkpoint(
         F.lit(int(partials.rdd.getNumPartitions())).cast("long")
         .alias("n_parts"),
         F.col("rows_seen"),
-        build_ms.alias("build_ms"),
+        # partial rows no longer carry build wall time; the column stays
+        # so the file schema (and older checkpoints) read unchanged
+        F.lit(None).cast("double").alias("build_ms"),
         F.col("m"), F.col("k"), F.col("seed"),
         layout_col.alias("layout"),
         digest_col.alias("digest"),
@@ -139,6 +139,69 @@ def _layout_matches(ckpt, done_ids: set, n_parts: int) -> bool:
     return not (done_ids - set(range(n_parts)))
 
 
+def _resume_partials(spark: SparkSession, checkpoint_path: str,
+                     df: DataFrame, keys: list[str], value_col: str,
+                     cfg: BloomConfig, digest_precomputed: bool, op: str):
+    """``(checkpointed partials still valid for this input, fresh partials
+    of every other partition, metrics)``. The input takes a cold build's
+    funnel (NULL values dropped before digesting) and keeps its partition
+    ids — the lineage checkpoint rows are keyed on."""
+    from ..operators.bloom import BloomSketch
+    from ..operators.sketch_agg import _partials, _prepare
+
+    _require_explicit_seed(cfg, op)
+    # Seed is part of the filter geometry: partials hashed under a different
+    # seed probe false under this cfg, so a seed-mismatched checkpoint must
+    # NOT be resumed (the local union() rejects seed mismatch for the same
+    # reason). Parquet stores seed as signed int64 — convert cfg.seed.
+    seed_signed = signed64(cfg.seed)
+    is_global = F.col("group_key") == "__global__"
+    ckpt = read_checkpoint(spark, checkpoint_path) \
+        .filter(F.col("sketch_kind") == "bloom") \
+        .filter(~is_global if keys else is_global) \
+        .filter((F.col("m") == cfg.num_bits) & (F.col("k") == cfg.num_hashes)
+                & (F.col("layout") == cfg.layout)
+                & (F.col("digest") == cfg.digest)
+                & (F.col("seed") == F.lit(seed_signed).cast("long")))
+    done_rows = ckpt.select("partition_id", "rows_seen").collect()
+    done_ids = {r.partition_id for r in done_rows}
+
+    impl = BloomSketch(cfg)
+    prepared = _prepare(df, value_col, impl, keys, digest_precomputed)
+    n_parts = prepared.rdd.getNumPartitions()
+    if done_ids and not _layout_matches(ckpt, done_ids, n_parts):
+        done_ids = set()  # input layout changed: full rebuild
+
+    todo = prepared
+    if done_ids:
+        # JVM-side partition pruning: spark_partition_id() is evaluated in
+        # the scan stage (narrow, pre-shuffle), so skipped partitions never
+        # reach the hash kernel; no Python RDD round-trip.
+        todo = (prepared
+                .withColumn("__pid", F.spark_partition_id())
+                .filter(~F.col("__pid").isin([int(i) for i in done_ids]))
+                .drop("__pid"))
+    # Only partials whose partitions were actually SKIPPED contribute; when
+    # done_ids was cleared (partition layout changed → full rebuild) the
+    # checkpoint contributes nothing — otherwise stale bits would inflate
+    # FPR and rows_seen would double-count.
+    ckpt_used = ckpt.filter(
+        F.col("partition_id").isin([int(i) for i in done_ids])
+        if done_ids else F.lit(False))
+    metrics = {
+        "partitions_total": n_parts,
+        "partitions_resumed": len(done_ids),
+        "partitions_rebuilt": n_parts - len(done_ids),
+        "rows_from_checkpoint": sum(r.rows_seen for r in done_rows
+                                    if r.partition_id in done_ids),
+    }
+    return ckpt_used, _partials(todo, impl, keys), metrics
+
+
+_PARTIAL_COLS = ["partition_id", "m", "k", "seed", "layout", "digest",
+                 "rows_seen", "sketch"]
+
+
 def resume_bloom_agg(
     spark: SparkSession,
     checkpoint_path: str,
@@ -165,65 +228,24 @@ def resume_bloom_agg(
     DataFrame carries the original key columns restored from the packed
     group_key.
     """
-    from ..functions.digest import digest64
-    from ..operators.bloom import bloom_merge, bloom_partials
-
-    _require_explicit_seed(cfg, "resume_bloom_agg")
-    keys = list(key_cols)
-    seed_signed = signed64(cfg.seed)
-    ckpt = read_checkpoint(spark, checkpoint_path) \
-        .filter(F.col("sketch_kind") == "bloom") \
-        .filter(F.col("group_key") != "__global__") \
-        .filter((F.col("m") == cfg.num_bits) & (F.col("k") == cfg.num_hashes)
-                & (F.col("layout") == cfg.layout)
-                & (F.col("digest") == cfg.digest)
-                & (F.col("seed") == F.lit(seed_signed).cast("long")))
-    done_rows = ckpt.select("partition_id").distinct().collect()
-    done_ids = {r.partition_id for r in done_rows}
-
-    if digest_precomputed:
-        prepared = df.select(*keys, F.col(value_col).alias("__digest64"))
-    else:
-        prepared = df.select(
-            *keys, digest64(F.col(value_col), cfg.digest).alias("__digest64"))
-    n_parts = prepared.rdd.getNumPartitions()
-    if done_ids and not _layout_matches(ckpt, done_ids, n_parts):
-        done_ids = set()  # input layout changed: full rebuild
-
-    if done_ids:
-        todo = (prepared
-                .withColumn("__pid", F.spark_partition_id())
-                .filter(~F.col("__pid").isin([int(i) for i in done_ids]))
-                .drop("__pid"))
-    else:
-        todo = prepared
-
-    new_partials = bloom_partials(todo, "__digest64", cfg, keys)
-    # unpack group_key (to_json(struct(keys)) — lossless under NULLs,
-    # separators, and the __global__ sentinel) back into typed key columns
     from pyspark.sql.types import StructType
 
+    from ..operators.bloom import bloom_merge
+
+    keys = list(key_cols)
+    ckpt_used, new_partials, metrics = _resume_partials(
+        spark, checkpoint_path, df, keys, value_col, cfg,
+        digest_precomputed, "resume_bloom_agg")
+    # unpack group_key (to_json(struct(keys)) — lossless under NULLs,
+    # separators, and the __global__ sentinel) back into typed key columns
     key_schema = StructType(
-        [f for f in prepared.schema.fields if f.name in keys])
-    ckpt_used = ckpt.filter(
-        F.col("partition_id").isin([int(i) for i in done_ids])
-        if done_ids else F.lit(False))
+        [f for f in df.schema.fields if f.name in keys])
     parsed = F.from_json(F.col("group_key"), key_schema).alias("__keys")
-    ckpt_keys = ckpt_used.select(parsed, "partition_id", "m", "k", "seed",
-                                 "layout", "digest", "rows_seen", "sketch") \
+    ckpt_keys = ckpt_used.select(parsed, *_PARTIAL_COLS) \
         .select(*[F.col(f"__keys.{k}").alias(k) for k in keys],
-                "partition_id", "m", "k", "seed", "layout", "digest",
-                "rows_seen", "sketch")
-    cols = [*keys, "partition_id", "m", "k", "seed", "layout", "digest",
-            "rows_seen", "sketch"]
-    all_partials = new_partials.select(*cols).unionByName(ckpt_keys)
-    merged = bloom_merge(all_partials, keys, fanin=fanin)
-    metrics = {
-        "partitions_total": n_parts,
-        "partitions_resumed": len(done_ids),
-        "partitions_rebuilt": n_parts - len(done_ids),
-    }
-    return merged, metrics
+                *_PARTIAL_COLS)
+    all_partials = new_partials.unionByName(ckpt_keys)
+    return bloom_merge(all_partials, keys, fanin=fanin), metrics
 
 
 def resume_bloom_build(
@@ -244,67 +266,13 @@ def resume_bloom_build(
     ``(filter, metrics)`` where metrics records skipped/rebuilt partition
     counts and rows.
     """
-    from ..functions.digest import digest64
-    from ..operators.bloom import bloom_merge, bloom_partials
+    from ..operators.bloom import bloom_merge
 
-    _require_explicit_seed(cfg, "resume_bloom_build")
-    # Seed is part of the filter geometry: partials hashed under a different
-    # seed probe false under this cfg, so a seed-mismatched checkpoint must
-    # NOT be resumed (the local union() rejects seed mismatch for the same
-    # reason). Parquet stores seed as signed int64 — convert cfg.seed.
-    seed_signed = signed64(cfg.seed)
-    ckpt = read_checkpoint(spark, checkpoint_path) \
-        .filter(F.col("sketch_kind") == "bloom") \
-        .filter(F.col("group_key") == "__global__") \
-        .filter((F.col("m") == cfg.num_bits) & (F.col("k") == cfg.num_hashes)
-                & (F.col("layout") == cfg.layout)
-                & (F.col("digest") == cfg.digest)
-                & (F.col("seed") == F.lit(seed_signed).cast("long")))
-    done_rows = ckpt.select("partition_id", "rows_seen").collect()
-    done_ids = {r.partition_id for r in done_rows}
-
-    if digest_precomputed:
-        prepared = df.select(F.col(value_col).alias("__digest64"))
-    else:
-        prepared = df.select(
-            digest64(F.col(value_col), cfg.digest).alias("__digest64"))
-    n_parts = prepared.rdd.getNumPartitions()
-
-    if done_ids and not _layout_matches(ckpt, done_ids, n_parts):
-        # layout changed under us: checkpoint not applicable
-        done_ids = set()
-
-    if done_ids:
-        # JVM-side partition pruning: spark_partition_id() is evaluated in the
-        # scan stage (narrow, pre-shuffle), so skipped partitions never reach
-        # the hash kernel; no Python RDD round-trip.
-        todo = (prepared
-                .withColumn("__pid", F.spark_partition_id())
-                .filter(~F.col("__pid").isin([int(i) for i in done_ids]))
-                .drop("__pid"))
-    else:
-        todo = prepared
-
-    new_partials = bloom_partials(todo, "__digest64", cfg)
-    cols = ["partition_id", "m", "k", "seed", "layout", "digest",
-            "rows_seen", "sketch"]
-    # Only partials whose partitions were actually SKIPPED contribute; when
-    # done_ids was cleared (partition layout changed → full rebuild) the
-    # checkpoint contributes nothing — otherwise stale bits would inflate
-    # FPR and rows_seen would double-count.
-    ckpt_used = ckpt.filter(
-        F.col("partition_id").isin([int(i) for i in done_ids])
-        if done_ids else F.lit(False))
-    all_partials = new_partials.select(*cols) \
-        .unionByName(ckpt_used.select(*cols))
+    ckpt_used, new_partials, metrics = _resume_partials(
+        spark, checkpoint_path, df, [], value_col, cfg, digest_precomputed,
+        "resume_bloom_build")
+    all_partials = new_partials.unionByName(ckpt_used.select(*_PARTIAL_COLS))
     merged = bloom_merge(all_partials, [], fanin=fanin).collect()
-    metrics = {
-        "partitions_total": n_parts,
-        "partitions_resumed": len(done_ids),
-        "partitions_rebuilt": n_parts - len(done_ids),
-        "rows_from_checkpoint": sum(r.rows_seen for r in done_rows
-                                    if r.partition_id in done_ids),
-    }
     if not merged:
         return BloomFilter(cfg), metrics
     row = merged[0]

@@ -95,7 +95,7 @@ def streaming_bloom_dedup(
     # F.xxhash64(NULL) is a non-null constant, so a digest-null filter would
     # let every NULL row share one digest — the first would be emitted with a
     # bogus digest and the rest silently dropped as "duplicates" (and sha256
-    # NULLs would vanish). Matches operators/bloom._prepare_digests: NULL
+    # NULLs would vanish). Matches operators/sketch_agg._prepare: NULL
     # values carry no identity and are excluded from the deduped output.
     prepared = stream.filter(F.col(value_col).isNotNull()) \
         .withColumn("digest64", digest64(F.col(value_col), cfg.digest)) \

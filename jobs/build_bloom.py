@@ -15,6 +15,7 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -39,8 +40,11 @@ def main() -> None:
         cfg = BloomConfig.from_false_pos(
             float(fp), expected_items=max(n, 1), seed=int(seed),
             digest=digest)
-    # ONE content scan: partials persist, feed both checkpoint and merge
-    prepared = df.select(digest64(value_col, cfg.digest).alias("__digest64"))
+    # ONE content scan: partials persist, feed both checkpoint and merge.
+    # NULL values never enter a filter: drop them before digesting (xxh64
+    # would hash NULL to a non-null constant)
+    prepared = df.filter(F.col(value_col).isNotNull()).select(
+        digest64(value_col, cfg.digest).alias("__digest64"))
     partials = bloom_partials(prepared, "__digest64", cfg).persist()
     write_checkpoint(partials, ckpt_out, layout=cfg.layout)
     merged = bloom_merge(partials, []).collect()

@@ -278,3 +278,48 @@ def test_resume_detects_partition_split(spark, tmp_path):
     df4b = spark.createDataFrame(rows, "val string").repartition(4)
     resumed2, metrics2 = resume_bloom_build(spark, ckpt, df4b, "val", cfg)
     assert metrics2["partitions_resumed"] == 4
+
+
+@pytest.mark.parametrize("digest", ["sha256", "xxh64"])
+def test_resume_drops_null_values_like_cold_build(spark, tmp_path, digest):
+    """Both resumes send the input through the cold builds' funnel: NULL
+    values are dropped before digesting. Without it sha256 NULL digests
+    reached the kernel (ValueError) and xxh64 inserted and counted its
+    constant NULL hash (rows_seen and bits diverged from a cold build)."""
+    from fastbloom_spark.operators import bloom_agg
+    from fastbloom_spark.sources import resume_bloom_agg
+
+    cfg = BloomConfig.with_num_bits(1 << 13, num_hashes=4, seed=7,
+                                    digest=digest)
+    df = spark.range(0, 2000, 1, 4).select(
+        (F.col("id") % 3).cast("string").alias("g"),
+        F.when(F.col("id") % 7 == 0, F.lit(None))
+        .otherwise(F.concat(F.lit("v"), F.col("id").cast("string")))
+        .alias("v"))
+    # checkpoint partition 0 the way a cold build would have built it
+    kept = df.filter(F.col("v").isNotNull())
+    glob = bloom_partials(kept.select(digest64("v", digest).alias("d")),
+                          "d", cfg)
+    write_checkpoint(glob.filter(F.col("partition_id") == 0),
+                     str(tmp_path / "g"))
+    grouped = bloom_partials(
+        kept.select("g", digest64("v", digest).alias("d")), "d", cfg, ["g"])
+    write_checkpoint(grouped.filter(F.col("partition_id") == 0),
+                     str(tmp_path / "k"), group_cols=["g"])
+
+    cold = bloom_build(df, "v", cfg)
+    resumed, metrics = resume_bloom_build(spark, str(tmp_path / "g"), df,
+                                          "v", cfg)
+    assert metrics["partitions_resumed"] == 1
+    assert resumed.rows_seen == cold.rows_seen == kept.count()
+    assert resumed == cold  # bitwise
+
+    cold_rows = {r.g: r for r in bloom_agg(df, ["g"], "v", cfg).collect()}
+    got, metrics = resume_bloom_agg(spark, str(tmp_path / "k"), df, ["g"],
+                                    "v", cfg)
+    assert metrics["partitions_resumed"] == 1
+    got_rows = {r.g: r for r in got.collect()}
+    assert got_rows.keys() == cold_rows.keys()
+    for g, r in got_rows.items():
+        assert r.rows_seen == cold_rows[g].rows_seen, g
+        assert bytes_equal_words(r.sketch, cold_rows[g].sketch), g

@@ -93,6 +93,67 @@ def test_bloom_semi_join_prefilter_before_join(spark, sf_dir):
     assert plan.index("LeftSemi") < plan.index("pythonUDF"), plan
 
 
+def test_bloom_semi_join_partials_on_planned_build_partition(
+        spark, monkeypatch):
+    """A small build side: bloom_build's planner picks ONE build partition,
+    and the partial mapInPandas runs right on the planner's reshape (a
+    coalesce, or — as here, where the cost model prefers it — a shuffle of
+    the 8-byte digests to one partition). No second Exchange re-widens
+    the input between that reshape and the partials."""
+    from fastbloom_spark.operators import bloom as bloom_mod
+    from fastbloom_spark.operators import bloom_semi_join
+
+    seen = []
+    real_fold = bloom_mod._collect_fold
+    monkeypatch.setattr(bloom_mod, "_collect_fold", lambda partials, impl: (
+        seen.append(partials) or real_fold(partials, impl)))
+    orders = spark.range(0, 3000, 1, 4).select(
+        (F.col("id") * 2 + 1).alias("o_orderkey"))
+    li = spark.range(0, 6000, 1, 4).select(
+        (F.col("id") % 4000).alias("l_orderkey"))
+    out = bloom_semi_join(li, orders, "l_orderkey", "o_orderkey", fp=0.01,
+                          seed=1, expected_items=3000)
+    assert out.count() == 3000  # odd keys < 4000, keys < 2000 twice
+    assert len(seen) == 1, "build did not take the driver fold"
+    partials = seen[0]
+    assert partials.rdd.getNumPartitions() == 1
+    # the physical plan before AQE wraps the exchanges in query stages
+    lines = partials._jdf.queryExecution().sparkPlan().toString() \
+        .splitlines()
+    i_map = next(i for i, l in enumerate(lines) if "MapInPandas" in l)
+    reshapes = [i for i, l in enumerate(lines)
+                if "Exchange" in l or "Coalesce" in l]
+    assert reshapes == [i_map + 1], lines
+    assert ("Exchange SinglePartition" in lines[i_map + 1]
+            or "Coalesce 1" in lines[i_map + 1]), lines
+
+
+def test_partials_keep_input_partition_ids(spark):
+    """Checkpoint lineage: on a 2-partition input under local[4] (narrower
+    than the task slots, so any widening would reshape it), every partial
+    row's partition_id is the spark_partition_id() of its input rows, and
+    bloom_agg builds its partials on that layout too."""
+    from fastbloom_spark.functions import digest64
+    from fastbloom_spark.operators import bloom_agg, bloom_partials
+
+    cfg = BloomConfig.with_num_bits(1 << 12, num_hashes=3, seed=1)
+    df = spark.range(0, 1000, 1, 2).select(
+        (F.col("id") % 4).alias("g"),
+        digest64(F.col("id").cast("string")).alias("d"))
+    assert spark.sparkContext.defaultParallelism > 2
+    expected = {(r.g, r.pid): r.n for r in df.groupBy(
+        "g", F.spark_partition_id().alias("pid")).count()
+        .withColumnRenamed("count", "n").collect()}
+    partials = bloom_partials(df, "d", cfg, ["g"])
+    assert partials.rdd.getNumPartitions() == 2
+    got = {(r.g, r.partition_id): r.rows_seen for r in partials.collect()}
+    assert got == expected
+    # bloom_agg's partials stay on the input layout too: Bloom never widens
+    agg = bloom_agg(df, ["g"], "d", cfg, digest_precomputed=True,
+                    strategy="partial")
+    assert "RoundRobinPartitioning" not in plan_of(agg), plan_of(agg)
+
+
 def test_grouped_agg_partial_before_shuffle(spark, sf_dir):
     """Catalyst partial aggregation (map-side combine) on the exact-dedup
     hash shuffle: HashAggregate appears both before and after the

@@ -263,3 +263,33 @@ def test_salted_sketch_agg_exact_families_bitwise(spark):
            for r in rows}
     # hot key sees ids 0..n with id%10<9 -> x = (id % 1000) roughly uniform
     assert abs(got["hot"] - 500.0) < 50.0, got["hot"]
+
+
+def test_global_build_above_driver_budget_takes_merge_tree(spark, events,
+                                                          monkeypatch):
+    """sketch_build's driver fold is planned (plans.planner
+    .plan_global_merge): with DRIVER_MERGE_BUDGET below the partials' total
+    HLL/CMS builds take the two-phase merge tree instead, and their state
+    stays bitwise-identical to the driver fold."""
+    import importlib
+
+    from fastbloom_spark.plans import planner
+
+    sketch_agg_mod = importlib.import_module(
+        "fastbloom_spark.operators.sketch_agg")
+
+    col = F.col("user_id").cast("string")
+    for impl in (HllSketch(precision=10, seed=7),
+                 CountMinSketch(depth=4, log2_width=8, seed=7)):
+        folded, n_folded = sketch_build(events, col, impl)
+        trees = []
+        real_merge = sketch_agg_mod.sketch_merge
+        monkeypatch.setattr(sketch_agg_mod, "sketch_merge",
+                            lambda *a, **kw: trees.append(1) or
+                            real_merge(*a, **kw))
+        monkeypatch.setattr(planner, "DRIVER_MERGE_BUDGET", 1)
+        tree, n_tree = sketch_build(events, col, impl)
+        monkeypatch.undo()
+        assert trees, "above-budget build still folded on the driver"
+        assert n_tree == n_folded
+        assert impl.serialize(tree) == impl.serialize(folded)

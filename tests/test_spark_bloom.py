@@ -375,39 +375,6 @@ def test_unseeded_builds_differ_and_seeded_reproduce(spark, docs):
     assert np.array_equal(c1.words, c2.words)
 
 
-def test_bloom_partials_report_dups_matches_local_serial(spark, docs):
-    """report_dups=True: each partition's dups_seen equals the count of
-    local serial insert() returns (reference insert-return parity,
-    src/lib.rs:261-270) over that partition's rows — exact at realistic m,
-    where "previously present" == "exact duplicate of an earlier row"."""
-    from fastbloom_spark.operators import bloom_partials
-
-    cfg = BloomConfig.with_num_bits(1 << 16, num_hashes=6, seed=42)
-    # plant exact duplicates: every doc twice, plus a triplicate
-    doubled = docs.select("doc_id", "text").unionAll(
-        docs.select("doc_id", "text"))
-    tripled = doubled.unionAll(docs.limit(10).select("doc_id", "text"))
-    prepared = tripled.repartition(4).select(
-        digest64("text").alias("__digest64"))
-    prepared = prepared.persist()
-
-    partials = bloom_partials(prepared, "__digest64", cfg, report_dups=True)
-    got = {r.partition_id: r.dups_seen for r in partials.collect()}
-
-    per_part = prepared.withColumn(
-        "pid", F.spark_partition_id()) \
-        .select("pid", F.col("__digest64").alias("d")).collect()
-    by_pid = {}
-    for r in per_part:
-        by_pid.setdefault(r.pid, []).append(r.d)
-    import numpy as np
-    for pid, digests in by_pid.items():
-        f = BloomFilter(cfg)
-        serial = sum(f.insert(int(d) & ((1 << 64) - 1)) for d in digests)
-        assert got[pid] == serial, pid
-    prepared.unpersist()
-
-
 def test_salted_shuffle_bitwise_equals_unsalted(spark):
     """salt>1 on the shuffle strategy: a 90%-hot-key corpus builds the SAME
     sketch rows bitwise (OR associativity), while the hot key's rows split
@@ -461,7 +428,7 @@ def test_auto_salt_picks_spread_for_skew_only(spark):
     the auto-salted result stays bitwise-equal to salt=1."""
     from fastbloom_spark.kernel import decode_words
     from fastbloom_spark.operators import bloom_agg
-    from fastbloom_spark.operators.bloom import _auto_salt
+    from fastbloom_spark.operators.sketch_agg import _auto_salt
 
     n = 20_000
     cfg = BloomConfig.with_num_bits(1 << 15, num_hashes=5, seed=42)
