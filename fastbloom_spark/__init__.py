@@ -13,7 +13,13 @@ from .config import (
     optimal_hashes,
     optimal_size,
 )
+from .deploy import install_zip_directory_cache
 from .local import BloomFilter
+
+# Python workers import the package when the first library UDF unpickles;
+# from then on their per-task import-cache invalidation skips unchanged
+# zip archives (deploy.install_zip_directory_cache).
+install_zip_directory_cache()
 
 __version__ = "0.1.0"
 

@@ -387,14 +387,25 @@ def exact_int64(series, what: str) -> "np.ndarray":
 
 _TAG_RAW = b"R"
 _TAG_ZLIB = b"Z"
+#: buffers from this size try zlib on a prefix of _PREFIX_LEN bytes first
+_PREFIX_FROM = 1 << 20
+_PREFIX_LEN = 1 << 16
 
 
 def _envelope(raw: bytes, min_len: int, min_ratio: int, level: int) -> bytes:
     """Tag ``raw`` as ``R`` + raw, or as ``Z`` + zlib when it is at least
     ``min_len`` bytes and zlib shrinks it at least ``min_ratio`` times:
     below that ratio the merge-side decompress costs more than the
-    transport it saves."""
+    transport it saves. From 1 MiB, a 64 KiB prefix is compressed first
+    and the full pass skipped when the prefix shrinks less than
+    ``0.8 * min_ratio`` times: a 4.8 MB Bloom partial at 16% density
+    (prefix vs full ratio 1.42 vs 1.41; sparse, 7.55 vs 7.51) otherwise
+    pays a 205 ms zlib pass only to travel raw."""
     if len(raw) >= min_len:
+        if len(raw) >= _PREFIX_FROM:
+            zp = zlib.compress(memoryview(raw)[:_PREFIX_LEN], level)
+            if 5 * _PREFIX_LEN < 4 * min_ratio * len(zp):
+                return _TAG_RAW + raw
         z = zlib.compress(raw, level)
         if len(z) * min_ratio < len(raw):
             return _TAG_ZLIB + z

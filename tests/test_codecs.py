@@ -1,4 +1,5 @@
-"""Real stdlib-only media codecs (BMP / WAV) + the end-to-end decode paths.
+"""Real stdlib-only media codecs (BMP / WAV) + the end-to-end decode paths,
+and the R/Z transport envelope of sketch payloads (kernel.encode_words).
 
 Retires the codec stub (VERDICT r04 #2): ``decode_image`` / ``decode_audio``
 parse real on-disk containers with struct/wave + numpy, and the distributed
@@ -11,9 +12,73 @@ import struct
 import numpy as np
 import pytest
 
+from fastbloom_spark import kernel
 from fastbloom_spark.functions.codecs import (decode_bmp, decode_wav,
                                               encode_bmp, encode_wav,
                                               sniff_media)
+
+
+# --------------------------------------------------- sketch payload codec --
+
+
+def _bloom_words(density: float, n_words: int = 600_000, seed: int = 0):
+    """Bit-vector words with independent bits set at ``density``
+    (600k words = a 4.8 MB filter)."""
+    bits = np.random.default_rng(seed).random(n_words * 64) < density
+    return np.packbits(bits, bitorder="little").view("<u8")
+
+
+@pytest.fixture
+def zlib_input_sizes(monkeypatch):
+    sizes = []
+    real = kernel.zlib.compress
+
+    def compress(data, level=-1):
+        sizes.append(len(memoryview(data)))
+        return real(data, level)
+
+    monkeypatch.setattr(kernel.zlib, "compress", compress)
+    return sizes
+
+
+def test_dense_partial_travels_raw_without_full_zlib_pass(zlib_input_sizes):
+    words = _bloom_words(0.16)  # a design-load build's partial
+    buf = kernel.encode_words(words)
+    assert buf[:1] == b"R"
+    assert zlib_input_sizes == [1 << 16]  # the prefix only
+    assert np.array_equal(kernel.decode_words(buf), words)
+
+
+@pytest.mark.parametrize("density", [0.005, 0.001, 0.0])
+def test_sparse_partial_still_zlibs(zlib_input_sizes, density):
+    words = _bloom_words(density)
+    buf = kernel.encode_words(words)
+    assert buf[:1] == b"Z"
+    assert zlib_input_sizes == [1 << 16, words.nbytes]
+    assert np.array_equal(kernel.decode_words(buf), words)
+
+
+def test_prefix_pass_never_tags_z_below_the_full_ratio(zlib_input_sizes):
+    # zero prefix, dense rest: the prefix passes, the full buffer does not
+    words = _bloom_words(0.16)
+    words[:8192] = 0
+    buf = kernel.encode_words(words)
+    assert buf[:1] == b"R"
+    assert zlib_input_sizes == [1 << 16, words.nbytes]
+    assert np.array_equal(kernel.decode_words(buf), words)
+
+
+def test_payloads_below_one_mib_keep_the_full_zlib_try(zlib_input_sizes):
+    words = _bloom_words(0.16, n_words=100_000)
+    assert kernel.encode_words(words)[:1] == b"R"
+    assert zlib_input_sizes == [words.nbytes]
+
+
+def test_generic_state_envelope_samples_the_prefix_too(zlib_input_sizes):
+    raw = _bloom_words(0.16).tobytes()
+    buf = kernel.encode_state(raw)
+    assert buf[:1] == b"R" and zlib_input_sizes == [1 << 16]
+    assert bytes(kernel.decode_state(buf)) == raw
 
 
 # ------------------------------------------------------------------- BMP --

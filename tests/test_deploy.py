@@ -2,17 +2,167 @@
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import shutil
 import subprocess
+import sys
 import zipfile
+import zipimport
 
 import pytest
 
-from fastbloom_spark.deploy import make_pyfiles_zip
+from fastbloom_spark.deploy import install_zip_directory_cache, make_pyfiles_zip
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+needs_eager_zip_invalidation = pytest.mark.skipif(
+    sys.version_info >= (3, 12),
+    reason="CPython >= 3.12 invalidates zip importers lazily")
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(name, src)
+
+
+@pytest.fixture
+def counted_reads(monkeypatch):
+    """Archive paths passed to ``zipimport._read_directory``, in order."""
+    reads = []
+    real = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return reads
+
+
+@needs_eager_zip_invalidation
+def test_invalidate_caches_reuses_unchanged_zip_directory(
+        tmp_path, monkeypatch, counted_reads):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"fb_zipcache_pkg/__init__.py": "",
+                         "fb_zipcache_pkg/a.py": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("fb_zipcache_pkg.a").X == 1
+        # one importer for the archive root, one for the package dir
+        importers = [i for i in sys.path_importer_cache.values()
+                     if isinstance(i, zipimport.zipimporter)
+                     and i.archive == archive]
+        assert len(importers) == 2
+        importlib.invalidate_caches()  # first sight of the archive: read
+        counted_reads.clear()
+        importlib.invalidate_caches()
+        assert counted_reads.count(archive) == 0
+
+        # an added module changes the archive: it is re-read, once
+        _write_zip(archive, {"fb_zipcache_pkg/__init__.py": "",
+                             "fb_zipcache_pkg/a.py": "X = 1\n",
+                             "fb_zipcache_pkg/b.py": "Y = 2\n"})
+        counted_reads.clear()
+        importlib.invalidate_caches()
+        assert counted_reads.count(archive) == 1
+        assert importlib.import_module("fb_zipcache_pkg.b").Y == 2
+    finally:
+        for name in ("fb_zipcache_pkg", "fb_zipcache_pkg.a",
+                     "fb_zipcache_pkg.b"):
+            sys.modules.pop(name, None)
+        for path in [p for p in sys.path_importer_cache
+                     if p.startswith(archive)]:
+            del sys.path_importer_cache[path]
+
+
+@needs_eager_zip_invalidation
+def test_invalidate_caches_drops_missing_zip(tmp_path, monkeypatch,
+                                             counted_reads):
+    archive = str(tmp_path / "gone.zip")
+    _write_zip(archive, {"fb_zipcache_gone.py": "Z = 3\n"})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("fb_zipcache_gone").Z == 3
+        importlib.invalidate_caches()
+        os.remove(archive)
+        sys.modules.pop("fb_zipcache_gone")
+        importlib.invalidate_caches()
+        with pytest.raises(ImportError):
+            importlib.import_module("fb_zipcache_gone")
+        counted_reads.clear()  # still missing: no second read attempt
+        importlib.invalidate_caches()
+        assert counted_reads.count(archive) == 0
+    finally:
+        sys.modules.pop("fb_zipcache_gone", None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_zip_directory_cache_installs_once_and_only_before_312(monkeypatch):
+    current = zipimport.zipimporter.invalidate_caches
+    stdlib = getattr(current, "__wrapped__", current)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    monkeypatch.setattr(sys, "version_info", (3, 12, 0, "final", 0))
+    install_zip_directory_cache()
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+    monkeypatch.setattr(sys, "version_info", (3, 11, 7, "final", 0))
+    install_zip_directory_cache()
+    cached = zipimport.zipimporter.invalidate_caches
+    assert cached is not stdlib and cached.__wrapped__ is stdlib
+    install_zip_directory_cache()
+    assert zipimport.zipimporter.invalidate_caches is cached
+
+
+@needs_eager_zip_invalidation
+def test_reused_python_workers_skip_zip_rereads(spark):
+    """PySpark invalidates the import caches at the start of every task.
+    Once a worker has run the library's UDFs, a later job's tasks re-read
+    no unchanged zip directory (pyspark.zip, py4j, --py-files)."""
+    import pandas as pd
+
+    from fastbloom_spark import kernel
+
+    def count_reads(batches):
+        import zipimport
+
+        state = getattr(zipimport, "_fb_test_reads", None)
+        if state is None:  # once per worker: count every directory read
+            real = zipimport._read_directory
+            state = zipimport._fb_test_reads = {"reads": 0, "tasks": 0}
+
+            def counting(archive):
+                state["reads"] += 1
+                return real(archive)
+
+            zipimport._read_directory = counting
+        state["tasks"] += 1
+        rows = sum(len(kernel.source_hash(b["id"].to_numpy()))
+                   for b in batches)
+        zips = sum(isinstance(i, zipimport.zipimporter)
+                   for i in sys.path_importer_cache.values())
+        yield pd.DataFrame({"pid": [os.getpid()], "reads": [state["reads"]],
+                            "tasks": [state["tasks"]], "zips": [zips],
+                            "rows": [rows]})
+
+    schema = "pid long, reads long, tasks long, zips long, rows long"
+    df = spark.range(0, 3200, numPartitions=32).mapInPandas(count_reads,
+                                                            schema)
+    first = df.toPandas()
+    second = df.toPandas()
+    assert first["rows"].sum() == second["rows"].sum() == 3200
+    if not (first["zips"] > 0).any():
+        pytest.skip("Python workers import nothing from a zip")
+    # workers that ran >= 2 tasks in the first job have seen every archive
+    warm = first.groupby("pid").agg(reads=("reads", "max"),
+                                    tasks=("tasks", "max"))
+    warm = warm[warm["tasks"] >= 2]
+    assert len(warm) > 0
+    again = second[second["pid"].isin(warm.index)]
+    assert len(again) > 0
+    after = again.groupby("pid")["reads"].max()
+    assert (after - warm["reads"].loc[after.index]).sum() == 0
 
 
 def test_zip_is_deterministic_and_complete(tmp_path):
