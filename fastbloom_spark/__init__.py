@@ -13,13 +13,16 @@ from .config import (
     optimal_hashes,
     optimal_size,
 )
-from .deploy import install_zip_directory_cache
+from .deploy import freeze_reused_worker_heap, install_zip_directory_cache
 from .local import BloomFilter
 
 # Python workers import the package when the first library UDF unpickles;
 # from then on their per-task import-cache invalidation skips unchanged
-# zip archives (deploy.install_zip_directory_cache).
+# zip archives (deploy.install_zip_directory_cache), and a reused worker's
+# per-task gc.collect() skips its import-time heap
+# (deploy.freeze_reused_worker_heap).
 install_zip_directory_cache()
+freeze_reused_worker_heap()
 
 __version__ = "0.1.0"
 

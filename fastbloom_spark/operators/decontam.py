@@ -92,6 +92,11 @@ def contamination_report(
     candidates shuffle. ``fp`` trades broadcast bytes against verify-join
     traffic — at fp=1e-3 a 10M-gram benchmark costs ~18 MB broadcast and
     passes ~0.1% of clean grams to the verify join.
+
+    Calling this runs ONE Spark job at once: the distinct benchmark-gram
+    count that picks the prefilter path and sizes the filter (it also
+    materializes the grams' local checkpoint). Everything after it is
+    lazy: the returned frame runs when an action reaches it.
     """
     b_text = bench_text_col or text_col
     # lazy localCheckpoint: the gram frame feeds three consumers (the

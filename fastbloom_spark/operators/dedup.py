@@ -239,10 +239,12 @@ def minhash_candidate_pairs(
     # matches its window count), and emit the (i < j) pairs of the sorted
     # id list JVM-side. The previous shape paid three full shuffles of the
     # banded frame (a window count + both sides of a self-join); this pays
-    # one. collect_list drops NULL ids, which reproduces the old
-    # id_a < id_b filter's NULL-pair exclusion exactly.
+    # one. collect_list drops NULL ids and array_distinct drops an id that
+    # repeats within a bucket, which reproduces the old strict id_a < id_b
+    # filter's exclusion of NULL pairs and (x, x) self-pairs exactly; __n
+    # still counts rows for the cap.
     grouped = banded.groupBy("band_idx", "band_hash").agg(
-        F.array_sort(F.collect_list(id_col)).alias("__ids"),
+        F.array_sort(F.array_distinct(F.collect_list(id_col))).alias("__ids"),
         F.count("*").alias("__n")) \
         .filter((F.col("__n") <= max_bucket_size)
                 & (F.size("__ids") >= 2))

@@ -176,6 +176,21 @@ def test_minhash_degenerate_corpus_bounded(spark):
     assert len(got) < 100
 
 
+def test_minhash_duplicate_ids_emit_no_self_pairs(spark):
+    """An id that repeats within a bucket yields no (x, x) pair, as the old
+    self-join's strict id_a < id_b did not; the size cap still counts
+    rows, not distinct ids."""
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    df = spark.createDataFrame([(1, text), (1, text), (2, text)],
+                               ["doc_id", "text"])
+    pairs = minhash_candidate_pairs(df, "doc_id", "text", num_perm=64,
+                                    bands=16)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2)}
+    capped = minhash_candidate_pairs(df, "doc_id", "text", num_perm=64,
+                                     bands=16, max_bucket_size=2)
+    assert capped.count() == 0
+
+
 def test_winnow_fingerprints_guarantee(spark):
     """Winnowing guarantee: a shared substring of length >= window + k - 1
     yields at least one shared fingerprint; embedding a passage in a larger

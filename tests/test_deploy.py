@@ -165,6 +165,80 @@ def test_reused_python_workers_skip_zip_rereads(spark):
     assert (after - warm["reads"].loc[after.index]).sum() == 0
 
 
+def _gc_counts_after_import(tmp_path, reuse, script=""):
+    """Import the package in a fresh interpreter (``SPARK_REUSE_WORKER`` set
+    to ``reuse``, or unset for None), run ``script``, and return the gc
+    counts it reports."""
+    env = dict(os.environ, PYTHONPATH=REPO)
+    env.pop("SPARK_REUSE_WORKER", None)
+    if reuse is not None:
+        env["SPARK_REUSE_WORKER"] = reuse
+    code = ("import gc, json\n"
+            "import fastbloom_spark\n"
+            "out = {'frozen': gc.get_freeze_count(),"
+            " 'tracked': len(gc.get_objects())}\n"
+            + script +
+            "print(json.dumps(out))\n")
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=120, cwd=str(tmp_path), env=env)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return json.loads(proc.stdout.splitlines()[-1])
+
+
+def test_reused_worker_import_freezes_heap(tmp_path):
+    out = _gc_counts_after_import(tmp_path, "1")
+    assert out["frozen"] > 10_000
+    assert out["tracked"] < 0.1 * out["frozen"]
+
+
+def test_heap_freeze_runs_once_per_process(tmp_path):
+    out = _gc_counts_after_import(tmp_path, "1", (
+        "from fastbloom_spark.deploy import freeze_reused_worker_heap\n"
+        "live = [[i] for i in range(5000)]\n"
+        "freeze_reused_worker_heap()\n"
+        "out['frozen_again'] = gc.get_freeze_count()\n"
+        "out['tracked_again'] = len(gc.get_objects())\n"))
+    assert out["frozen_again"] == out["frozen"]
+    assert out["tracked_again"] >= out["tracked"] + 5000
+
+
+@pytest.mark.parametrize("reuse", [None, ""])
+def test_driver_heap_is_never_frozen(tmp_path, reuse):
+    assert _gc_counts_after_import(tmp_path, reuse)["frozen"] == 0
+
+
+def test_reused_python_workers_freeze_import_heap(spark):
+    """PySpark's daemon runs gc.collect() after every task in a reused
+    worker. Once a worker has run a library UDF, that collection skips the
+    import-time heap: it sits in the permanent generation, and fewer
+    objects stay tracked than were frozen."""
+    import pandas as pd
+
+    from fastbloom_spark import kernel
+
+    def gc_counts(batches):
+        import gc
+
+        rows = sum(len(kernel.source_hash(b["id"].to_numpy()))
+                   for b in batches)
+        yield pd.DataFrame({"pid": [os.getpid()],
+                            "frozen": [gc.get_freeze_count()],
+                            "tracked": [len(gc.get_objects())],
+                            "rows": [rows]})
+
+    schema = "pid long, frozen long, tracked long, rows long"
+    df = spark.range(0, 3200, numPartitions=32).mapInPandas(gc_counts,
+                                                            schema)
+    first = df.toPandas()
+    second = df.toPandas()
+    assert first["rows"].sum() == second["rows"].sum() == 3200
+    assert len(second) == 32
+    per_worker = second.groupby("pid").agg(frozen=("frozen", "min"),
+                                           tracked=("tracked", "max"))
+    assert (per_worker["frozen"] > 10_000).all(), per_worker
+    assert (per_worker["tracked"] < per_worker["frozen"]).all(), per_worker
+
+
 def test_zip_is_deterministic_and_complete(tmp_path):
     a = make_pyfiles_zip(str(tmp_path / "a.zip"))
     b = make_pyfiles_zip(str(tmp_path / "b.zip"))
