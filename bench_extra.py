@@ -74,7 +74,7 @@ def main() -> None:
 
     if want("minhash"):
         from fastbloom_spark.operators.dedup import (
-            _cap_buckets, band_hashes_col, minhash_candidate_pairs,
+            _bucket_pairs, band_hashes_col, minhash_candidate_pairs,
             minhash_signature_col, ngram_jaccard_pairs, shingles_col, _widen)
 
         prepared = _widen(
@@ -94,11 +94,9 @@ def main() -> None:
                 "band_idx", "band_hash"))
         out["mh_band"] = timed(spark, "mh: +band+explode",
                                lambda: noop(banded))
-        grouped = banded.groupBy("band_idx", "band_hash").agg(
-            F.array_sort(F.collect_list("doc_id")).alias("__ids"),
-            F.count("*").alias("__n")) \
-            .filter((F.col("__n") <= 1000) & (F.size("__ids") >= 2))
-        out["mh_cap"] = timed(spark, "mh: +bucket group",
+        grouped = _bucket_pairs(banded, ["band_idx", "band_hash"], "doc_id",
+                                1000)
+        out["mh_cap"] = timed(spark, "mh: +bucket pairs",
                               lambda: noop(grouped))
 
         def cands():

@@ -1,4 +1,4 @@
-"""Near-duplicate detection: MinHash+LSH, SimHash, n-gram Jaccard.
+"""Near-duplicate detection: MinHash+LSH, SimHash, winnowing, n-gram Jaccard.
 
 Pipeline shape (the scalable LSH layout, not all-pairs):
 
@@ -7,15 +7,18 @@ Pipeline shape (the scalable LSH layout, not all-pairs):
 2. MinHash signatures (Arrow-vectorized: one ``np.minimum.reduceat`` pass
    per permutation over the flattened shingle-hash values — zero per-row
    Python);
-3. band the signature, explode (band_idx, band_hash), self-join on the band
-   bucket → candidate pairs only (never the full cross product);
+3. band the signature, explode (band_idx, band_hash), and pair the ids
+   that share a band bucket (:func:`_bucket_pairs`, one shuffle) →
+   candidate pairs only (never the full cross product);
 4. verify candidates with EXACT n-gram Jaccard (JVM ``array_intersect`` /
    ``array_union`` on the shingle sets).
 
 At 100 TB: stage 2 is map-side; stage 3 shuffles (doc_id, band_hash) pairs —
-b rows of 16 bytes per doc, not text; the bucket join is the only quadratic
-risk and is capped by ``max_bucket_size`` (oversized buckets are dropped and
-reported, the standard guardrail against degenerate shingles).
+b rows of 16 bytes per doc, not text; the per-bucket pairing is the only
+quadratic risk and is capped by ``max_bucket_size`` (buckets over the cap
+are dropped before any id list is built, the standard guardrail against
+degenerate shingles). SimHash, winnowing and the embedding near-dup path
+(``operators.similarity``) pair their buckets through the same helper.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.window import Window
 
 from ..kernel import U64, mix64
 from .text import _sliding_grams, _widen, tokens_col
@@ -39,20 +43,53 @@ class ConvergenceError(RuntimeError):
     bucket caps upstream) or max_rounds was lowered."""
 
 
-def _cap_buckets(df: DataFrame, bucket_cols: list[str],
-                 max_bucket_size: int) -> DataFrame:
-    """Drop rows of buckets larger than ``max_bucket_size`` — the shared
-    guardrail against degenerate-key quadratic self-joins (identical
-    boilerplate, constant embeddings). One window count per bucket key;
-    callers already filter empty/NULL keys so a capped bucket only ever
-    holds real collisions."""
-    from pyspark.sql.window import Window
+def _bucket_pairs(banded: DataFrame, bucket_cols: list[str], id_col: str,
+                  max_bucket_size: int,
+                  payload: tuple[str, ...] = ()) -> DataFrame:
+    """Every pair of distinct ids sharing a bucket, once per bucket, as
+    ``(id_a, id_b)`` with ``id_a < id_b`` — no ``(x, x)`` pair even when an
+    id repeats with different payloads, and no NULL id — plus, when
+    ``payload`` names columns, structs ``a`` and ``b`` of
+    ``(id, *payload)``. The pair generator of every dedup path, in one
+    shuffle:
 
-    return df.withColumn(
-        "__bucket_n",
-        F.count("*").over(Window.partitionBy(*bucket_cols))) \
-        .filter(F.col("__bucket_n") <= max_bucket_size) \
-        .drop("__bucket_n")
+    1. a window count over ``bucket_cols`` drops the rows of buckets over
+       ``max_bucket_size`` rows (and singletons) BEFORE any list is built
+       — window buffers spill, so no list holds more than the cap — and
+       the list aggregate runs on the window's exchange;
+    2. one sorted, distinct list per bucket: of plain ids without a
+       payload (hash-based distinct; one-field structs cost MinHash and
+       winnowing ~6% more CPU on 20k docs, local[4]), else of
+       ``(id, *payload)`` structs, which let callers verify pairs
+       without a join back;
+    3. its (i < j) pairs via ``posexplode`` + ``explode(slice)``, not
+       interpreted higher-order lambdas (``transform``/``flatten``)."""
+    if payload:
+        item, id_a, id_b = F.struct(F.col(id_col).alias("id"), *payload), \
+            F.col("a.id"), F.col("b.id")
+    else:
+        item, id_a, id_b = F.col(id_col), F.col("a"), F.col("b")
+    counted = banded.withColumn(
+        "__n", F.count("*").over(Window.partitionBy(*bucket_cols)))
+    lists = counted.filter(F.col("__n").between(2, max_bucket_size)) \
+        .groupBy(*bucket_cols).agg(
+            F.array_sort(F.array_distinct(F.collect_list(item))).alias("__l"))
+    pairs = lists.select("__l", F.posexplode("__l").alias("__i", "a")) \
+        .select("a", F.explode(F.slice(
+            "__l", F.col("__i") + 2, F.size("__l"))).alias("b"))
+    return pairs.filter(id_a < id_b).select(
+        id_a.alias("id_a"), id_b.alias("id_b"),
+        *(["a", "b"] if payload else []))
+
+
+def _nonblank(text_col: Column | str) -> Column:
+    """Raw-text prefilter equivalent to a non-empty token/shingle set
+    (``tokens_col`` empties on the same ``F.trim``). Filter on this, never
+    on the computed set: a filter on a computed column re-evaluates its
+    expression and sinks below ``_widen``'s exchange into the narrow
+    input's few tasks."""
+    c = F.col(text_col) if isinstance(text_col, str) else text_col
+    return c.isNotNull() & (F.trim(c) != "")
 
 
 def shingles_col(text_col: Column | str, n: int = 3) -> Column:
@@ -84,37 +121,51 @@ def _perm_seeds(num_perm: int, seed: int) -> np.ndarray:
                  ^ np.uint64(seed & 0xFFFFFFFFFFFFFFFF))
 
 
+def _minhash_matrix(shingles: pd.Series, seeds: np.ndarray) -> np.ndarray:
+    """``(docs, len(seeds))`` int64 MinHash signatures of a batch of
+    shingle-hash lists: the list column is flattened once (values +
+    offsets); each permutation is one ``mix64`` + one
+    ``np.minimum.reduceat`` over the flat values. Empty docs sign as
+    int64.max (matches nothing)."""
+    import pyarrow as pa
+
+    arr = pa.array(shingles, type=pa.list_(pa.int64()))
+    offsets = arr.offsets.to_numpy()
+    flat = arr.values.to_numpy(zero_copy_only=False).view(U64)
+    nonempty = np.diff(offsets) > 0
+    starts = offsets[:-1][nonempty]
+    out = np.full((len(arr), len(seeds)), np.iinfo(np.int64).max,
+                  dtype=np.int64)
+    if flat.size:
+        with np.errstate(over="ignore"):
+            for j, s in enumerate(seeds):
+                mins = np.minimum.reduceat(mix64(flat ^ s), starts)
+                out[nonempty, j] = mins.view(np.int64)
+    return out
+
+
+def _band_fold(sigs: np.ndarray, bands: int, rows: int,
+               seed: int) -> np.ndarray:
+    """``(docs, bands)`` int64 band hashes of a ``(docs, bands * rows)``
+    int64 signature matrix: band j = mix64-fold of its ``rows`` slots."""
+    mat = sigs.view(U64).reshape(len(sigs), bands, rows)
+    with np.errstate(over="ignore"):
+        acc = np.full((len(sigs), bands), mix64(int(seed)), dtype=U64)
+        for r in range(rows):
+            acc = mix64(acc ^ mat[:, :, r])
+    return acc.view(np.int64)
+
+
 def minhash_signature_col(shingle_col: str, num_perm: int = 128,
                           seed: int = 42) -> Column:
     """MinHash signature ``array<long>`` of length ``num_perm`` from a
-    shingle-hash array column.
-
-    Arrow-vectorized: the batch's list column is flattened once
-    (values + offsets); each permutation is one ``mix64`` + one
-    ``np.minimum.reduceat`` over the flat values. Empty docs sign as
-    int64.max (matches nothing)."""
+    shingle-hash array column (Arrow-vectorized, :func:`_minhash_matrix`).
+    Empty docs sign as int64.max (matches nothing)."""
     seeds = _perm_seeds(num_perm, seed)
 
     @F.pandas_udf(ArrayType(LongType()))
     def sign(shingles: pd.Series) -> pd.Series:
-        import pyarrow as pa
-
-        arr = pa.array(shingles, type=pa.list_(pa.int64()))
-        offsets = arr.offsets.to_numpy()
-        flat = arr.values.to_numpy(zero_copy_only=False).view(U64)
-        n_docs = len(arr)
-        lens = np.diff(offsets)
-        nonempty = lens > 0
-        starts = offsets[:-1][nonempty]
-        out = np.full((n_docs, len(seeds)), np.iinfo(np.int64).max,
-                      dtype=np.int64)
-        if flat.size:
-            with np.errstate(over="ignore"):
-                for j, s in enumerate(seeds):
-                    mixed = mix64(flat ^ s)
-                    mins = np.minimum.reduceat(mixed, starts)
-                    out[nonempty, j] = mins.view(np.int64)
-        return pd.Series(list(out))
+        return pd.Series(list(_minhash_matrix(shingles, seeds)))
 
     return sign(F.col(shingle_col))
 
@@ -144,13 +195,9 @@ def band_hashes_col(sig_col: str, bands: int, rows: int,
         import pyarrow as pa
 
         arr = pa.array(sigs, type=pa.list_(pa.int64()))
-        mat = arr.values.to_numpy(zero_copy_only=False).view(U64) \
-            .reshape(len(arr), bands, rows)
-        with np.errstate(over="ignore"):
-            acc = np.full((len(arr), bands), mix64(int(seed)), dtype=U64)
-            for r in range(rows):
-                acc = mix64(acc ^ mat[:, :, r])
-        return pd.Series(list(acc.view(np.int64)))
+        mat = arr.values.to_numpy(zero_copy_only=False) \
+            .reshape(len(arr), bands * rows)
+        return pd.Series(list(_band_fold(mat, bands, rows, seed)))
 
     return band(F.col(sig_col))
 
@@ -160,39 +207,17 @@ def _band_hashes_from_shingles_col(shingle_col: str, num_perm: int,
                                    band_seed: int = 7) -> Column:
     """Fused sign+band: MinHash signature and band-hash fold in ONE pandas
     UDF — bit-identical to ``minhash_signature_col`` →
-    ``band_hashes_col`` (same mix64/reduceat math on the same U64 views),
-    but the 128-slot signature array never crosses the JVM↔Python
-    boundary (one Arrow round trip instead of two). Candidate-generation
-    internal; callers that need the signature itself (incremental state)
-    keep the two-step path."""
+    ``band_hashes_col`` (all three call :func:`_minhash_matrix` /
+    :func:`_band_fold`), but the 128-slot signature array never crosses
+    the JVM↔Python boundary (one Arrow round trip instead of two).
+    Candidate-generation internal; callers that need the signature itself
+    (incremental state) keep the two-step path."""
     seeds = _perm_seeds(num_perm, seed)
 
     @F.pandas_udf(ArrayType(LongType()))
     def sign_band(shingles: pd.Series) -> pd.Series:
-        import pyarrow as pa
-
-        arr = pa.array(shingles, type=pa.list_(pa.int64()))
-        offsets = arr.offsets.to_numpy()
-        flat = arr.values.to_numpy(zero_copy_only=False).view(U64)
-        n_docs = len(arr)
-        lens = np.diff(offsets)
-        nonempty = lens > 0
-        starts = offsets[:-1][nonempty]
-        out = np.full((n_docs, len(seeds)), np.iinfo(np.int64).max,
-                      dtype=np.int64)
-        if flat.size:
-            with np.errstate(over="ignore"):
-                for j, s in enumerate(seeds):
-                    mixed = mix64(flat ^ s)
-                    mins = np.minimum.reduceat(mixed, starts)
-                    out[nonempty, j] = mins.view(np.int64)
-        mat = out.view(U64).reshape(n_docs, bands, rows)
-        with np.errstate(over="ignore"):
-            acc = np.full((n_docs, bands), mix64(int(band_seed)),
-                          dtype=U64)
-            for r in range(rows):
-                acc = mix64(acc ^ mat[:, :, r])
-        return pd.Series(list(acc.view(np.int64)))
+        return pd.Series(list(_band_fold(_minhash_matrix(shingles, seeds),
+                                         bands, rows, band_seed)))
 
     return sign_band(F.col(shingle_col))
 
@@ -216,16 +241,9 @@ def minhash_candidate_pairs(
         raise ValueError("bands must divide num_perm")
     # blank documents (empty shingle sets) would all share one degenerate
     # bucket — a quadratic blowup at corpus scale; they can never pass
-    # Jaccard verification anyway, so drop them before banding. The filter
-    # runs on the RAW text (shingles empty <=> NULL or all-whitespace
-    # text): a size(__sh) > 0 filter on the computed column would make
-    # Catalyst evaluate the whole shingle expression a second time
-    # (Filter + Project, no CSE) — and, pushed below the widening
-    # exchange, serialize that evaluation through the narrow input's few
-    # tasks
-    tc = F.col(text_col) if isinstance(text_col, str) else text_col
-    prepared = _widen(
-        df.filter(tc.isNotNull() & (F.trim(tc) != ""))).select(
+    # Jaccard verification anyway, so drop them (on the raw text) before
+    # banding
+    prepared = _widen(df.filter(_nonblank(text_col))).select(
         F.col(id_col),
         shingles_col(text_col, shingle_n).alias("__sh"))
     banded = prepared.select(
@@ -233,28 +251,9 @@ def minhash_candidate_pairs(
         F.posexplode(_band_hashes_from_shingles_col(
             "__sh", num_perm, bands, rows, seed)).alias(
             "band_idx", "band_hash"))
-    # Per-bucket pair generation in ONE shuffle: aggregate each band
-    # bucket's ids (map-side partial lists), drop oversized buckets (the
-    # degenerate-boilerplate guardrail _cap_buckets provided — count(*)
-    # matches its window count), and emit the (i < j) pairs of the sorted
-    # id list JVM-side. The previous shape paid three full shuffles of the
-    # banded frame (a window count + both sides of a self-join); this pays
-    # one. collect_list drops NULL ids and array_distinct drops an id that
-    # repeats within a bucket, which reproduces the old strict id_a < id_b
-    # filter's exclusion of NULL pairs and (x, x) self-pairs exactly; __n
-    # still counts rows for the cap.
-    grouped = banded.groupBy("band_idx", "band_hash").agg(
-        F.array_sort(F.array_distinct(F.collect_list(id_col))).alias("__ids"),
-        F.count("*").alias("__n")) \
-        .filter((F.col("__n") <= max_bucket_size)
-                & (F.size("__ids") >= 2))
-    pairs = F.flatten(F.transform(
-        F.col("__ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("__ids"), i + F.lit(2), F.size(F.col("__ids"))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    return grouped.select(F.explode(pairs).alias("__p")) \
-        .select("__p.id_a", "__p.id_b").distinct()
+    # a pair sharing several bands is one candidate
+    return _bucket_pairs(banded, ["band_idx", "band_hash"], id_col,
+                         max_bucket_size).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -496,17 +495,18 @@ def winnow_near_dup_pairs(
     catches copied PASSAGES that bag-of-shingles similarity dilutes).
 
     Same scale shape as the other pair generators: explode fingerprints,
-    cap degenerate buckets, equi-join, count shared prints per pair."""
-    fps = _widen(df).select(F.col(id_col),
-                            winnow_fingerprints_col(text_col, k=k,
-                                                    window=window,
-                                                    seed=seed).alias("__fp")) \
-        .filter(F.size("__fp") > 0) \
-        .select(id_col, F.explode("__fp").alias("fp"))
-    capped = _cap_buckets(fps, ["fp"], max_bucket_size)
-    a = capped.select(F.col(id_col).alias("id_a"), "fp")
-    b = capped.select(F.col(id_col).alias("id_b"), "fp")
-    return a.join(b, "fp").filter(F.col("id_a") < F.col("id_b")) \
+    pair the ids of each fingerprint bucket (:func:`_bucket_pairs`:
+    buckets over ``max_bucket_size`` rows are dropped), count shared
+    prints per pair. ``shared_fingerprints`` counts DISTINCT fingerprints:
+    an id that repeats (several rows, one id) shares each of its
+    fingerprints once, not once per copy."""
+    # explode of an empty fingerprint array (blank/short/NULL text) emits
+    # no row, so no size filter on the computed UDF column is needed
+    fps = _widen(df).select(
+        F.col(id_col),
+        F.explode(winnow_fingerprints_col(
+            text_col, k=k, window=window, seed=seed)).alias("fp"))
+    return _bucket_pairs(fps, ["fp"], id_col, max_bucket_size) \
         .groupBy("id_a", "id_b") \
         .agg(F.count("*").alias("shared_fingerprints")) \
         .filter(F.col("shared_fingerprints") >= min_shared)
@@ -561,16 +561,18 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs: band the 64-bit simhash into ``bands``
     16-bit chunks (pigeonhole: hamming <= bands-1 guarantees a shared exact
-    chunk; default max_hamming=3 with 4 bands), bucket-join, verify with
-    exact popcount(xor) <= max_hamming.
+    chunk; default max_hamming=3 with 4 bands), pair the ids of each band
+    bucket (:func:`_bucket_pairs`, carrying the simhash so no join back is
+    needed), verify with exact popcount(xor) <= max_hamming.
 
     Degeneracy guardrails (same as ``minhash_candidate_pairs``): empty
-    documents all simhash to 0 — every band collides and the self-join
-    goes quadratic on boilerplate-heavy corpora — so token-less docs are
-    dropped before banding, and buckets larger than ``max_bucket_size``
-    are skipped (identical boilerplate clusters; the surviving bands still
-    catch genuinely-near pairs through their other chunks)."""
-    sh = _widen(df).filter(F.size(tokens_col(text_col)) > 0) \
+    documents all simhash to 0 — every band collides and the pairing goes
+    quadratic on boilerplate-heavy corpora — so token-less docs are
+    dropped (on the raw text) before banding, and buckets larger than
+    ``max_bucket_size`` are skipped (identical boilerplate clusters; the
+    surviving bands still catch genuinely-near pairs through their other
+    chunks)."""
+    sh = _widen(df.filter(_nonblank(text_col))) \
         .select(F.col(id_col), simhash64_col(text_col).alias("__sim"))
     width = 64 // bands
     chunks = F.array(*[
@@ -580,17 +582,9 @@ def simhash_near_dup_pairs(
         for i in range(bands)])
     banded = sh.select(id_col, "__sim", F.explode(chunks).alias("c")) \
         .select(id_col, "__sim", "c.band_idx", "c.band_val")
-    capped = _cap_buckets(banded, ["band_idx", "band_val"],
-                          max_bucket_size)
-    a = capped.select(F.col(id_col).alias("id_a"),
-                      F.col("__sim").alias("__sim_a"),
-                      "band_idx", "band_val")
-    b = capped.select(F.col(id_col).alias("id_b"),
-                      F.col("__sim").alias("__sim_b"),
-                      "band_idx", "band_val")
-    pairs = a.join(b, ["band_idx", "band_val"]) \
-        .filter(F.col("id_a") < F.col("id_b"))
-    hamming = F.bit_count(F.col("__sim_a").bitwiseXOR(F.col("__sim_b")))
+    pairs = _bucket_pairs(banded, ["band_idx", "band_val"], id_col,
+                          max_bucket_size, payload=("__sim",))
+    hamming = F.bit_count(F.col("a.__sim").bitwiseXOR(F.col("b.__sim")))
     return pairs.select("id_a", "id_b", hamming.alias("hamming")) \
         .filter(F.col("hamming") <= max_hamming).distinct()
 

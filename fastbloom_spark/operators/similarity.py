@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _bucket_pairs, connected_min_ids
+
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -481,16 +483,18 @@ def embedding_near_dup_pairs(
     seed: int = 42,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
-    """Corpus self near-dup pairs at a cosine threshold: RHP bucket
-    self-join → exact cosine verify. Vectors this similar collide in the
-    same bucket with probability (1 - theta/pi)^planes; tests assert recall
-    against the exact all-pairs baseline at sf scale.
+    """Corpus self near-dup pairs at a cosine threshold: pair the ids of
+    each RHP bucket (``operators.dedup._bucket_pairs``, carrying the
+    vectors so no join back is needed) → exact cosine verify. Vectors this
+    similar collide in the same bucket with probability
+    (1 - theta/pi)^planes; tests assert recall against the exact all-pairs
+    baseline at sf scale.
 
     Guardrail (same as the MinHash/SimHash paths): a degenerate corpus —
     zero vectors, constant embeddings — collapses into one bucket and the
-    self-join goes quadratic; buckets larger than ``max_bucket_size`` are
-    skipped so candidate count stays O(corpus * bucket_cap). An empty (or
-    all-NULL-vector) corpus returns an empty pairs frame instead of a
+    pairing goes quadratic; buckets larger than ``max_bucket_size`` rows
+    are skipped so candidate count stays O(corpus * bucket_cap). An empty
+    (or all-NULL-vector) corpus returns an empty pairs frame instead of a
     driver crash."""
     first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     if first is None:
@@ -500,17 +504,8 @@ def embedding_near_dup_pairs(
     corpus = df.select(
         id_col, vec_col,
         rhp_signature_col(vec_col, num_planes, dim, seed).alias("bucket"))
-    from pyspark.sql.window import Window
-
-    sized = corpus.withColumn(
-        "__bucket_n", F.count("*").over(Window.partitionBy("bucket")))
-    capped = sized.filter(F.col("__bucket_n") <= max_bucket_size) \
-        .drop("__bucket_n")
-    a = capped.select(F.col(id_col).alias("id_a"),
-                      F.col(vec_col).alias("__va"), "bucket")
-    b = capped.select(F.col(id_col).alias("id_b"),
-                      F.col(vec_col).alias("__vb"), "bucket")
-    pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
+    pairs = _bucket_pairs(corpus, ["bucket"], id_col, max_bucket_size,
+                          payload=(vec_col,))
 
     @F.pandas_udf("double")
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -518,9 +513,12 @@ def embedding_near_dup_pairs(
         mb = _normalize_rows(_vectors_from_series(vb, dim))
         return pd.Series(np.einsum("ij,ij->i", ma, mb))
 
-    return pairs.select(
-        "id_a", "id_b",
-        F.round(cos(F.col("__va"), F.col("__vb")), 6).alias("cosine")) \
+    # nondeterministic only so the threshold filter stays above the
+    # projection: pushed into it, the filter would run the UDF a second
+    # time (Filter + Project, no CSE)
+    cosine = cos.asNondeterministic()(F.col("a")[vec_col],
+                                      F.col("b")[vec_col])
+    return pairs.select("id_a", "id_b", F.round(cosine, 6).alias("cosine")) \
         .filter(F.col("cosine") >= threshold).distinct()
 
 
@@ -540,8 +538,6 @@ def embedding_dedup(
     propagation, `operators.dedup.connected_min_ids`) → one survivor per
     cluster. The embedding-space counterpart of ``minhash_dedup`` /
     ``simhash_dedup`` — same cluster contract, same O(edges) resolution."""
-    from .dedup import connected_min_ids
-
     pairs = embedding_near_dup_pairs(
         df, id_col, vec_col, threshold=threshold, num_planes=num_planes,
         seed=seed, max_bucket_size=max_bucket_size)

@@ -1,4 +1,5 @@
-"""Dedup operators: exact, MinHash+LSH, SimHash — correctness on Spark."""
+"""Dedup operators: exact, MinHash+LSH, SimHash, winnowing — correctness
+on Spark."""
 
 from __future__ import annotations
 
@@ -7,6 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from fastbloom_spark.operators.dedup import (
+    _band_hashes_from_shingles_col,
+    _bucket_pairs,
+    band_hashes_col,
     minhash_candidate_pairs,
     minhash_dedup,
     minhash_signature_col,
@@ -14,7 +18,10 @@ from fastbloom_spark.operators.dedup import (
     shingles_col,
     simhash64_col,
     simhash_near_dup_pairs,
+    winnow_fingerprints_col,
+    winnow_near_dup_pairs,
 )
+from fastbloom_spark.operators.similarity import embedding_near_dup_pairs
 from fastbloom_spark.operators.text import dedup_exact
 
 
@@ -176,27 +183,85 @@ def test_minhash_degenerate_corpus_bounded(spark):
     assert len(got) < 100
 
 
-def test_minhash_duplicate_ids_emit_no_self_pairs(spark):
+DUP_TEXT = "alpha beta gamma delta epsilon zeta eta theta"
+
+#: each pair generator over a frame of (doc_id, text) rows; embedding
+#: embeds each text as a fixed vector of its length
+PAIR_GENERATORS = {
+    "minhash": lambda df, **kw: minhash_candidate_pairs(
+        df, "doc_id", "text", num_perm=64, bands=16, **kw),
+    "simhash": lambda df, **kw: simhash_near_dup_pairs(
+        df, "doc_id", "text", **kw),
+    "winnow": lambda df, **kw: winnow_near_dup_pairs(
+        df, "doc_id", "text", **kw),
+    "embedding": lambda df, **kw: embedding_near_dup_pairs(
+        df.select("doc_id", F.array(*[F.length("text").cast("double")
+                                      + F.lit(float(i)) for i in range(8)])
+                  .alias("vec")),
+        "doc_id", "vec", num_planes=8, **kw),
+}
+
+
+@pytest.mark.parametrize("gen", sorted(PAIR_GENERATORS))
+def test_duplicate_ids_emit_no_self_pairs(spark, gen):
     """An id that repeats within a bucket yields no (x, x) pair, as the old
     self-join's strict id_a < id_b did not; the size cap still counts
-    rows, not distinct ids."""
-    text = "alpha beta gamma delta epsilon zeta eta theta"
-    df = spark.createDataFrame([(1, text), (1, text), (2, text)],
+    rows, not distinct ids, so a bucket of max_bucket_size + 1 rows emits
+    nothing."""
+    df = spark.createDataFrame([(1, DUP_TEXT), (1, DUP_TEXT), (2, DUP_TEXT)],
                                ["doc_id", "text"])
-    pairs = minhash_candidate_pairs(df, "doc_id", "text", num_perm=64,
-                                    bands=16)
-    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2)}
-    capped = minhash_candidate_pairs(df, "doc_id", "text", num_perm=64,
-                                     bands=16, max_bucket_size=2)
+    pairs = PAIR_GENERATORS[gen](df).collect()
+    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
+    if gen == "winnow":
+        # distinct fingerprints shared, not one per copy of id 1
+        fps = df.limit(1).select(
+            F.size(winnow_fingerprints_col("text")).alias("n")).first().n
+        assert [r.shared_fingerprints for r in pairs] == [fps]
+    capped = PAIR_GENERATORS[gen](df, max_bucket_size=2)
     assert capped.count() == 0
+
+
+def test_bucket_pairs_repeated_id_with_payloads(spark):
+    """An id repeating with DIFFERENT payloads still pairs only with other
+    ids (once per payload), and a NULL id pairs with nothing."""
+    df = spark.createDataFrame(
+        [(0, 1, 10), (0, 1, 11), (0, 2, 12), (0, None, 13), (1, 3, 14)],
+        "bucket int, id long, p long")
+    got = sorted((r.id_a, r.a.p, r.id_b, r.b.p) for r in _bucket_pairs(
+        df, ["bucket"], "id", 1000, payload=("p",)).collect())
+    assert got == [(1, 10, 2, 12), (1, 11, 2, 12)]
+    assert sorted(_bucket_pairs(df, ["bucket"], "id", 1000).collect()) \
+        == [(1, 2)]
+    assert _bucket_pairs(df, ["bucket"], "id", 3).count() == 0
+
+
+def test_fused_sign_band_matches_two_step_bitwise(spark):
+    """Candidate generation's fused sign+band UDF and the two-step
+    band_hashes_col(minhash_signature_col(...)) that incremental dedup's
+    band state stores agree bit for bit, empty shingle sets included."""
+    rng = np.random.default_rng(11)
+    lo, hi = np.iinfo(np.int64).min, np.iinfo(np.int64).max
+    rows = [(i, rng.integers(lo, hi, size=int(rng.integers(0, 40)),
+                             dtype=np.int64).tolist()) for i in range(300)]
+    rows += [(1000, []), (1001, [])]
+    df = spark.createDataFrame(rows, "id long, sh array<long>") \
+        .repartition(3)
+    out = df.select(
+        "id", _band_hashes_from_shingles_col("sh", 64, 16, 4, 42)
+        .alias("fused"),
+        minhash_signature_col("sh", 64, 42).alias("sig")) \
+        .select("id", "fused", band_hashes_col("sig", 16, 4).alias("two"))
+    got = out.collect()
+    assert len(got) == len(rows)
+    assert all(len(r.fused) == 16 and r.fused == r.two for r in got)
+    empty = {r.id: r.fused for r in got if r.id >= 1000}
+    assert empty[1000] == empty[1001]
 
 
 def test_winnow_fingerprints_guarantee(spark):
     """Winnowing guarantee: a shared substring of length >= window + k - 1
     yields at least one shared fingerprint; embedding a passage in a larger
     document preserves (a subset of) its fingerprints."""
-    from fastbloom_spark.operators.dedup import winnow_fingerprints_col
-
     passage = "the quick brown fox jumps over the lazy dog near the river"
     docs = spark.createDataFrame([
         (1, passage),
@@ -221,8 +286,6 @@ def test_winnow_near_dup_pairs_finds_copied_passage(spark):
     """Passage-level copying (diluted below MinHash thresholds by long
     unrelated tails) is caught by fingerprint overlap."""
     import random
-
-    from fastbloom_spark.operators.dedup import winnow_near_dup_pairs
 
     rng = random.Random(5)
     vocab = [f"w{i}" for i in range(400)]

@@ -8,7 +8,10 @@ degenerates into a cartesian product.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from fastbloom_spark import BloomConfig
@@ -72,6 +75,53 @@ def test_minhash_banding_no_cartesian(spark, sf_dir):
     plan = plan_of(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _pair_generators(spark, sf_dir):
+    """Each dedup pair generator over sf data, with the name of its
+    signature UDF."""
+    from fastbloom_spark.operators.dedup import (minhash_candidate_pairs,
+                                                 simhash_near_dup_pairs,
+                                                 winnow_near_dup_pairs)
+    from fastbloom_spark.operators.similarity import embedding_near_dup_pairs
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return {
+        "minhash": ("sign_band", lambda: minhash_candidate_pairs(
+            docs, "doc_id", "text", num_perm=32, bands=8)),
+        "simhash": ("simhash", lambda: simhash_near_dup_pairs(
+            docs, "doc_id", "text")),
+        "winnow": ("winnow", lambda: winnow_near_dup_pairs(
+            docs, "doc_id", "text")),
+        "embedding": ("sig", lambda: embedding_near_dup_pairs(
+            emb, "vec_id", "embedding")),
+    }
+
+
+@pytest.mark.parametrize("gen", ["minhash", "simhash", "winnow",
+                                 "embedding"])
+def test_pair_generators_cap_buckets_before_one_list_shuffle(
+        spark, sf_dir, gen):
+    """Every dedup pair generator goes through the one bounded bucket
+    pairing: no join (a bucket self-join evaluates the signature UDF once
+    per side), each Python UDF evaluated once, and the bucket-size Window
+    BELOW the list aggregate with no exchange between them — so the cap
+    drops a mega-bucket before its list is built and the list reuses the
+    window's shuffle."""
+    udf, make = _pair_generators(spark, sf_dir)[gen]
+    plan = plan_of(make())
+    lines = plan.splitlines()
+    assert "Join" not in plan, plan
+    evals = re.findall(r"ArrowEvalPython \[(\w+)\(", plan)
+    assert evals.count(udf) == 1, plan
+    assert len(evals) == len(set(evals)), plan
+    agg = next(i for i, l in enumerate(lines)
+               if "partial_collect_list" in l)
+    win = next((i for i, l in enumerate(lines[agg:], agg)
+                if "Window [count(1)" in l), None)
+    assert win is not None, plan
+    assert not any("Exchange" in l for l in lines[agg:win]), plan
 
 
 def test_bloom_semi_join_prefilter_before_join(spark, sf_dir):
@@ -179,8 +229,6 @@ def test_salted_shuffle_partitions_by_key_and_salt(spark, sf_dir):
     cfg = BloomConfig.with_num_bits(1 << 12, num_hashes=4, seed=1)
     out = bloom_agg(docs, ["lang"], "text", cfg, strategy="shuffle", salt=8)
     plan = plan_of(out)
-    import re
-
     exch = [l for l in plan.splitlines() if "hashpartitioning" in l]
     assert exch, plan
     salted_exch = [l for l in exch if "lang" in l and "pmod" in l
