@@ -63,6 +63,9 @@ class BloomSketch:
     widen = False
     header = (("m", "long"), ("k", "int"), ("seed", "long"),
               ("layout", "string"), ("digest", "string"))
+    #: a payload carries its words and nothing of k, seed or layout, so
+    #: there is nothing to compare but the word count, which merge checks
+    params = ()
 
     def __init__(self, cfg: BloomConfig | None = None):
         self.cfg = cfg
@@ -87,6 +90,8 @@ class BloomSketch:
 
     @staticmethod
     def merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        if a.size != b.size:
+            raise ValueError(f"word length mismatch: {a.size} != {b.size}")
         # decoded states are read-only views over their payloads: merging
         # onto one copies it first, and later merges OR into that one
         # writable accumulator in place
@@ -99,6 +104,11 @@ class BloomSketch:
     @staticmethod
     def deserialize(buf) -> np.ndarray:
         return words_from_bytes(buf, copy=False)
+
+    @classmethod
+    def from_buffer(cls, buf) -> tuple["BloomSketch", np.ndarray]:
+        """(merge-only impl, read-only words) from an encoded payload."""
+        return cls(), decode_words(buf, copy=False)
 
 
 def bloom_partials(

@@ -15,10 +15,13 @@ sketch state. An implementation exposes::
 and optionally ``order_invariant`` (merge is exact under any partition
 layout, so narrow inputs may be widened — unless ``widen`` is False),
 ``digest`` (the digest64 strategy, default sha256),
-``state_bytes`` (the serialized size the cost models use) and ``header`` /
-``header_values()``: group-constant ``(name, type)`` columns carried
-between the partition id and ``rows_seen`` in every row (Bloom's
-m/k/seed/layout/digest geometry; other sketches are self-describing).
+``state_bytes`` (the serialized size the cost models use), ``params`` and
+``from_buffer(bytes) -> (impl, state)`` (what two states must share to
+merge, and the config-free load the SQL merge aggregates use) and
+``header`` / ``header_values()``: group-constant ``(name, type)``
+columns carried between the partition id and ``rows_seen`` in every row
+(Bloom's m/k/seed/layout/digest geometry; other sketches are
+self-describing).
 
 Entry points prepare their input ONCE (:func:`_prepare`: NULL values out,
 widening, digest) and may reshape it there; :func:`_partials` never
@@ -462,6 +465,23 @@ def _collect_fold(partials: DataFrame, impl) -> tuple[object, int]:
     return state, int(pdf["rows_seen"].sum())
 
 
+def _global_merge(partials: DataFrame, impl, source: DataFrame, *,
+                  fanin: int) -> tuple[object, int]:
+    """(state, rows_seen) of a global build's partials. Order-invariant
+    impls take the driver fold while :func:`~fastbloom_spark.plans.planner
+    .plan_global_merge` says the partials of ``source``'s partitions
+    (:func:`_partial_count`) fit the driver budget; above it, and always
+    for rank sketches, the two-phase merge tree."""
+    if getattr(impl, "order_invariant", False) and planner.plan_global_merge(
+            _partial_count(source, impl), _state_bytes(impl)) == \
+            "driver_collect":
+        return _collect_fold(partials, impl)
+    rows = sketch_merge(partials, impl, fanin=fanin).collect()
+    if not rows:
+        return impl.empty(), 0
+    return _load(impl, rows[0].sketch), int(rows[0].rows_seen)
+
+
 def sketch_build(
     df: DataFrame,
     value_col: str | Column,
@@ -479,16 +499,9 @@ def sketch_build(
     fewer; above it they take the two-phase merge tree. Rank sketches
     (t-digest/KLL) always keep the tree so their merge order — and
     therefore their driver-hash-checked output — is unchanged."""
-    invariant = getattr(impl, "order_invariant", False)
     prepared = _prepare(df, value_col, impl, [], digest_precomputed,
-                        widen=invariant)
-    partials = _partials(prepared, impl, [])
+                        widen=getattr(impl, "order_invariant", False))
     # counted on the input: the widened frame is never planned here, since
     # under AQE its .rdd would already run the widening shuffle
-    if invariant and planner.plan_global_merge(
-            _partial_count(df, impl), _state_bytes(impl)) == "driver_collect":
-        return _collect_fold(partials, impl)
-    rows = sketch_merge(partials, impl, fanin=fanin).collect()
-    if not rows:
-        return impl.empty(), 0
-    return _load(impl, rows[0].sketch), int(rows[0].rows_seen)
+    return _global_merge(_partials(prepared, impl, []), impl, df,
+                         fanin=fanin)

@@ -45,6 +45,11 @@ class CountMinSketch:
             for j in range(depth)
         ]
 
+    @property
+    def params(self) -> tuple:
+        """What two states must share to merge."""
+        return (self.depth, self.log2_width, self.seed)
+
     def empty(self) -> np.ndarray:
         return np.zeros(self.depth * self.width, dtype=np.int64)
 

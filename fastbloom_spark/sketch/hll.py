@@ -53,6 +53,11 @@ class HllSketch:
         self.m = 1 << precision
         self.seed = seed
 
+    @property
+    def params(self) -> tuple:
+        """What two states must share to merge."""
+        return (self.p, self.seed)
+
     # -- state ----------------------------------------------------------------
 
     def empty(self) -> np.ndarray:

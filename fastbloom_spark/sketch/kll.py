@@ -45,6 +45,12 @@ class KllSketch:
         self.k = k
         self.seed = seed
 
+    @property
+    def params(self) -> tuple:
+        """What two states must share to merge. Buffers carry no seed, so
+        :meth:`from_buffer` impls compact with seed 0."""
+        return (self.k,)
+
     # -- capacities ------------------------------------------------------------
 
     def _capacity(self, level: int, num_levels: int) -> int:
@@ -192,3 +198,11 @@ class KllSketch:
                                         offset=off).astype(np.float64))
             off += 8 * n
         return KllState(levels, n_comp)
+
+    @classmethod
+    def from_buffer(cls, buf: bytes) -> tuple["KllSketch", KllState]:
+        """(impl, state) reconstructed from a self-describing buffer — the
+        consumer-side entry (SQL UDFs) that needs no prior config."""
+        b = bytes(buf)
+        impl = cls(k=struct.unpack_from("<H", b, 1)[0])
+        return impl, impl.deserialize(b)

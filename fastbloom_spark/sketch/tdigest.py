@@ -43,6 +43,11 @@ class TDigestSketch:
         self.delta = delta
         self.seed = seed  # unused (deterministic algorithm); kept for API parity
 
+    @property
+    def params(self) -> tuple:
+        """What two states must share to merge (the seed is unused)."""
+        return (self.delta,)
+
     # -- scale function --------------------------------------------------------
 
     def _kscale(self, q: np.ndarray) -> np.ndarray:
@@ -161,3 +166,11 @@ class TDigestSketch:
         weights = np.frombuffer(b, dtype="<f8", count=n,
                                 offset=off + 8 * n).astype(np.float64)
         return TDigestState(means, weights)
+
+    @classmethod
+    def from_buffer(cls, buf: bytes) -> tuple["TDigestSketch", TDigestState]:
+        """(impl, state) reconstructed from a self-describing buffer — the
+        consumer-side entry (SQL UDFs) that needs no prior config."""
+        b = bytes(buf)
+        impl = cls(delta=struct.unpack_from("<H", b, 1)[0])
+        return impl, impl.deserialize(b)

@@ -72,6 +72,11 @@ class ThetaSketch:
         self.seed = int(seed)
 
     @property
+    def params(self) -> tuple:
+        """What two states must share to merge."""
+        return (self.k, self.seed)
+
+    @property
     def state_bytes(self) -> int:
         """Largest serialized state (k retained hashes): what the cost
         models budget for, where an empty state would undercount."""

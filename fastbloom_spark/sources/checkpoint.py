@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, BinaryType
 
 from ..config import BloomConfig
-from ..kernel import U64, decode_words, signed64
+from ..kernel import U64, signed64
 from ..local import BloomFilter
 
 
@@ -262,19 +262,20 @@ def resume_bloom_build(
 
     Rebuilds ONLY partitions absent from the checkpoint (the map work for
     checkpointed partitions is skipped entirely — their rows are never
-    hashed), unions new partials with checkpointed ones, and merges. Returns
-    ``(filter, metrics)`` where metrics records skipped/rebuilt partition
-    counts and rows.
+    hashed), unions new partials with checkpointed ones, and merges them
+    the way ``sketch_build`` does: a driver fold within the planner's
+    driver budget, a merge tree above it. Returns ``(filter, metrics)``
+    where metrics records skipped/rebuilt partition counts and rows.
     """
-    from ..operators.bloom import bloom_merge
+    from ..operators.bloom import BloomSketch
+    from ..operators.sketch_agg import _global_merge
 
     ckpt_used, new_partials, metrics = _resume_partials(
         spark, checkpoint_path, df, [], value_col, cfg, digest_precomputed,
         "resume_bloom_build")
     all_partials = new_partials.unionByName(ckpt_used.select(*_PARTIAL_COLS))
-    merged = bloom_merge(all_partials, [], fanin=fanin).collect()
-    if not merged:
-        return BloomFilter(cfg), metrics
-    row = merged[0]
-    return (BloomFilter(cfg, decode_words(bytes(row.sketch)),
-                        rows_seen=row.rows_seen), metrics)
+    words, rows_seen = _global_merge(all_partials, BloomSketch(cfg), df,
+                                     fanin=fanin)
+    # the tree's result is a read-only view over the collected payload
+    return (BloomFilter(cfg, np.require(words, requirements="W"),
+                        rows_seen=rows_seen), metrics)

@@ -34,6 +34,7 @@ costs one scan and shuffles ``units * m/8`` bytes regardless of row count.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Iterable, Sequence
 
@@ -43,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..config import BloomConfig
 from ..kernel import digest64_bytes
-from ..operators.bloom import bloom_agg, sketch_row_to_filter
+from ..operators.bloom import BloomSketch, bloom_agg, sketch_row_to_filter
 
 #: partition column added by write_indexed_table
 BUCKET_COL = "bucket_id"
@@ -1428,15 +1429,14 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
         if c not in new_pdf.columns:
             new_pdf[c] = index_pdf.iloc[0][c]
 
-    from ..kernel import decode_words, encode_words, union_words
+    from ..kernel import decode_words, encode_words
 
     combined = pd.concat([index_pdf, new_pdf], ignore_index=True)
     out = []
     for (bucket, icol), grp in combined.groupby([BUCKET_COL, "index_col"],
                                                 sort=True):
-        words = decode_words(bytes(grp["sketch"].iloc[0]))
-        for buf in grp["sketch"].iloc[1:]:
-            words = union_words(words, decode_words(bytes(buf)))
+        words = functools.reduce(BloomSketch.merge, (
+            decode_words(bytes(b), copy=False) for b in grp["sketch"]))
         row = grp.iloc[0].to_dict()
         row.update({BUCKET_COL: bucket, "index_col": icol,
                     "rows_seen": int(grp["rows_seen"].sum()),

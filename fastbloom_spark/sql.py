@@ -11,7 +11,8 @@ Python driver code::
     SELECT kll_quantile(sketch, 0.5) FROM kll_by_segment
 
 plus GROUPED AGGREGATES that re-aggregate persisted state from pure SQL
-(every family merges associatively, so coarser rollups never rescan rows)::
+(every family merges associatively, so coarser rollups never rescan rows;
+all six are one factory, :func:`_merge_agg`, over the impl protocol)::
 
     SELECT bloom_union_agg(sketch) FROM blooms            -- word-wise OR
     SELECT hll_estimate(hll_union_agg(sketch)) FROM hlls  -- register max
@@ -36,8 +37,10 @@ vectorized call per Arrow batch, never a per-row Python loop.
 
 NULL convention (SQL semantics): any NULL argument yields a NULL result —
 probe rows from outer joins with no matching sketch come back NULL, never a
-fabricated value. Grouped merge aggregates validate that every buffer in the
-group carries the SAME sketch parameters and raise a clear error otherwise.
+fabricated value. The grouped merge aggregates skip NULL sketch rows and
+raise a clear error when a group mixes sketch parameters (the header fields
+each impl's ``params`` names). Bloom payloads carry no k, seed or layout,
+so ``bloom_union_agg`` checks only that the word counts agree.
 """
 
 from __future__ import annotations
@@ -73,12 +76,6 @@ def _valid_mask(*series: pd.Series) -> np.ndarray:
     return m
 
 
-#: shared with the operator/streaming paths — see kernel.exact_int64
-#: (callers here mask NULL rows via _valid_mask BEFORE converting, so the
-#: NaN clause never fires on the valid subset)
-_exact_int64 = exact_int64
-
-
 def _exact_scalar_int(v, what: str) -> int:
     if isinstance(v, (float, np.floating)):
         if abs(v) >= 2.0 ** 53:
@@ -93,6 +90,34 @@ def _check_same_params(family: str, first, current) -> None:
         raise ValueError(
             f"mixed sketch parameters in {family} group: {current} vs "
             f"{first} — merge only groups built with one configuration")
+
+
+def _merge_agg(cls, family: str):
+    """SQL AGGREGATE over one sketch family: ``cls.from_buffer`` each
+    non-NULL row, require equal ``params`` (named by ``family`` in the
+    error), fold with ``merge`` in row order, ``serialize`` the result.
+
+    A pandas GROUPED_AGG call (like Spark 4.1's ``arrow_udf`` GROUPED_AGG)
+    receives its ENTIRE group as one Series, and a query without GROUP BY
+    is one group: aggregate sketch rows (one per partition or sub-key),
+    never data rows. A group of only NULL sketches returns NULL; over zero
+    input rows a call without GROUP BY returns no row at all."""
+
+    @F.pandas_udf("binary")
+    def merge_agg(sketch: pd.Series) -> bytes:
+        impl = acc = None
+        for b in sketch:
+            if b is None:  # outer-join miss: skip like sum() skips NULLs
+                continue
+            impl_b, state = cls.from_buffer(bytes(b))
+            if impl is None:
+                impl, acc = impl_b, state
+            else:
+                _check_same_params(family, impl.params, impl_b.params)
+                acc = impl.merge(acc, state)
+        return None if impl is None else impl.serialize(acc)
+
+    return merge_agg
 
 
 #: driver-side registry behind ``bloom_probe_bc``: name -> (Broadcast of
@@ -112,7 +137,7 @@ def _make_bloom_probe_bc(registry: dict):
         if valid.any():
             sub = np.zeros(int(valid.sum()), dtype=bool)
             codes, uniques = pd.factorize(name[valid])
-            digs = _exact_int64(digest[valid], "bloom_probe_bc digest")
+            digs = exact_int64(digest[valid], "bloom_probe_bc digest")
             for gi, nm in enumerate(uniques):
                 entry = registry.get(str(nm))
                 if entry is None:
@@ -175,14 +200,18 @@ def unpublish_bloom_sql(spark: SparkSession, name: str) -> None:
 
 def register_sketch_sql(spark: SparkSession) -> list[str]:
     """Register all sketch SQL functions; returns their names."""
+    from .operators.bloom import BloomSketch
+    from .sketch import (CountMinSketch, HllSketch, KllSketch,
+                         TDigestSketch, ThetaSketch)
 
     # hoisted: a cache defined inside a UDF body would be rebuilt every
     # Arrow batch, re-deserializing the same buffer per batch
-    @_cached
-    def _load_hll(buf: bytes):
-        from .sketch.hll import HllSketch
-
-        return HllSketch.from_buffer(buf)
+    _load_hll = _cached(HllSketch.from_buffer)
+    _load_cms = _cached(CountMinSketch.from_buffer)
+    _load_tdigest = _cached(TDigestSketch.from_buffer)
+    _load_kll = _cached(KllSketch.from_buffer)
+    _load_theta = _cached(ThetaSketch.from_buffer)
+    _words_of = _cached(decode_words)
 
     @_cached
     def _hll_est(buf: bytes) -> float:
@@ -193,12 +222,6 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
     def hll_estimate(sketch: pd.Series) -> pd.Series:
         return sketch.map(
             lambda b: np.nan if b is None else _hll_est(bytes(b)))
-
-    @_cached
-    def _load_cms(buf: bytes):
-        from .sketch.cms import CountMinSketch
-
-        return CountMinSketch.from_buffer(buf)
 
     @F.pandas_udf(LongType())
     def cms_estimate(sketch: pd.Series, digest: pd.Series) -> pd.Series:
@@ -213,7 +236,7 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
         if valid.any():
             sub = np.zeros(int(valid.sum()), dtype=np.int64)
             codes, uniques = pd.factorize(sketch[valid])
-            digs = _exact_int64(digest[valid], "cms_estimate digest")
+            digs = exact_int64(digest[valid], "cms_estimate digest")
             for gi, buf in enumerate(uniques):
                 impl, counters = _load_cms(bytes(buf))
                 mask = codes == gi
@@ -221,78 +244,35 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
             out[valid] = sub
         return pd.Series(out)
 
-    def _quantile_udf(load_impl_state):
-        """Factorize-by-buffer quantile probe (same pattern as bloom_probe /
-        cms_estimate): deserialize each DISTINCT buffer once per batch
-        (cached), evaluate its whole q-vector in one vectorized
-        quantile_many call — never a per-row deserialize+build loop."""
+    def _quantile_udf(load_impl_state, method: str):
+        """Factorize-by-buffer quantile or rank probe (same pattern as
+        bloom_probe / cms_estimate): deserialize each DISTINCT buffer once
+        per batch (cached), evaluate its whole argument vector in one
+        vectorized ``quantile_many`` / ``rank_many`` call — never a per-row
+        deserialize+build loop. Ranks (the CDF, the inverse of quantiles)
+        give `WHERE kll_rank(sketch, x) < 0.99` style tail predicates."""
 
         @F.pandas_udf(DoubleType())
-        def quantile_fn(sketch: pd.Series, q: pd.Series) -> pd.Series:
+        def probe_fn(sketch: pd.Series, x: pd.Series) -> pd.Series:
             out = np.full(len(sketch), np.nan)
-            valid = _valid_mask(sketch, q)
+            valid = _valid_mask(sketch, x)
             if valid.any():
                 sub = np.full(int(valid.sum()), np.nan)
                 codes, uniques = pd.factorize(sketch[valid])
-                qs = q[valid].to_numpy(np.float64)
+                xs = x[valid].to_numpy(np.float64)
                 for gi, buf in enumerate(uniques):
                     impl, state = load_impl_state(bytes(buf))
                     mask = codes == gi
-                    sub[mask] = impl.quantile_many(state, qs[mask])
+                    sub[mask] = getattr(impl, method)(state, xs[mask])
                 out[valid] = sub
             return pd.Series(out)
 
-        return quantile_fn
+        return probe_fn
 
-    @_cached
-    def _load_tdigest(b: bytes):
-        import struct
-
-        from .sketch.tdigest import TDigestSketch
-
-        impl = TDigestSketch(delta=struct.unpack_from("<H", b, 1)[0])
-        return impl, impl.deserialize(b)
-
-    @_cached
-    def _load_kll(b: bytes):
-        import struct
-
-        from .sketch.kll import KllSketch
-
-        impl = KllSketch(k=struct.unpack_from("<H", b, 1)[0])
-        return impl, impl.deserialize(b)
-
-    tdigest_quantile = _quantile_udf(_load_tdigest)
-    kll_quantile = _quantile_udf(_load_kll)
-
-    def _rank_udf(load_impl_state):
-        """Normalized rank (CDF) of a value — the inverse of the quantile
-        probes, enabling `WHERE kll_rank(sketch, x) < 0.99` style tail
-        predicates from pure SQL. Same factorize-by-buffer batch shape."""
-
-        @F.pandas_udf(DoubleType())
-        def rank_fn(sketch: pd.Series, value: pd.Series) -> pd.Series:
-            out = np.full(len(sketch), np.nan)
-            valid = _valid_mask(sketch, value)
-            if valid.any():
-                sub = np.full(int(valid.sum()), np.nan)
-                codes, uniques = pd.factorize(sketch[valid])
-                vals = value[valid].to_numpy(np.float64)
-                for gi, buf in enumerate(uniques):
-                    impl, state = load_impl_state(bytes(buf))
-                    mask = codes == gi
-                    sub[mask] = impl.rank_many(state, vals[mask])
-                out[valid] = sub
-            return pd.Series(out)
-
-        return rank_fn
-
-    tdigest_rank = _rank_udf(_load_tdigest)
-    kll_rank = _rank_udf(_load_kll)
-
-    @_cached
-    def _words_of(buf: bytes) -> np.ndarray:
-        return decode_words(buf)
+    tdigest_quantile = _quantile_udf(_load_tdigest, "quantile_many")
+    kll_quantile = _quantile_udf(_load_kll, "quantile_many")
+    tdigest_rank = _quantile_udf(_load_tdigest, "rank_many")
+    kll_rank = _quantile_udf(_load_kll, "rank_many")
 
     @F.pandas_udf(BooleanType())
     def bloom_probe(sketch: pd.Series, k: pd.Series, seed: pd.Series,
@@ -316,7 +296,7 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
                 list(zip(sketch[valid], k[valid], seed[valid],
                          layout[valid])), dtype=object)
             codes, uniques = pd.factorize(key)
-            digs = _exact_int64(digest[valid], "bloom_probe digest")
+            digs = exact_int64(digest[valid], "bloom_probe digest")
             for gi, (buf, kk, ss, lay) in enumerate(uniques):
                 words = _words_of(bytes(buf))
                 mask = codes == gi
@@ -353,45 +333,6 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
                            decode_words(bytes(a)), decode_words(bytes(b)))))
         return pd.Series(out)
 
-    @F.pandas_udf("binary")
-    def bloom_union_agg(sketch: pd.Series) -> bytes:
-        """SQL AGGREGATE: OR-reduce a group's bloom payloads into one —
-        pure-SQL re-aggregation of persisted partial/sketch tables
-        (``SELECT lang, bloom_union_agg(sketch) FROM partials GROUP BY
-        lang``). Safe at scale: groups hold one ~m/8-byte row per
-        partition/sub-key, not data rows."""
-        from .kernel import encode_words
-
-        acc = None
-        for b in sketch:
-            if b is None:  # outer-join miss: skip like sum() skips NULLs
-                continue
-            w = decode_words(bytes(b), copy=False)
-            acc = w.copy() if acc is None else np.bitwise_or(acc, w, out=acc)
-        # empty group (empty table aggregate) -> NULL, never an invalid buf
-        return encode_words(acc) if acc is not None else None
-
-    @F.pandas_udf("binary")
-    def hll_union_agg(sketch: pd.Series) -> bytes:
-        """SQL AGGREGATE: merge a group's HLL states into one (register-wise
-        max) — re-aggregate persisted HLL tables from pure SQL."""
-        from .sketch.hll import HllSketch
-
-        impl = None
-        acc = None
-        for b in sketch:
-            if b is None:
-                continue
-            impl_b, state = HllSketch.from_buffer(bytes(b))
-            if impl is None:
-                impl = impl_b
-            else:
-                _check_same_params("hll (precision, seed)",
-                                   (impl.p, impl.seed),
-                                   (impl_b.p, impl_b.seed))
-            acc = state if acc is None else impl.merge(acc, state)
-        return impl.serialize(acc) if impl is not None else None
-
     @F.pandas_udf(DoubleType())
     def hll_intersect_estimate(sketch_a: pd.Series,
                                sketch_b: pd.Series) -> pd.Series:
@@ -408,8 +349,7 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
             impl, a = _load_hll(ba)
             impl_b, b = _load_hll(bb)
             _check_same_params("hll_intersect (precision, seed)",
-                               (impl.p, impl.seed),
-                               (impl_b.p, impl_b.seed))
+                               impl.params, impl_b.params)
             est = (impl.estimate(a) + impl.estimate(b)
                    - impl.estimate(impl.merge(a, b)))
             return max(est, 0.0)
@@ -426,104 +366,11 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
             out[valid] = sub
         return pd.Series(out)
 
-    @F.pandas_udf("binary")
-    def cms_union_agg(sketch: pd.Series) -> bytes:
-        """SQL AGGREGATE: merge count-min states (counter-wise add)."""
-        from .sketch.cms import CountMinSketch
-
-        impl = None
-        acc = None
-        for b in sketch:
-            if b is None:
-                continue
-            impl_b, counters = CountMinSketch.from_buffer(bytes(b))
-            if impl is None:
-                impl = impl_b
-            else:
-                _check_same_params(
-                    "cms (depth, log2_width, seed)",
-                    (impl.depth, impl.log2_width, impl.seed),
-                    (impl_b.depth, impl_b.log2_width, impl_b.seed))
-            acc = counters if acc is None else impl.merge(acc, counters)
-        return impl.serialize(acc) if impl is not None else None
-
-    @F.pandas_udf("binary")
-    def tdigest_merge_agg(sketch: pd.Series) -> bytes:
-        """SQL AGGREGATE: merge t-digest states (cluster recompression)."""
-        import struct
-
-        from .sketch.tdigest import TDigestSketch
-
-        impl = None
-        acc = None
-        for b in sketch:
-            if b is None:
-                continue
-            buf = bytes(b)
-            delta = struct.unpack_from("<H", buf, 1)[0]
-            if impl is None:
-                impl = TDigestSketch(delta=delta)
-            else:
-                _check_same_params("tdigest delta", impl.delta, delta)
-            state = impl.deserialize(buf)
-            acc = state if acc is None else impl.merge(acc, state)
-        return impl.serialize(acc) if impl is not None else None
-
-    @F.pandas_udf("binary")
-    def kll_merge_agg(sketch: pd.Series) -> bytes:
-        """SQL AGGREGATE: merge KLL states (level-wise compaction)."""
-        import struct
-
-        from .sketch.kll import KllSketch
-
-        impl = None
-        acc = None
-        for b in sketch:
-            if b is None:
-                continue
-            buf = bytes(b)
-            kk = struct.unpack_from("<H", buf, 1)[0]
-            if impl is None:
-                impl = KllSketch(k=kk)
-            else:
-                _check_same_params("kll k", impl.k, kk)
-            state = impl.deserialize(buf)
-            acc = state if acc is None else impl.merge(acc, state)
-        return impl.serialize(acc) if impl is not None else None
-
-    @_cached
-    def _load_theta(buf: bytes):
-        from .sketch.theta import ThetaSketch
-
-        return ThetaSketch.from_buffer(buf)
-
     @F.pandas_udf(DoubleType())
     def theta_estimate(sketch: pd.Series) -> pd.Series:
         return sketch.map(
             lambda b: np.nan if b is None else
-            float(_load_theta(bytes(b))[0].estimate(
-                _load_theta(bytes(b))[1])))
-
-    @F.pandas_udf("binary")
-    def theta_union_agg(sketch: pd.Series) -> bytes:
-        """SQL AGGREGATE: merge a group's theta states into one (bottom-k
-        cut at min theta) — re-aggregate persisted theta tables from pure
-        SQL. Cross-seed mixing refused (header seed check)."""
-        from .sketch.theta import ThetaSketch
-
-        impl = None
-        acc = None
-        for b in sketch:
-            if b is None:
-                continue
-            impl_b, state = ThetaSketch.from_buffer(bytes(b))
-            if impl is None:
-                impl = impl_b
-            else:
-                _check_same_params("theta (k, seed)", (impl.k, impl.seed),
-                                   (impl_b.k, impl_b.seed))
-            acc = state if acc is None else impl.merge(acc, state)
-        return impl.serialize(acc) if impl is not None else None
+            float(ThetaSketch.estimate(_load_theta(bytes(b))[1])))
 
     def _theta_setop_udf(op_name: str):
         """Pairwise theta set operation → serialized theta state. Unlike
@@ -534,8 +381,6 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
         factorize-by-distinct-pair batch shape as hll_intersect_estimate."""
 
         def one(ba: bytes, bb: bytes) -> bytes:
-            from .sketch.theta import ThetaSketch
-
             impl_a, a = _load_theta(ba)
             impl_b, b = _load_theta(bb)
             if impl_a.seed != impl_b.seed:
@@ -571,6 +416,15 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
     theta_a_not_b = _theta_setop_udf("a_not_b")
 
     fns = {
+        name: _merge_agg(cls, family) for name, cls, family in (
+            ("bloom_union_agg", BloomSketch, "bloom"),
+            ("hll_union_agg", HllSketch, "hll (precision, seed)"),
+            ("cms_union_agg", CountMinSketch,
+             "cms (depth, log2_width, seed)"),
+            ("tdigest_merge_agg", TDigestSketch, "tdigest (delta)"),
+            ("kll_merge_agg", KllSketch, "kll (k)"),
+            ("theta_union_agg", ThetaSketch, "theta (k, seed)"))}
+    fns.update({
         "bloom_probe_bc": _make_bloom_probe_bc(dict(_BLOOM_BC_REGISTRY)),
         "bloom_union": bloom_union,
         "bloom_intersect": bloom_intersect,
@@ -580,19 +434,13 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
         "kll_quantile": kll_quantile,
         "kll_rank": kll_rank,
         "bloom_probe": bloom_probe,
-        "bloom_union_agg": bloom_union_agg,
-        "hll_union_agg": hll_union_agg,
         "hll_intersect_estimate": hll_intersect_estimate,
-        "cms_union_agg": cms_union_agg,
-        "tdigest_merge_agg": tdigest_merge_agg,
         "tdigest_rank": tdigest_rank,
-        "kll_merge_agg": kll_merge_agg,
         "theta_estimate": theta_estimate,
-        "theta_union_agg": theta_union_agg,
         "theta_union": theta_union,
         "theta_intersect": theta_intersect,
         "theta_a_not_b": theta_a_not_b,
-    }
+    })
     for name, fn in fns.items():
         spark.udf.register(name, fn)
     return sorted(fns)

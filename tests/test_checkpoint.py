@@ -62,9 +62,19 @@ def test_resume_full_checkpoint_is_pure_merge(spark, docs, tmp_path):
     assert resumed.rows_seen == direct.rows_seen
 
 
-def test_resume_partial_checkpoint(spark, docs, tmp_path):
+@pytest.mark.parametrize("budget", [None, 0], ids=["driver_fold", "tree"])
+def test_resume_partial_checkpoint(spark, docs, tmp_path, monkeypatch,
+                                   budget):
     """Dropping some checkpointed partitions: resume rebuilds only those and
-    still matches the direct build bitwise."""
+    still matches the direct build bitwise, through the driver fold and,
+    with no driver budget, through the merge tree."""
+    import importlib
+
+    from fastbloom_spark.plans import planner
+
+    sketch_agg = importlib.import_module(
+        "fastbloom_spark.operators.sketch_agg")
+
     prepared = docs.select(digest64("text").alias("__digest64"))
     partials = bloom_partials(prepared, "__digest64", CFG)
     path = str(tmp_path / "partial")
@@ -72,6 +82,15 @@ def test_resume_partial_checkpoint(spark, docs, tmp_path):
     write_checkpoint(partials.filter(F.col("partition_id") < 3), path)
 
     direct = bloom_build(docs, "text", CFG)
+
+    def unused(*_a, **_k):
+        raise AssertionError("resume took the other merge branch")
+
+    if budget is None:
+        monkeypatch.setattr(sketch_agg, "sketch_merge", unused)
+    else:
+        monkeypatch.setattr(planner, "DRIVER_MERGE_BUDGET", budget)
+        monkeypatch.setattr(sketch_agg, "_collect_fold", unused)
     resumed, metrics = resume_bloom_build(spark, path, docs, "text", CFG)
     assert metrics["partitions_resumed"] == 3
     assert metrics["partitions_rebuilt"] == 3

@@ -12,6 +12,7 @@ from fastbloom_spark.sketch import (
     HllSketch,
     KllSketch,
     TDigestSketch,
+    ThetaSketch,
 )
 
 RNG = np.random.default_rng(1234)
@@ -230,3 +231,36 @@ def test_tdigest_rank_inverse_of_quantile():
     # endpoints clamp
     assert sk.rank(st, xs[0] - 1.0) <= 0.001
     assert sk.rank(st, xs[-1] + 1.0) >= 0.999
+
+
+# ------------------------------------------------------------ impl protocol
+
+
+@pytest.mark.parametrize("impl", [
+    HllSketch(precision=10, seed=7), CountMinSketch(depth=3, seed=7),
+    TDigestSketch(delta=50), KllSketch(k=32), ThetaSketch(k=64, seed=7)],
+    ids=lambda i: i.name)
+def test_from_buffer_restores_params_and_state(impl):
+    """The config-free load the SQL merge aggregates use gives back an impl
+    with the builder's params and a state that re-serializes unchanged."""
+    vals = (digests_of(3_000) if impl.input_kind == "digest"
+            else RNG.normal(size=3_000))
+    buf = impl.serialize(impl.update(impl.empty(), vals))
+    back, state = type(impl).from_buffer(buf)
+    assert back.params == impl.params
+    assert back.serialize(state) == buf
+
+
+@pytest.mark.parametrize("small_first", [True, False],
+                         ids=["small_first", "big_first"])
+def test_bloom_merge_rejects_word_count_mismatch(small_first):
+    """A 1-word payload ORed after a 64-word filter used to broadcast over
+    all 64 words; the other order raised numpy's broadcast error. Both
+    orders now raise the same ValueError."""
+    from fastbloom_spark.operators.bloom import BloomSketch
+
+    small = np.ones(1, dtype=np.uint64)
+    big = np.zeros(64, dtype=np.uint64)
+    a, b = (small, big) if small_first else (big, small)
+    with pytest.raises(ValueError, match="word length mismatch"):
+        BloomSketch.merge(a, b)

@@ -2,15 +2,18 @@
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from fastbloom_spark import BloomConfig
 from fastbloom_spark.operators import bloom_agg
+from fastbloom_spark.operators.bloom import BloomSketch
 from fastbloom_spark.operators.sketch_agg import sketch_agg
 from fastbloom_spark.sketch import (CountMinSketch, HllSketch, KllSketch,
-                                    TDigestSketch)
+                                    TDigestSketch, ThetaSketch)
 from fastbloom_spark.sql import register_sketch_sql
 
 
@@ -367,23 +370,113 @@ def test_sql_null_arguments_yield_null(spark, sf_dir):
             assert any(r.v is not None for r in vals), (view, expr)
 
 
-def test_sql_merge_agg_rejects_mixed_params(spark, sf_dir):
+@pytest.mark.parametrize("agg, col, a, b", [
+    pytest.param("hll_union_agg", "c_name", HllSketch(precision=12, seed=42),
+                 HllSketch(precision=11, seed=42), id="hll"),
+    pytest.param("tdigest_merge_agg", "c_acctbal", TDigestSketch(delta=100),
+                 TDigestSketch(delta=200), id="tdigest"),
+    pytest.param("cms_union_agg", "c_name",
+                 CountMinSketch(depth=4, log2_width=10),
+                 CountMinSketch(depth=4, log2_width=11), id="cms"),
+    pytest.param("kll_merge_agg", "c_acctbal", KllSketch(k=100),
+                 KllSketch(k=200), id="kll"),
+    pytest.param("theta_union_agg", "c_name", ThetaSketch(k=64, seed=42),
+                 ThetaSketch(k=128, seed=42), id="theta"),
+])
+def test_sql_merge_agg_rejects_mixed_params(spark, sf_dir, agg, col, a, b):
     """Grouped merge aggregates refuse groups mixing differently-
     parameterized states with a clear error (never a silent wrong merge)."""
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    a = sketch_agg(cust, [], "c_name", HllSketch(precision=12, seed=42))
-    b = sketch_agg(cust, [], "c_name", HllSketch(precision=11, seed=42))
-    a.unionByName(b).createOrReplaceTempView("mixed_hll")
+    sketch_agg(cust, [], col, a).unionByName(sketch_agg(cust, [], col, b)) \
+        .createOrReplaceTempView("mixed_params")
     with pytest.raises(Exception, match="mixed sketch parameters"):
-        spark.sql("SELECT hll_union_agg(sketch) AS s FROM mixed_hll") \
-            .collect()
+        spark.sql(f"SELECT {agg}(sketch) AS s FROM mixed_params").collect()
 
-    ta = sketch_agg(cust, [], "c_acctbal", TDigestSketch(delta=100))
-    tb = sketch_agg(cust, [], "c_acctbal", TDigestSketch(delta=200))
-    ta.unionByName(tb).createOrReplaceTempView("mixed_td")
-    with pytest.raises(Exception, match="mixed sketch parameters"):
-        spark.sql("SELECT tdigest_merge_agg(sketch) AS s FROM mixed_td") \
-            .collect()
+
+@pytest.mark.parametrize("small_first", [True, False],
+                         ids=["small_first", "big_first"])
+def test_sql_bloom_union_agg_rejects_mixed_sizes(spark, sf_dir,
+                                                 small_first):
+    """Bloom payloads carry only their words: a group mixing a 64-bit and a
+    4096-bit filter fails on the word count in either row order (the
+    big-first order used to OR the 1-word payload into every word)."""
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    small, big = (bloom_agg(cust, [], "c_name",
+                            BloomConfig.with_num_bits(bits, num_hashes=3,
+                                                      seed=42))
+                  for bits in (64, 4096))
+    first, second = (small, big) if small_first else (big, small)
+    first.unionByName(second).coalesce(1) \
+        .createOrReplaceTempView("mixed_bloom_sizes")
+    with pytest.raises(Exception, match="word length mismatch"):
+        spark.sql("SELECT bloom_union_agg(sketch) AS s "
+                  "FROM mixed_bloom_sizes").collect()
+
+
+#: SQL name -> a seeded impl whose locally built states feed it; KLL keeps
+#: seed 0 because its buffers carry no seed (from_buffer compacts with 0)
+_MERGE_AGGS = {
+    "bloom_union_agg": lambda: BloomSketch(
+        BloomConfig.with_num_bits(1 << 12, num_hashes=4, seed=7)),
+    "hll_union_agg": lambda: HllSketch(precision=10, seed=7),
+    "cms_union_agg": lambda: CountMinSketch(depth=4, log2_width=10, seed=7),
+    "tdigest_merge_agg": lambda: TDigestSketch(delta=50),
+    "kll_merge_agg": lambda: KllSketch(k=32),
+    "theta_union_agg": lambda: ThetaSketch(k=64, seed=7),
+}
+
+
+def _seeded_payloads(impl, n: int) -> list[bytes]:
+    out = []
+    for i in range(n):
+        rng = np.random.default_rng(1000 + i)
+        vals = (rng.integers(-2 ** 63, 2 ** 63 - 1, 400, dtype=np.int64)
+                if impl.input_kind == "digest" else rng.normal(size=400))
+        out.append(impl.serialize(impl.update(impl.empty(), vals)))
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(_MERGE_AGGS))
+def test_sql_merge_aggs_equal_local_fold_bytes(spark, name):
+    """Each merge aggregate's payload is byte for byte the local
+    ``serialize(reduce(merge, states))`` over its non-NULL rows: without
+    GROUP BY over one partition (row order is the fold order), and per
+    group for the order-invariant families."""
+    impl = _MERGE_AGGS[name]()
+    cls = type(impl)
+    bufs = _seeded_payloads(impl, 15)
+
+    def local(group: list[bytes]) -> bytes:
+        return impl.serialize(functools.reduce(
+            impl.merge, (cls.from_buffer(b)[1] for b in group)))
+
+    rows = [(i % 3, b) for i, b in enumerate(bufs)]
+    rows.insert(7, (1, None))
+    spark.createDataFrame(rows, "g int, sketch binary").coalesce(1) \
+        .createOrReplaceTempView("merge_agg_in")
+    got = spark.sql(f"SELECT {name}(sketch) AS s FROM merge_agg_in") \
+        .collect()
+    assert [bytes(r.s) for r in got] == [local(bufs)]
+    if getattr(impl, "order_invariant", False):
+        got = {r.g: bytes(r.s) for r in spark.sql(
+            f"SELECT g, {name}(sketch) AS s FROM merge_agg_in GROUP BY g")
+            .collect()}
+        assert got == {g: local(bufs[g::3]) for g in range(3)}
+
+
+def test_sql_merge_aggs_register_as_grouped_aggregates():
+    """The factory registers a GROUPED_AGG pandas UDF under each of the six
+    aggregate names, never a scalar UDF under an aggregate's name."""
+    from types import SimpleNamespace
+
+    from pyspark.util import PythonEvalType
+
+    registered = {}
+    fake = SimpleNamespace(udf=SimpleNamespace(
+        register=lambda name, fn: registered.setdefault(name, fn)))
+    register_sketch_sql(fake)
+    assert {n: registered[n].evalType for n in _MERGE_AGGS} == dict.fromkeys(
+        _MERGE_AGGS, PythonEvalType.SQL_GROUPED_AGG_PANDAS_UDF)
 
 
 def test_sql_quantile_vectorized_parity_and_speed(spark, sf_dir):
