@@ -17,8 +17,11 @@ more decisions join it, both driven by the same arithmetic:
 
 ``plan_global_merge`` makes the merge choice for every global build
 (``sketch_build`` and ``bloom_build``); ``plan_bloom_build`` adds Bloom's
-parallelism and scan choices. The operator layer and any caller reasoning
-about a job (tests, bench, capacity planning) agree through them.
+parallelism and scan choices. ``plan_survivor_read`` decides where an
+index lookup reads the units its filters keep: on the driver (no Spark
+job) while they are small and local, else as a distributed scan. The
+operator layer and any caller reasoning about a job (tests, bench,
+capacity planning) agree through them.
 """
 
 from __future__ import annotations
@@ -32,6 +35,27 @@ MIN_ROWS_PER_TASK = 50_000
 
 #: raw partial-state bytes above which the merge must not converge on one node
 DRIVER_MERGE_BUDGET = 1 << 30
+
+#: on-disk (compressed) bytes of an index lookup's surviving files below
+#: which the driver reads them itself (pyarrow, then a LocalTableScan
+#: DataFrame: no Spark job) instead of running a distributed scan.
+#: Measured on a 100k-row synth_code_table in 16 buckets of ~0.7 MB (path
+#: index, local[4], CPU of driver + JVM + Python workers per lookup,
+#: driver vs distributed): exact lookups, whose rows pyarrow filters
+#: before Spark sees them, 66-76 vs 143-161 ms at 1 surviving bucket, 97
+#: vs 199-219 ms at 4 and 171-178 vs 348-355 ms at 16 (11 MB); reads that
+#: keep whole buckets (exact=False, or a probe type pyarrow cannot match)
+#: 141-145 vs 161-171 ms at 1, 265-629 vs 500-579 ms at 4 (2.8 MB,
+#: unresolved) and 2.4-2.6 vs 1.8-1.9 s at 16 (11 MB). One byte budget
+#: cannot tell the two apart, so it sits above the largest size at which
+#: no measured case loses (2.8 MB) and below the smallest at which one
+#: does (11 MB): exact lookups above 4 MiB stay distributed though the
+#: driver was cheaper for them at 2.8 and 11 MB. The decoded Arrow table
+#: and the LocalRelation are larger than these bytes by the files'
+#: compression ratio. The benchmark's lookups (one key into this same
+#: 16-bucket layout) fall under the budget; the over-budget side is
+#: covered by tests only.
+DRIVER_READ_BUDGET = 4 << 20
 
 #: estimated partial-state bytes (keys x partitions x state) above which a
 #: grouped sketch_agg / bloom_agg shuffles its rows instead of building
@@ -79,6 +103,17 @@ def plan_global_merge(partials: int, state_bytes: int) -> str:
     if partials * state_bytes <= DRIVER_MERGE_BUDGET:
         return "driver_collect"
     return "tree"
+
+
+def plan_survivor_read(survivor_bytes: int | None) -> str:
+    """Where an index lookup reads its surviving files: ``"driver"`` when
+    their on-disk bytes are below :data:`DRIVER_READ_BUDGET`, else
+    ``"spark"`` (a distributed scan). ``None`` means the driver cannot
+    open them itself (a remote filesystem) and is ``"spark"`` too; a
+    budget of 0 keeps every read distributed."""
+    if survivor_bytes is not None and survivor_bytes < DRIVER_READ_BUDGET:
+        return "driver"
+    return "spark"
 
 
 def plan_bloom_build(

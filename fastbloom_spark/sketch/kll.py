@@ -12,8 +12,11 @@ pure function of sketch lineage, so reruns of the same partition produce
 identical states (needed for Spark task retries), while remaining unbiased
 across levels/compactions.
 
-State layout: b"K", uint16 k LE, uint32 n_compactions LE, uint8 n_levels,
-then per level uint32 len + float64 items.
+State layout: b"k", uint16 k LE, uint64 seed LE, uint32 n_compactions LE,
+uint8 n_levels, then per level uint32 len + float64 items. The seed
+travels in the header so a config-free load (the SQL merge aggregates)
+compacts with the builder's coins. Buffers of the seedless layout (magic
+b"K", no seed field) still load, with seed 0.
 """
 
 from __future__ import annotations
@@ -24,7 +27,12 @@ import numpy as np
 
 from ..kernel import mix64
 
-_MAGIC = 0x4B  # 'K'
+_MAGIC = 0x6B  # 'k'
+_HEADER = "<BHQIB"
+#: the seedless layout: magic, k, n_compactions, n_levels
+_LEGACY_MAGIC = 0x4B  # 'K'
+_LEGACY_HEADER = "<BHIB"
+_U64 = (1 << 64) - 1
 
 
 class KllState:
@@ -47,9 +55,10 @@ class KllSketch:
 
     @property
     def params(self) -> tuple:
-        """What two states must share to merge. Buffers carry no seed, so
-        :meth:`from_buffer` impls compact with seed 0."""
-        return (self.k,)
+        """What two states must share to merge: the seed drives the
+        compaction coins, so mixed seeds would give order-dependent
+        bytes."""
+        return (self.k, self.seed & _U64)
 
     # -- capacities ------------------------------------------------------------
 
@@ -176,20 +185,31 @@ class KllSketch:
     # -- serde -----------------------------------------------------------------
 
     def serialize(self, state: KllState) -> bytes:
-        head = struct.pack("<BHIB", _MAGIC, self.k, state.n_compactions,
-                           len(state.levels))
+        head = struct.pack(_HEADER, _MAGIC, self.k, self.seed & _U64,
+                           state.n_compactions, len(state.levels))
         parts = [head]
         for lvl in state.levels:
             parts.append(struct.pack("<I", lvl.size))
             parts.append(lvl.astype("<f8").tobytes())
         return b"".join(parts)
 
+    @staticmethod
+    def _header(b: bytes) -> tuple[int, int, int, int, int]:
+        """(k, seed, n_compactions, n_levels, items offset) of a buffer in
+        either layout; the seedless one reads as seed 0."""
+        if b[:1] == bytes([_MAGIC]):
+            _, k, seed, n_comp, n_levels = struct.unpack_from(_HEADER, b, 0)
+            return k, seed, n_comp, n_levels, struct.calcsize(_HEADER)
+        if b[:1] == bytes([_LEGACY_MAGIC]):
+            _, k, n_comp, n_levels = struct.unpack_from(_LEGACY_HEADER, b, 0)
+            return k, 0, n_comp, n_levels, struct.calcsize(_LEGACY_HEADER)
+        raise ValueError("not a compatible KLL buffer")
+
     def deserialize(self, buf: bytes) -> KllState:
         b = bytes(buf)
-        magic, k, n_comp, n_levels = struct.unpack_from("<BHIB", b, 0)
-        if magic != _MAGIC or k != self.k:
+        k, _, n_comp, n_levels, off = self._header(b)
+        if k != self.k:
             raise ValueError("not a compatible KLL buffer")
-        off = struct.calcsize("<BHIB")
         levels = []
         for _ in range(n_levels):
             (n,) = struct.unpack_from("<I", b, off)
@@ -204,5 +224,6 @@ class KllSketch:
         """(impl, state) reconstructed from a self-describing buffer — the
         consumer-side entry (SQL UDFs) that needs no prior config."""
         b = bytes(buf)
-        impl = cls(k=struct.unpack_from("<H", b, 1)[0])
+        k, seed, _, _, _ = cls._header(b)
+        impl = cls(k=k, seed=seed)
         return impl, impl.deserialize(b)

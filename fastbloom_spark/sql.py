@@ -422,7 +422,7 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
             ("cms_union_agg", CountMinSketch,
              "cms (depth, log2_width, seed)"),
             ("tdigest_merge_agg", TDigestSketch, "tdigest (delta)"),
-            ("kll_merge_agg", KllSketch, "kll (k)"),
+            ("kll_merge_agg", KllSketch, "kll (k, seed)"),
             ("theta_union_agg", ThetaSketch, "theta (k, seed)"))}
     fns.update({
         "bloom_probe_bc": _make_bloom_probe_bc(dict(_BLOOM_BC_REGISTRY)),

@@ -59,10 +59,15 @@ def test_pruned_read_zero_false_negatives(spark, docs, indexed_path):
 
 
 def test_prune_is_partition_pruning_not_post_filter(spark, docs,
-                                                    indexed_path):
+                                                    indexed_path,
+                                                    monkeypatch):
     """The survivors reach the scan as a PARTITION predicate (resolved at
     file listing), and the files actually read are exactly the surviving
-    bucket directories."""
+    bucket directories. Budget 0 keeps the read distributed (a driver
+    read is a LocalTableScan with no input files)."""
+    from fastbloom_spark.plans import planner
+
+    monkeypatch.setattr(planner, "DRIVER_READ_BUDGET", 0)
     probes = member_texts(docs, n=1)
     got, stats = pruned_read(spark, indexed_path, probes, exact=False)
     plan = formatted(got)
@@ -1184,3 +1189,148 @@ def test_standalone_index_rejects_append_mode(spark, docs, tmp_path):
     with pytest.raises(ValueError, match="mode='ignore'"):
         index_parquet_row_groups(spark, data, str(tmp_path / "i2"),
                                  index_col="text", cfg=CFG, mode="ignore")
+
+
+# ------------------------------------- driver read vs distributed read --
+
+
+def _driver_and_spark(read):
+    """One lookup under the default budget, then with the distributed
+    read forced (budget 0)."""
+    from fastbloom_spark.plans import planner
+
+    got = read()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(planner, "DRIVER_READ_BUDGET", 0)
+        want = read()
+    return got, want
+
+
+def _assert_same_read(got, want):
+    """Same rows and schema on both paths; the stats differ only in the
+    path they report."""
+    import dataclasses
+
+    (gdf, gst), (wdf, wst) = got, want
+    assert (gst.read, wst.read) == ("driver", "spark")
+    assert dataclasses.replace(gst, read="spark") == wst
+    assert gdf.schema.simpleString() == wdf.schema.simpleString()
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)
+    assert rows(gdf) == rows(wdf)
+    return rows(gdf)
+
+
+@pytest.fixture(scope="module")
+def seeded_table(spark, tmp_path_factory):
+    """48 seeded rows in 4 buckets: ``key`` (24 distinct strings, every
+    6th row NULL), ``code`` (numeric strings) and ``n`` all indexed."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, None if i % 6 == 0 else f"key-{rng.randrange(24):02d}",
+             str(i % 13), rng.random()) for i in range(48)]
+    df = spark.createDataFrame(
+        rows, "n bigint, key string, code string, x double")
+    path = str(tmp_path_factory.mktemp("seeded") / "tbl")
+    write_indexed_table(df, path, index_col=["key", "code", "n"], cfg=CFG,
+                        bucket_source="n", num_buckets=4)
+    keys = sorted({r[1] for r in rows if r[1] is not None})
+    return path, keys
+
+
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "candidates"])
+def test_driver_read_equals_spark_read_every_key(spark, seeded_table,
+                                                 exact):
+    """For every key of a seeded table (NULLs in the indexed column), a
+    multi-value probe and an absent key, the driver read returns the
+    distributed read's rows and schema; an absent key reads 0 rows with
+    the full schema."""
+    from fastbloom_spark.sources import IndexHandle
+
+    path, keys = seeded_table
+    handle = IndexHandle(spark, path)
+    for probes in [[k] for k in keys] + [keys[:3], ["absent-key"]]:
+        rows = _assert_same_read(*_driver_and_spark(
+            lambda: handle.pruned_read(probes, on="key", exact=exact)))
+        if exact and probes != ["absent-key"]:
+            assert rows and {r[1] for r in rows} <= set(probes)
+    got, _ = handle.pruned_read(["absent-key"], on="key")
+    assert got.count() == 0
+    assert got.schema == spark.read.parquet(f"{path}/data").schema
+
+
+def test_driver_read_int_probes(spark, seeded_table):
+    """An int probe on a string column is not pushed into pyarrow (no
+    cast there); Spark's IN casts on both paths, so rows are equal. Int
+    probes on a bigint column are pushed down, with the same rows."""
+    from fastbloom_spark.sources import IndexHandle
+
+    path, _ = seeded_table
+    handle = IndexHandle(spark, path)
+    rows = _assert_same_read(*_driver_and_spark(
+        lambda: handle.pruned_read([7], on="code")))
+    assert rows and {r[2] for r in rows} == {"7"}
+    rows = _assert_same_read(*_driver_and_spark(
+        lambda: handle.pruned_read([5, 17], on="n")))
+    assert sorted(r[0] for r in rows) == [5, 17]
+
+
+def test_driver_read_files_and_row_groups_equal_spark(spark, docs,
+                                                      tmp_path):
+    """pruned_read_files and pruned_read_row_groups (module and handle)
+    over a hive-partitioned table (bucket_id dirs): driver and
+    distributed reads agree on rows and schema, partition column
+    included."""
+    from fastbloom_spark.sources import (IndexHandle,
+                                         index_parquet_row_groups,
+                                         pruned_read_row_groups)
+
+    path = str(tmp_path / "hive")
+    write_indexed_table(docs, path, index_col="text", cfg=CFG,
+                        bucket_source="doc_id", num_buckets=4,
+                        row_group_index=True)
+    data = f"{path}/data"
+    fidx, rgidx = str(tmp_path / "fidx"), str(tmp_path / "rgidx")
+    index_parquet_files(spark, data, fidx, index_col="text", cfg=CFG)
+    index_parquet_row_groups(spark, data, rgidx, index_col="text", cfg=CFG)
+    handle = IndexHandle(spark, path)
+    texts = member_texts(docs, 3)
+    for probes in ([texts[0]], texts, ["absent-abcdef"]):
+        for exact in (True, False):
+            for read in (
+                    lambda: pruned_read_files(spark, data, fidx, probes,
+                                              exact=exact),
+                    lambda: pruned_read_row_groups(spark, data, rgidx,
+                                                   probes, exact=exact),
+                    lambda: handle.pruned_read_row_groups(probes,
+                                                          exact=exact)):
+                got, want = _driver_and_spark(read)
+                _assert_same_read(got, want)
+                assert BUCKET_COL in got[0].columns
+
+
+
+def test_driver_read_merges_appended_file_schemas(spark, tmp_path):
+    """An append whose frame has NOT NULL columns writes bucket files
+    whose parquet fields are required where the first write's are
+    optional; the driver read casts each file to the table's schema, as
+    Spark's read does, and returns the distributed read's rows."""
+    from fastbloom_spark.sources import (IndexHandle,
+                                         append_to_indexed_table)
+
+    path = str(tmp_path / "appended")
+    first = spark.createDataFrame(
+        [(i, f"key-{i:02d}") for i in range(24)], "n bigint, key string")
+    write_indexed_table(first, path, index_col="key", cfg=CFG,
+                        bucket_source="n", num_buckets=2)
+    more = spark.range(30, 42).select(
+        F.col("id").alias("n"),
+        F.concat(F.lit("key-"), F.col("id").cast("string")).alias("key"))
+    assert not more.schema["key"].nullable
+    append_to_indexed_table(more, path)
+    handle = IndexHandle(spark, path)
+    keys = ["key-03", "key-30", "key-41"]
+    for probes in [[k] for k in keys] + [keys]:
+        rows = _assert_same_read(*_driver_and_spark(
+            lambda: handle.pruned_read(probes, on="key")))
+        assert sorted(r[1] for r in rows) == sorted(probes)

@@ -322,3 +322,66 @@ def test_global_block_ids_broadcasts_offsets_no_global_sort(spark, sf_dir):
     # the broadcast exchange for the offsets); a global ordering would
     # show a rangepartitioning exchange
     assert "rangepartitioning" not in plan.lower(), plan
+
+
+@pytest.fixture(scope="module")
+def lookup_table(spark, sf_dir, tmp_path_factory):
+    """An indexed documents table and one member text to look up."""
+    from fastbloom_spark.sources import write_indexed_table
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    path = str(tmp_path_factory.mktemp("lookup") / "docs")
+    cfg = BloomConfig.from_false_pos(0.01, expected_items=80, seed=42)
+    write_indexed_table(docs, path, index_col="text", cfg=cfg,
+                        bucket_source="doc_id", num_buckets=8)
+    return path, docs.filter("doc_id = 7").first().text
+
+
+def test_index_lookup_under_budget_is_local_scan_without_jobs(
+        spark, lookup_table):
+    """Under the driver-read budget a handle lookup is a LocalTableScan:
+    Spark's exact IN folds into it, and the read plus the collect start
+    no Spark job."""
+    from fastbloom_spark.sources import IndexHandle
+
+    path, text = lookup_table
+    handle = IndexHandle(spark, path)
+    handle.pruned_read([text])[0].collect()  # resolves the data relation
+    sc = spark.sparkContext
+    sc.setJobGroup("driver_lookup", "count lookup jobs", False)
+    try:
+        df, stats = handle.pruned_read([text])
+        rows = df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("driver_lookup")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats.read == "driver"
+    assert [r.text for r in rows] == [text]
+    plan = plan_of(df)
+    assert plan.startswith("LocalTableScan"), plan
+    assert "FileScan" not in plan
+    assert list(jobs) == []
+
+
+@pytest.mark.parametrize("forced", ["over_budget", "remote_root"])
+def test_index_lookup_falls_back_to_partition_pruned_file_scan(
+        spark, lookup_table, monkeypatch, forced):
+    """Over the budget, or on a root the driver cannot open, the lookup
+    keeps the parquet FileScan with the survivors as PartitionFilters."""
+    import fastbloom_spark.sources.index as index_mod
+    from fastbloom_spark.plans import planner
+    from fastbloom_spark.sources import IndexHandle
+
+    if forced == "over_budget":
+        monkeypatch.setattr(planner, "DRIVER_READ_BUDGET", 0)
+    else:
+        # what an hdfs:/s3a: file is to the driver: no local size
+        monkeypatch.setattr(index_mod, "_local_sizes", lambda files: None)
+    path, text = lookup_table
+    df, stats = IndexHandle(spark, path).pruned_read([text])
+    assert stats.read == "spark"
+    assert [r.text for r in df.collect()] == [text]
+    assert "FileScan parquet" in plan_of(df), plan_of(df)
+    plan = formatted(df)
+    scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert scan and index_mod.BUCKET_COL in scan[0], plan

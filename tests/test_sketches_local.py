@@ -238,17 +238,40 @@ def test_tdigest_rank_inverse_of_quantile():
 
 @pytest.mark.parametrize("impl", [
     HllSketch(precision=10, seed=7), CountMinSketch(depth=3, seed=7),
-    TDigestSketch(delta=50), KllSketch(k=32), ThetaSketch(k=64, seed=7)],
+    TDigestSketch(delta=50), KllSketch(k=32, seed=42),
+    ThetaSketch(k=64, seed=7)],
     ids=lambda i: i.name)
 def test_from_buffer_restores_params_and_state(impl):
     """The config-free load the SQL merge aggregates use gives back an impl
-    with the builder's params and a state that re-serializes unchanged."""
+    with the builder's params and a state that re-serializes unchanged,
+    and that impl merges (KLL: compacts with the seed's coins) to the
+    builder's bytes."""
     vals = (digests_of(3_000) if impl.input_kind == "digest"
             else RNG.normal(size=3_000))
     buf = impl.serialize(impl.update(impl.empty(), vals))
     back, state = type(impl).from_buffer(buf)
     assert back.params == impl.params
     assert back.serialize(state) == buf
+    other = impl.serialize(impl.update(impl.empty(), vals * 2 + 1))
+    assert back.serialize(back.merge(state, back.deserialize(other))) \
+        == impl.serialize(impl.merge(impl.deserialize(buf),
+                                     impl.deserialize(other)))
+
+
+def test_kll_seedless_buffer_loads_with_seed_zero():
+    """Buffers of the seedless KLL layout (magic b"K") still load, as
+    seed 0, and re-serialize in the seeded layout."""
+    import struct
+
+    impl = KllSketch(k=32)
+    state = impl.update(impl.empty(), RNG.normal(size=3_000))
+    levels = b"".join(struct.pack("<I", lvl.size) + lvl.astype("<f8").tobytes()
+                      for lvl in state.levels)
+    legacy = struct.pack("<BHIB", 0x4B, 32, state.n_compactions,
+                         len(state.levels)) + levels
+    back, got = KllSketch.from_buffer(legacy)
+    assert back.params == (32, 0)
+    assert back.serialize(got) == impl.serialize(state)
 
 
 @pytest.mark.parametrize("small_first", [True, False],

@@ -380,6 +380,8 @@ def test_sql_null_arguments_yield_null(spark, sf_dir):
                  CountMinSketch(depth=4, log2_width=11), id="cms"),
     pytest.param("kll_merge_agg", "c_acctbal", KllSketch(k=100),
                  KllSketch(k=200), id="kll"),
+    pytest.param("kll_merge_agg", "c_acctbal", KllSketch(k=100, seed=1),
+                 KllSketch(k=100, seed=2), id="kll_seed"),
     pytest.param("theta_union_agg", "c_name", ThetaSketch(k=64, seed=42),
                  ThetaSketch(k=128, seed=42), id="theta"),
 ])
@@ -421,7 +423,7 @@ _MERGE_AGGS = {
     "hll_union_agg": lambda: HllSketch(precision=10, seed=7),
     "cms_union_agg": lambda: CountMinSketch(depth=4, log2_width=10, seed=7),
     "tdigest_merge_agg": lambda: TDigestSketch(delta=50),
-    "kll_merge_agg": lambda: KllSketch(k=32),
+    "kll_merge_agg": lambda: KllSketch(k=32, seed=42),
     "theta_union_agg": lambda: ThetaSketch(k=64, seed=7),
 }
 
@@ -697,12 +699,15 @@ def test_sql_index_filter_published(spark, sf_dir, tmp_path):
 
 
 def test_sql_pruned_view_reads_only_surviving_buckets(spark, sf_dir,
-                                                      tmp_path):
+                                                      tmp_path, monkeypatch):
     """register_pruned_view (VERDICT r04 #5): index-driven FILE skipping
-    from pure SQL — the registered view's plan resolves the survivors as a
-    PARTITION predicate (skipped bucket dirs never opened), SQL over the
-    view returns every matching row (zero FN), and the files actually read
-    are exactly the surviving bucket directories."""
+    from pure SQL — SQL over the view returns every matching row (zero
+    FN). Under the driver-read budget the survivors are read at
+    registration (``stats.read == "driver"``); with the budget at 0 the
+    view's plan resolves the survivors as a PARTITION predicate (skipped
+    bucket dirs never opened) and the files actually read are exactly the
+    surviving bucket directories."""
+    from fastbloom_spark.plans import planner
     from fastbloom_spark.sources import (IndexHandle, register_pruned_view,
                                          write_indexed_table)
     from fastbloom_spark.sources.index import BUCKET_COL
@@ -714,23 +719,15 @@ def test_sql_pruned_view_reads_only_surviving_buckets(spark, sf_dir,
     write_indexed_table(docs, path, index_col="text", cfg=cfg,
                         bucket_source="doc_id", num_buckets=8)
     probe = [docs.filter("doc_id = 7").first().text]
+    want = sorted(r.doc_id for r in
+                  docs.filter(F.col("text") == probe[0]).collect())
     try:
         stats = register_pruned_view(spark, path, probe, "docs_probe_hit")
+        assert stats.read == "driver"
         assert stats.units_total == 8 and stats.units_survived < 8
-        out = spark.sql("SELECT doc_id FROM docs_probe_hit")
         # zero FN: the pure-SQL result equals the full-scan answer
-        want = sorted(r.doc_id for r in
-                      docs.filter(F.col("text") == probe[0]).collect())
+        out = spark.sql("SELECT doc_id FROM docs_probe_hit")
         assert sorted(r.doc_id for r in out.collect()) == want
-        # plan-asserted file skipping: survivors are a PARTITION filter
-        plan = formatted(out)
-        scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
-        assert scan and BUCKET_COL in scan[0], plan
-        files = {r.f for r in spark.sql(
-            "SELECT input_file_name() AS f FROM docs_probe_hit")
-            .distinct().collect()}
-        dirs = {f.rsplit("/", 2)[-2] for f in files}
-        assert dirs <= {f"{BUCKET_COL}={s}" for s in stats.survivors}
         # rowgroup granularity registers through the same helper (reuse
         # the loaded handle) when the rgbloom sidecar exists
         h = IndexHandle(spark, path)
@@ -748,8 +745,24 @@ def test_sql_pruned_view_reads_only_surviving_buckets(spark, sf_dir,
         with pytest.raises(ValueError, match="granularity"):
             register_pruned_view(spark, path, probe, "bad",
                                  granularity="page")
+        # the distributed read (budget 0): plan-asserted file skipping
+        monkeypatch.setattr(planner, "DRIVER_READ_BUDGET", 0)
+        scan_stats = register_pruned_view(spark, path, probe,
+                                          "docs_probe_scan", handle=h)
+        assert scan_stats.read == "spark"
+        out = spark.sql("SELECT doc_id FROM docs_probe_scan")
+        assert sorted(r.doc_id for r in out.collect()) == want
+        plan = formatted(out)
+        scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
+        assert scan and BUCKET_COL in scan[0], plan
+        files = {r.f for r in spark.sql(
+            "SELECT input_file_name() AS f FROM docs_probe_scan")
+            .distinct().collect()}
+        dirs = {f.rsplit("/", 2)[-2] for f in files}
+        assert dirs <= {f"{BUCKET_COL}={s}" for s in scan_stats.survivors}
     finally:
         spark.catalog.dropTempView("docs_probe_hit")
+        spark.catalog.dropTempView("docs_probe_scan")
 
 
 def test_sql_rank_functions(spark, sf_dir):
