@@ -328,14 +328,18 @@ def bloom_build(
     return BloomFilter(cfg, words, rows_seen=rows_seen)
 
 
+def sketch_row_config(row) -> BloomConfig:
+    """The geometry a sketch row (a Spark ``Row`` or a pandas row) carries
+    in its ``m``/``k``/``seed``/``layout``/``digest`` fields."""
+    return BloomConfig(num_bits=int(row.m), num_hashes=int(row.k),
+                       seed=int(row.seed) & ((1 << 64) - 1),
+                       layout=str(getattr(row, "layout", None) or "flat"),
+                       digest=str(getattr(row, "digest", None) or "sha256"))
+
+
 def sketch_row_to_filter(row) -> BloomFilter:
     """Hydrate a sketch row (from bloom_agg / checkpoint) into a filter."""
-    seed = int(row.seed) & ((1 << 64) - 1)
-    layout = getattr(row, "layout", None) or "flat"
-    digest = getattr(row, "digest", None) or "sha256"
-    cfg = BloomConfig(num_bits=int(row.m), num_hashes=int(row.k), seed=seed,
-                      layout=layout, digest=digest)
-    return BloomFilter(cfg, decode_words(bytes(row.sketch)),
+    return BloomFilter(sketch_row_config(row), decode_words(bytes(row.sketch)),
                        rows_seen=int(row.rows_seen))
 
 

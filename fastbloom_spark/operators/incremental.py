@@ -108,7 +108,7 @@ def incremental_dedup(
     if has_state:
         handle = IndexHandle(spark, state_path)
         icol = "fingerprint"
-        digest = handle._digest[icol]
+        digest = handle._units.digest(icol)
         bloom = handle.union_filter(icol)
         from ..functions.digest import digest64
 
@@ -126,10 +126,10 @@ def incremental_dedup(
         state_fp = handle._data().select(icol)
         if len(pos_digs) <= max_pruned_keys:
             stats = handle.prune([], on=icol, digests=pos_digs)
-            from ..sources.index import BUCKET_COL
+            from ..sources.index import _bucket_scan
 
-            state_fp = handle._data().filter(F.col(BUCKET_COL).isin(
-                [int(s) for s in stats.survivors] or [-1])).select(icol)
+            state_fp = _bucket_scan(handle._data(),
+                                    stats.survivors).select(icol)
         verified_new = positives.join(
             state_fp.withColumnRenamed(icol, _FP_COL),
             on=_FP_COL, how="left_anti").drop("__d", "__maybe")
@@ -285,10 +285,10 @@ def incremental_minhash_dedup(
 
     if has_state:
         handle = IndexHandle(spark, state_path)
-        digest = handle._digest["band_hash"]
+        digest = handle._units.digest("band_hash")
         bloom = handle.union_filter("band_hash")
         from ..functions.digest import digest64
-        from ..sources.index import BUCKET_COL
+        from ..sources.index import _bucket_scan
 
         probed = banded.withColumn(
             "__d", digest64(F.col("band_hash"), digest))
@@ -299,8 +299,7 @@ def incremental_minhash_dedup(
         state_bands = handle._data()
         if len(pos_digs) <= max_pruned_keys:
             stats = handle.prune([], on="band_hash", digests=pos_digs)
-            state_bands = state_bands.filter(F.col(BUCKET_COL).isin(
-                [int(s) for s in stats.survivors] or [-1]))
+            state_bands = _bucket_scan(state_bands, stats.survivors)
         state_side = state_bands.select(
             F.col("band_idx"), F.col("band_hash"),
             F.col("sig").alias("__state_sig"))

@@ -28,6 +28,11 @@ Why this is the 100 TB shape:
   can never live in a skipped unit. False positives only cost reading one
   extra unit — the index FPR bounds expected over-read.
 
+One survival rule serves every granularity: a unit survives iff its filter
+may contain ANY probe digest. :class:`_UnitFilters` is the one place that
+rule runs — buckets, files and row groups are each a set of per-unit
+filters keyed by their unit columns, probed the same way.
+
 Index construction is one :func:`~fastbloom_spark.operators.bloom.bloom_agg`
 pass (map-side partials, sketch-row-only shuffle), so building the index
 costs one scan and shuffles ``units * m/8`` bytes regardless of row count.
@@ -37,7 +42,9 @@ from __future__ import annotations
 
 import dataclasses
 import functools
+import itertools
 import os
+import urllib.parse
 from dataclasses import dataclass
 from typing import Callable, Iterable, Sequence
 
@@ -47,7 +54,8 @@ from pyspark.sql import functions as F
 
 from ..config import BloomConfig
 from ..kernel import digest64_bytes
-from ..operators.bloom import BloomSketch, bloom_agg, sketch_row_to_filter
+from ..operators.bloom import (BloomSketch, bloom_agg, sketch_row_config,
+                               sketch_row_to_filter)
 from ..plans import planner
 
 #: partition column added by write_indexed_table
@@ -150,10 +158,7 @@ def _read_index_meta(index_pdf: pd.DataFrame) -> _IndexMeta:
         zone_cols=tuple(
             c for c in str(meta.get("zone_cols", "") or "").split(",")
             if c),
-        cfg=BloomConfig(num_bits=int(meta["m"]), num_hashes=int(meta["k"]),
-                        seed=int(meta["seed"]) & ((1 << 64) - 1),
-                        layout=str(meta["layout"]),
-                        digest=str(meta["digest"])))
+        cfg=sketch_row_config(meta))
 
 
 def _read_meta_pdf(spark: SparkSession, bloom_dir: str) -> pd.DataFrame:
@@ -268,19 +273,14 @@ def _claim_index_version(spark: SparkSession, path: str) -> tuple[int, str]:
     versions = _list_versions(spark, path)
     next_v = (versions[-1][0] + 1) if versions else 1
     vdir = _version_dir(path, next_v)
-    fs, claim = _hadoop_fs(spark, f"{vdir}/{CLAIM_MARKER}")
-    if fs.exists(claim):
-        raise ConcurrentIndexWriteError(
-            f"index version v{next_v} at {path} is already claimed by "
-            "another writer — concurrent index publishes are single-winner; "
-            "retry after the other publish commits (or crashes and is GC'd)")
-    try:
-        fs.create(claim, False).close()  # overwrite=False: atomic loser
+    try:  # create-exclusive: exactly one racer creates the claim
+        _write_small_file(spark, f"{vdir}/{CLAIM_MARKER}", b"")
     except Exception as e:
         raise ConcurrentIndexWriteError(
-            f"could not claim index version v{next_v} at {path} (a "
-            "concurrent writer won the create-exclusive race, or the "
-            "filesystem refused the claim create)") from e
+            f"index version v{next_v} at {path} is already claimed by "
+            "another writer (or the filesystem refused the claim create) — "
+            "concurrent index publishes are single-winner; retry after the "
+            "other publish commits (or crashes and is GC'd)") from e
     return next_v, vdir
 
 
@@ -318,8 +318,11 @@ def _publish_index_version(spark: SparkSession, path: str,
     if data_files is not None:
         _write_small_file(spark, f"{vdir}/{FILES_MANIFEST}",
                           "\n".join(data_files).encode("utf-8"))
-    fs, marker = _hadoop_fs(spark, f"{vdir}/{COMMIT_MARKER}")
-    fs.create(marker, False).close()
+    _write_small_file(spark, f"{vdir}/{COMMIT_MARKER}", b"")
+    # a committed version supersedes the legacy in-place layout (if any):
+    # drop it so resolution can never fall back to it
+    for legacy in ("index", "zones"):
+        _delete_dir(spark, f"{path}/{legacy}")
     # GC: keep the new version plus the previous committed one (readers
     # that resolved just before the flip may still be scanning it); drop
     # older committed versions. UNCOMMITTED dirs are GC'd only past a
@@ -330,26 +333,30 @@ def _publish_index_version(spark: SparkSession, path: str,
     # for the TTL (readers ignore them; version allocation skips past).
     # One listing serves both decisions (each listing is a listStatus +
     # per-dir marker RPC — doubled publish-tail latency on object stores)
-    import time as _time
-
     after = _list_versions(spark, path)
-    committed = [v for v, ok in after if ok]
-    keep = set(committed[-2:])
-    now_ms = int(_time.time() * 1000)
+    keep = set([v for v, ok in after if ok][-2:])
     for v, ok in after:
-        if v in keep:
-            continue
-        if ok:
-            _delete_dir(spark, _version_dir(path, v))
-            continue
-        try:
-            fs_v, vpath = _hadoop_fs(spark, _version_dir(path, v))
-            mtime = fs_v.getFileStatus(vpath).getModificationTime()
-        except Exception:
-            continue  # raced with its own writer/GC — leave it alone
-        if now_ms - mtime > STALE_UNCOMMITTED_TTL_MS:
+        if v not in keep and (ok or _in_flight(spark, path, v) is False):
             _delete_dir(spark, _version_dir(path, v))
     return vdir
+
+
+def _in_flight(spark: SparkSession, path: str, v: int) -> bool | None:
+    """Whether uncommitted version ``v`` may still have a live writer:
+    True when it is younger than ``STALE_UNCOMMITTED_TTL_MS`` or its age
+    cannot be read (fail closed), False when it is older, None when it is
+    verifiably gone (raced with its own writer or GC)."""
+    import time
+
+    try:
+        fs, vpath = _hadoop_fs(spark, _version_dir(path, v))
+        try:
+            mtime = fs.getFileStatus(vpath).getModificationTime()
+        except Exception:
+            return None if not fs.exists(vpath) else True
+    except Exception:
+        return True
+    return int(time.time() * 1000) - mtime <= STALE_UNCOMMITTED_TTL_MS
 
 
 def _data_rel_files(spark: SparkSession, path: str) -> list[str]:
@@ -360,26 +367,22 @@ def _data_rel_files(spark: SparkSession, path: str) -> list[str]:
 
 
 def _fingerprint_of(rel: list[str]) -> tuple[int, str]:
-    import hashlib
-
-    return len(rel), hashlib.sha256("\n".join(rel).encode()).hexdigest()
-
-
-def _data_fingerprint(spark: SparkSession, path: str) -> tuple[int, str]:
-    """(file_count, sha256-of-sorted-relative-paths) of {path}/data — a
+    """(file_count, sha256) of {path}/data's sorted relative paths — a
     LISTING-only staleness witness: pruned reads compare it against the
     value the index recorded at publish time and refuse to prune when they
     differ (e.g. a crash between a data append and its index publish, or
     a concurrent writer), because a filter that never saw those files
     could silently skip their rows — the zero-FN contract."""
-    return _fingerprint_of(_data_rel_files(spark, path))
+    import hashlib
+
+    return len(rel), hashlib.sha256("\n".join(rel).encode()).hexdigest()
 
 
 def _check_index_fresh(index_pdf: pd.DataFrame, spark: SparkSession,
                        path: str) -> None:
     if "data_files_sha" not in index_pdf.columns:
         return  # pre-fingerprint index (legacy layout)
-    n, sha = _data_fingerprint(spark, path)
+    n, sha = _fingerprint_of(_data_rel_files(spark, path))
     want_n = int(index_pdf["data_file_count"].iloc[0])
     want_sha = str(index_pdf["data_files_sha"].iloc[0])
     if (n, sha) != (want_n, want_sha):
@@ -392,12 +395,14 @@ def _check_index_fresh(index_pdf: pd.DataFrame, spark: SparkSession,
             f"compact_indexed_table, or read {path}/data directly.")
 
 
-def _digest_stack(df: DataFrame, cols: Sequence[str], cfg: BloomConfig,
-                  key_col: str = BUCKET_COL) -> DataFrame:
-    """(key, index_col, __digest64) rows for every indexed column in
-    ONE scan: digests are computed JVM-side before a struct-array explode,
-    so k indexed columns cost one pass + a k-way row expansion of 16-byte
-    rows, never k scans of the source."""
+def _unit_sketches(df: DataFrame, cols: Sequence[str], cfg: BloomConfig,
+                   keys: Sequence[str], **agg_kw) -> DataFrame:
+    """One sketch row per (unit, indexed column) — the build side of
+    :class:`_UnitFilters`; ``keys`` name the unit. Every indexed column is
+    digested in ONE scan: digests are computed JVM-side before a
+    struct-array explode, so k indexed columns cost one pass + a k-way row
+    expansion of 16-byte rows, never k scans of the source. ``agg_kw``
+    goes to :func:`~fastbloom_spark.operators.bloom.bloom_agg`."""
     from ..functions.digest import digest64
 
     stack = F.explode(F.array(*[
@@ -409,42 +414,40 @@ def _digest_stack(df: DataFrame, cols: Sequence[str], cfg: BloomConfig,
     # corrupting every digest above 2^53 (CLAUDE.md: mask nulls BEFORE).
     # NULL-in -> NULL-out: a NULL is never a probe value, so zero-FN for
     # real values is unaffected.
-    return df.select(key_col, stack) \
-        .select(key_col, "x.index_col", "x.__digest64") \
+    stacked = df.select(*keys, stack) \
+        .select(*keys, "x.index_col", "x.__digest64") \
         .filter(F.col("__digest64").isNotNull())
+    return bloom_agg(stacked, [*keys, "index_col"], "__digest64", cfg,
+                     digest_precomputed=True, **agg_kw)
 
 
 def _build_index_rows(written: DataFrame, cols: Sequence[str],
                       cfg: BloomConfig, num_buckets: int,
                       bucket_source: str) -> DataFrame:
-    index = bloom_agg(_digest_stack(written, cols, cfg),
-                      [BUCKET_COL, "index_col"], "__digest64", cfg,
-                      digest_precomputed=True,
-                      distinct_keys_hint=num_buckets * len(cols))
+    index = _unit_sketches(written, cols, cfg, [BUCKET_COL],
+                           distinct_keys_hint=num_buckets * len(cols))
     return _meta_cols(index, num_buckets=num_buckets,
                       bucket_source=bucket_source)
 
 
-def _zone_agg_rows(written: DataFrame, zone_cols: Sequence[str]) -> list:
-    """ONE combined aggregation for every zone column (single scan), rows
-    collected via py4j — Python ints are arbitrary-precision, so native
-    values survive exactly. NEVER route zone values through pandas: one
-    all-NULL bucket turns an int64 min/max column float64 and values
-    above 2^53 round — the silent zero-FN break the own-type design
-    exists to prevent."""
+def _zone_agg_rows(written: DataFrame,
+                   zone_cols: Sequence[str]) -> dict[str, list]:
+    """``{column: [(bucket, vmin, vmax, rows_seen)]}`` from ONE combined
+    aggregation for every zone column (single scan), rows collected via
+    py4j — Python ints are arbitrary-precision, so native values survive
+    exactly. NEVER route zone values through pandas: one all-NULL bucket
+    turns an int64 min/max column float64 and values above 2^53 round —
+    the silent zero-FN break the own-type design exists to prevent."""
     aggs = []
     for c in zone_cols:
         aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}"),
                  F.count(c).alias(f"__cnt_{c}")]
-    return written.groupBy(BUCKET_COL).agg(*aggs).collect()
+    rows = written.groupBy(BUCKET_COL).agg(*aggs).collect()
+    return {c: [(r[BUCKET_COL], r[f"__min_{c}"], r[f"__max_{c}"],
+                 r[f"__cnt_{c}"]) for r in rows] for c in zone_cols}
 
 
-def _zone_schema(written: DataFrame, c: str) -> str:
-    dt = written.schema[c].dataType.simpleString()
-    return f"{BUCKET_COL} int, vmin {dt}, vmax {dt}, rows_seen long"
-
-
-def _write_zone_maps(written: DataFrame, zone_cols: Sequence[str],
+def _write_zone_maps(written: DataFrame, zones: dict[str, list],
                      zones_dir: str) -> None:
     """Per-(bucket, column) min/max zone maps — the range-predicate
     counterpart of the Bloom rows (ClickHouse minmax skip index / parquet
@@ -455,13 +458,12 @@ def _write_zone_maps(written: DataFrame, zone_cols: Sequence[str],
     rows). One scan for all columns; NULLs are ignored by min/max (a NULL
     never matches a range predicate). Always writes into a FRESH version
     dir (see _publish_index_version), so mode is plain overwrite-of-empty.
+    ``zones`` holds :func:`_zone_agg_rows`' rows; ``written`` types them.
     """
-    spark = written.sparkSession
-    rows = _zone_agg_rows(written, zone_cols)
-    for c in zone_cols:
-        data = [(r[BUCKET_COL], r[f"__min_{c}"], r[f"__max_{c}"],
-                 r[f"__cnt_{c}"]) for r in rows]
-        spark.createDataFrame(data, _zone_schema(written, c)) \
+    for c, data in zones.items():
+        dt = written.schema[c].dataType.simpleString()
+        written.sparkSession.createDataFrame(
+            data, f"{BUCKET_COL} int, vmin {dt}, vmax {dt}, rows_seen long") \
             .write.mode("overwrite").parquet(f"{zones_dir}/{c}")
 
 
@@ -512,23 +514,7 @@ def write_indexed_table(
     sizes the per-granule filters (defaults to ``cfg`` — over-sized per
     granule, i.e. lower FPR for a few extra KB).
     """
-    if mode == "append":
-        raise ValueError(
-            "mode='append' would append a second full-table index next to "
-            "the stale rows — use append_to_indexed_table for incremental "
-            "ingest")
-    if mode == "ignore":
-        raise ValueError(
-            "mode='ignore' is ambiguous for the index sidecars (a no-op "
-            "data write must not touch zones/index) — use 'overwrite' or "
-            "'error'")
-    if cfg.digest.startswith("custom:"):
-        raise ValueError(
-            f"digest {cfg.digest!r} cannot back a skip index: pruned reads "
-            "must recompute probe digests on the DRIVER (probe_digests), "
-            "and custom Column strategies have no local implementation — "
-            "index with 'sha256'/'xxh64', or probe with bloom_contains_col "
-            "over a bloom_agg sketch table instead")
+    cols = _index_build_cols(index_col, cfg, mode)
     # overwrite: drop the ENTIRE old index (versions + legacy layout + any
     # legacy zones) BEFORE the data rewrite, so every crash state
     # mid-rewrite fails LOUDLY at read time ("no committed bloom index")
@@ -538,47 +524,83 @@ def write_indexed_table(
     if mode == "overwrite":
         for sub in (VERSIONS_DIR, "index", "zones"):
             _delete_dir(df.sparkSession, f"{path}/{sub}")
-    cols = [index_col] if isinstance(index_col, str) else list(index_col)
-    bucketed = df.withColumn(BUCKET_COL, bucket_col(bucket_source,
-                                                    num_buckets))
+    _write_buckets(df.withColumn(BUCKET_COL, bucket_col(bucket_source,
+                                                        num_buckets)),
+                   f"{path}/data", num_buckets, mode, sort_within_buckets_by)
+    _rebuild_index(df.sparkSession, path, _IndexMeta(
+        num_buckets, bucket_source, tuple(cols), tuple(zone_cols), cfg),
+        (row_group_cfg or cfg) if row_group_index else None,
+        commit_token=commit_token)
+
+
+def _write_buckets(bucketed: DataFrame, dest: str, num_buckets: int,
+                   mode: str, sort_by: Sequence[str] = ()) -> None:
+    """Write ``bucketed`` (carrying :data:`BUCKET_COL`) under ``dest`` with
+    one task — and so one file — per bucket directory."""
     writer = bucketed.repartition(num_buckets, F.col(BUCKET_COL))
-    if sort_within_buckets_by:
+    if sort_by:
         # lead with the bucket column: the parquet writer requires rows
         # ordered by the partition columns and would otherwise re-sort
         # (unstably) by bucket alone, destroying the clustering
-        writer = writer.sortWithinPartitions(BUCKET_COL,
-                                             *sort_within_buckets_by)
-    (writer.write.mode(mode).partitionBy(BUCKET_COL)
-        .parquet(f"{path}/data"))
-    # index the WRITTEN data, not a second evaluation of df's lineage — a
-    # nondeterministic input (sample, concurrent append) would otherwise
-    # produce an index missing rows that ARE in the data files, silently
-    # breaking the zero-FN pruning contract (and re-reading one bucketed
-    # table beats re-running the upstream lineage anyway)
-    spark = df.sparkSession
+        writer = writer.sortWithinPartitions(BUCKET_COL, *sort_by)
+    writer.write.mode(mode).partitionBy(BUCKET_COL).parquet(dest)
+
+
+def _rebuild_index(spark: SparkSession, path: str, meta: _IndexMeta,
+                   rg_cfg: BloomConfig | None, *,
+                   commit_token: str | None = None) -> DataFrame:
+    """Index every file under ``{path}/data`` from scratch — Bloom rows
+    with their meta and fingerprint columns, zone maps, and the rgbloom
+    sidecar when ``rg_cfg`` is given — and publish them as a new version.
+    Returns the data relation it indexed.
+
+    The index is built from the WRITTEN data, not a second evaluation of
+    the writer's lineage: a nondeterministic input (sample, concurrent
+    append) would otherwise produce an index missing rows that ARE in the
+    data files, silently breaking the zero-FN pruning contract."""
     written = spark.read.parquet(f"{path}/data")
     rel_files = _data_rel_files(spark, path)
     n_files, files_sha = _fingerprint_of(rel_files)
-    index_rows = _build_index_rows(written, cols, cfg, num_buckets,
-                                   bucket_source) \
-        .withColumn("zone_cols", F.lit(",".join(zone_cols))) \
+    index_rows = _build_index_rows(written, meta.cols, meta.cfg,
+                                   meta.num_buckets, meta.bucket_source) \
+        .withColumn("zone_cols", F.lit(",".join(meta.zone_cols))) \
         .withColumn("data_file_count", F.lit(n_files).cast("long")) \
         .withColumn("data_files_sha", F.lit(files_sha))
-
-    rg_rows = None
-    if row_group_index:
-        rg_rows = _build_rg_index_rows(spark, f"{path}/data", cols,
-                                       row_group_cfg or cfg)
+    rg_rows = None if rg_cfg is None else _build_rg_index_rows(
+        spark, f"{path}/data", meta.cols, rg_cfg)
 
     def publish(vdir: str) -> None:
         index_rows.write.mode("overwrite").parquet(f"{vdir}/bloom")
-        if zone_cols:
-            _write_zone_maps(written, zone_cols, f"{vdir}/zones")
+        if meta.zone_cols:
+            _write_zone_maps(written, _zone_agg_rows(written, meta.zone_cols),
+                             f"{vdir}/zones")
         if rg_rows is not None:
             rg_rows.write.mode("overwrite").parquet(f"{vdir}/rgbloom")
 
     _publish_index_version(spark, path, publish, data_files=rel_files,
                            commit_token=commit_token)
+    return written
+
+
+def _index_build_cols(index_col: str | Sequence[str], cfg: BloomConfig,
+                      mode: str) -> list[str]:
+    """The columns an index build covers, after the rejections every
+    index builder shares."""
+    if mode in ("append", "ignore"):
+        raise ValueError(
+            f"mode={mode!r} would leave duplicate or stale index rows next "
+            "to the new ones (duplicated survivors -> duplicated result "
+            "rows), and a no-op 'ignore' data write is ambiguous for the "
+            "sidecars — use 'overwrite' or 'error' (append_to_indexed_table "
+            "for incremental ingest)")
+    if cfg.digest.startswith("custom:"):
+        raise ValueError(
+            f"digest {cfg.digest!r} cannot back a skip index: pruned reads "
+            "must recompute probe digests on the DRIVER (probe_digests), "
+            "and custom Column strategies have no local implementation — "
+            "index with 'sha256'/'xxh64', or probe with bloom_contains_col "
+            "over a bloom_agg sketch table instead")
+    return [index_col] if isinstance(index_col, str) else list(index_col)
 
 
 def index_parquet_files(
@@ -602,23 +624,11 @@ def index_parquet_files(
     ~one sketch per file with zero row shuffle — the auto cost model's
     ``min(keys, P) * P`` worst case cannot happen for this key.
     """
-    if cfg.digest.startswith("custom:"):
-        raise ValueError(
-            f"digest {cfg.digest!r} cannot back a skip index: pruned reads "
-            "recompute probe digests on the driver (probe_digests) and "
-            "custom Column strategies have no local implementation — "
-            "index with 'sha256' or 'xxh64'")
-    if mode in ("append", "ignore"):
-        raise ValueError(
-            f"mode={mode!r} would leave duplicate or stale sidecar rows "
-            "(duplicated survivors -> duplicated result rows) — use "
-            "'overwrite' or 'error'")
-    cols = [index_col] if isinstance(index_col, str) else list(index_col)
-    df = spark.read.parquet(data_path) \
-        .withColumn(FILE_COL, F.input_file_name())
-    stacked = _digest_stack(df, cols, cfg, key_col=FILE_COL)
-    index = bloom_agg(stacked, [FILE_COL, "index_col"], "__digest64", cfg,
-                      digest_precomputed=True, strategy="partial")
+    cols = _index_build_cols(index_col, cfg, mode)
+    index = _unit_sketches(
+        spark.read.parquet(data_path).withColumn(FILE_COL,
+                                                 F.input_file_name()),
+        cols, cfg, [FILE_COL], strategy="partial")
     _meta_cols(index, num_buckets=0, bucket_source=FILE_COL) \
         .write.mode(mode).parquet(index_path)
 
@@ -637,33 +647,38 @@ def _norm_file(f: str) -> str:
     return re.sub(r"^file:/+", "/", f)
 
 
-def _rg_boundaries(spark: SparkSession, files: list[str]) -> DataFrame:
-    """(file_path, n_rgs, bounds) per file, where ``bounds[i]`` is the
-    row index at which row group ``i`` starts — a DISTRIBUTED footer-only
-    scan (pyarrow reads metadata, never data pages), so a 10^5-file table
-    costs 10^5 footer reads spread across the cluster."""
-    fdf = spark.createDataFrame(
-        pd.DataFrame({"file_path": [_norm_file(f) for f in files]}))
-    fdf = fdf.repartition(
-        min(max(len(files), 1), spark.sparkContext.defaultParallelism))
+def _file_of(uri: str) -> str:
+    """The path a per-file index key names: ``input_file_name()`` keys are
+    URIs whose partition directories Spark already escaped
+    (``ts=2024-01-02 00%3A00%3A00`` is keyed as ``...%2000%253A00%253A00``);
+    decoded once here, or the read escapes it a second time and misses the
+    file."""
+    return urllib.parse.unquote(uri)
+
+
+def _footer_scan(spark: SparkSession, files: Sequence[str],
+                 per_file: Callable, schema: str) -> DataFrame:
+    """A DISTRIBUTED footer-only scan (pyarrow reads metadata, never data
+    pages), so a 10^5-file table costs 10^5 footer reads spread across the
+    cluster: ``per_file(path, ParquetFile)`` lists each file's rows of
+    ``schema``, by position. Values ride as Python objects: one NULL in a
+    float64-inferred pandas column would round int64 values above 2^53
+    (Arrow converts object ints exactly)."""
+    files = [_norm_file(f) for f in files]
+    fdf = spark.createDataFrame(pd.DataFrame({"file_path": files})) \
+        .repartition(min(max(len(files), 1),
+                         spark.sparkContext.defaultParallelism))
 
     def scan(batches):
         import pyarrow.parquet as pq
 
         for b in batches:
-            rows = []
-            for f in b["file_path"]:
-                md = pq.ParquetFile(f).metadata
-                starts, acc = [], 0
-                for i in range(md.num_row_groups):
-                    starts.append(acc)
-                    acc += md.row_group(i).num_rows
-                rows.append((f, md.num_row_groups, starts))
-            yield pd.DataFrame(
-                rows, columns=["file_path", "n_rgs", "bounds"])
+            rows = [r for f in b["file_path"]
+                    for r in per_file(f, pq.ParquetFile(f))]
+            if rows:
+                yield pd.DataFrame(rows, dtype=object)
 
-    return fdf.mapInPandas(
-        scan, "file_path string, n_rgs int, bounds array<long>")
+    return fdf.mapInPandas(scan, schema)
 
 
 def _build_rg_index_rows(spark: SparkSession, data_path: str,
@@ -671,23 +686,22 @@ def _build_rg_index_rows(spark: SparkSession, data_path: str,
                          files: list[str] | None = None,
                          base_path: str | None = None) -> DataFrame:
     """(file, row_group, index_col) sketch rows for every indexed column
-    in ONE data scan (digest stack, like _digest_stack, keyed by granule
-    via the _metadata.row_index x footer-boundaries join). ``files``
+    in ONE data scan (:func:`_unit_sketches`, keyed by granule via the
+    _metadata.row_index x footer-boundaries join). ``files``
     restricts to a subset (appends index only the NEW files — new files
     are new keys, so no merge is ever needed at this granularity)."""
-    from ..functions.digest import digest64
-
     reader = spark.read
     if base_path is not None:
         reader = reader.option("basePath", base_path)
     src = reader.parquet(*(files or [data_path]))
-    flist = files or src.inputFiles()
-    bounds = _rg_boundaries(spark, flist) \
-        .withColumnRenamed("file_path", "__bfile")
-    stack = F.explode(F.array(*[
-        F.struct(F.lit(c).alias("index_col"),
-                 digest64(F.col(c), cfg.digest).alias("__digest64"))
-        for c in cols])).alias("x")
+
+    def starts(f, pf):  # bounds[i]: the row index row group i starts at
+        n = [pf.metadata.row_group(i).num_rows
+             for i in range(pf.metadata.num_row_groups)]
+        return [(f, list(itertools.accumulate(n, initial=0))[:-1])]
+
+    bounds = _footer_scan(spark, files or src.inputFiles(), starts,
+                          "__bfile string, bounds array<long>")
     data = src.select(
         F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
         .alias(FILE_COL),
@@ -695,13 +709,11 @@ def _build_rg_index_rows(spark: SparkSession, data_path: str,
         *[F.col(c) for c in cols])
     rg = (F.size(F.filter(
         "bounds", lambda b: b <= F.col("__ri"))) - 1).cast("int")
-    keyed = data.join(F.broadcast(bounds),
-                      data[FILE_COL] == bounds["__bfile"]) \
-        .select(FILE_COL, rg.alias(RG_COL), stack) \
-        .select(FILE_COL, RG_COL, "x.index_col", "x.__digest64") \
-        .filter(F.col("__digest64").isNotNull())
-    return bloom_agg(keyed, [FILE_COL, RG_COL, "index_col"], "__digest64",
-                     cfg, digest_precomputed=True, strategy="partial")
+    granules = data.join(F.broadcast(bounds),
+                         data[FILE_COL] == bounds["__bfile"]) \
+        .select(FILE_COL, rg.alias(RG_COL), *cols)
+    return _unit_sketches(granules, cols, cfg, [FILE_COL, RG_COL],
+                          strategy="partial")
 
 
 def _check_file_set(index_files, current_files, what: str) -> None:
@@ -722,20 +734,14 @@ def _check_file_set(index_files, current_files, what: str) -> None:
             "files, or pass verify_files=False for forensics")
 
 
-def _rg_cfg_from_row(row) -> BloomConfig:
-    """Self-describing sketch geometry of one rg-sidecar row."""
-    return BloomConfig(num_bits=int(row["m"]), num_hashes=int(row["k"]),
-                       seed=int(row["seed"]) & ((1 << 64) - 1),
-                       layout=str(row["layout"]),
-                       digest=str(row["digest"]))
-
-
-def _rg_dir(bloom_dir: str) -> str | None:
-    """rgbloom sidecar dir of a resolved version; None for the legacy
-    in-place layout (row-group sidecars are versioned-layout-only)."""
-    if bloom_dir.endswith("/bloom"):
-        return bloom_dir[:-len("/bloom")] + "/rgbloom"
-    return None
+def _rg_sidecar(spark: SparkSession, bloom_dir: str) -> str | None:
+    """The rgbloom sidecar dir of a resolved version, or None when it has
+    none (the legacy in-place layout never has one)."""
+    if not bloom_dir.endswith("/bloom"):
+        return None
+    rgdir = bloom_dir[:-len("/bloom")] + "/rgbloom"
+    fs, rgp = _hadoop_fs(spark, rgdir)
+    return rgdir if fs.exists(rgp) else None
 
 
 def index_parquet_row_groups(
@@ -768,17 +774,7 @@ def index_parquet_row_groups(
     a physical (non-partition) column. Probe with
     :func:`pruned_read_row_groups`.
     """
-    if cfg.digest.startswith("custom:"):
-        raise ValueError(
-            f"digest {cfg.digest!r} cannot back a skip index: pruned reads "
-            "recompute probe digests on the driver (probe_digests) — "
-            "index with 'sha256' or 'xxh64'")
-    if mode in ("append", "ignore"):
-        raise ValueError(
-            f"mode={mode!r} would leave duplicate or stale sidecar rows "
-            "(duplicated survivors -> duplicated result rows) — use "
-            "'overwrite' or 'error'")
-    cols = [index_col] if isinstance(index_col, str) else list(index_col)
+    cols = _index_build_cols(index_col, cfg, mode)
     index = _build_rg_index_rows(spark, data_path, cols, cfg)
     _meta_cols(index, num_buckets=0, bucket_source=FILE_COL) \
         .write.mode(mode).parquet(index_path)
@@ -811,56 +807,50 @@ def pruned_read_row_groups(
     write_indexed_table's ``bucket_id=N`` layout) are supported: partition
     columns live in directory names, not data pages, so the granule
     reader reconstructs them from each surviving file's path."""
-    index_pdf = read_index(spark, index_path)
-    if not len(index_pdf):
-        raise ValueError(f"empty row-group index at {index_path}")
+    units = _load_units(spark, index_path, (FILE_COL, RG_COL), "row_group")
     table = spark.read.parquet(data_path)
     if verify_files:
         # parquet files are immutable, so a file-set compare is a
         # complete staleness witness at this granularity too (appends
         # create files, never new row groups inside existing ones)
-        _check_file_set(index_pdf[FILE_COL].unique(), table.inputFiles(),
+        _check_file_set(units.pdf[FILE_COL].unique(), table.inputFiles(),
                         "row-group")
-    index_col = _select_index_col(index_pdf, on)
-    index_pdf = index_pdf[index_pdf["index_col"] == index_col]
-    digest = str(index_pdf["digest"].iloc[0])
-    digs = probe_digests(probe_values, digest)
-    survivors: list[tuple[str, int]] = []
-    for _, row in index_pdf.iterrows():
-        filt = sketch_row_to_filter(row)
-        if len(digs) and bool(filt.contains_digests(digs).any()):
-            survivors.append((str(row[FILE_COL]), int(row[RG_COL])))
-    stats = PruneStats(
-        granularity="row_group",
-        units_total=len(index_pdf),
-        units_survived=len(survivors),
-        survivors=tuple(sorted(f"{f}#{rg}" for f, rg in survivors)))
-    return _read_row_group_survivors(spark, table.schema, survivors,
-                                     index_col, probe_values, exact, stats)
+    return _read_row_groups(spark, table.schema, units, probe_values, on,
+                            exact)
 
 
-def _read_row_group_survivors(spark: SparkSession, schema,
-                              survivors: list[tuple[str, int]], col: str,
-                              values: Sequence, exact: bool,
-                              stats: PruneStats,
-                              ) -> tuple[DataFrame, PruneStats]:
-    df, path = _read_survivors(
+def _read_row_groups(spark: SparkSession, schema, units: "_UnitFilters",
+                     values: Sequence, on: str | None, exact: bool,
+                     ) -> tuple[DataFrame, PruneStats]:
+    """Probe a row-group sidecar and read its surviving (file, row group)
+    granules, in sidecar order (:func:`_read_survivors`)."""
+    icol, hits, stats = units.probe(values, on=on)
+    survivors = [(f, int(rg)) for f, rg in (h.rsplit("#", 1) for h in hits)]
+    return _read_survivors(
         spark, schema, list(dict.fromkeys(f for f, _ in survivors)),
-        lambda: _read_row_group_slices(spark, schema, survivors), col,
-        values, exact, row_groups=survivors)
-    return df, dataclasses.replace(stats, read=path)
+        lambda: _read_row_group_slices(spark, schema, survivors), icol,
+        values, exact, stats, row_groups=survivors)
 
 
-def _partition_fields(schema, first_file: str) -> list:
+def _partition_fields(spark: SparkSession, schema, first_file: str) -> list:
     """Arrow fields of the hive partition columns: the ``schema`` fields
     (Spark's) that ``first_file``'s own columns lack — they live in
-    directory names, not data pages."""
+    directory names, not data pages. A timestamp field carries the session
+    time zone, the zone Spark reads a timestamp directory name in."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_type
 
     physical = set(pq.read_schema(first_file).names)
-    return [(f.name, to_arrow_type(f.dataType))
-            for f in schema.fields if f.name not in physical]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    out = []
+    for f in schema.fields:
+        if f.name not in physical:
+            atype = to_arrow_type(f.dataType)
+            if pa.types.is_timestamp(atype) and atype.tz is not None:
+                atype = pa.timestamp(atype.unit, tz=tz)
+            out.append((f.name, atype))
+    return out
 
 
 def _part_val(raw: str, atype):
@@ -878,18 +868,24 @@ def _part_val(raw: str, atype):
         return raw.lower() == "true"
     if pa.types.is_date(atype):
         return datetime.date.fromisoformat(raw)
+    if pa.types.is_timestamp(atype):
+        # as naive UTC: pyarrow would store an aware value's wall time
+        ts = pd.Timestamp(raw, tz=atype.tz)
+        return ts.tz_convert(None) if ts.tz else ts
     if pa.types.is_string(atype) or pa.types.is_large_string(atype):
         return raw
     raise ValueError(
         f"unsupported hive partition column type {atype} for row-group "
-        "slice reads — supported: integer, floating, boolean, date, string")
+        "slice reads — supported: integer, floating, boolean, date, "
+        "timestamp, string")
 
 
-def _read_unit(f: str, rg: int | None, part_fields: list, col_order: list):
+def _read_unit(f: str, rg: int | None, part_fields: list, arrow_schema):
     """One row group of ``f`` (the whole file when ``rg`` is None) as an
-    Arrow table in the table's column order, with the hive partition
-    columns recovered from ``f``'s ``<col>=<val>`` path segments and
-    attached as constants."""
+    Arrow table of ``arrow_schema``, with the hive partition columns
+    recovered from ``f``'s ``<col>=<val>`` path segments and attached as
+    constants. The cast matters: appends may write a bucket's files with
+    other nullability or narrower types, which Spark's read merges."""
     import urllib.parse
 
     import pyarrow as pa
@@ -906,7 +902,7 @@ def _read_unit(f: str, rg: int | None, part_fields: list, col_order: list):
             tbl = tbl.append_column(
                 pa.field(name, atype),
                 pa.array([val] * tbl.num_rows, type=atype))
-    return tbl.select(col_order)
+    return tbl.select(arrow_schema.names).cast(arrow_schema)
 
 
 def _read_row_group_slices(spark: SparkSession, schema,
@@ -915,8 +911,10 @@ def _read_row_group_slices(spark: SparkSession, schema,
     yielding the table schema exactly (:func:`_read_unit`)."""
     if not survivors:
         return spark.createDataFrame([], schema)
-    part_fields = _partition_fields(schema, survivors[0][0])
-    col_order = [f.name for f in schema.fields]
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    part_fields = _partition_fields(spark, schema, survivors[0][0])
+    arrow_schema = to_arrow_schema(schema)
 
     slices = spark.createDataFrame(
         pd.DataFrame(survivors, columns=["f", "rg"]))
@@ -928,7 +926,7 @@ def _read_row_group_slices(spark: SparkSession, schema,
             for f, rg in zip(b.column("f").to_pylist(),
                              b.column("rg").to_pylist()):
                 yield from _read_unit(
-                    f, rg, part_fields, col_order).to_batches()
+                    f, rg, part_fields, arrow_schema).to_batches()
 
     return slices.mapInArrow(read_slices, schema)
 
@@ -962,7 +960,7 @@ def _pushable(atype, values: Sequence) -> bool:
     return False
 
 
-def _driver_table(schema, files: list[str],
+def _driver_table(spark: SparkSession, schema, files: list[str],
                   row_groups: list[tuple[str, int]] | None, col: str,
                   values: Sequence | None):
     """The survivors as one Arrow table in ``schema``'s columns: whole
@@ -981,13 +979,9 @@ def _driver_table(schema, files: list[str],
     arrow_schema = to_arrow_schema(schema)
     if not files:
         return arrow_schema.empty_table()
-    part_fields = _partition_fields(schema, files[0])
-    col_order = [f.name for f in schema.fields]
-    # cast each unit to the table's schema: appends may write a bucket's
-    # files with other nullability or narrower types, which Spark's read
-    # merges and concat_tables refuses
+    part_fields = _partition_fields(spark, schema, files[0])
     tbl = pa.concat_tables(
-        _read_unit(f, rg, part_fields, col_order).cast(arrow_schema)
+        _read_unit(f, rg, part_fields, arrow_schema)
         for f, rg in (row_groups or [(f, None) for f in files]))
     if values is not None and _pushable(arrow_schema.field(col).type,
                                         values):
@@ -997,9 +991,9 @@ def _driver_table(schema, files: list[str],
 
 def _read_survivors(spark: SparkSession, schema, files: Sequence[str],
                     spark_read: Callable[[], DataFrame], col: str,
-                    values: Sequence, exact: bool,
+                    values: Sequence, exact: bool, stats: PruneStats,
                     row_groups: list[tuple[str, int]] | None = None,
-                    ) -> tuple[DataFrame, str]:
+                    ) -> tuple[DataFrame, PruneStats]:
     """The one read behind every index lookup: the surviving ``files``
     (or their ``row_groups``) of an indexed table, then Spark's
     ``col IN values`` when ``exact``.
@@ -1012,21 +1006,21 @@ def _read_survivors(spark: SparkSession, schema, files: Sequence[str],
     has no ``input_file_name()``. ``"spark"`` returns ``spark_read()``,
     the lazy distributed scan. Both return ``schema``, and Spark's IN
     decides the rows on both, so casts and NULLs behave alike. Returns
-    ``(df, path)``."""
+    ``df`` and ``stats`` with the path it took as ``read``."""
     files = [_norm_file(f) for f in files]
     path = planner.plan_survivor_read(_local_sizes(files))
     if path == "driver":
         # one chunk: createDataFrame drops rows of a table whose chunks
         # include empty ones (a filtered multi-file read yields them)
         df = spark.createDataFrame(
-            _driver_table(schema, files, row_groups, col,
+            _driver_table(spark, schema, files, row_groups, col,
                           values if exact else None).combine_chunks(),
             schema)
     else:
         df = spark_read()
     if exact:
         df = df.filter(F.col(col).isin(list(values)))
-    return df, path
+    return df, dataclasses.replace(stats, read=path)
 
 
 def rowgroup_zone_stats(spark: SparkSession, data_path: str,
@@ -1041,43 +1035,20 @@ def rowgroup_zone_stats(spark: SparkSession, data_path: str,
     be kept by any pruner (zero-FN)."""
     src = spark.read.parquet(data_path)
     dt = src.schema[col].dataType.simpleString()
-    files = [_norm_file(f) for f in src.inputFiles()]
-    fdf = spark.createDataFrame(pd.DataFrame({"file_path": files}))
-    fdf = fdf.repartition(
-        min(max(len(files), 1), spark.sparkContext.defaultParallelism))
 
-    def scan(batches):
-        import pyarrow.parquet as pq
+    def stats(f, pf):
+        j = pf.schema_arrow.names.index(col)
+        for i in range(pf.metadata.num_row_groups):
+            rg = pf.metadata.row_group(i)
+            st = rg.column(j).statistics
+            ok = bool(st is not None and st.has_min_max)
+            yield (f, i, st.min if ok else None, st.max if ok else None,
+                   rg.num_rows, ok)
 
-        for b in batches:
-            rows = []
-            for f in b["file_path"]:
-                pf = pq.ParquetFile(f)
-                j = pf.schema_arrow.names.index(col)
-                md = pf.metadata
-                for i in range(md.num_row_groups):
-                    rg = md.row_group(i)
-                    st = rg.column(j).statistics
-                    ok = bool(st is not None and st.has_min_max)
-                    rows.append((f, i,
-                                 st.min if ok else None,
-                                 st.max if ok else None,
-                                 rg.num_rows, ok))
-            pdf = pd.DataFrame(rows, columns=[
-                "file_path", "row_group", "vmin", "vmax", "n_rows",
-                "has_stats"])
-            # vmin/vmax MUST stay object dtype: one stats-less granule in
-            # a batch would otherwise coerce an int64 column to float64,
-            # silently rounding values above 2^53 (Arrow converts object
-            # python ints exactly; float64 would not)
-            for c in ("vmin", "vmax"):
-                pdf[c] = pd.Series([r[2 if c == "vmin" else 3]
-                                    for r in rows], dtype=object)
-            yield pdf
-
-    return fdf.mapInPandas(
-        scan, f"file_path string, row_group int, vmin {dt}, vmax {dt}, "
-              "n_rows long, has_stats boolean")
+    return _footer_scan(
+        spark, src.inputFiles(), stats,
+        f"file_path string, row_group int, vmin {dt}, vmax {dt}, "
+        "n_rows long, has_stats boolean")
 
 
 def pruned_range_read_row_groups(
@@ -1140,6 +1111,79 @@ def probe_digests(values: Iterable, digest: str = "sha256") -> list[int]:
     return out
 
 
+class _UnitFilters:
+    """The per-unit filters of one index sidecar — bucket, file or row
+    group rows, each keyed by its ``keys`` columns — and the one survival
+    rule: a unit survives iff its filter may contain ANY probe digest.
+    Microseconds per unit (vectorized kernel over the whole digest
+    vector); no Spark job. Filters hydrate per indexed column on first
+    probe and are cached, so a single-column workload over a wide
+    multi-column index never pays hydration for the others."""
+
+    def __init__(self, pdf: pd.DataFrame, keys: tuple[str, ...],
+                 granularity: str):
+        self.pdf, self._keys, self._granularity = pdf, keys, granularity
+        self._digest = {str(c): str(d) for c, d in pdf.groupby(
+            "index_col", sort=True)["digest"].first().items()}
+        self._filters: dict[str | None, list] = {}
+
+    def column(self, on: str | None) -> str:
+        """The indexed column a probe targets: ``on``, or the only one."""
+        cols = list(self._digest)
+        if on is None:
+            if len(cols) > 1:
+                raise ValueError(
+                    f"index covers several columns {cols}; pass on=<column>")
+            return cols[0]
+        if on not in self._digest:
+            raise ValueError(f"column {on!r} is not indexed (have {cols})")
+        return on
+
+    def digest(self, on: str | None = None) -> str:
+        return self._digest[self.column(on)]
+
+    def filters(self, icol: str | None) -> list:
+        """``(unit name, filter)`` per row of ``icol`` (every row when
+        None), in sidecar order; a name joins the key values with ``#``."""
+        if icol not in self._filters:
+            rows = (self.pdf if icol is None
+                    else self.pdf[self.pdf["index_col"] == icol])
+            self._filters[icol] = [
+                ("#".join(str(r[k]) for k in self._keys),
+                 sketch_row_to_filter(r)) for _, r in rows.iterrows()]
+        return self._filters[icol]
+
+    def survive(self, icol: str | None, digests: Sequence[int],
+                ) -> tuple[list[str], PruneStats]:
+        """Surviving unit names in sidecar order, and the prune stats."""
+        digs = list(digests)
+        units = self.filters(icol)
+        hits = [name for name, filt in units
+                if digs and bool(filt.contains_digests(digs).any())]
+        return hits, PruneStats(granularity=self._granularity,
+                                units_total=len(units),
+                                units_survived=len(hits),
+                                survivors=tuple(sorted(hits)))
+
+    def probe(self, probe_values: Sequence, *, on: str | None = None,
+              digests: Sequence[int] | None = None,
+              ) -> tuple[str, list[str], PruneStats]:
+        """The probed column and :meth:`survive` over it; ``digests``
+        overrides the driver-side digest64 of ``probe_values``."""
+        icol = self.column(on)
+        if digests is None:
+            digests = probe_digests(probe_values, self._digest[icol])
+        return (icol, *self.survive(icol, digests))
+
+
+def _load_units(spark: SparkSession, index_dir: str, keys: tuple[str, ...],
+                granularity: str) -> _UnitFilters:
+    pdf = read_index(spark, index_dir)
+    if not len(pdf):
+        raise ValueError(f"empty bloom index at {index_dir}")
+    return _UnitFilters(pdf, keys, granularity)
+
+
 def prune_index(
     index_pdf: pd.DataFrame,
     digests: Sequence[int],
@@ -1147,18 +1191,10 @@ def prune_index(
     key_field: str,
     granularity: str = "partition",
 ) -> PruneStats:
-    """Pure driver-side prune: a unit survives iff its filter says
-    maybe-contains for ANY probe digest. Microseconds per unit (vectorized
-    kernel over the whole digest vector); no Spark job."""
-    survivors = []
-    for _, row in index_pdf.iterrows():
-        filt = sketch_row_to_filter(row)
-        if len(digests) and bool(filt.contains_digests(list(digests)).any()):
-            survivors.append(str(row[key_field]))
-    return PruneStats(granularity=granularity,
-                      units_total=len(index_pdf),
-                      units_survived=len(survivors),
-                      survivors=tuple(sorted(survivors)))
+    """Pure driver-side prune of every row of ``index_pdf``, keyed by
+    ``key_field`` (see :class:`_UnitFilters`)."""
+    return _UnitFilters(index_pdf, (key_field,), granularity) \
+        .survive(None, digests)[1]
 
 
 def read_index(spark: SparkSession, index_path: str) -> pd.DataFrame:
@@ -1176,16 +1212,43 @@ def read_table_index(spark: SparkSession, path: str) -> pd.DataFrame:
     return read_index(spark, bloom_dir)
 
 
-def _select_index_col(index_pdf: pd.DataFrame, on: str | None) -> str:
-    cols = sorted(index_pdf["index_col"].unique())
-    if on is None:
-        if len(cols) > 1:
-            raise ValueError(
-                f"index covers several columns {cols}; pass on=<column>")
-        return cols[0]
-    if on not in cols:
-        raise ValueError(f"column {on!r} is not indexed (have {cols})")
-    return on
+def _bucket_scan(data: DataFrame, survivors: Sequence[str]) -> DataFrame:
+    """``data`` cut to the surviving bucket directories: a partition
+    predicate Catalyst resolves at file listing (``PartitionFilters``), so
+    skipped directories are never opened; no survivors reads nothing."""
+    return data.filter(F.col(BUCKET_COL).isin(
+        [int(s) for s in survivors] or [-1]))
+
+
+def _load_zones(spark: SparkSession, zones_dir: str, meta: _IndexMeta,
+                col: str) -> list:
+    """Zone-map rows of ``col``, collected (not toPandas: zone values must
+    stay py4j-native — an all-NULL bucket would float64-corrupt an int64
+    zone column)."""
+    if col not in meta.zone_cols:
+        raise ValueError(
+            f"no zone map for column {col!r} (indexed zone_cols: "
+            f"{list(meta.zone_cols)}) — pass zone_cols=[...] to "
+            "write_indexed_table")
+    return spark.read.parquet(f"{zones_dir}/{col}").collect()
+
+
+def _zone_range_read(data: DataFrame, zones: list, col: str, lo, hi,
+                     exact: bool) -> tuple[DataFrame, PruneStats]:
+    """Buckets whose zone [vmin, vmax] overlaps [lo, hi] (inclusive), as a
+    :func:`_bucket_scan` of ``data``; ``exact`` adds the BETWEEN filter."""
+    surv = [r for r in zones
+            if r["vmin"] is not None and r["vmax"] >= lo
+            and r["vmin"] <= hi]
+    stats = PruneStats(granularity="partition",
+                       units_total=len(zones),
+                       units_survived=len(surv),
+                       survivors=tuple(sorted(
+                           str(int(r[BUCKET_COL])) for r in surv)))
+    df = _bucket_scan(data, stats.survivors)
+    if exact:
+        df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
+    return df, stats
 
 
 class IndexHandle:
@@ -1217,26 +1280,17 @@ class IndexHandle:
         self.spark, self.path = spark, path
         self._verify_files = verify_files
         self._bloom_dir, self._zones_dir = _resolve_index_root(spark, path)
-        self._index_pdf = read_index(spark, self._bloom_dir)
-        if not len(self._index_pdf):
-            raise ValueError(f"empty bloom index at {self._bloom_dir}")
+        self._units = _load_units(spark, self._bloom_dir, (BUCKET_COL,),
+                                  "partition")
+        self._index_pdf = self._units.pdf
         if verify_files:
             _check_index_fresh(self._index_pdf, spark, path)
         self.meta = _read_index_meta(self._index_pdf)
-        self._digest: dict[str, str] = {
-            str(icol): str(grp["digest"].iloc[0])
-            for icol, grp in self._index_pdf.groupby("index_col",
-                                                     sort=True)}
-        # filters hydrate lazily PER COLUMN on first probe and are cached
-        # — a range-only or single-column workload over a wide
-        # multi-column index never pays hydration for the others
-        self._filters: dict[str, list] = {}
         self._zones_cache: dict[str, list] = {}
         self._union_cache: dict[str, object] = {}
         self._data_df: DataFrame | None = None
         self._files_by_bucket: dict[str, list[str]] | None = None
-        self._rg_pdf: pd.DataFrame | None = None
-        self._rg_filters: dict[str, tuple] = {}
+        self._rg_units: _UnitFilters | None = None
 
     def _data(self) -> DataFrame:
         """The {path}/data relation, created once: repeated lookups reuse
@@ -1260,30 +1314,12 @@ class IndexHandle:
 
     # -- probing ---------------------------------------------------------
 
-    def _filters_for(self, icol: str) -> list:
-        if icol not in self._filters:
-            grp = self._index_pdf[self._index_pdf["index_col"] == icol]
-            self._filters[icol] = [
-                (row[BUCKET_COL], sketch_row_to_filter(row))
-                for _, row in grp.iterrows()]
-        return self._filters[icol]
-
     def prune(self, probe_values: Sequence, *, on: str | None = None,
               digests: Sequence[int] | None = None) -> PruneStats:
         """Driver-side prune decision: pure numpy over the hydrated
         filters, zero Spark jobs. ``digests`` overrides the driver-side
         digest64 for callers probing pre-digested values."""
-        icol = _select_index_col(self._index_pdf, on)
-        filters = self._filters_for(icol)
-        digs = (list(digests) if digests is not None
-                else probe_digests(probe_values, self._digest[icol]))
-        survivors = [str(key) for key, filt in filters
-                     if len(digs) and bool(
-                         filt.contains_digests(digs).any())]
-        return PruneStats(granularity="partition",
-                          units_total=len(filters),
-                          units_survived=len(survivors),
-                          survivors=tuple(sorted(survivors)))
+        return self._units.probe(probe_values, on=on, digests=digests)[2]
 
     def pruned_read(self, probe_values: Sequence, *,
                     on: str | None = None, exact: bool = True,
@@ -1293,64 +1329,40 @@ class IndexHandle:
         ``bucket_id IN (...)`` — Catalyst PartitionFilters prune at file
         listing. Semantics identical to module-level :func:`pruned_read`;
         the index load is already paid."""
-        icol = _select_index_col(self._index_pdf, on)
-        stats = self.prune(probe_values, on=icol)
+        icol, _, stats = self._units.probe(probe_values, on=on)
         files = self._bucket_files()
-        df, path = _read_survivors(
+        return _read_survivors(
             self.spark, self._data().schema,
             [f for s in stats.survivors for f in files.get(s, ())],
-            lambda: self._data().filter(F.col(BUCKET_COL).isin(
-                [int(s) for s in stats.survivors] or [-1])),
-            icol, probe_values, exact)
-        return df, dataclasses.replace(stats, read=path)
+            lambda: _bucket_scan(self._data(), stats.survivors),
+            icol, probe_values, exact, stats)
 
     def zones(self, col: str) -> list:
         """Zone-map rows of one column (py4j-native values — see
         _zone_agg_rows), loaded once and cached."""
         if col not in self._zones_cache:
-            if col not in self.meta.zone_cols:
-                raise ValueError(
-                    f"no zone map for column {col!r} (indexed zone_cols: "
-                    f"{list(self.meta.zone_cols)}) — pass zone_cols=[...] "
-                    "to write_indexed_table")
-            self._zones_cache[col] = self.spark.read.parquet(
-                f"{self._zones_dir}/{col}").collect()
+            self._zones_cache[col] = _load_zones(
+                self.spark, self._zones_dir, self.meta, col)
         return self._zones_cache[col]
 
     def pruned_range_read(self, col: str, lo, hi, *, exact: bool = True,
                           ) -> tuple[DataFrame, PruneStats]:
         """Range scan through the cached zone maps (see module-level
         :func:`pruned_range_read`)."""
-        zones = self.zones(col)
-        surv = [r for r in zones
-                if r["vmin"] is not None and r["vmax"] >= lo
-                and r["vmin"] <= hi]
-        stats = PruneStats(granularity="partition",
-                           units_total=len(zones),
-                           units_survived=len(surv),
-                           survivors=tuple(sorted(
-                               str(int(r[BUCKET_COL])) for r in surv)))
-        df = self._data().filter(
-            F.col(BUCKET_COL).isin(
-                [int(s) for s in stats.survivors] or [-1]))
-        if exact:
-            df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-        return df, stats
+        return _zone_range_read(self._data(), self.zones(col), col, lo, hi,
+                                exact)
 
-    def _rg_index(self) -> pd.DataFrame:
-        rgdir = _rg_dir(self._bloom_dir)
-        if rgdir is None:
-            raise ValueError(
-                "row-group sidecars require the versioned index layout — "
-                "rewrite with write_indexed_table(row_group_index=True)")
-        if self._rg_pdf is None:
-            fs, rgp = _hadoop_fs(self.spark, rgdir)
-            if not fs.exists(rgp):
+    def _rg_index(self) -> _UnitFilters:
+        if self._rg_units is None:
+            rgdir = _rg_sidecar(self.spark, self._bloom_dir)
+            if rgdir is None:
                 raise ValueError(
-                    f"no rgbloom sidecar in {rgdir} — write the table "
-                    "with row_group_index=True for granule-level pruning")
-            self._rg_pdf = read_index(self.spark, rgdir)
-        return self._rg_pdf
+                    f"no rgbloom sidecar next to {self._bloom_dir} — write "
+                    "the table with write_indexed_table(row_group_index="
+                    "True) for granule-level pruning")
+            self._rg_units = _load_units(self.spark, rgdir,
+                                         (FILE_COL, RG_COL), "row_group")
+        return self._rg_units
 
     def pruned_read_row_groups(self, probe_values: Sequence, *,
                                on: str | None = None, exact: bool = True,
@@ -1361,28 +1373,8 @@ class IndexHandle:
         bucket-level :meth:`pruned_read`, which stops at directory
         pruning). Zero FN per granule; sidecar loaded + hydrated once per
         handle."""
-        pdf = self._rg_index()
-        icol = _select_index_col(pdf, on)
-        if icol not in self._rg_filters:
-            sub = pdf[pdf["index_col"] == icol]
-            self._rg_filters[icol] = (
-                str(sub["digest"].iloc[0]),
-                [(str(r[FILE_COL]), int(r[RG_COL]),
-                  sketch_row_to_filter(r))
-                 for _, r in sub.iterrows()])
-        digest, filters = self._rg_filters[icol]
-        digs = probe_digests(probe_values, digest)
-        survivors = [(f, rg) for f, rg, filt in filters
-                     if len(digs) and bool(
-                         filt.contains_digests(digs).any())]
-        stats = PruneStats(
-            granularity="row_group",
-            units_total=len(filters),
-            units_survived=len(survivors),
-            survivors=tuple(sorted(f"{f}#{rg}" for f, rg in survivors)))
-        return _read_row_group_survivors(
-            self.spark, self._data().schema, survivors, icol, probe_values,
-            exact, stats)
+        return _read_row_groups(self.spark, self._data().schema,
+                                self._rg_index(), probe_values, on, exact)
 
     def refresh(self) -> "IndexHandle":
         """A fresh handle over the CURRENT committed version (this handle
@@ -1396,12 +1388,11 @@ class IndexHandle:
         sketch for one indexed column, computed once and cached (see
         module-level :func:`index_filter` for semantics + sizing caveat).
         """
-        icol = _select_index_col(self._index_pdf, on)
+        icol = self._units.column(on)
         if icol not in self._union_cache:
-            filt = None
-            for _, f in self._filters_for(icol):
-                filt = f.copy() if filt is None else filt.union(f)
-            self._union_cache[icol] = filt
+            filters = [f for _, f in self._units.filters(icol)]
+            self._union_cache[icol] = functools.reduce(
+                lambda acc, f: acc.union(f), filters[1:], filters[0].copy())
         # COPY out: BloomFilter.union/intersect/insert mutate in place —
         # handing back the cached object would let a caller silently
         # corrupt every later union_filter() result (false negatives)
@@ -1456,32 +1447,24 @@ def pruned_read_files(
     ``verify_files`` (default on) compares the sidecar's covered file set
     against the live listing and refuses a stale index (files appended
     after the index build would otherwise be silently skipped)."""
-    index_pdf = read_index(spark, index_path)
-    if not len(index_pdf):
-        raise ValueError(f"empty bloom index at {index_path}")
+    units = _load_units(spark, index_path, (FILE_COL,), "file")
     full = spark.read.parquet(data_path) if verify_files else None
     if full is not None:
-        _check_file_set(index_pdf[FILE_COL].unique(), full.inputFiles(),
+        _check_file_set(units.pdf[FILE_COL].unique(), full.inputFiles(),
                         "per-file")
-    index_col = _select_index_col(index_pdf, on)
-    index_pdf = index_pdf[index_pdf["index_col"] == index_col]
-    digest = str(index_pdf["digest"].iloc[0])
-    stats = prune_index(index_pdf, probe_digests(probe_values, digest),
-                        key_field=FILE_COL, granularity="file")
-    if stats.survivors:
+    icol, _, stats = units.probe(probe_values, on=on)
+    files = [_file_of(f) for f in stats.survivors]
+    if files:
         # basePath keeps hive partition columns when data_path is a
         # partitioned table (leaf-file reads drop them otherwise); only
         # the survivors are listed
-        scan = spark.read.option("basePath", data_path) \
-            .parquet(*stats.survivors)
+        scan = spark.read.option("basePath", data_path).parquet(*files)
     else:  # nothing can match: empty frame, full-table schema
         scan = full if full is not None else spark.read.parquet(data_path)
-    df, path = _read_survivors(
-        spark, scan.schema, stats.survivors,
-        lambda: (scan if stats.survivors
-                 else spark.createDataFrame([], scan.schema)),
-        index_col, probe_values, exact)
-    return df, dataclasses.replace(stats, read=path)
+    return _read_survivors(
+        spark, scan.schema, files,
+        lambda: scan if files else spark.createDataFrame([], scan.schema),
+        icol, probe_values, exact, stats)
 
 
 def append_to_indexed_table(df_new: DataFrame, path: str, *,
@@ -1509,7 +1492,11 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
     the previous version stays resolvable until the new marker lands).
     Concurrent APPENDERS remain single-writer — the inputFiles() snapshot
     diff would mis-attribute a second writer's files; use a table format's
-    commit protocol when multiple writers are real."""
+    commit protocol when multiple writers are real.
+
+    ``df_new`` is cast to the table's columns by name before the write
+    (a missing column raises): a bucket holding files of two physical
+    types for one column fails every later Spark read of that bucket."""
     spark = df_new.sparkSession
     bloom_dir, zones_dir = _resolve_index_root(spark, path)
     idx_df = spark.read.parquet(bloom_dir)
@@ -1526,18 +1513,25 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
     index_schema = idx_df.schema
     meta = _read_index_meta(index_pdf)
     num_buckets, bucket_source = meta.num_buckets, meta.bucket_source
+    rgdir = _rg_sidecar(spark, bloom_dir)
+    table = spark.read.parquet(f"{path}/data")
+    fields = [f for f in table.schema.fields if f.name != BUCKET_COL]
+    missing = [f.name for f in fields if f.name not in df_new.columns]
+    if missing:
+        raise ValueError(
+            f"append to {path} lacks the table's column(s) {missing}")
+    df_new = df_new.select(*[F.col(f.name).cast(f.dataType).alias(f.name)
+                             for f in fields])
 
     # claim the index version BEFORE touching the data dir: a concurrent
     # appender loses here loudly having written NOTHING — the committed
     # table + index stay exactly as they were
     claimed = _claim_index_version(spark, path)
 
-    before = set(spark.read.parquet(f"{path}/data").inputFiles())
-    bucketed = df_new.withColumn(BUCKET_COL, bucket_col(bucket_source,
-                                                        num_buckets))
-    (bucketed.repartition(num_buckets, F.col(BUCKET_COL))
-        .write.mode("append").partitionBy(BUCKET_COL)
-        .parquet(f"{path}/data"))
+    before = set(table.inputFiles())
+    _write_buckets(df_new.withColumn(BUCKET_COL, bucket_col(bucket_source,
+                                                            num_buckets)),
+                   f"{path}/data", num_buckets, "append")
     new_files = [f for f in spark.read.parquet(f"{path}/data").inputFiles()
                  if f not in before]
     if not new_files:
@@ -1556,12 +1550,9 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
             for c in meta.zone_cols or ():
                 spark.read.parquet(f"{zones_dir}/{c}") \
                     .write.mode("overwrite").parquet(f"{vdir}/zones/{c}")
-            rgdir0 = _rg_dir(bloom_dir)
-            if rgdir0 is not None:
-                fs0, rgp0 = _hadoop_fs(spark, rgdir0)
-                if fs0.exists(rgp0):
-                    spark.read.parquet(rgdir0).write.mode("overwrite") \
-                        .parquet(f"{vdir}/rgbloom")
+            if rgdir is not None:
+                spark.read.parquet(rgdir).write.mode("overwrite") \
+                    .parquet(f"{vdir}/rgbloom")
 
         rel = (_data_rel_files(spark, path)
                if "data_files_sha" in index_pdf.columns else None)
@@ -1603,61 +1594,40 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
     # append-then-merge equals a full rebuild exactly. Values stay in
     # py4j-native Python objects end-to-end (see _zone_agg_rows: pandas
     # would float64-corrupt nullable int64 zones above 2^53).
-    merged_zones: dict[str, list] = {}
-    if meta.zone_cols:
-        new_rows = _zone_agg_rows(written_new, meta.zone_cols)
-        for c in meta.zone_cols:
-            old = [(r[BUCKET_COL], r["vmin"], r["vmax"], r["rows_seen"])
-                   for r in spark.read.parquet(f"{zones_dir}/{c}")
-                   .collect()]
-            new = [(r[BUCKET_COL], r[f"__min_{c}"], r[f"__max_{c}"],
-                    r[f"__cnt_{c}"]) for r in new_rows]
-            by: dict = {}
-            for b, vmin, vmax, n in old + new:
-                if b not in by:
-                    by[b] = [vmin, vmax, n]
-                    continue
-                cur = by[b]
-                if vmin is not None:
-                    cur[0] = vmin if cur[0] is None else min(cur[0], vmin)
-                if vmax is not None:
-                    cur[1] = vmax if cur[1] is None else max(cur[1], vmax)
-                cur[2] += n
-            merged_zones[c] = [(b, v[0], v[1], v[2])
-                               for b, v in sorted(by.items())]
+    merged_zones = (_zone_agg_rows(written_new, meta.zone_cols)
+                    if meta.zone_cols else {})
+    for c, new in merged_zones.items():
+        by: dict = {}
+        for b, vmin, vmax, n in spark.read.parquet(
+                f"{zones_dir}/{c}").collect() + new:
+            lo, hi, seen = by.get(b, (None, None, 0))
+            by[b] = (min((v for v in (lo, vmin) if v is not None),
+                         default=None),
+                     max((v for v in (hi, vmax) if v is not None),
+                         default=None), seen + n)
+        merged_zones[c] = [(b, *v) for b, v in sorted(by.items())]
 
     # rg sidecar (if present): new files are NEW (file, row_group) keys,
     # so the append is a pure union of old rows + the new files' rows —
     # no sketch merge at this granularity, ever
     rg_union = None
-    rgdir = _rg_dir(bloom_dir)
     if rgdir is not None:
-        fs, rgp = _hadoop_fs(spark, rgdir)
-        if fs.exists(rgp):
-            old_rg = spark.read.parquet(rgdir)
-            rg_cfg = _rg_cfg_from_row(old_rg.select(
-                "m", "k", "seed", "layout", "digest").first())
-            new_rg = _build_rg_index_rows(
-                spark, f"{path}/data", list(meta.cols), rg_cfg,
-                files=new_files, base_path=f"{path}/data")
-            rg_union = old_rg.unionByName(new_rg)
+        old_rg = spark.read.parquet(rgdir)
+        new_rg = _build_rg_index_rows(
+            spark, f"{path}/data", list(meta.cols),
+            sketch_row_config(old_rg.first()), files=new_files,
+            base_path=f"{path}/data")
+        rg_union = old_rg.unionByName(new_rg)
 
     def publish(vdir: str) -> None:
         spark.createDataFrame(merged, schema=index_schema) \
             .write.mode("overwrite").parquet(f"{vdir}/bloom")
-        for c, data in merged_zones.items():
-            spark.createDataFrame(data, _zone_schema(written_new, c)) \
-                .write.mode("overwrite").parquet(f"{vdir}/zones/{c}")
+        _write_zone_maps(written_new, merged_zones, f"{vdir}/zones")
         if rg_union is not None:
             rg_union.write.mode("overwrite").parquet(f"{vdir}/rgbloom")
 
     _publish_index_version(spark, path, publish, claimed=claimed,
                            commit_token=commit_token, data_files=rel_files)
-    if bloom_dir == f"{path}/index":
-        # first versioned publish over a legacy table: the in-place layout
-        # is now stale — drop it so resolution can never fall back to it
-        _delete_dir(spark, f"{path}/index")
-        _delete_dir(spark, f"{path}/zones")
 
 
 def heal_indexed_table(spark: SparkSession, path: str, *,
@@ -1717,28 +1687,10 @@ def heal_indexed_table(spark: SparkSession, path: str, *,
         # the in-flight guard runs AFTER the (slow) listing work and
         # immediately BEFORE the destructive step, minimizing the
         # check-then-act window for a writer that claims mid-heal. It
-        # FAILS CLOSED: a claim dir whose mtime cannot be read still
-        # refuses unless the dir is verifiably absent — the hazard is
-        # deleting a live appender's not-yet-indexed data files.
-        import time as _time
-
-        now_ms = int(_time.time() * 1000)
+        # FAILS CLOSED (see _in_flight) — the hazard is deleting a live
+        # appender's not-yet-indexed data files.
         for v, committed in _list_versions(spark, path):
-            if committed:
-                continue
-            young = True  # unknown age == presumed in-flight
-            try:
-                fs_v, vpath = _hadoop_fs(spark, _version_dir(path, v))
-                try:
-                    mtime = fs_v.getFileStatus(vpath) \
-                        .getModificationTime()
-                    young = now_ms - mtime <= STALE_UNCOMMITTED_TTL_MS
-                except Exception:
-                    if not fs_v.exists(vpath):
-                        continue  # GC'd/raced away — verifiably gone
-            except Exception:
-                pass  # can't even build the path: stay fail-closed
-            if young:
+            if not committed and _in_flight(spark, path, v):
                 raise ConcurrentIndexWriteError(
                     f"uncommitted index version v{v} at {path} is "
                     "younger than the in-flight TTL (or its age could "
@@ -1776,26 +1728,24 @@ def pruned_semi_join(
     from ..functions.digest import digest64
 
     handle = IndexHandle(spark, path)
-    index_col = _select_index_col(handle._index_pdf, on)
-    digest = handle._digest[index_col]
+    index_col = handle._units.column(on)
 
     # NULL keys never match a semi-join (NULL = NULL is not true) AND a
     # single NULL digest would float64-corrupt the whole collected column
-    # (see _digest_stack) — drop them before the Arrow transfer
+    # (see _unit_sketches) — drop them before the Arrow transfer
     keys = keys_df.select(F.col(key_col).alias("__key")) \
         .filter(F.col("__key").isNotNull()).distinct()
-    digs_pdf = keys.select(
-        digest64(F.col("__key"), digest).alias("d")).limit(max_keys + 1) \
-        .toPandas()
+    digs_pdf = keys.select(digest64(
+        F.col("__key"), handle._units.digest(index_col)).alias("d")) \
+        .limit(max_keys + 1).toPandas()
     if len(digs_pdf) > max_keys:
         raise ValueError(
             f"build side exceeds max_keys={max_keys}; use bloom_semi_join "
             "for data-scale build sides")
     stats = handle.prune([], on=index_col, digests=digs_pdf["d"].tolist())
-    df = handle._data().filter(F.col(BUCKET_COL).isin(
-        [int(s) for s in stats.survivors] or [-1]))
-    joined = df.join(keys.withColumnRenamed("__key", index_col),
-                     on=index_col, how="left_semi")
+    joined = _bucket_scan(handle._data(), stats.survivors).join(
+        keys.withColumnRenamed("__key", index_col), on=index_col,
+        how="left_semi")
     return joined, stats
 
 
@@ -1825,29 +1775,9 @@ def pruned_range_read(
     bloom_dir, zones_dir = _resolve_index_root(spark, path)
     meta_pdf = _read_meta_pdf(spark, bloom_dir)
     _check_index_fresh(meta_pdf, spark, path)
-    meta = _read_index_meta(meta_pdf)
-    if col not in meta.zone_cols:
-        raise ValueError(
-            f"no zone map for column {col!r} (indexed zone_cols: "
-            f"{list(meta.zone_cols)}) — pass zone_cols=[...] to "
-            "write_indexed_table")
-    # collect, not toPandas: zone values must stay py4j-native (an
-    # all-NULL bucket would float64-corrupt an int64 zone column)
-    zones = spark.read.parquet(f"{zones_dir}/{col}").collect()
-    surv = [r for r in zones
-            if r["vmin"] is not None and r["vmax"] >= lo
-            and r["vmin"] <= hi]
-    stats = PruneStats(granularity="partition",
-                       units_total=len(zones),
-                       units_survived=len(surv),
-                       survivors=tuple(sorted(
-                           str(int(r[BUCKET_COL])) for r in surv)))
-    df = spark.read.parquet(f"{path}/data").filter(
-        F.col(BUCKET_COL).isin(
-            [int(s) for s in stats.survivors] or [-1]))
-    if exact:
-        df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-    return df, stats
+    zones = _load_zones(spark, zones_dir, _read_index_meta(meta_pdf), col)
+    return _zone_range_read(spark.read.parquet(f"{path}/data"), zones, col,
+                            lo, hi, exact)
 
 
 def describe_index(spark: SparkSession, path: str) -> pd.DataFrame:
@@ -1900,15 +1830,16 @@ def compact_indexed_table(
     """
     bloom_dir, _ = _resolve_index_root(spark, path)
     meta = _read_index_meta(_read_meta_pdf(spark, bloom_dir))
+    # the rg sidecar (if the pre-compaction index carried one) is rebuilt
+    # over the rewritten files with its own geometry
+    rgdir = _rg_sidecar(spark, bloom_dir)
+    rg_cfg = (None if rgdir is None
+              else sketch_row_config(spark.read.parquet(rgdir).first()))
 
-    files_before = len(spark.read.parquet(f"{path}/data").inputFiles())
-    writer = spark.read.parquet(f"{path}/data") \
-        .repartition(meta.num_buckets, F.col(BUCKET_COL))
-    if sort_within_buckets_by:
-        writer = writer.sortWithinPartitions(BUCKET_COL,
-                                             *sort_within_buckets_by)
-    writer.write.mode("overwrite").partitionBy(BUCKET_COL) \
-        .parquet(f"{path}/data_compacting")
+    data = spark.read.parquet(f"{path}/data")
+    files_before = len(data.inputFiles())
+    _write_buckets(data, f"{path}/data_compacting", meta.num_buckets,
+                   "overwrite", sort_within_buckets_by)
 
     # Hadoop FS signals failure via RETURN VALUE, not exceptions — an
     # unchecked rename would rebuild the index over wrong/partial data
@@ -1922,40 +1853,7 @@ def compact_indexed_table(
             f"compaction swap failed: rename {path}/data_compacting -> "
             f"{path}/data returned false; recover from data_compacting")
 
-    written = spark.read.parquet(f"{path}/data")
-    rel_files = _data_rel_files(spark, path)
-    n_files, files_sha = _fingerprint_of(rel_files)
-    index_rows = _build_index_rows(written, list(meta.cols), meta.cfg,
-                                   meta.num_buckets, meta.bucket_source) \
-        .withColumn("zone_cols", F.lit(",".join(meta.zone_cols))) \
-        .withColumn("data_file_count", F.lit(n_files).cast("long")) \
-        .withColumn("data_files_sha", F.lit(files_sha))
-
-    # rg sidecar (if the pre-compaction index carried one): rebuild over
-    # the rewritten files with the sidecar's own geometry
-    rg_rows = None
-    rgdir = _rg_dir(bloom_dir)
-    if rgdir is not None:
-        fs, rgp = _hadoop_fs(spark, rgdir)
-        if fs.exists(rgp):
-            rg_cfg = _rg_cfg_from_row(spark.read.parquet(rgdir).select(
-                "m", "k", "seed", "layout", "digest").first())
-            rg_rows = _build_rg_index_rows(spark, f"{path}/data",
-                                           list(meta.cols), rg_cfg)
-
-    def publish(vdir: str) -> None:
-        index_rows.write.mode("overwrite").parquet(f"{vdir}/bloom")
-        if meta.zone_cols:
-            _write_zone_maps(written, meta.zone_cols, f"{vdir}/zones")
-        if rg_rows is not None:
-            rg_rows.write.mode("overwrite").parquet(f"{vdir}/rgbloom")
-
-    _publish_index_version(spark, path, publish, data_files=rel_files)
-    # compaction rebuilt everything into a fresh committed version, so the
-    # legacy in-place layout (if any) is now stale — remove it so future
-    # resolution can never fall back to it
-    _delete_dir(spark, f"{path}/index")
-    _delete_dir(spark, f"{path}/zones")
+    written = _rebuild_index(spark, path, meta, rg_cfg)
     return {"buckets": meta.num_buckets, "files_before": files_before,
             "files_after": len(written.inputFiles())}
 

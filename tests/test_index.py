@@ -777,19 +777,46 @@ def test_custom_digest_rejected_at_write_time(spark, docs, tmp_path):
 # ------------------------------------------------------- IndexHandle (r4) --
 
 
-def test_index_handle_matches_one_shot_reads(spark, docs, indexed_path):
-    """handle.pruned_read == module pruned_read (same survivors, same
-    rows) with the index loaded ONCE across many lookups."""
-    from fastbloom_spark.sources import IndexHandle
+def test_index_handle_matches_one_shot_reads(spark, docs, indexed_path,
+                                             tmp_path):
+    """Each handle read equals its one-shot counterpart (same stats, same
+    rows) with the index loaded ONCE across many lookups: bucket reads vs
+    module pruned_read, range reads vs module pruned_range_read, and
+    sidecar row-group reads vs a standalone row-group index built over
+    the same data files with the sidecar's geometry."""
+    from fastbloom_spark.sources import (IndexHandle,
+                                         index_parquet_row_groups,
+                                         pruned_range_read,
+                                         pruned_read_row_groups)
 
-    handle = IndexHandle(spark, indexed_path)
-    for probes in ([member_texts(docs, 1)[0]], member_texts(docs, 3),
-                   ["absent-xyzzy"]):
-        got_h, st_h = handle.pruned_read(probes)
-        got_m, st_m = pruned_read(spark, indexed_path, probes)
+    def same(h, m):
+        (got_h, st_h), (got_m, st_m) = h, m
         assert st_h == st_m
         assert sorted(r.doc_id for r in got_h.collect()) \
             == sorted(r.doc_id for r in got_m.collect())
+
+    probe_sets = ([member_texts(docs, 1)[0]], member_texts(docs, 3),
+                  ["absent-xyzzy"])
+    handle = IndexHandle(spark, indexed_path)
+    for probes in probe_sets:
+        same(handle.pruned_read(probes),
+             pruned_read(spark, indexed_path, probes))
+
+    path = str(tmp_path / "handle_rg")
+    write_indexed_table(docs, path, index_col="text", cfg=CFG,
+                        bucket_source="doc_id", num_buckets=4,
+                        zone_cols=["doc_id"], row_group_index=True)
+    handle = IndexHandle(spark, path)
+    for lo, hi in ((100, 160), (0, 10**9), (-5, -1)):
+        same(handle.pruned_range_read("doc_id", lo, hi),
+             pruned_range_read(spark, path, "doc_id", lo, hi))
+    rgidx = str(tmp_path / "handle_rg_standalone")
+    # the sidecar's geometry: row_group_cfg defaults to the table's cfg
+    index_parquet_row_groups(spark, f"{path}/data", rgidx,
+                             index_col="text", cfg=CFG)
+    for probes in probe_sets:
+        same(handle.pruned_read_row_groups(probes),
+             pruned_read_row_groups(spark, f"{path}/data", rgidx, probes))
 
 
 def test_index_handle_union_filter_and_zones(spark, docs, tmp_path):
@@ -994,7 +1021,7 @@ def test_rowgroup_sidecar_integrated(spark, docs, tmp_path):
         == sorted(r.doc_id for r in want2.collect())
     assert stats2.units_total > stats.units_total  # new files' granules
     # rows_seen across the sidecar covers the whole table exactly
-    assert int(fresh._rg_index()["rows_seen"].sum()) == docs.count()
+    assert int(fresh._rg_index().pdf["rows_seen"].sum()) == docs.count()
 
 
 def test_rowgroup_sidecar_absent_raises(spark, docs, indexed_path):
@@ -1334,3 +1361,90 @@ def test_driver_read_merges_appended_file_schemas(spark, tmp_path):
         rows = _assert_same_read(*_driver_and_spark(
             lambda: handle.pruned_read(probes, on="key")))
         assert sorted(r[1] for r in rows) == sorted(probes)
+
+
+def test_append_casts_to_table_schema(spark, tmp_path):
+    """An append whose ``n`` column is int where the table's is bigint is
+    written in the table's types, so every bucket keeps one physical
+    type and the distributed read of the original keys still works; an
+    append lacking a table column is refused before anything is
+    written."""
+    from fastbloom_spark.plans import planner
+    from fastbloom_spark.sources import (IndexHandle,
+                                         append_to_indexed_table)
+
+    path = str(tmp_path / "append_types")
+    write_indexed_table(
+        spark.createDataFrame([(i, f"p{i}") for i in range(24)],
+                              "n bigint, key string"),
+        path, index_col="key", cfg=CFG, bucket_source="n", num_buckets=4)
+    append_to_indexed_table(
+        spark.createDataFrame([(i, f"q{i}") for i in range(12)],
+                              "n int, key string"), path)
+    assert spark.read.parquet(f"{path}/data").schema["n"] \
+        .dataType.simpleString() == "bigint"
+    handle = IndexHandle(spark, path)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(planner, "DRIVER_READ_BUDGET", 0)
+        for key, n in (("p1", 1), ("p5", 5), ("p20", 20), ("q3", 3),
+                       ("q7", 7)):
+            got, stats = handle.pruned_read([key], on="key")
+            assert stats.read == "spark"
+            assert [(r.n, r.key) for r in got.collect()] == [(n, key)]
+    with pytest.raises(ValueError, match=r"\['n'\]"):
+        append_to_indexed_table(
+            spark.createDataFrame([("z1",)], "key string"), path)
+    assert spark.read.parquet(f"{path}/data").count() == 36
+
+
+def test_file_index_over_timestamp_partitions(spark, tmp_path):
+    """A per-file index over a table partitioned by timestamps (whose
+    directory names Spark escapes) reads its survivors on both paths with
+    zero false negatives, in a non-UTC session zone; the file-set witness
+    still refuses the index once a file is appended."""
+    import datetime
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        rows = [(f"k{i}", i, datetime.datetime(2024, 1, 1 + i % 2, 0, 30))
+                for i in range(20)]
+        data, idx = str(tmp_path / "ts_data"), str(tmp_path / "ts_idx")
+        spark.createDataFrame(rows, "key string, n int, ts timestamp") \
+            .write.partitionBy("ts").parquet(data)
+        index_parquet_files(spark, data, idx, index_col="key", cfg=CFG)
+        for probes in (["k3"], ["k0", "k7", "k19"], ["absent"]):
+            got = _assert_same_read(*_driver_and_spark(
+                lambda: pruned_read_files(spark, data, idx, probes)))
+            assert got == sorted((r for r in rows if r[0] in probes),
+                                 key=repr)
+        spark.createDataFrame(rows[:1], "key string, n int, ts timestamp") \
+            .write.mode("append").partitionBy("ts").parquet(data)
+        with pytest.raises(ValueError, match="STALE"):
+            pruned_read_files(spark, data, idx, ["k3"])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_one_shot_range_read_loads_no_filters(spark, docs, tmp_path,
+                                              monkeypatch):
+    """Module pruned_range_read needs zone rows and row-0 meta only: with
+    filter hydration made to fail it still returns the exact rows."""
+    from fastbloom_spark.operators import bloom
+    from fastbloom_spark.sources import index, pruned_range_read
+
+    path = str(tmp_path / "light_range")
+    write_indexed_table(docs, path, index_col="text", cfg=CFG,
+                        bucket_source="doc_id", num_buckets=4,
+                        zone_cols=["doc_id"])
+
+    def boom(row):
+        raise AssertionError("range read hydrated a Bloom filter")
+
+    monkeypatch.setattr(bloom, "sketch_row_to_filter", boom)
+    monkeypatch.setattr(index, "sketch_row_to_filter", boom)
+    got, stats = pruned_range_read(spark, path, "doc_id", 100, 160)
+    assert sorted(r.doc_id for r in got.collect()) == sorted(
+        r.doc_id for r in docs.filter("doc_id between 100 and 160")
+        .collect())
+    assert 1 <= stats.units_survived <= stats.units_total == 4
