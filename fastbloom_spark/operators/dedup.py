@@ -382,6 +382,19 @@ def connected_min_ids(
     return labels
 
 
+def _cluster_survivors(df: DataFrame, pairs: DataFrame, id_col: str,
+                       max_rounds: int) -> DataFrame:
+    """The rows of ``df`` that survive single-link clustering of the
+    verified ``(id_a, id_b)`` ``pairs``: each cluster keeps its minimum
+    id (:func:`connected_min_ids`, to fixpoint); rows in no pair all
+    survive. The shared tail of every near-dup ``*_dedup``."""
+    comp = connected_min_ids(pairs.select("id_a", "id_b"),
+                             max_rounds=max_rounds)
+    losers = comp.filter(F.col("label") != F.col("id")) \
+        .select(F.col("id").alias(id_col))
+    return df.join(losers, on=id_col, how="left_anti")
+
+
 def minhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -406,11 +419,11 @@ def minhash_dedup(
                                          num_perm=num_perm, bands=bands,
                                          seed=seed)
     try:
-        pairs = ngram_jaccard_pairs(
-            candidates, df, id_col, text_col, shingle_n=shingle_n,
-            threshold=threshold)
-        comp = connected_min_ids(pairs.select("id_a", "id_b"),
-                                 max_rounds=max_rounds)
+        return _cluster_survivors(
+            df, ngram_jaccard_pairs(candidates, df, id_col, text_col,
+                                    shingle_n=shingle_n,
+                                    threshold=threshold),
+            id_col, max_rounds)
     finally:
         # connected_min_ids materialized the verified pairs into
         # checkpointed label frames, so the LSH candidate cache (persisted
@@ -418,9 +431,6 @@ def minhash_dedup(
         # even when the fixpoint raises (a retrying session must not
         # accumulate cached partitions)
         candidates.unpersist()
-    losers = comp.filter(F.col("label") != F.col("id")) \
-        .select(F.col("id").alias(id_col))
-    return df.join(losers, on=id_col, how="left_anti")
 
 
 def winnow_fingerprints_col(
@@ -606,8 +616,4 @@ def simhash_dedup(
     pairs = simhash_near_dup_pairs(df, id_col, text_col,
                                    max_hamming=max_hamming, bands=bands,
                                    max_bucket_size=max_bucket_size)
-    comp = connected_min_ids(pairs.select("id_a", "id_b"),
-                             max_rounds=max_rounds)
-    losers = comp.filter(F.col("label") != F.col("id")) \
-        .select(F.col("id").alias(id_col))
-    return df.join(losers, on=id_col, how="left_anti")
+    return _cluster_survivors(df, pairs, id_col, max_rounds)

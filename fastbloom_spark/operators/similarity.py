@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _bucket_pairs, connected_min_ids
+from .dedup import _bucket_pairs, _cluster_survivors
 
 
 def _normalize_rows(mat: np.ndarray) -> np.ndarray:
@@ -541,8 +541,4 @@ def embedding_dedup(
     pairs = embedding_near_dup_pairs(
         df, id_col, vec_col, threshold=threshold, num_planes=num_planes,
         seed=seed, max_bucket_size=max_bucket_size)
-    comp = connected_min_ids(pairs.select("id_a", "id_b"),
-                             max_rounds=max_rounds)
-    losers = comp.filter(F.col("label") != F.col("id")) \
-        .select(F.col("id").alias(id_col))
-    return df.join(losers, on=id_col, how="left_anti")
+    return _cluster_survivors(df, pairs, id_col, max_rounds)

@@ -53,9 +53,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BloomConfig
+from ..functions.digest import digest64
 from ..kernel import digest64_bytes
-from ..operators.bloom import (BloomSketch, bloom_agg, sketch_row_config,
-                               sketch_row_to_filter)
+from ..operators.bloom import (BloomSketch, bloom_agg, bloom_contains_col,
+                               sketch_row_config, sketch_row_to_filter)
 from ..plans import planner
 
 #: partition column added by write_indexed_table
@@ -85,6 +86,8 @@ COMMIT_TOKEN_FILE = "_TOKEN"
 #: diffs it against the live listing to delete a crashed append's orphan
 #: files — the rollback half of exactly-once streaming ingest
 FILES_MANIFEST = "_FILES"
+#: digest64 column of the rows IndexHandle.verify_route routes
+_DIGEST_COL = "__d"
 
 
 class ConcurrentIndexWriteError(RuntimeError):
@@ -244,12 +247,12 @@ def committed_commit_tokens(spark: SparkSession, path: str) -> dict[int, str]:
     return out
 
 
-def _resolve_index_root(spark: SparkSession, path: str) -> tuple[str, str]:
+def _committed_root(spark: SparkSession,
+                    path: str) -> tuple[str, str] | None:
     """(bloom_dir, zones_dir) of the CURRENT index: the highest COMMITTED
-    version, else the legacy in-place layout. Uncommitted version dirs
-    (crashed publishes) are invisible to readers; a table whose index was
-    deleted mid-overwrite resolves to nothing and fails LOUDLY here
-    instead of pruning fresh data with stale filters."""
+    version, else the legacy in-place layout; None when there is neither
+    (uncommitted version dirs are invisible). Listing errors propagate:
+    an unlistable index is not a missing one."""
     versions = _list_versions(spark, path)
     committed = [v for v, ok in versions if ok]
     if committed:
@@ -258,6 +261,16 @@ def _resolve_index_root(spark: SparkSession, path: str) -> tuple[str, str]:
     fs, legacy = _hadoop_fs(spark, f"{path}/index")
     if fs.exists(legacy):
         return f"{path}/index", f"{path}/zones"
+    return None
+
+
+def _resolve_index_root(spark: SparkSession, path: str) -> tuple[str, str]:
+    """:func:`_committed_root`, required: a table whose index was deleted
+    mid-overwrite resolves to nothing and fails LOUDLY here instead of
+    pruning fresh data with stale filters."""
+    root = _committed_root(spark, path)
+    if root is not None:
+        return root
     raise ValueError(
         f"no committed bloom index under {path} (no "
         f"{VERSIONS_DIR}/v*/{COMMIT_MARKER} and no legacy {path}/index) — "
@@ -403,8 +416,6 @@ def _unit_sketches(df: DataFrame, cols: Sequence[str], cfg: BloomConfig,
     struct-array explode, so k indexed columns cost one pass + a k-way row
     expansion of 16-byte rows, never k scans of the source. ``agg_kw``
     goes to :func:`~fastbloom_spark.operators.bloom.bloom_agg`."""
-    from ..functions.digest import digest64
-
     stack = F.explode(F.array(*[
         F.struct(F.lit(c).alias("index_col"),
                  digest64(F.col(c), cfg.digest).alias("__digest64"))
@@ -648,11 +659,11 @@ def _norm_file(f: str) -> str:
 
 
 def _file_of(uri: str) -> str:
-    """The path a per-file index key names: ``input_file_name()`` keys are
-    URIs whose partition directories Spark already escaped
-    (``ts=2024-01-02 00%3A00%3A00`` is keyed as ``...%2000%253A00%253A00``);
-    decoded once here, or the read escapes it a second time and misses the
-    file."""
+    """The path a file key names: keys are URIs as Spark lists them, with
+    partition directories Spark already escaped (``ts=2024-01-02
+    00%3A00%3A00`` is keyed as ``...%2000%253A00%253A00``). Every opener
+    (pyarrow, ``os.stat``, a Spark read of explicit paths) decodes its key
+    here exactly once, or it escapes it again and misses the file."""
     return urllib.parse.unquote(uri)
 
 
@@ -661,7 +672,8 @@ def _footer_scan(spark: SparkSession, files: Sequence[str],
     """A DISTRIBUTED footer-only scan (pyarrow reads metadata, never data
     pages), so a 10^5-file table costs 10^5 footer reads spread across the
     cluster: ``per_file(path, ParquetFile)`` lists each file's rows of
-    ``schema``, by position. Values ride as Python objects: one NULL in a
+    ``schema``, by position; ``path`` stays the listed key
+    (:func:`_file_of`). Values ride as Python objects: one NULL in a
     float64-inferred pandas column would round int64 values above 2^53
     (Arrow converts object ints exactly)."""
     files = [_norm_file(f) for f in files]
@@ -674,7 +686,7 @@ def _footer_scan(spark: SparkSession, files: Sequence[str],
 
         for b in batches:
             rows = [r for f in b["file_path"]
-                    for r in per_file(f, pq.ParquetFile(f))]
+                    for r in per_file(f, pq.ParquetFile(_file_of(f)))]
             if rows:
                 yield pd.DataFrame(rows, dtype=object)
 
@@ -841,7 +853,7 @@ def _partition_fields(spark: SparkSession, schema, first_file: str) -> list:
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_type
 
-    physical = set(pq.read_schema(first_file).names)
+    physical = set(pq.read_schema(_file_of(first_file)).names)
     tz = spark.conf.get("spark.sql.session.timeZone")
     out = []
     for f in schema.fields:
@@ -891,11 +903,12 @@ def _read_unit(f: str, rg: int | None, part_fields: list, arrow_schema):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(f)
+    path = _file_of(f)
+    pf = pq.ParquetFile(path)
     tbl = (pf.read(use_threads=False) if rg is None
            else pf.read_row_group(int(rg), use_threads=False))
     if part_fields:
-        seg_vals = dict(seg.split("=", 1) for seg in f.split("/")
+        seg_vals = dict(seg.split("=", 1) for seg in path.split("/")
                         if "=" in seg)
         for name, atype in part_fields:
             val = _part_val(urllib.parse.unquote(seg_vals[name]), atype)
@@ -932,11 +945,11 @@ def _read_row_group_slices(spark: SparkSession, schema,
 
 
 def _local_sizes(files: Sequence[str]) -> int | None:
-    """Total on-disk bytes of local ``files``; None when one is not a
-    plain local path the driver can stat: a remote URI (``hdfs:``,
-    ``s3a:``, ...) or a URI-escaped name."""
+    """Total on-disk bytes of local ``files`` (listed keys, see
+    :func:`_file_of`); None when one is not a plain local path the driver
+    can stat, such as a remote URI (``hdfs:``, ``s3a:``, ...)."""
     try:
-        return sum(os.stat(f).st_size for f in files)
+        return sum(os.stat(_file_of(f)).st_size for f in files)
     except OSError:
         return None
 
@@ -1383,6 +1396,39 @@ class IndexHandle:
         return IndexHandle(self.spark, self.path,
                            verify_files=self._verify_files)
 
+    def verify_route(self, rows: DataFrame, col: str, *,
+                     on: str | None = None, max_keys: int,
+                     cache: bool = False,
+                     ) -> tuple[DataFrame, DataFrame, DataFrame,
+                                PruneStats | None]:
+        """Route ``rows`` to an exact verify against this table by the
+        digest of their NULL-free ``col``; returns ``(maybe, negatives,
+        data, stats)``. ``negatives`` are the rows :meth:`union_filter`
+        rules out (absent, zero FN); ``maybe`` the rest, digest in
+        :data:`_DIGEST_COL` (``cache``: persisted before the collect, the
+        caller unpersists). ``data`` is the table cut to the buckets that
+        may hold a ``maybe`` digest (:meth:`prune`, ``stats``); over
+        ``max_keys`` distinct digests it is the whole table and ``stats``
+        None. Joining ``maybe`` to ``data`` equals joining it to the whole
+        table."""
+        icol = self._units.column(on)
+        probed = rows.withColumn(_DIGEST_COL, digest64(
+            F.col(col), self._units.digest(icol)))
+        probed = probed.withColumn("__maybe", bloom_contains_col(
+            self.spark, self.union_filter(icol), _DIGEST_COL))
+        negatives = probed.filter(~F.col("__maybe")) \
+            .drop(_DIGEST_COL, "__maybe")
+        maybe = probed.filter(F.col("__maybe")).drop("__maybe")
+        if cache:
+            maybe = maybe.persist()
+        digs = maybe.select(_DIGEST_COL).distinct().limit(max_keys + 1) \
+            .toPandas()[_DIGEST_COL].tolist()
+        if len(digs) > max_keys:
+            return maybe, negatives, self._data(), None
+        stats = self.prune([], on=icol, digests=digs)
+        return (maybe, negatives, _bucket_scan(self._data(), stats.survivors),
+                stats)
+
     def union_filter(self, on: str | None = None):
         """Whole-table membership filter: OR-union of every bucket's
         sketch for one indexed column, computed once and cached (see
@@ -1453,12 +1499,13 @@ def pruned_read_files(
         _check_file_set(units.pdf[FILE_COL].unique(), full.inputFiles(),
                         "per-file")
     icol, _, stats = units.probe(probe_values, on=on)
-    files = [_file_of(f) for f in stats.survivors]
+    files = list(stats.survivors)
     if files:
         # basePath keeps hive partition columns when data_path is a
         # partitioned table (leaf-file reads drop them otherwise); only
         # the survivors are listed
-        scan = spark.read.option("basePath", data_path).parquet(*files)
+        scan = spark.read.option("basePath", data_path) \
+            .parquet(*map(_file_of, files))
     else:  # nothing can match: empty frame, full-table schema
         scan = full if full is not None else spark.read.parquet(data_path)
     return _read_survivors(
@@ -1703,6 +1750,35 @@ def heal_indexed_table(spark: SparkSession, path: str, *,
     return orphans
 
 
+class _StateStore:
+    """An indexed table as a batch's state (incremental dedup, streaming
+    ingest), opened once per batch: ``has_state`` whether it has a
+    committed index (:func:`_committed_root`; listing errors propagate, so
+    an unreadable state is never overwritten as an empty one),
+    ``replayed`` whether ``commit_token`` is already committed (emit and
+    write nothing)."""
+
+    def __init__(self, spark: SparkSession, path: str,
+                 commit_token: str | None = None):
+        self.path, self.commit_token = path, commit_token
+        self.has_state = _committed_root(spark, path) is not None
+        self.replayed = (
+            self.has_state and commit_token is not None
+            and commit_token in committed_commit_tokens(spark, path).values())
+
+    def commit(self, rows: DataFrame,
+               bootstrap: Callable[[DataFrame], None]) -> None:
+        """Append ``rows`` with the token (recorded even for zero rows), or
+        with no state yet ``bootstrap(rows)``: the caller's
+        :func:`write_indexed_table`, passing the token. A first batch
+        without rows publishes nothing, so its token is not recorded."""
+        if self.has_state:
+            append_to_indexed_table(rows, self.path,
+                                    commit_token=self.commit_token)
+        elif rows.limit(1).count():
+            bootstrap(rows)
+
+
 def pruned_semi_join(
     spark: SparkSession,
     path: str,
@@ -1717,35 +1793,29 @@ def pruned_semi_join(
     bucket directories whose filter says maybe-contains for ANY key.
 
     The index-level analogue of Spark's dynamic partition pruning, driven
-    by the Bloom index instead of the partition key: the build side's
-    digests are collected (Arrow; they must be driver-sized — ``max_keys``
-    guards against collecting a data-scale side, use ``bloom_semi_join``
-    for that), the KB-scale index is probed driver-side, and the probe
-    side's scan starts from a file listing that already excludes every
-    non-surviving bucket. The final exact ``left_semi`` join keeps
-    semantics identical to an unpruned join (zero-FN pruning: no matching
-    row can live in a skipped bucket)."""
-    from ..functions.digest import digest64
-
+    by the Bloom index instead of the partition key
+    (:meth:`IndexHandle.verify_route`): the digests of the build side's
+    keys that the table's union filter may contain are collected (Arrow;
+    they must be driver-sized — more than ``max_keys`` raises, use
+    ``bloom_semi_join`` for data-scale sides), the KB-scale index is
+    probed driver-side, and the probe side's scan starts from a file
+    listing that already excludes every non-surviving bucket. The final
+    exact ``left_semi`` join keeps semantics identical to an unpruned join
+    (zero-FN pruning: no matching row can live in a skipped bucket)."""
     handle = IndexHandle(spark, path)
     index_col = handle._units.column(on)
-
-    # NULL keys never match a semi-join (NULL = NULL is not true) AND a
-    # single NULL digest would float64-corrupt the whole collected column
-    # (see _unit_sketches) — drop them before the Arrow transfer
+    # NULL keys never match a semi-join (NULL = NULL is not true), and a
+    # NULL digest fails the probe — drop them first
     keys = keys_df.select(F.col(key_col).alias("__key")) \
         .filter(F.col("__key").isNotNull()).distinct()
-    digs_pdf = keys.select(digest64(
-        F.col("__key"), handle._units.digest(index_col)).alias("d")) \
-        .limit(max_keys + 1).toPandas()
-    if len(digs_pdf) > max_keys:
+    _, _, data, stats = handle.verify_route(keys, "__key", on=index_col,
+                                            max_keys=max_keys)
+    if stats is None:
         raise ValueError(
             f"build side exceeds max_keys={max_keys}; use bloom_semi_join "
             "for data-scale build sides")
-    stats = handle.prune([], on=index_col, digests=digs_pdf["d"].tolist())
-    joined = _bucket_scan(handle._data(), stats.survivors).join(
-        keys.withColumnRenamed("__key", index_col), on=index_col,
-        how="left_semi")
+    joined = data.join(keys.withColumnRenamed("__key", index_col),
+                       on=index_col, how="left_semi")
     return joined, stats
 
 

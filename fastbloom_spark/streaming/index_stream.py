@@ -22,8 +22,10 @@ versioned index publish (sources/index.py):
   deletes the orphans (their rows were never committed), then re-appends
   the batch once.
 
-The first micro-batch BOOTSTRAPS the table (``write_indexed_table``) when
-no committed index exists; a replayed bootstrap is an idempotent overwrite.
+The first micro-batch with rows BOOTSTRAPS the table
+(``write_indexed_table``) when no committed index exists, versioned or
+legacy (``sources.index._StateStore``); a replayed bootstrap is an
+idempotent overwrite.
 
 Scale shape: each micro-batch costs one scan of the batch's rows (the
 bucketed append) plus a driver-side OR over the KB-scale index — identical
@@ -38,17 +40,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame
 
 from ..config import BloomConfig
-from ..sources.index import (_list_versions, append_to_indexed_table,
-                             committed_commit_tokens, heal_indexed_table,
+from ..sources.index import (_StateStore, heal_indexed_table,
                              write_indexed_table)
-
-
-def _has_committed_index(spark, path: str) -> bool:
-    return any(ok for _, ok in _list_versions(spark, path))
-
-
-def _batch_token(batch_id: int) -> str:
-    return f"stream-batch-{int(batch_id):020d}"
 
 
 def indexed_ingest_batch_fn(
@@ -66,21 +59,19 @@ def indexed_ingest_batch_fn(
     same batch id)."""
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        token = _batch_token(batch_id)
-        if not _has_committed_index(spark, path):
-            # bootstrap (or replayed bootstrap whose publish was lost:
-            # overwrite is idempotent — the half-written table is replaced
-            # wholesale, never appended to)
+        token = f"stream-batch-{int(batch_id):020d}"
+
+        def bootstrap(rows: DataFrame) -> None:
             write_indexed_table(
-                batch_df, path, index_col=index_col, cfg=cfg,
+                rows, path, index_col=index_col, cfg=cfg,
                 bucket_source=bucket_source, num_buckets=num_buckets,
                 zone_cols=zone_cols, commit_token=token)
-            return
-        if token in committed_commit_tokens(spark, path).values():
-            return  # replayed batch, already committed: exactly-once skip
+
+        state = _StateStore(batch_df.sparkSession, path, token)
+        if state.replayed:
+            return  # already committed: exactly-once skip
         try:
-            append_to_indexed_table(batch_df, path, commit_token=token)
+            state.commit(batch_df, bootstrap)
         except ValueError as e:
             if "STALE" not in str(e):
                 raise
@@ -90,8 +81,8 @@ def indexed_ingest_batch_fn(
             # by contract, so the young uncommitted claim heal would
             # otherwise refuse on is this batch's OWN crashed publish —
             # there is no other in-flight append to protect
-            heal_indexed_table(spark, path, force=True)
-            append_to_indexed_table(batch_df, path, commit_token=token)
+            heal_indexed_table(batch_df.sparkSession, path, force=True)
+            state.commit(batch_df, bootstrap)
 
     return ingest
 

@@ -25,19 +25,27 @@ def _fps(spark, df):
             .filter(F.col("f").isNotNull()).distinct().collect()}
 
 
+#: the verify's two branches: the bucket-pruned state scan (default cap)
+#: and the full state scan past ``max_pruned_keys`` (cap 0) — both must
+#: emit the same ids
+CAPS = [pytest.param({}, id="pruned"),
+        pytest.param({"max_pruned_keys": 0}, id="full_scan")]
+
+
+@pytest.mark.parametrize("cap", CAPS)
 def test_two_batches_first_seen_wins_and_state_appends(spark, docs,
-                                                       tmp_path):
+                                                       tmp_path, cap):
     state = str(tmp_path / "state")
     b0 = docs.filter(F.col("doc_id") % 3 == 0)
     b1 = docs.filter(F.col("doc_id") % 3 != 0)
 
-    k0 = incremental_dedup(b0, state, commit_token="b0")
+    k0 = incremental_dedup(b0, state, commit_token="b0", **cap)
     # bootstrap: within-batch dedup only (min id per fingerprint)
     assert k0.count() == b0.select(
         F.sha2(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
                256)).distinct().count()
 
-    k1 = incremental_dedup(b1, state, commit_token="b1")
+    k1 = incremental_dedup(b1, state, commit_token="b1", **cap)
     got1 = {r.doc_id for r in k1.collect()}
     # oracle: b1's min-id keeper per fingerprint, minus b0's fingerprints
     fp0 = _fps(spark, b0)
@@ -57,7 +65,7 @@ def test_two_batches_first_seen_wins_and_state_appends(spark, docs,
     assert _fps(spark, k0) | _fps(spark, k1) == _fps(spark, docs)
 
     # third batch of pure duplicates: everything dropped
-    k2 = incremental_dedup(docs.limit(50), state, commit_token="b2")
+    k2 = incremental_dedup(docs.limit(50), state, commit_token="b2", **cap)
     assert k2.count() == 0
 
 
@@ -111,13 +119,14 @@ def _text(i, mutate=None):
     return " ".join(toks)
 
 
-def test_incremental_minhash_cross_run_near_dups(spark, tmp_path):
+@pytest.mark.parametrize("cap", CAPS)
+def test_incremental_minhash_cross_run_near_dups(spark, tmp_path, cap):
     state = str(tmp_path / "mh_state")
     from fastbloom_spark.operators import incremental_minhash_dedup
 
     b0 = _mk(spark, [(i, _text(i)) for i in range(8)])
     k0 = incremental_minhash_dedup(b0, state, threshold=0.5,
-                                   commit_token="b0")
+                                   commit_token="b0", **cap)
     assert {r.doc_id for r in k0.collect()} == set(range(8))
 
     b1 = _mk(spark, [
@@ -128,17 +137,17 @@ def test_incremental_minhash_cross_run_near_dups(spark, tmp_path):
         (104, ""),                   # blank: never banded, survives
     ])
     k1 = incremental_minhash_dedup(b1, state, threshold=0.5,
-                                   commit_token="b1")
+                                   commit_token="b1", **cap)
     assert {r.doc_id for r in k1.collect()} == {101, 104}
 
     # replayed batch (same token) emits nothing
     assert incremental_minhash_dedup(b1, state, threshold=0.5,
-                                     commit_token="b1").count() == 0
+                                     commit_token="b1", **cap).count() == 0
 
     # batch 2: near-copy of the batch-1 SURVIVOR is now a state dup too
     b2 = _mk(spark, [(200, _text(50, mutate=11)), (201, _text(77))])
     k2 = incremental_minhash_dedup(b2, state, threshold=0.5,
-                                   commit_token="b2")
+                                   commit_token="b2", **cap)
     assert {r.doc_id for r in k2.collect()} == {201}
 
 
@@ -184,3 +193,95 @@ def test_minhash_missing_params_on_committed_state_errors(spark, tmp_path):
     os.remove(f"{state}/{_PARAMS_FILE}")
     with pytest.raises(ValueError, match="geometry pin"):
         incremental_minhash_dedup(_mk(spark, [(2, _text(2))]), state)
+
+
+def test_listing_error_raises_and_keeps_state(spark, tmp_path, monkeypatch):
+    """A transient error listing the state's index versions is not an
+    empty state: the call raises and the committed state keeps every row
+    (bootstrapping over it would overwrite it and re-emit duplicates)."""
+    from fastbloom_spark.sources import index as index_mod
+
+    state = str(tmp_path / "state")
+    a = spark.createDataFrame([(i, f"doc {i}") for i in range(20)],
+                              "doc_id long, text string")
+    incremental_dedup(a, state, commit_token="a")
+    rows = spark.read.parquet(f"{state}/data").count()
+    assert rows == 20
+
+    real, calls = index_mod._list_versions, []
+
+    def flaky(spark_, path):
+        calls.append(path)
+        if len(calls) == 1:
+            raise OSError("transient listing failure")
+        return real(spark_, path)
+
+    monkeypatch.setattr(index_mod, "_list_versions", flaky)
+    b = spark.createDataFrame([(100, "doc 3"), (101, "doc new")],
+                              "doc_id long, text string")
+    with pytest.raises(OSError, match="transient"):
+        incremental_dedup(b, state, commit_token="b")
+    assert spark.read.parquet(f"{state}/data").count() == rows
+    # the retry sees the state: the duplicate of doc 3 is dropped
+    assert {r.doc_id for r in
+            incremental_dedup(b, state, commit_token="b").collect()} == {101}
+
+
+def test_null_only_first_batch_creates_no_state(spark, tmp_path):
+    """A first batch with nothing to record (only NULL text) returns its
+    rows and publishes no state, so its commit token cannot be recorded:
+    a replay re-emits the NULL-text rows. Pinned as the documented
+    limitation — a fix that records such tokens changes this test."""
+    import os
+
+    state = str(tmp_path / "state")
+    a = spark.createDataFrame([(1, None), (2, None)],
+                              "doc_id long, text string")
+    for _ in range(2):  # the replay re-emits
+        k = incremental_dedup(a, state, commit_token="a")
+        assert sorted(r.doc_id for r in k.collect()) == [1, 2]
+        assert not os.path.exists(state)
+    # the next batch with text bootstraps the state as a first batch
+    b = spark.createDataFrame([(3, "x"), (4, "x"), (5, None)],
+                              "doc_id long, text string")
+    assert {r.doc_id for r in
+            incremental_dedup(b, state, commit_token="b").collect()} \
+        == {3, 5}
+    assert spark.read.parquet(f"{state}/data").count() == 1
+
+
+def test_minhash_blank_only_first_batch_creates_no_state(spark, tmp_path):
+    """The MinHash operator's counterpart: a first batch of only blank or
+    NULL docs is never banded, creates no state, and its replay re-emits
+    its rows (pinned limitation, see the NULL-only exact-dedup case)."""
+    import os
+
+    from fastbloom_spark.operators import incremental_minhash_dedup
+
+    state = str(tmp_path / "mh_state")
+    a = _mk(spark, [(1, "   "), (2, None)])
+    for _ in range(2):  # the replay re-emits
+        k = incremental_minhash_dedup(a, state, commit_token="a")
+        assert sorted(r.doc_id for r in k.collect()) == [1, 2]
+        assert not os.path.exists(state)
+
+
+def test_minhash_bootstrap_after_crash_before_publish(spark, tmp_path):
+    """A crash between the bootstrap's geometry-pin write and its publish
+    leaves a pin with no committed state; the next call bootstraps over
+    it instead of failing on the pin's exclusive create."""
+    import json
+
+    from fastbloom_spark.operators import incremental_minhash_dedup
+    from fastbloom_spark.operators.incremental import _PARAMS_FILE
+
+    state = tmp_path / "mh_state"
+    state.mkdir()
+    (state / _PARAMS_FILE).write_text(json.dumps(
+        {"shingle_n": 3, "num_perm": 128, "bands": 32, "seed": 99}))
+    k = incremental_minhash_dedup(_mk(spark, [(1, _text(1))]), str(state))
+    assert [r.doc_id for r in k.collect()] == [1]
+    assert json.loads((state / _PARAMS_FILE).read_text())["seed"] == 42
+    # the state is committed and pinned: a near-copy is a cross-run dup
+    assert incremental_minhash_dedup(
+        _mk(spark, [(2, _text(1, mutate=3))]), str(state)).count() == 0

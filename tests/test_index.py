@@ -1400,9 +1400,16 @@ def test_append_casts_to_table_schema(spark, tmp_path):
 def test_file_index_over_timestamp_partitions(spark, tmp_path):
     """A per-file index over a table partitioned by timestamps (whose
     directory names Spark escapes) reads its survivors on both paths with
-    zero false negatives, in a non-UTC session zone; the file-set witness
-    still refuses the index once a file is appended."""
+    zero false negatives, in a non-UTC session zone; so do a row-group
+    index and the footer-statistics range read, whose footer scans open
+    the escaped files; the file-set witness still refuses the index once
+    a file is appended."""
     import datetime
+
+    from fastbloom_spark.sources import (index_parquet_row_groups,
+                                         pruned_range_read_row_groups,
+                                         pruned_read_row_groups,
+                                         rowgroup_zone_stats)
 
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -1418,6 +1425,19 @@ def test_file_index_over_timestamp_partitions(spark, tmp_path):
                 lambda: pruned_read_files(spark, data, idx, probes)))
             assert got == sorted((r for r in rows if r[0] in probes),
                                  key=repr)
+        rg = str(tmp_path / "ts_rg")
+        index_parquet_row_groups(spark, data, rg, index_col="key", cfg=CFG)
+        for probes in (["k3"], ["k0", "k7", "k19"], ["absent"]):
+            got = _assert_same_read(*_driver_and_spark(
+                lambda: pruned_read_row_groups(spark, data, rg, probes)))
+            assert got == sorted((r for r in rows if r[0] in probes),
+                                 key=repr)
+        zones = rowgroup_zone_stats(spark, data, "n").collect()
+        assert sum(z.n_rows for z in zones) == len(rows)
+        assert all(z.has_stats for z in zones)
+        got, _ = pruned_range_read_row_groups(spark, data, "n", 3, 5)
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            (r for r in rows if 3 <= r[1] <= 5), key=repr)
         spark.createDataFrame(rows[:1], "key string, n int, ts timestamp") \
             .write.mode("append").partitionBy("ts").parquet(data)
         with pytest.raises(ValueError, match="STALE"):

@@ -149,3 +149,54 @@ def test_heal_refuses_young_claim_without_force(spark, events, tmp_path):
     # single-writer caller overrides: the "in-flight" files roll back
     assert heal_indexed_table(spark, path, force=True) != []
     assert heal_indexed_table(spark, path, force=True) == []  # consistent
+
+
+def test_listing_error_raises_and_keeps_table(spark, events, tmp_path,
+                                              monkeypatch):
+    """A transient listing error fails the batch instead of treating the
+    table as unindexed and overwriting it with the batch."""
+    path = str(tmp_path / "tbl")
+    ingest = _ingest_fn(path)
+    b0 = events.filter(F.col("event_id") % 3 == 0)
+    ingest(b0, 0)
+    real, calls = index_mod._list_versions, []
+
+    def flaky(spark_, p):
+        calls.append(p)
+        if len(calls) == 1:
+            raise OSError("transient listing failure")
+        return real(spark_, p)
+
+    monkeypatch.setattr(index_mod, "_list_versions", flaky)
+    b1 = events.filter(F.col("event_id") % 3 == 1)
+    with pytest.raises(OSError, match="transient"):
+        ingest(b1, 1)
+    assert spark.read.parquet(f"{path}/data").count() == b0.count()
+    ingest(b1, 1)  # the retry appends
+    assert spark.read.parquet(f"{path}/data").count() \
+        == b0.count() + b1.count()
+
+
+def test_sink_appends_to_legacy_layout_table(spark, events, tmp_path):
+    """A table whose index is in the legacy in-place layout ({path}/index,
+    no index_versions) has committed state: the sink appends to it, and
+    the published version indexes both batches."""
+    import shutil
+
+    path = str(tmp_path / "tbl")
+    b0 = events.filter(F.col("event_id") % 3 == 0)
+    b1 = events.filter(F.col("event_id") % 3 == 1)
+    write_indexed_table(b0, path, index_col="event_type", cfg=CFG,
+                        bucket_source="event_id", num_buckets=4)
+    bloom_dir, _ = index_mod._resolve_index_root(spark, path)
+    shutil.move(bloom_dir, f"{path}/index")
+    shutil.rmtree(f"{path}/{index_mod.VERSIONS_DIR}")
+    assert index_mod._resolve_index_root(spark, path)[0] == f"{path}/index"
+
+    _ingest_fn(path)(b1, 1)
+    assert spark.read.parquet(f"{path}/data").count() \
+        == b0.count() + b1.count()
+    full = str(tmp_path / "full")
+    write_indexed_table(b0.unionByName(b1), full, index_col="event_type",
+                        cfg=CFG, bucket_source="event_id", num_buckets=4)
+    assert _index_words(spark, path) == _index_words(spark, full)
