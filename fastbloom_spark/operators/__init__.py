@@ -8,7 +8,6 @@ from .bloom import (
     bloom_partials_sharded,
     bloom_rollup,
     bloom_semi_join,
-    register_bloom_sql,
     sketch_row_to_filter,
 )
 
@@ -22,7 +21,6 @@ __all__ = [
     "bloom_partials_sharded",
     "bloom_rollup",
     "bloom_semi_join",
-    "register_bloom_sql",
     "sketch_row_to_filter",
 ]
 

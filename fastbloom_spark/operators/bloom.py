@@ -1,5 +1,5 @@
 """Distributed Bloom operators — the Bloom impl of the sketch protocol, its
-planned global build, probe, SQL registration and semi-join.
+planned global build, probe and semi-join.
 
 * **build / merge / agg / rollup** run on the one mergeable-aggregator
   topology of ``operators/sketch_agg.py``: :class:`BloomSketch` plugs the
@@ -15,7 +15,8 @@ planned global build, probe, SQL registration and semi-join.
   (``plans/planner.py``): build parallelism P*, coalesce vs digest shuffle,
   and the driver fold vs the range-sharded merge for above-budget filters.
 * **probe** broadcasts the finished filter (tiny) and runs the vectorized
-  short-circuit kernel inside a scalar pandas UDF; registered for SQL.
+  short-circuit kernel inside a scalar pandas UDF; the SQL surface
+  (``fastbloom_spark/sql.py``) calls the same :func:`bloom_probe_digests`.
 """
 
 from __future__ import annotations
@@ -343,31 +344,16 @@ def sketch_row_to_filter(row) -> BloomFilter:
                        rows_seen=int(row.rows_seen))
 
 
-def _broadcast_probe_udf(spark: SparkSession, bloom: BloomFilter):
-    """The ONE broadcast-probe closure behind bloom_contains_col AND
-    register_bloom_sql: words ship once per executor and are viewed
-    zero-copy per batch (copying a multi-MB filter per batch is pure
-    waste). NULL digests must be filtered UPSTREAM: one NULL converts the
-    whole Arrow batch to float64, corrupting every digest >= 2^53 before
-    any code runs — the guard refuses such batches loudly instead of
-    probing wrong bits (bloom_semi_join pre-filters its probe keys)."""
-    words_bc = spark.sparkContext.broadcast(bloom.to_bytes())
-    k, seed, layout = bloom.num_hashes, bloom.seed, bloom.config.layout
-
-    @F.pandas_udf(BooleanType())
-    def probe(digests: pd.Series) -> pd.Series:
-        words = words_from_bytes(words_bc.value, copy=False)
-        hashes = source_hash(
-            exact_int64(digests, "bloom digest column").view(U64), seed)
-        return pd.Series(contains_hashes(words, hashes, k, layout))
-
-    # asNondeterministic (guide §4.4): the probe is pure, but declaring it
-    # non-deterministic stops the optimizer duplicating the evaluation and
-    # — the measured win — stops InferFiltersFromConstraints copying the
-    # probe onto the BUILD side of the exact semi-join through the join
-    # key (both sides were paying the Python probe; sf1.0 semijoin
-    # 4.6 s -> 3.6 s, plain probe rows unchanged).
-    return probe.asNondeterministic()
+def bloom_probe_digests(words: np.ndarray, k: int, seed: int, layout: str,
+                        digests: pd.Series, what: str) -> np.ndarray:
+    """The one Bloom membership probe of the Spark paths
+    (:func:`bloom_contains_col` and the SQL ``bloom_probe`` /
+    ``bloom_probe_bc``): exact int64 digests, the seeded source hash, then
+    the short-circuit kernel. A digest column that reached pandas as
+    float64 with values beyond 2^53 (or NaN) is refused loudly, ``what``
+    naming it, instead of probing wrong bits."""
+    return contains_hashes(
+        words, source_hash(exact_int64(digests, what), seed), k, layout)
 
 
 def bloom_contains_col(
@@ -377,19 +363,31 @@ def bloom_contains_col(
 ) -> Column:
     """Boolean probe column: vectorized membership test against a broadcast
     filter. ``digest_col`` must be a digest64 (long) column — compose with
-    :func:`digest64` for raw values. Filter NULL digests upstream (one
-    NULL float64-corrupts the whole Arrow batch; the kernel refuses
-    loudly)."""
-    probe = _broadcast_probe_udf(spark, bloom)
+    :func:`digest64` for raw values. Filter NULL digests upstream: one NULL
+    converts the whole Arrow batch to float64, corrupting every digest
+    >= 2^53 before any code runs, so such batches are refused loudly
+    (bloom_semi_join pre-filters its probe keys). From pure SQL, publish
+    the filter with :func:`~fastbloom_spark.sql.publish_bloom_sql` and
+    probe with ``bloom_probe_bc(name, digest)``."""
+    # words ship once per executor and are viewed zero-copy per batch
+    # (copying a multi-MB filter per batch is pure waste)
+    words_bc = spark.sparkContext.broadcast(bloom.to_bytes())
+    k, seed, layout = bloom.num_hashes, bloom.seed, bloom.config.layout
+
+    @F.pandas_udf(BooleanType())
+    def probe(digests: pd.Series) -> pd.Series:
+        return pd.Series(bloom_probe_digests(
+            words_from_bytes(words_bc.value, copy=False), k, seed, layout,
+            digests, "bloom digest column"))
+
     c = F.col(digest_col) if isinstance(digest_col, str) else digest_col
-    return probe(c)
-
-
-def register_bloom_sql(spark: SparkSession, name: str, bloom: BloomFilter) -> str:
-    """Register ``bloom_contains_<name>(digest64_col)`` for use from SQL."""
-    fn_name = f"bloom_contains_{name}"
-    spark.udf.register(fn_name, _broadcast_probe_udf(spark, bloom))
-    return fn_name
+    # asNondeterministic (guide §4.4): the probe is pure, but declaring it
+    # non-deterministic stops the optimizer duplicating the evaluation and
+    # — the measured win — stops InferFiltersFromConstraints copying the
+    # probe onto the BUILD side of the exact semi-join through the join
+    # key (both sides were paying the Python probe; sf1.0 semijoin
+    # 4.6 s -> 3.6 s, plain probe rows unchanged).
+    return probe.asNondeterministic()(c)
 
 
 def bloom_semi_join(

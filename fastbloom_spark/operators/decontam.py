@@ -97,6 +97,12 @@ def contamination_report(
     count that picks the prefilter path and sizes the filter (it also
     materializes the grams' local checkpoint). Everything after it is
     lazy: the returned frame runs when an action reaches it.
+
+    Fault tolerance: the gram frame is a ``localCheckpoint``, which
+    truncates its lineage and keeps its blocks on the executors that
+    computed them, so losing one of those executors between this call and
+    the last action on the report fails the job instead of recomputing
+    the grams.
     """
     b_text = bench_text_col or text_col
     # lazy localCheckpoint: the gram frame feeds three consumers (the

@@ -86,7 +86,14 @@ def corpus_pipeline(
     ``n_tokens``, ``split``, ``shard``, ``block_id``, ``oversize``.
 
     NULL-text rows are dropped at the quality gate (no scoreable
-    content — the one place the pipeline is stricter than its parts)."""
+    content — the one place the pipeline is stricter than its parts).
+
+    Fault tolerance: with ``cfg.materialize`` (the default) the dedup
+    survivors are a ``localCheckpoint``, which truncates lineage and keeps
+    its blocks on the executors that computed them. Losing one of those
+    executors after the checkpoint materialized fails the job instead of
+    recomputing the lost blocks; set ``materialize=False`` to keep the
+    fully recomputable (and slower) lazy plan."""
     # 1. quality gate. NULL text needs the explicit isNotNull: greatest/
     # least SKIP null operands (both engines), so a NULL doc would score a
     # perfect 1.0 and sail through the threshold. Widen first (after the

@@ -95,17 +95,43 @@ def cosine_topk(
 
     partials = df.select(id_col, vec_col).mapInPandas(
         partial_topk, f"query_id int, {id_col} long, score double")
+    return _rank_topk(partials.withColumn("score", F.round("score", 6)),
+                      id_col, k)
+
+
+def _rank_topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Keep each query's k best rows by ``(score desc, id asc)``. Scores
+    must be rounded to 6 decimals BEFORE ranking so the tie-break domain
+    matches oracles that rank on the rounded score (candidates differing
+    only past 6 decimals would otherwise rank differently across
+    engines)."""
     from pyspark.sql.window import Window
 
-    # Round BEFORE ranking so the tie-break domain matches oracles that
-    # rank on the rounded score (candidates differing only past 6 decimals
-    # would otherwise rank differently across engines).
-    rounded = partials.withColumn("score", F.round("score", 6))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc(id_col))
-    return rounded.withColumn("rank", F.row_number().over(w)) \
+    return scored.withColumn("rank", F.row_number().over(w)) \
         .filter(F.col("rank") <= k) \
         .select("query_id", id_col, "score", "rank")
+
+
+def _rerank_topk(candidates: DataFrame, id_col: str, vec_col: str,
+                 q: np.ndarray, k: int) -> DataFrame:
+    """The ANN tail: exact cosine of each ``(query_id, id, vector)``
+    candidate (tiny) against its normalized query row, broadcast once,
+    then :func:`_rank_topk`."""
+    q_bc = candidates.sparkSession.sparkContext.broadcast(q)
+    dim = q.shape[1]
+
+    @F.pandas_udf("double")
+    def score_udf(qid: pd.Series, vecs: pd.Series) -> pd.Series:
+        qq = q_bc.value
+        mat = _normalize_rows(_vectors_from_series(vecs, dim))
+        return pd.Series(np.einsum(
+            "ij,ij->i", qq[qid.to_numpy(np.int64)], mat))
+
+    scored = candidates.withColumn(
+        "score", F.round(score_udf(F.col("query_id"), F.col(vec_col)), 6))
+    return _rank_topk(scored, id_col, k)
 
 
 def rademacher_planes(num_planes: int, dim: int, seed: int = 42
@@ -229,25 +255,7 @@ def ann_topk_rhp(
                           kind=planes_kind, quant=quant).alias("bucket"))
     candidates = corpus.join(F.broadcast(probes), "bucket") \
         .select("query_id", id_col, vec_col).distinct()
-
-    # exact rerank of candidates (tiny) against their query
-    q_bc = spark.sparkContext.broadcast(q)
-
-    @F.pandas_udf("double")
-    def score_udf(qid: pd.Series, vecs: pd.Series) -> pd.Series:
-        qq = q_bc.value
-        mat = _normalize_rows(_vectors_from_series(vecs, dim))
-        s = np.einsum("ij,ij->i", qq[qid.to_numpy(np.int64)], mat)
-        return pd.Series(s)
-
-    scored = candidates.withColumn(
-        "score", F.round(score_udf(F.col("query_id"), F.col(vec_col)), 6))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k) \
-        .select("query_id", id_col, "score", "rank")
+    return _rerank_topk(candidates, id_col, vec_col, q, k)
 
 
 def kmeans_centroids(
@@ -336,6 +344,16 @@ def ivf_assign_col(vec_col: str, centroids: np.ndarray):
     return assign(F.col(vec_col))
 
 
+def _cell_probes(spark, q: np.ndarray, centroids: np.ndarray, nprobe: int):
+    """Each normalized query's ``nprobe`` nearest centroid cells, as the
+    ``(q, nprobe)`` cell array and a ``(query_id, cell)`` probe table."""
+    qcells = np.argsort(-(q @ centroids.T), axis=1)[:, :nprobe]
+    probes = spark.createDataFrame(pd.DataFrame(
+        [(qi, int(c)) for qi in range(q.shape[0]) for c in qcells[qi]],
+        columns=["query_id", "cell"]))
+    return qcells, probes
+
+
 def ivf_topk(
     df: DataFrame,
     id_col: str,
@@ -359,35 +377,13 @@ def ivf_topk(
     if centroids is None:
         centroids = kmeans_centroids(df, vec_col, n_centroids, seed=seed)
     q = _normalize_rows(np.asarray(queries, dtype=np.float64))
-    dim = q.shape[1]
-    qcells = np.argsort(-(q @ centroids.T), axis=1)[:, :nprobe]
-    probe_rows = [(qi, int(c)) for qi in range(q.shape[0])
-                  for c in qcells[qi]]
-    probes = spark.createDataFrame(
-        pd.DataFrame(probe_rows, columns=["query_id", "cell"]))
+    _, probes = _cell_probes(spark, q, centroids, nprobe)
 
     corpus = df.select(id_col, vec_col,
                        ivf_assign_col(vec_col, centroids).alias("cell"))
     candidates = corpus.join(F.broadcast(probes), "cell") \
         .select("query_id", id_col, vec_col)
-
-    q_bc = spark.sparkContext.broadcast(q)
-
-    @F.pandas_udf("double")
-    def score_udf(qid: pd.Series, vecs: pd.Series) -> pd.Series:
-        qq = q_bc.value
-        mat = _normalize_rows(_vectors_from_series(vecs, dim))
-        return pd.Series(np.einsum(
-            "ij,ij->i", qq[qid.to_numpy(np.int64)], mat))
-
-    scored = candidates.withColumn(
-        "score", F.round(score_udf(F.col("query_id"), F.col(vec_col)), 6))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k) \
-        .select("query_id", id_col, "score", "rank")
+    return _rerank_topk(candidates, id_col, vec_col, q, k)
 
 
 def write_ivf_index(
@@ -410,8 +406,6 @@ def write_ivf_index(
     the centroid block."""
     spark = df.sparkSession
     centroids = kmeans_centroids(df, vec_col, n_centroids, seed=seed)
-    import pandas as pd
-
     spark.createDataFrame(pd.DataFrame({
         "cell": np.arange(centroids.shape[0], dtype=np.int32),
         "centroid": [c.tolist() for c in centroids],
@@ -436,41 +430,18 @@ def ivf_topk_from_index(
     block on the driver, pick each query's ``nprobe`` nearest cells, and
     scan ONLY those cell partitions (``cell IN (...)`` prunes at the
     parquet-directory level — asserted in tests/test_plan_shapes.py)."""
-    import pandas as pd
-
     cent_rows = sorted((r.cell, r.centroid) for r in
                        spark.read.parquet(f"{path}/centroids").collect())
     centroids = np.array([c for _, c in cent_rows], dtype=np.float64)
     q = _normalize_rows(np.asarray(queries, dtype=np.float64))
-    dim = q.shape[1]
-    qcells = np.argsort(-(q @ centroids.T), axis=1)[:, :nprobe]
-    probes = spark.createDataFrame(pd.DataFrame(
-        [(qi, int(c)) for qi in range(q.shape[0]) for c in qcells[qi]],
-        columns=["query_id", "cell"]))
+    qcells, probes = _cell_probes(spark, q, centroids, nprobe)
     touched = sorted({int(c) for row in qcells for c in row})
 
     corpus = spark.read.parquet(f"{path}/corpus") \
         .filter(F.col("cell").isin(touched))
     candidates = corpus.join(F.broadcast(probes), "cell") \
         .select("query_id", id_col, vec_col)
-
-    q_bc = spark.sparkContext.broadcast(q)
-
-    @F.pandas_udf("double")
-    def score_udf(qid: pd.Series, vecs: pd.Series) -> pd.Series:
-        qq = q_bc.value
-        mat = _normalize_rows(_vectors_from_series(vecs, dim))
-        return pd.Series(np.einsum(
-            "ij,ij->i", qq[qid.to_numpy(np.int64)], mat))
-
-    scored = candidates.withColumn(
-        "score", F.round(score_udf(F.col("query_id"), F.col(vec_col)), 6))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k) \
-        .select("query_id", id_col, "score", "rank")
+    return _rerank_topk(candidates, id_col, vec_col, q, k)
 
 
 def embedding_near_dup_pairs(

@@ -1932,13 +1932,13 @@ def index_filter(spark: SparkSession, path: str, *, on: str | None = None):
     """OR-union of every bucket's sketch for one indexed column — a single
     whole-table membership filter (the reference ``union``, fastbloom
     src/lib.rs:286-317, over the index rows). Useful as a broadcastable
-    pre-filter: compose with ``bloom_contains_col`` /
-    ``register_bloom_sql`` so SQL WHERE clauses and join prefilters can
-    consult the index without touching the data — the per-bucket rows
-    answer "WHERE might it be", the union answers "is it anywhere at
-    all". Sizing caveat: the union holds the TABLE'S rows in one m-bit
-    array, so its FPR follows total rows against m — when the union
-    matters, size ``cfg.expected_items`` for the table (per-bucket
+    pre-filter: compose with ``bloom_contains_col`` (or publish it with
+    :func:`publish_index_filter_sql`) so join prefilters and SQL WHERE
+    clauses can consult the index without touching the data — the
+    per-bucket rows answer "WHERE might it be", the union answers "is it
+    anywhere at all". Sizing caveat: the union holds the TABLE'S rows in
+    one m-bit array, so its FPR follows total rows against m — when the
+    union matters, size ``cfg.expected_items`` for the table (per-bucket
     filters then carry ~B× headroom); per-bucket-sized indexes yield a
     saturated (zero-FN but high-FPR) union.
 

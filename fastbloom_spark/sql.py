@@ -30,10 +30,11 @@ inclusion-exclusion whose error grows with the disjoint mass)::
 
 All functions are Arrow-batched; per-row work is numpy over the deserialized
 state (states are KB-to-MB; deserialize cost is amortized per distinct
-buffer via a tiny cache). Probe-style functions factorize each batch by
-distinct buffer and run the kernel ONCE per group over that group's whole
-probe vector — a probe table joined against one sketch row costs one
-vectorized call per Arrow batch, never a per-row Python loop.
+buffer via a tiny cache). Every probe-style function is one shape,
+:func:`_by_state`: factorize each batch by distinct sketch state and run
+the kernel ONCE per group over that group's whole probe vector — a probe
+table joined against one sketch row costs one vectorized call per Arrow
+batch, never a per-row Python loop.
 
 NULL convention (SQL semantics): any NULL argument yields a NULL result —
 probe rows from outer joins with no matching sketch come back NULL, never a
@@ -49,10 +50,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, LongType
+from pyspark.sql.types import BinaryType, BooleanType, DoubleType, LongType
 
-from .kernel import (contains_hashes, decode_words, exact_int64,
-                     source_hash, words_from_bytes)
+from .kernel import (decode_words, encode_words, exact_int64,
+                     intersect_words, union_words, words_from_bytes)
+from .operators.bloom import BloomSketch, bloom_probe_digests
 
 
 def _cached(fn):
@@ -74,6 +76,61 @@ def _valid_mask(*series: pd.Series) -> np.ndarray:
     for s in series[1:]:
         m &= ~s.isna().to_numpy()
     return m
+
+
+#: SQL type, numpy dtype and filler of each result kind; boolean and Int64
+#: carry their NULLs in a separate mask, double in NaN and binary in None
+_KINDS = {"boolean": (BooleanType(), bool, False),
+          "Int64": (LongType(), np.int64, 0),
+          "double": (DoubleType(), np.float64, np.nan),
+          "binary": (BinaryType(), object, None)}
+
+
+def _by_state(states, args, fn, kind: str) -> pd.Series:
+    """The one batch shape of every probe-style function. A row with a
+    NULL in any ``states`` or ``args`` column is NULL. The other rows are
+    grouped by their distinct ``states`` tuple (one ``pd.factorize`` per
+    Arrow batch), and ``fn(*state, *arg_slices)`` runs ONCE per group,
+    returning one value for the group or one per row. Results land in a
+    typed array of ``kind`` (see :data:`_KINDS`); a batch with no NULL
+    row skips every ``[valid]`` copy."""
+    valid = _valid_mask(*states, *args)
+    _, dtype, fill = _KINDS[kind]
+    vals = np.full(valid.size, fill, dtype=dtype)
+    if valid.any():
+        all_valid = bool(valid.all())
+        if not all_valid:
+            states = [s[valid] for s in states]
+            args = [a[valid] for a in args]
+        one = len(states) == 1
+        codes, uniques = pd.factorize(
+            states[0] if one else pd.Series(list(zip(*states)), dtype=object))
+        groups = [(u,) for u in uniques] if one else list(uniques)
+        sub = vals if all_valid else vals[valid]
+        if len(groups) == 1:
+            sub[:] = fn(*groups[0], *args)
+        else:
+            for gi, state in enumerate(groups):
+                mask = codes == gi
+                sub[mask] = fn(*state, *(a[mask] for a in args))
+        if not all_valid:
+            vals[valid] = sub
+    if kind == "boolean":
+        return pd.Series(pd.arrays.BooleanArray(vals, ~valid))
+    if kind == "Int64":
+        return pd.Series(pd.arrays.IntegerArray(vals, ~valid))
+    return pd.Series(vals)
+
+
+def _probe_udf(kind: str, n_states: int, fn):
+    """A scalar SQL function that is :func:`_by_state` with its first
+    ``n_states`` arguments as the state and the rest as arguments."""
+
+    @F.pandas_udf(_KINDS[kind][0])
+    def probe_fn(*cols: pd.Series) -> pd.Series:
+        return _by_state(cols[:n_states], cols[n_states:], fn, kind)
+
+    return probe_fn
 
 
 def _exact_scalar_int(v, what: str) -> int:
@@ -129,32 +186,19 @@ _BLOOM_BC_REGISTRY: dict[str, tuple] = {}
 
 
 def _make_bloom_probe_bc(registry: dict):
-    @F.pandas_udf(BooleanType())
-    def bloom_probe_bc(name: pd.Series, digest: pd.Series) -> pd.Series:
-        out = pd.array(np.zeros(len(name), dtype=bool), dtype="boolean")
-        valid = _valid_mask(name, digest)
-        out[~valid] = pd.NA
-        if valid.any():
-            sub = np.zeros(int(valid.sum()), dtype=bool)
-            codes, uniques = pd.factorize(name[valid])
-            digs = exact_int64(digest[valid], "bloom_probe_bc digest")
-            for gi, nm in enumerate(uniques):
-                entry = registry.get(str(nm))
-                if entry is None:
-                    raise ValueError(
-                        f"bloom_probe_bc: no published filter named "
-                        f"{nm!r} (published: {sorted(registry)}) — call "
-                        "publish_bloom_sql(spark, name, filter) on the "
-                        "driver first")
-                bc, k, seed, layout = entry
-                words = words_from_bytes(bc.value, copy=False)
-                mask = codes == gi
-                h = source_hash(digs[mask], seed)
-                sub[mask] = contains_hashes(words, h, k, layout)
-            out[valid] = sub
-        return pd.Series(out)
+    def probe(name, digests):
+        entry = registry.get(str(name))
+        if entry is None:
+            raise ValueError(
+                f"bloom_probe_bc: no published filter named {name!r} "
+                f"(published: {sorted(registry)}) — call "
+                "publish_bloom_sql(spark, name, filter) on the driver first")
+        bc, k, seed, layout = entry
+        return bloom_probe_digests(words_from_bytes(bc.value, copy=False),
+                                   k, seed, layout, digests,
+                                   "bloom_probe_bc digest")
 
-    return bloom_probe_bc
+    return _probe_udf("boolean", 1, probe)
 
 
 def publish_bloom_sql(spark: SparkSession, name: str, bloom) -> str:
@@ -200,7 +244,6 @@ def unpublish_bloom_sql(spark: SparkSession, name: str) -> None:
 
 def register_sketch_sql(spark: SparkSession) -> list[str]:
     """Register all sketch SQL functions; returns their names."""
-    from .operators.bloom import BloomSketch
     from .sketch import (CountMinSketch, HllSketch, KllSketch,
                          TDigestSketch, ThetaSketch)
 
@@ -213,207 +256,83 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
     _load_theta = _cached(ThetaSketch.from_buffer)
     _words_of = _cached(decode_words)
 
-    @_cached
-    def _hll_est(buf: bytes) -> float:
-        impl, regs = _load_hll(buf)
+    def hll_estimate(buf) -> float:
+        impl, regs = _load_hll(bytes(buf))
         return float(impl.estimate(regs))
 
-    @F.pandas_udf(DoubleType())
-    def hll_estimate(sketch: pd.Series) -> pd.Series:
-        return sketch.map(
-            lambda b: np.nan if b is None else _hll_est(bytes(b)))
+    def theta_estimate(buf) -> float:
+        return float(ThetaSketch.estimate(_load_theta(bytes(buf))[1]))
 
-    @F.pandas_udf(LongType())
-    def cms_estimate(sketch: pd.Series, digest: pd.Series) -> pd.Series:
-        # Batch-vectorized: a probe table typically joins ONE sketch row
-        # against many keys, so each Arrow batch holds few distinct buffers.
-        # Group by buffer identity and query each group's digests as one
-        # numpy vector (one kernel call per distinct sketch, not per row).
-        # NULL sketch/digest rows (outer-join misses) come back NULL.
-        valid = _valid_mask(sketch, digest)
-        out = pd.array(np.zeros(len(sketch), dtype=np.int64), dtype="Int64")
-        out[~valid] = pd.NA
-        if valid.any():
-            sub = np.zeros(int(valid.sum()), dtype=np.int64)
-            codes, uniques = pd.factorize(sketch[valid])
-            digs = exact_int64(digest[valid], "cms_estimate digest")
-            for gi, buf in enumerate(uniques):
-                impl, counters = _load_cms(bytes(buf))
-                mask = codes == gi
-                sub[mask] = impl.query(counters, digs[mask])
-            out[valid] = sub
-        return pd.Series(out)
+    def cms_estimate(buf, digests):
+        impl, counters = _load_cms(bytes(buf))
+        return impl.query(counters,
+                          exact_int64(digests, "cms_estimate digest"))
 
-    def _quantile_udf(load_impl_state, method: str):
-        """Factorize-by-buffer quantile or rank probe (same pattern as
-        bloom_probe / cms_estimate): deserialize each DISTINCT buffer once
-        per batch (cached), evaluate its whole argument vector in one
-        vectorized ``quantile_many`` / ``rank_many`` call — never a per-row
-        deserialize+build loop. Ranks (the CDF, the inverse of quantiles)
-        give `WHERE kll_rank(sketch, x) < 0.99` style tail predicates."""
+    def quantile_probe(load, method: str):
+        """``quantile_many`` / ``rank_many`` of one deserialized buffer
+        over its group's whole argument vector. Ranks (the CDF, the
+        inverse of quantiles) give ``WHERE kll_rank(sketch, x) < 0.99``
+        style tail predicates."""
+        def probe(buf, x):
+            impl, state = load(bytes(buf))
+            return getattr(impl, method)(state, x.to_numpy(np.float64))
+        return probe
 
-        @F.pandas_udf(DoubleType())
-        def probe_fn(sketch: pd.Series, x: pd.Series) -> pd.Series:
-            out = np.full(len(sketch), np.nan)
-            valid = _valid_mask(sketch, x)
-            if valid.any():
-                sub = np.full(int(valid.sum()), np.nan)
-                codes, uniques = pd.factorize(sketch[valid])
-                xs = x[valid].to_numpy(np.float64)
-                for gi, buf in enumerate(uniques):
-                    impl, state = load_impl_state(bytes(buf))
-                    mask = codes == gi
-                    sub[mask] = getattr(impl, method)(state, xs[mask])
-                out[valid] = sub
-            return pd.Series(out)
+    def bloom_probe(buf, k, seed, layout, digests):
+        return bloom_probe_digests(
+            _words_of(bytes(buf)), int(k),
+            _exact_scalar_int(seed, "bloom_probe seed"), str(layout),
+            digests, "bloom_probe digest")
 
-        return probe_fn
+    def hll_intersect_estimate(ba, bb) -> float:
+        """Inclusion-exclusion: |A ∩ B| ≈ est(A) + est(B) - est(A ∪ B).
+        Error grows with the disjoint mass (each term carries
+        ~1.04/sqrt(2^p) relative error), so it is a coarse overlap signal,
+        not a precise count — clamped at zero."""
+        impl, a = _load_hll(bytes(ba))
+        impl_b, b = _load_hll(bytes(bb))
+        _check_same_params("hll_intersect (precision, seed)",
+                           impl.params, impl_b.params)
+        est = (impl.estimate(a) + impl.estimate(b)
+               - impl.estimate(impl.merge(a, b)))
+        return max(est, 0.0)
 
-    tdigest_quantile = _quantile_udf(_load_tdigest, "quantile_many")
-    kll_quantile = _quantile_udf(_load_kll, "quantile_many")
-    tdigest_rank = _quantile_udf(_load_tdigest, "rank_many")
-    kll_rank = _quantile_udf(_load_kll, "rank_many")
-
-    @F.pandas_udf(BooleanType())
-    def bloom_probe(sketch: pd.Series, k: pd.Series, seed: pd.Series,
-                    layout: pd.Series, digest: pd.Series) -> pd.Series:
-        # Batch-vectorized: group rows by distinct (sketch, k, seed, layout)
-        # and run the kernel ONCE per group over all that group's digests —
-        # a probe table joined against one sketch row costs one vectorized
-        # contains_hashes per Arrow batch instead of a per-row Python loop.
-        # NULL sketch/k/seed/digest rows come back NULL (a NULL layout
-        # defaults to "flat" for pre-layout sketch tables).
-        # Sizing: right for KB-to-MB sketch TABLES; probing ONE large flat
-        # filter from SQL should go through publish_bloom_sql /
-        # bloom_probe_bc instead (broadcast handle — the buffer never rides
-        # the rows and factorize never hashes multi-MB payloads).
-        valid = _valid_mask(sketch, k, seed, digest)
-        out = pd.array(np.zeros(len(sketch), dtype=bool), dtype="boolean")
-        out[~valid] = pd.NA
-        if valid.any():
-            sub = np.zeros(int(valid.sum()), dtype=bool)
-            key = pd.Series(
-                list(zip(sketch[valid], k[valid], seed[valid],
-                         layout[valid])), dtype=object)
-            codes, uniques = pd.factorize(key)
-            digs = exact_int64(digest[valid], "bloom_probe digest")
-            for gi, (buf, kk, ss, lay) in enumerate(uniques):
-                words = _words_of(bytes(buf))
-                mask = codes == gi
-                seed_i = _exact_scalar_int(ss, "bloom_probe seed")
-                h = source_hash(digs[mask], seed_i & ((1 << 64) - 1))
-                sub[mask] = contains_hashes(
-                    words, h, int(kk), "flat" if lay is None else str(lay))
-            out[valid] = sub
-        return pd.Series(out)
-
-    @F.pandas_udf("binary")
-    def bloom_intersect(sketch_a: pd.Series, sketch_b: pd.Series) -> pd.Series:
-        """Word-wise AND of two compatible bloom payloads (upper-bound
-        intersection semantics, fastbloom src/lib.rs:343-350)."""
-        from .kernel import encode_words, intersect_words
-
-        out = []
-        for a, b in zip(sketch_a, sketch_b):
-            out.append(None if a is None or b is None else
-                       encode_words(intersect_words(
-                           decode_words(bytes(a)), decode_words(bytes(b)))))
-        return pd.Series(out)
-
-    @F.pandas_udf("binary")
-    def bloom_union(sketch_a: pd.Series, sketch_b: pd.Series) -> pd.Series:
-        """Word-wise OR of two compatible bloom payloads (FP-preserving
-        union, fastbloom src/lib.rs:310-317)."""
-        from .kernel import encode_words, union_words
-
-        out = []
-        for a, b in zip(sketch_a, sketch_b):
-            out.append(None if a is None or b is None else
-                       encode_words(union_words(
-                           decode_words(bytes(a)), decode_words(bytes(b)))))
-        return pd.Series(out)
-
-    @F.pandas_udf(DoubleType())
-    def hll_intersect_estimate(sketch_a: pd.Series,
-                               sketch_b: pd.Series) -> pd.Series:
-        """Inclusion-exclusion intersection estimate from two HLL states:
-        |A ∩ B| ≈ est(A) + est(B) - est(A ∪ B). Error grows with the
-        disjoint mass (each term carries ~1.04/sqrt(2^p) relative error),
-        so it is a coarse overlap signal, not a precise count — clamped at
-        zero. Factorized by distinct (a, b) pair: a sketch table cross-joined
-        against one reference sketch evaluates each DISTINCT pair once per
-        batch, with per-buffer deserialization cached ACROSS batches
-        (_load_hll lives at registration scope)."""
-
-        def inter(ba: bytes, bb: bytes) -> float:
-            impl, a = _load_hll(ba)
-            impl_b, b = _load_hll(bb)
-            _check_same_params("hll_intersect (precision, seed)",
-                               impl.params, impl_b.params)
-            est = (impl.estimate(a) + impl.estimate(b)
-                   - impl.estimate(impl.merge(a, b)))
-            return max(est, 0.0)
-
-        out = np.full(len(sketch_a), np.nan)
-        valid = _valid_mask(sketch_a, sketch_b)
-        if valid.any():
-            sub = np.full(int(valid.sum()), np.nan)
-            key = pd.Series(list(zip(sketch_a[valid], sketch_b[valid])),
-                            dtype=object)
-            codes, uniques = pd.factorize(key)
-            for gi, (ba, bb) in enumerate(uniques):
-                sub[codes == gi] = inter(bytes(ba), bytes(bb))
-            out[valid] = sub
-        return pd.Series(out)
-
-    @F.pandas_udf(DoubleType())
-    def theta_estimate(sketch: pd.Series) -> pd.Series:
-        return sketch.map(
-            lambda b: np.nan if b is None else
-            float(ThetaSketch.estimate(_load_theta(bytes(b))[1])))
-
-    def _theta_setop_udf(op_name: str):
-        """Pairwise theta set operation → serialized theta state. Unlike
-        hll_intersect_estimate's inclusion-exclusion (error grows with the
-        DISJOINT mass), these are sampling-exact over the retained region:
-        relative error stays ~1/sqrt(k-1) of the RESULT set. Mixed-k inputs
-        allowed (result cut at the smaller k); mixed seeds refused. Same
-        factorize-by-distinct-pair batch shape as hll_intersect_estimate."""
-
-        def one(ba: bytes, bb: bytes) -> bytes:
-            impl_a, a = _load_theta(ba)
-            impl_b, b = _load_theta(bb)
+    def theta_setop(method: str):
+        """Pairwise theta set operation -> serialized theta state. Unlike
+        hll_intersect_estimate (error grows with the DISJOINT mass), these
+        are sampling-exact over the retained region: relative error stays
+        ~1/sqrt(k-1) of the RESULT set. Mixed-k inputs allowed (result cut
+        at the smaller k); mixed seeds refused."""
+        def setop(ba, bb) -> bytes:
+            impl_a, a = _load_theta(bytes(ba))
+            impl_b, b = _load_theta(bytes(bb))
             if impl_a.seed != impl_b.seed:
                 raise ValueError(
                     "theta set op across seeds: near-zero overlap by "
                     f"construction ({impl_a.seed} vs {impl_b.seed})")
             impl = impl_a if impl_a.k <= impl_b.k else impl_b
-            if op_name == "union":
-                out = impl.merge(a, b)
-            elif op_name == "intersect":
-                out = impl.intersect(a, b)
-            else:
-                out = impl.a_not_b(a, b)
-            return impl.serialize(out)
+            return impl.serialize(getattr(impl, method)(a, b))
+        return setop
 
-        @F.pandas_udf("binary")
-        def setop_fn(sketch_a: pd.Series, sketch_b: pd.Series) -> pd.Series:
-            out = [None] * len(sketch_a)
-            valid = _valid_mask(sketch_a, sketch_b)
-            if valid.any():
-                key = pd.Series(list(zip(sketch_a[valid], sketch_b[valid])),
-                                dtype=object)
-                codes, uniques = pd.factorize(key)
-                done = [one(bytes(ba), bytes(bb)) for ba, bb in uniques]
-                for pos, gi in zip(np.flatnonzero(valid), codes):
-                    out[pos] = done[gi]
-            return pd.Series(out, dtype=object)
+    def bloom_words_op(words_op):
+        """Word-wise OR (FP-preserving union, fastbloom src/lib.rs:310-317)
+        or AND (upper-bound intersection, src/lib.rs:343-350) of two
+        compatible bloom payloads."""
+        def op(ba, bb) -> bytes:
+            return encode_words(words_op(decode_words(bytes(ba)),
+                                         decode_words(bytes(bb))))
+        return op
 
-        return setop_fn
-
-    theta_union = _theta_setop_udf("union")
-    theta_intersect = _theta_setop_udf("intersect")
-    theta_a_not_b = _theta_setop_udf("a_not_b")
+    @F.pandas_udf(BooleanType())
+    def bloom_probe_udf(sketch: pd.Series, k: pd.Series, seed: pd.Series,
+                        layout: pd.Series, digest: pd.Series) -> pd.Series:
+        # a NULL layout is "flat" (pre-layout sketch tables). Sizing: right
+        # for KB-to-MB sketch TABLES; probing ONE large flat filter from
+        # SQL should go through publish_bloom_sql / bloom_probe_bc instead
+        # (broadcast handle — the buffer never rides the rows and
+        # factorize never hashes multi-MB payloads).
+        return _by_state([sketch, k, seed, layout.fillna("flat")], [digest],
+                         bloom_probe, "boolean")
 
     fns = {
         name: _merge_agg(cls, family) for name, cls, family in (
@@ -424,23 +343,27 @@ def register_sketch_sql(spark: SparkSession) -> list[str]:
             ("tdigest_merge_agg", TDigestSketch, "tdigest (delta)"),
             ("kll_merge_agg", KllSketch, "kll (k, seed)"),
             ("theta_union_agg", ThetaSketch, "theta (k, seed)"))}
-    fns.update({
-        "bloom_probe_bc": _make_bloom_probe_bc(dict(_BLOOM_BC_REGISTRY)),
-        "bloom_union": bloom_union,
-        "bloom_intersect": bloom_intersect,
-        "hll_estimate": hll_estimate,
-        "cms_estimate": cms_estimate,
-        "tdigest_quantile": tdigest_quantile,
-        "kll_quantile": kll_quantile,
-        "kll_rank": kll_rank,
-        "bloom_probe": bloom_probe,
-        "hll_intersect_estimate": hll_intersect_estimate,
-        "tdigest_rank": tdigest_rank,
-        "theta_estimate": theta_estimate,
-        "theta_union": theta_union,
-        "theta_intersect": theta_intersect,
-        "theta_a_not_b": theta_a_not_b,
-    })
+    # kind, number of leading sketch-state arguments, per-state function
+    fns.update({name: _probe_udf(kind, n_states, fn)
+                for name, kind, n_states, fn in (
+        ("hll_estimate", "double", 1, hll_estimate),
+        ("theta_estimate", "double", 1, theta_estimate),
+        ("cms_estimate", "Int64", 1, cms_estimate),
+        ("tdigest_quantile", "double", 1,
+         quantile_probe(_load_tdigest, "quantile_many")),
+        ("kll_quantile", "double", 1,
+         quantile_probe(_load_kll, "quantile_many")),
+        ("tdigest_rank", "double", 1,
+         quantile_probe(_load_tdigest, "rank_many")),
+        ("kll_rank", "double", 1, quantile_probe(_load_kll, "rank_many")),
+        ("hll_intersect_estimate", "double", 2, hll_intersect_estimate),
+        ("theta_union", "binary", 2, theta_setop("merge")),
+        ("theta_intersect", "binary", 2, theta_setop("intersect")),
+        ("theta_a_not_b", "binary", 2, theta_setop("a_not_b")),
+        ("bloom_union", "binary", 2, bloom_words_op(union_words)),
+        ("bloom_intersect", "binary", 2, bloom_words_op(intersect_words)))})
+    fns["bloom_probe"] = bloom_probe_udf
+    fns["bloom_probe_bc"] = _make_bloom_probe_bc(dict(_BLOOM_BC_REGISTRY))
     for name, fn in fns.items():
         spark.udf.register(name, fn)
     return sorted(fns)

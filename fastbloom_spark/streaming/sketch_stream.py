@@ -26,6 +26,31 @@ from pyspark.sql.types import (BinaryType, LongType, StructField, StructType)
 
 from ..operators.sketch_agg import _prepare, _values_np
 
+#: what each group keeps in the state store: rows folded so far and the
+#: serialized sketch
+_STATE_SCHEMA = StructType([
+    StructField("rows_seen", LongType()),
+    StructField("state", BinaryType()),
+])
+
+
+def _fold_state(impl, state: GroupState,
+                pdfs: Iterator[pd.DataFrame]) -> Tuple[int, bytes]:
+    """Fold a group's new batches into its stored sketch: load the state
+    (or start empty), ``impl.update`` each batch's ``__value`` column,
+    count the rows, then store and return ``(rows_seen, serialized)``."""
+    if state.exists:
+        rows_seen, buf = state.get
+        acc = impl.deserialize(bytes(buf))
+    else:
+        rows_seen, acc = 0, impl.empty()
+    for pdf in pdfs:
+        acc = impl.update(acc, _values_np(pdf["__value"], impl))
+        rows_seen += len(pdf)
+    buf = impl.serialize(acc)
+    state.update((rows_seen, buf))
+    return rows_seen, buf
+
 
 def streaming_sketch_agg(
     stream: DataFrame,
@@ -55,26 +80,13 @@ def streaming_sketch_agg(
         [f for f in prepared.schema.fields if f.name in keys]
         + [StructField("rows_seen", LongType()),
            StructField("sketch", BinaryType())])
-    state_schema = StructType([
-        StructField("rows_seen", LongType()),
-        StructField("state", BinaryType()),
-    ])
 
     def fold(
         key: Tuple,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            rows_seen, buf = state.get
-            acc = impl.deserialize(bytes(buf))
-        else:
-            rows_seen, acc = 0, impl.empty()
-        for pdf in pdfs:
-            acc = impl.update(acc, _values_np(pdf["__value"], impl))
-            rows_seen += len(pdf)
-        buf = impl.serialize(acc)
-        state.update((rows_seen, buf))
+        rows_seen, buf = _fold_state(impl, state, pdfs)
         yield pd.DataFrame({**{k: [v] for k, v in zip(keys, key)},
                             "rows_seen": [rows_seen], "sketch": [buf]})
 
@@ -82,5 +94,5 @@ def streaming_sketch_agg(
     # each trigger appends the key's REFRESHED state row — downstream
     # readers take the max-rows_seen row per key as current
     return prepared.groupBy(*keys).applyInPandasWithState(
-        fold, out_schema, state_schema, output_mode,
+        fold, out_schema, _STATE_SCHEMA, output_mode,
         GroupStateTimeout.NoTimeout)

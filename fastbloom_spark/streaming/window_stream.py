@@ -36,7 +36,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BinaryType, LongType, StructField, StructType,
                                TimestampType)
 
-from ..operators.sketch_agg import _prepare, _values_np
+from ..operators.sketch_agg import _prepare
+from .sketch_stream import _STATE_SCHEMA, _fold_state
 
 
 def streaming_windowed_sketch_agg(
@@ -84,10 +85,6 @@ def streaming_windowed_sketch_agg(
         + [f for f in prepared.schema.fields if f.name in keys]
         + [StructField("rows_seen", LongType()),
            StructField("sketch", BinaryType())])
-    state_schema = StructType([
-        StructField("rows_seen", LongType()),
-        StructField("state", BinaryType()),
-    ])
 
     def fold(
         key: Tuple,
@@ -112,15 +109,7 @@ def streaming_windowed_sketch_agg(
             state.remove()
             yield row(rows_seen, bytes(buf))
             return
-        if state.exists:
-            rows_seen, buf = state.get
-            acc = impl.deserialize(bytes(buf))
-        else:
-            rows_seen, acc = 0, impl.empty()
-        for pdf in pdfs:
-            acc = impl.update(acc, _values_np(pdf["__value"], impl))
-            rows_seen += len(pdf)
-        state.update((rows_seen, impl.serialize(acc)))
+        _fold_state(impl, state, pdfs)
         end_ms = int(pd.Timestamp(win_end)
                      .tz_localize(session_tz, ambiguous=True,
                                   nonexistent="shift_forward")
@@ -129,5 +118,5 @@ def streaming_windowed_sketch_agg(
             max(end_ms, state.getCurrentWatermarkMs() + 1))
 
     return prepared.groupBy(*group_keys).applyInPandasWithState(
-        fold, out_schema, state_schema, "append",
+        fold, out_schema, _STATE_SCHEMA, "append",
         GroupStateTimeout.EventTimeTimeout)

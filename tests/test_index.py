@@ -532,10 +532,10 @@ def test_index_filter_union_and_sql(spark, docs, tmp_path):
     """The union of bucket sketches is a whole-table membership filter:
     zero FN over every indexed value, FPR-bounded on absents when the cfg
     is sized for the TABLE (per-bucket sizing saturates the union — the
-    documented tradeoff), and registrable for SQL probes."""
+    documented tradeoff), and publishable for SQL probes."""
     from fastbloom_spark.kernel import digest64_bytes
-    from fastbloom_spark.operators import register_bloom_sql
     from fastbloom_spark.sources import index_filter
+    from fastbloom_spark.sql import publish_bloom_sql, unpublish_bloom_sql
 
     path = str(tmp_path / "unionidx")
     cfg = BloomConfig.from_false_pos(0.01, expected_items=600, seed=42)
@@ -552,12 +552,16 @@ def test_index_filter_union_and_sql(spark, docs, tmp_path):
 
     from fastbloom_spark.functions import digest64
 
-    fn = register_bloom_sql(spark, "docidx", filt)
-    docs.select("text", digest64("text").alias("d")) \
-        .createOrReplaceTempView("docs_v")
-    n = spark.sql(f"SELECT count(*) AS n FROM docs_v WHERE {fn}(d)") \
-        .first().n
-    assert n == docs.count()  # every row probes true from SQL
+    fn = publish_bloom_sql(spark, "docidx", filt)
+    try:
+        docs.select("text", digest64("text").alias("d")) \
+            .createOrReplaceTempView("docs_v")
+        n = spark.sql(
+            f"SELECT count(*) AS n FROM docs_v WHERE {fn}('docidx', d)") \
+            .first().n
+        assert n == docs.count()  # every row probes true from SQL
+    finally:
+        unpublish_bloom_sql(spark, "docidx")
 
 
 def test_write_mode_ignore_rejected(spark, docs, tmp_path):

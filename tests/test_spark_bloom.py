@@ -23,9 +23,9 @@ from fastbloom_spark.operators import (
     bloom_build,
     bloom_contains_col,
     bloom_semi_join,
-    register_bloom_sql,
     sketch_row_to_filter,
 )
+from fastbloom_spark.sql import publish_bloom_sql, unpublish_bloom_sql
 
 CFG = BloomConfig.with_num_bits(1 << 14, num_hashes=5, seed=42)
 
@@ -74,12 +74,16 @@ def test_zero_false_negatives_spark_probe(spark, docs):
 
 def test_sql_registration(spark, docs):
     bloom = bloom_build(docs, "text", CFG)
-    fn = register_bloom_sql(spark, "docs", bloom)
-    docs.select("doc_id", digest64("text").alias("d")) \
-        .createOrReplaceTempView("docs_digests")
-    n = spark.sql(
-        f"select count(*) as c from docs_digests where {fn}(d)").collect()[0].c
-    assert n == docs.count()
+    fn = publish_bloom_sql(spark, "docs", bloom)
+    try:
+        docs.select("doc_id", digest64("text").alias("d")) \
+            .createOrReplaceTempView("docs_digests")
+        n = spark.sql(
+            f"select count(*) as c from docs_digests where {fn}('docs', d)"
+        ).collect()[0].c
+        assert n == docs.count()
+    finally:
+        unpublish_bloom_sql(spark, "docs")
 
 
 def test_fpr_on_non_members_via_spark(spark, docs):

@@ -125,9 +125,10 @@ def test_sql_union_intersect(spark, sf_dir):
 def test_sql_bloom_probe_vectorized_parity_and_speed(spark, sf_dir):
     """SQL probe surface at >=100k rows, two forms:
 
-    * broadcast form (``register_bloom_sql``) — state crosses the wire ONCE
-      per executor; must match ``bloom_contains_col`` and land within ~2x
-      of its wall time (they share the same kernel path).
+    * broadcast form (``publish_bloom_sql`` + ``bloom_probe_bc``) — state
+      crosses the wire ONCE per executor; must match ``bloom_contains_col``
+      and land within ~2x of its wall time (they share the same kernel
+      path).
     * sketch-column form (``bloom_probe``) — state rides as a column
       (needed when each row group has its OWN sketch); batch-vectorized by
       distinct buffer, must match row-for-row. Its wall time is dominated
@@ -138,8 +139,8 @@ def test_sql_bloom_probe_vectorized_parity_and_speed(spark, sf_dir):
 
     from fastbloom_spark.functions import digest64
     from fastbloom_spark.kernel import encode_words
-    from fastbloom_spark.operators import (bloom_build, bloom_contains_col,
-                                           register_bloom_sql)
+    from fastbloom_spark.operators import bloom_build, bloom_contains_col
+    from fastbloom_spark.sql import publish_bloom_sql, unpublish_bloom_sql
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     bloom = bloom_build(orders.limit(5000),
@@ -164,11 +165,14 @@ def test_sql_bloom_probe_vectorized_parity_and_speed(spark, sf_dir):
     t_api, api_hits = best_of(lambda: probes.filter(
         bloom_contains_col(spark, bloom, "d")).count())
 
-    fn_name = register_bloom_sql(spark, "speedtest", bloom)
-    t_bcast, bcast_hits = best_of(lambda: spark.sql(f"""
-        SELECT count(*) AS c FROM probe_digests
-        WHERE {fn_name}(d)
-    """).collect()[0].c)
+    fn_name = publish_bloom_sql(spark, "speedtest", bloom)
+    try:
+        t_bcast, bcast_hits = best_of(lambda: spark.sql(f"""
+            SELECT count(*) AS c FROM probe_digests
+            WHERE {fn_name}('speedtest', d)
+        """).collect()[0].c)
+    finally:
+        unpublish_bloom_sql(spark, "speedtest")
 
     seed_signed = (bloom.seed - (1 << 64) if bloom.seed >= (1 << 63)
                    else bloom.seed)
@@ -342,6 +346,10 @@ def test_sql_null_arguments_yield_null(spark, sf_dir):
         .createOrReplaceTempView("one_t")
     sketch_agg(cust, [], "c_name", HllSketch(precision=12, seed=42)) \
         .createOrReplaceTempView("one_h")
+    sketch_agg(cust, [], "c_acctbal", KllSketch(k=100)) \
+        .createOrReplaceTempView("one_k")
+    sketch_agg(cust, [], "c_name", ThetaSketch(k=64, seed=42)) \
+        .createOrReplaceTempView("one_th")
 
     rows = spark.sql("""
         WITH probes AS (
@@ -359,7 +367,13 @@ def test_sql_null_arguments_yield_null(spark, sf_dir):
             ("one_c", "cms_estimate(sketch, 77)"),
             ("one_t", "tdigest_quantile(sketch, 0.5)"),
             ("one_t", "tdigest_quantile(sketch, CAST(NULL AS DOUBLE))"),
-            ("one_h", "hll_estimate(sketch)")]:
+            ("one_h", "hll_estimate(sketch)"),
+            ("one_th", "theta_estimate(sketch)"),
+            ("one_k", "kll_quantile(sketch, 0.5)"),
+            ("one_k", "kll_rank(sketch, 100.0)"),
+            ("one_k", "kll_rank(sketch, CAST(NULL AS DOUBLE))"),
+            ("one_t", "tdigest_rank(sketch, 100.0)"),
+            ("one_t", "tdigest_rank(sketch, CAST(NULL AS DOUBLE))")]:
         vals = spark.sql(f"""
             WITH s AS (SELECT sketch FROM {view}
                        UNION ALL SELECT NULL)
@@ -368,6 +382,42 @@ def test_sql_null_arguments_yield_null(spark, sf_dir):
         assert any(r.v is None for r in vals), (view, expr, vals)
         if "NULL AS DOUBLE" not in expr:
             assert any(r.v is not None for r in vals), (view, expr)
+
+    # two-sketch functions: NULL on EITHER side -> NULL, both present -> value
+    for view, fn in [("one_th", "theta_union"), ("one_th", "theta_intersect"),
+                     ("one_th", "theta_a_not_b"),
+                     ("one_h", "hll_intersect_estimate"),
+                     ("one_b", "bloom_union"), ("one_b", "bloom_intersect")]:
+        vals = spark.sql(f"""
+            WITH s AS (SELECT sketch FROM {view}
+                       UNION ALL SELECT NULL)
+            SELECT a.sketch IS NULL OR b.sketch IS NULL AS any_null,
+                   {fn}(a.sketch, b.sketch) AS v
+            FROM s a CROSS JOIN s b
+        """).collect()
+        assert len(vals) == 4, (fn, vals)
+        for r in vals:
+            assert (r.v is None) == r.any_null, (fn, vals)
+
+    # the broadcast probe: a NULL name or a NULL digest -> NULL
+    from fastbloom_spark.local import BloomFilter
+    from fastbloom_spark.sql import publish_bloom_sql, unpublish_bloom_sql
+
+    filt = BloomFilter(cfg)
+    filt.insert("member")
+    publish_bloom_sql(spark, "null_args", filt)
+    try:
+        rows = spark.sql("""
+            SELECT tag, bloom_probe_bc(nm, d) AS hit FROM VALUES
+              ('both', 'null_args', CAST(12345 AS BIGINT)),
+              ('no_name', CAST(NULL AS STRING), CAST(12345 AS BIGINT)),
+              ('no_digest', 'null_args', CAST(NULL AS BIGINT))
+              AS t(tag, nm, d)
+        """).collect()
+        got = {r.tag: r.hit for r in rows}
+        assert got == {"both": False, "no_name": None, "no_digest": None}
+    finally:
+        unpublish_bloom_sql(spark, "null_args")
 
 
 @pytest.mark.parametrize("agg, col, a, b", [
