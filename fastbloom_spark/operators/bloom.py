@@ -303,14 +303,17 @@ def bloom_build(
     # plan parallelism + merge topology (see plans/planner.py for the model)
     from ..plans import plan_bloom_build
 
+    # asked once, of the caller's frame (its .rdd is cached across calls);
+    # the NULL filter and digest projection keep its partitions
+    partitions = df.rdd.getNumPartitions()
     sc = df.sparkSession.sparkContext
     plan = plan_bloom_build(
         cfg,
-        input_partitions=prepared.rdd.getNumPartitions(),
+        input_partitions=partitions,
         default_parallelism=sc.defaultParallelism,
         expected_items=n_hint,
     )
-    if plan.build_partitions < prepared.rdd.getNumPartitions():
+    if plan.build_partitions < partitions:
         if plan.scan_strategy == "shuffle":
             # digest column is 8 B/row: repartition keeps the sha2 scan at
             # full parallelism and ships only digests to the build tasks

@@ -24,15 +24,20 @@ columns carried between the partition id and ``rows_seen`` in every row
 self-describing).
 
 Entry points prepare their input ONCE (:func:`_prepare`: NULL values out,
-widening, digest) and may reshape it there; :func:`_partials` never
-reshapes, so each partial row's ``partition_id`` is its input partition —
-the lineage checkpoints resume on.
+widening, digest, in one projection) from the partition count of the
+caller's frame, asked once per call, and may reshape it there;
+:func:`_partials` never reshapes, so each partial row's ``partition_id``
+is its input partition — the lineage checkpoints resume on.
 
 Scale notes: phase-1 buckets bound any single task's merge fan-in at
 ceil(P / fanin) states (at P <= fanin, ``sketch_agg`` merges
 order-invariant sketches in one phase); per-(key, partition) partials
 absorb row-count skew map-side (a hot key's rows never shuffle — only its
-per-partition states do).
+per-partition states do). A global build (:func:`sketch_build`) folds its
+partials on the driver, in ``partition_id`` order, wherever the tree
+would be one fold anyway or the merge is exact, so it is one Spark job
+within the driver budget; only rank sketches over more than ``fanin``
+partitions and builds above the budget take the tree.
 """
 
 from __future__ import annotations
@@ -49,7 +54,6 @@ from pyspark.sql import functions as F
 from ..functions.digest import digest64
 from ..kernel import decode_state, encode_state, exact_int64
 from ..plans import planner
-from .text import _widen
 
 
 def _key_schema(df: DataFrame, key_cols: Sequence[str]) -> str:
@@ -91,10 +95,33 @@ def _load(impl, buf) -> object:
     return impl.deserialize(decode_state(buf))
 
 
+def _widens(impl) -> bool:
+    """May the impl's narrow inputs be repartitioned up to the task slots?
+    Only order-invariant sketches whose ``widen`` allows it."""
+    return (getattr(impl, "order_invariant", False)
+            and getattr(impl, "widen", True))
+
+
+def _partial_count(df: DataFrame, impl, partitions: int) -> int:
+    """How many partitions the partials of ``df`` (``partitions`` of them)
+    come from: its own, lifted to the task slots when the impl widens
+    narrow inputs (:func:`_prepare`)."""
+    if _widens(impl):
+        return max(partitions,
+                   df.sparkSession.sparkContext.defaultParallelism)
+    return partitions
+
+
 def _prepare(df: DataFrame, value_col: str | Column, impl,
              key_cols: Sequence[str], digest_precomputed: bool,
-             *, widen: bool = False) -> DataFrame:
-    """``(keys..., __value)`` rows: the one input funnel of every build."""
+             *, partitions: int | None = None) -> DataFrame:
+    """``(keys..., __value)`` rows: the one input funnel of every build.
+    ``partitions`` is the caller's count of ``df``'s partitions; given,
+    an input narrower than the task slots is widened for impls that may
+    widen (:func:`_widens`). The count is taken from the caller's frame
+    because a frame built here has no cached ``.rdd``: asking it costs
+    about 20 ms of driver CPU per call, and under AQE it would run the
+    frame's shuffles."""
     col = F.col(value_col) if isinstance(value_col, str) else value_col
     # NULL values leave BEFORE the Arrow transfer: for digest sketches one
     # NULL would turn the whole long batch float64 and corrupt digests
@@ -103,20 +130,22 @@ def _prepare(df: DataFrame, value_col: str | Column, impl,
     # paths. Filter the RAW column, never the computed digest (Catalyst
     # would evaluate the digest twice — Filter + Project — a measured ~2x
     # on sha256 scans; and xxh64 hashes NULL to a non-null constant)
-    base = df.filter(col.isNotNull()).select(*key_cols,
-                                             col.alias("__raw__"))
-    if widen and getattr(impl, "widen", True):
-        # widen BELOW the digest projection so the hash scan parallelizes
-        # (a single-row-group input would serialize it through one task);
-        # only order-invariant sketches may take this path
-        base = _widen(base)
-    raw = F.col("__raw__")
+    base = df.filter(col.isNotNull())
+    if partitions is not None:
+        wide = _partial_count(df, impl, partitions)
+        if wide > partitions:
+            # widen BELOW the digest projection so the hash scan
+            # parallelizes (a single-row-group input would serialize it
+            # through one task); only order-invariant sketches may
+            base = base.select(*key_cols, col.alias("__raw__")) \
+                .repartition(wide)
+            col = F.col("__raw__")
     if impl.input_kind == "digest":
-        val = raw if digest_precomputed else digest64(
-            raw, getattr(impl, "digest", "sha256"))
+        val = col if digest_precomputed else digest64(
+            col, getattr(impl, "digest", "sha256"))
         val = val.cast("long")
     else:
-        val = raw.cast("double")
+        val = col.cast("double")
     return base.select(*key_cols, val.alias("__value"))
 
 
@@ -197,9 +226,9 @@ def sketch_partials(
     across layouts, so their partitioning is never touched, and Bloom
     (``widen = False``) leaves its partial count to the planner."""
     keys = list(key_cols)
-    prepared = _prepare(df, value_col, impl, keys, digest_precomputed,
-                        widen=getattr(impl, "order_invariant", False))
-    return _partials(prepared, impl, keys)
+    partitions = df.rdd.getNumPartitions() if _widens(impl) else None
+    return _partials(_prepare(df, value_col, impl, keys, digest_precomputed,
+                              partitions=partitions), impl, keys)
 
 
 def _merge_fn(impl, group_cols: Sequence[str], *, encode_out: bool = False):
@@ -263,17 +292,6 @@ def _merge_partials(partials: DataFrame, impl, keys: list[str], *,
     return sketch_merge(partials, impl, keys, fanin=fanin)
 
 
-def _partial_count(df: DataFrame, impl) -> int:
-    """How many partitions :func:`sketch_partials` gives the partials of
-    ``df``: its partitions, lifted to the task slots when the impl widens
-    narrow inputs."""
-    n = df.rdd.getNumPartitions()
-    if getattr(impl, "order_invariant", False) and getattr(impl, "widen",
-                                                           True):
-        n = max(n, df.sparkSession.sparkContext.defaultParallelism)
-    return n
-
-
 def sketch_agg(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -313,6 +331,9 @@ def sketch_agg(
     :func:`_auto_salt`).
     """
     keys = list(key_cols)
+    # the caller's partition count, asked once (a keyed shuffle needs none)
+    partitions = (None if strategy == "shuffle" and keys
+                  else df.rdd.getNumPartitions())
     if strategy == "auto":
         strategy = "partial"
         if keys:
@@ -323,8 +344,7 @@ def sketch_agg(
             # keys (min(n_keys, P) undercounted by n_keys/P and could never
             # pick shuffle for high-cardinality keys); overestimating only
             # flips to "shuffle", a safe thin-row shuffle
-            inflation = (n_keys * df.rdd.getNumPartitions()
-                         * _state_bytes(impl))
+            inflation = n_keys * partitions * _state_bytes(impl)
             if inflation > planner.PARTIAL_STATE_BUDGET:
                 strategy = "shuffle"
     if strategy not in ("partial", "shuffle"):
@@ -336,10 +356,11 @@ def sketch_agg(
             salt = _auto_salt(prepared, keys, "__value")
         return _sketch_agg_shuffled(prepared, keys, impl, fanin=fanin,
                                     salt=salt)
-    partials = sketch_partials(df, value_col, impl, keys,
-                               digest_precomputed=digest_precomputed)
+    partials = _partials(_prepare(df, value_col, impl, keys,
+                                  digest_precomputed, partitions=partitions),
+                         impl, keys)
     return _merge_partials(partials, impl, keys, fanin=fanin,
-                           partitions=_partial_count(df, impl))
+                           partitions=_partial_count(df, impl, partitions))
 
 
 def _auto_salt(prepared: DataFrame, keys: list[str], value_col: str,
@@ -453,28 +474,38 @@ def sketch_rollup(
 
 
 def _collect_fold(partials: DataFrame, impl) -> tuple[object, int]:
-    """The driver fold of every order-invariant global build: Arrow-collect
-    the partial rows, then merge the decoded states one at a time into one
-    accumulator. Starting from ``empty()`` is exact for these impls (it is
-    their merge identity) and gives Bloom a writable accumulator its
-    read-only payload views OR into."""
-    pdf = partials.select("rows_seen", "sketch").toPandas()
-    state = impl.empty()
-    for b in pdf["sketch"]:
-        state = impl.merge(state, _load(impl, b))
-    return state, int(pdf["rows_seen"].sum())
+    """The driver fold of a global build: Arrow-collect the partial rows,
+    then merge their decoded states in ``partition_id`` order, so the
+    result does not depend on the order the rows arrive in.
+    Order-invariant impls merge into an ``empty()`` accumulator (their
+    merge identity; it gives Bloom a writable accumulator its read-only
+    payload views OR into). Rank sketches reduce the states themselves,
+    as the merge tree's last phase does: ``merge(empty(), s)`` would
+    re-cluster or re-compact ``s``."""
+    pdf = partials.select("partition_id", "rows_seen", "sketch") \
+        .toPandas().sort_values("partition_id")
+    rows_seen = int(pdf["rows_seen"].sum())
+    states = (_load(impl, b) for b in pdf["sketch"])
+    if getattr(impl, "order_invariant", False) or pdf.empty:
+        return functools.reduce(impl.merge, states, impl.empty()), rows_seen
+    return functools.reduce(impl.merge, states), rows_seen
 
 
-def _global_merge(partials: DataFrame, impl, source: DataFrame, *,
+def _global_merge(partials: DataFrame, impl, partitions: int, *,
                   fanin: int) -> tuple[object, int]:
-    """(state, rows_seen) of a global build's partials. Order-invariant
-    impls take the driver fold while :func:`~fastbloom_spark.plans.planner
-    .plan_global_merge` says the partials of ``source``'s partitions
-    (:func:`_partial_count`) fit the driver budget; above it, and always
-    for rank sketches, the two-phase merge tree."""
-    if getattr(impl, "order_invariant", False) and planner.plan_global_merge(
-            _partial_count(source, impl), _state_bytes(impl)) == \
-            "driver_collect":
+    """(state, rows_seen) of a global build whose partials come from
+    ``partitions`` partitions. The partials are folded on the driver
+    (:func:`_collect_fold`) while
+    :func:`~fastbloom_spark.plans.planner.plan_global_merge` says they fit
+    the driver budget and the merge tree would be one fold anyway: at most
+    ``fanin`` partitions (phase 1 only re-encodes one state per bucket and
+    phase 2 is a single sequential fold, in shuffle-arrival order), or any
+    count for an exact-merge impl. Otherwise, rank sketches above
+    ``fanin`` partitions and every impl above the budget, the two-phase
+    merge tree (:func:`sketch_merge`)."""
+    one_fold = partitions <= fanin or getattr(impl, "order_invariant", False)
+    if one_fold and planner.plan_global_merge(
+            partitions, _state_bytes(impl)) == "driver_collect":
         return _collect_fold(partials, impl)
     rows = sketch_merge(partials, impl, fanin=fanin).collect()
     if not rows:
@@ -492,16 +523,20 @@ def sketch_build(
 ):
     """Global build → (local sketch state, rows_seen) on the driver.
 
-    Order-invariant sketches (HLL/CMS/theta) fold their per-partition
-    partials on the driver while :func:`~fastbloom_spark.plans.planner.
-    plan_global_merge` says their total fits the driver budget — same bits
-    by merge commutativity, two shuffle stages and two Python round trips
-    fewer; above it they take the two-phase merge tree. Rank sketches
-    (t-digest/KLL) always keep the tree so their merge order — and
-    therefore their driver-hash-checked output — is unchanged."""
+    One Spark job while :func:`_global_merge` folds on the driver: the
+    partials of every partition are Arrow-collected and merged in
+    ``partition_id`` order. That covers every sketch over at most
+    ``fanin`` partitions and the order-invariant ones (HLL/CMS/theta:
+    same bits by merge commutativity) at any count, both within
+    :func:`~fastbloom_spark.plans.planner.plan_global_merge`'s driver
+    budget. Rank sketches (t-digest/KLL) over more partitions, and every
+    sketch above the budget, take the two-phase merge tree.
+
+    The input's partition count is asked once, of ``df`` itself: it
+    decides the widening of narrow inputs for order-invariant sketches
+    and the merge above."""
+    partitions = df.rdd.getNumPartitions()
     prepared = _prepare(df, value_col, impl, [], digest_precomputed,
-                        widen=getattr(impl, "order_invariant", False))
-    # counted on the input: the widened frame is never planned here, since
-    # under AQE its .rdd would already run the widening shuffle
-    return _global_merge(_partials(prepared, impl, []), impl, df,
-                         fanin=fanin)
+                        partitions=partitions)
+    return _global_merge(_partials(prepared, impl, []), impl,
+                         _partial_count(df, impl, partitions), fanin=fanin)

@@ -9,16 +9,21 @@ more decisions join it, both driven by the same arithmetic:
   (< ~50k rows) are all fixed cost; huge partial states (> budget) are all
   transport.
 * **merge topology**: below ~1 GiB of raw partial state, a single Arrow
-  collect + driver fold is the fastest merge (zero shuffle). Above it the
-  states must not converge on one node: sketches take the distributed
-  two-phase merge tree, and a Bloom build the range-sharded merge, which
-  keeps every node's footprint at m/8 / shards and the driver's at
-  exactly m/8.
+  collect + driver fold is the fastest merge (zero shuffle, one Spark
+  job). Above it the states must not converge on one node: sketches take
+  the distributed two-phase merge tree, and a Bloom build the
+  range-sharded merge, which keeps every node's footprint at m/8 / shards
+  and the driver's at exactly m/8.
 
-``plan_global_merge`` makes the merge choice for every global build
-(``sketch_build`` and ``bloom_build``); ``plan_bloom_build`` adds Bloom's
-parallelism and scan choices. ``plan_survivor_read`` decides where an
-index lookup reads the units its filters keep: on the driver (no Spark
+``plan_global_merge`` makes the budget choice for every global build
+(``sketch_build`` and ``bloom_build``). Within it, exact-merge sketches
+fold on the driver at any partition count, and t-digest/KLL do over at
+most ``fanin`` partitions, where the tree would be one sequential fold
+anyway; the driver folds in partition order, so their states do not
+depend on shuffle order. Rank sketches over more partitions keep the
+tree (``operators/sketch_agg._global_merge``). ``plan_bloom_build`` adds
+Bloom's parallelism and scan choices. ``plan_survivor_read`` decides where
+an index lookup reads the units its filters keep: on the driver (no Spark
 job) while they are small and local, else as a distributed scan. The
 operator layer and any caller reasoning about a job (tests, bench,
 capacity planning) agree through them.

@@ -168,7 +168,7 @@ def _resume_partials(spark: SparkSession, checkpoint_path: str,
 
     impl = BloomSketch(cfg)
     prepared = _prepare(df, value_col, impl, keys, digest_precomputed)
-    n_parts = prepared.rdd.getNumPartitions()
+    n_parts = df.rdd.getNumPartitions()
     if done_ids and not _layout_matches(ckpt, done_ids, n_parts):
         done_ids = set()  # input layout changed: full rebuild
 
@@ -274,7 +274,8 @@ def resume_bloom_build(
         spark, checkpoint_path, df, [], value_col, cfg, digest_precomputed,
         "resume_bloom_build")
     all_partials = new_partials.unionByName(ckpt_used.select(*_PARTIAL_COLS))
-    words, rows_seen = _global_merge(all_partials, BloomSketch(cfg), df,
+    words, rows_seen = _global_merge(all_partials, BloomSketch(cfg),
+                                     metrics["partitions_total"],
                                      fanin=fanin)
     # the tree's result is a read-only view over the collected payload
     return (BloomFilter(cfg, np.require(words, requirements="W"),

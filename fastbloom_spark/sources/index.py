@@ -976,10 +976,11 @@ def _pushable(atype, values: Sequence) -> bool:
 def _driver_table(spark: SparkSession, schema, files: list[str],
                   row_groups: list[tuple[str, int]] | None, col: str,
                   values: Sequence | None):
-    """The survivors as one Arrow table in ``schema``'s columns: whole
-    files, or single granules when ``row_groups`` is given, read with
-    :func:`_read_unit` on this thread. ``values`` (exact reads) filters
-    the rows as ``col IN values`` when :func:`_pushable`.
+    """``(table, filtered)``: the survivors as one Arrow table in
+    ``schema``'s columns (whole files, or single granules when
+    ``row_groups`` is given, read with :func:`_read_unit` on this
+    thread), and whether ``values`` (exact reads) already filtered its
+    rows as ``col IN values``, which happens when :func:`_pushable`.
 
     Plain ``ParquetFile`` reads, not ``pyarrow.dataset``: the dataset
     module and its scanner add ~6 MB to the driver's peak RSS (measured
@@ -991,15 +992,15 @@ def _driver_table(spark: SparkSession, schema, files: list[str],
 
     arrow_schema = to_arrow_schema(schema)
     if not files:
-        return arrow_schema.empty_table()
+        return arrow_schema.empty_table(), False
     part_fields = _partition_fields(spark, schema, files[0])
     tbl = pa.concat_tables(
         _read_unit(f, rg, part_fields, arrow_schema)
         for f, rg in (row_groups or [(f, None) for f in files]))
     if values is not None and _pushable(arrow_schema.field(col).type,
                                         values):
-        tbl = tbl.filter(pc.field(col).isin(values))
-    return tbl
+        return tbl.filter(pc.field(col).isin(values)), True
+    return tbl, False
 
 
 def _read_survivors(spark: SparkSession, schema, files: Sequence[str],
@@ -1017,21 +1018,23 @@ def _read_survivors(spark: SparkSession, schema, files: Sequence[str],
     the survivors with pyarrow at call time and wraps them with
     ``createDataFrame`` — a ``LocalTableScan`` that runs no Spark job and
     has no ``input_file_name()``. ``"spark"`` returns ``spark_read()``,
-    the lazy distributed scan. Both return ``schema``, and Spark's IN
-    decides the rows on both, so casts and NULLs behave alike. Returns
-    ``df`` and ``stats`` with the path it took as ``read``."""
+    the lazy distributed scan. Both return ``schema``. Spark's IN
+    decides the rows unless the driver read already kept exactly them
+    (pyarrow's ``isin`` under :func:`_pushable`: same types, no NULL), so
+    casts and NULLs behave alike on both paths. Returns ``df`` and
+    ``stats`` with the path it took as ``read``."""
     files = [_norm_file(f) for f in files]
     path = planner.plan_survivor_read(_local_sizes(files))
+    filtered = False
     if path == "driver":
+        tbl, filtered = _driver_table(spark, schema, files, row_groups, col,
+                                      values if exact else None)
         # one chunk: createDataFrame drops rows of a table whose chunks
         # include empty ones (a filtered multi-file read yields them)
-        df = spark.createDataFrame(
-            _driver_table(spark, schema, files, row_groups, col,
-                          values if exact else None).combine_chunks(),
-            schema)
+        df = spark.createDataFrame(tbl.combine_chunks(), schema)
     else:
         df = spark_read()
-    if exact:
+    if exact and not filtered:
         df = df.filter(F.col(col).isin(list(values)))
     return df, dataclasses.replace(stats, read=path)
 

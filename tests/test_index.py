@@ -1306,6 +1306,33 @@ def test_driver_read_int_probes(spark, seeded_table):
     assert sorted(r[0] for r in rows) == [5, 17]
 
 
+def test_driver_read_plans_spark_in_only_where_pyarrow_did_not_filter(
+        spark, seeded_table):
+    """A driver lookup whose probes pyarrow matched exactly (same types,
+    no NULL) plans no Spark Filter over its LocalTableScan; an int probe
+    on a string column, which pyarrow cannot match, still plans Spark's
+    IN. Both return the distributed read's rows. (The analyzed plan:
+    the optimizer folds a Filter over a LocalRelation into the relation.)
+    """
+    from fastbloom_spark.sources import IndexHandle
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    path, keys = seeded_table
+    handle = IndexHandle(spark, path)
+    for probes, on, filtered in (([keys[0]], "key", False),
+                                 ([5, 17], "n", False),
+                                 ([7], "code", True)):
+        got, want = _driver_and_spark(
+            lambda: handle.pruned_read(probes, on=on))
+        assert _assert_same_read(got, want), (probes, on)
+        plan = analyzed(got[0])
+        assert plan.startswith("Filter" if filtered else "LocalRelation"), \
+            plan
+        assert ("Filter" in plan) == filtered, plan
+
+
 def test_driver_read_files_and_row_groups_equal_spark(spark, docs,
                                                       tmp_path):
     """pruned_read_files and pruned_read_row_groups (module and handle)

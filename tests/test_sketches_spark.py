@@ -18,6 +18,7 @@ from fastbloom_spark.sketch import (
     HllSketch,
     KllSketch,
     TDigestSketch,
+    ThetaSketch,
 )
 
 
@@ -327,3 +328,183 @@ def test_global_build_above_driver_budget_takes_merge_tree(spark, events,
         assert trees, "above-budget build still folded on the driver"
         assert n_tree == n_folded
         assert impl.serialize(tree) == impl.serialize(folded)
+
+
+# -- one Spark job per global build ----------------------------------------
+
+def _bloom_build(df, col, _impl):
+    from fastbloom_spark import BloomConfig
+    from fastbloom_spark.operators import bloom_build
+
+    cfg = BloomConfig.from_false_pos(0.01, expected_items=4000, seed=3)
+    bf = bloom_build(df, col, cfg)
+    return bf.to_bytes(), bf.rows_seen
+
+
+GLOBAL_BUILDS = [
+    ("hll", lambda: HllSketch(precision=10, seed=7), "v"),
+    ("cms", lambda: CountMinSketch(depth=4, log2_width=8, seed=7), "v"),
+    ("theta", lambda: ThetaSketch(k=256, seed=7), "v"),
+    ("tdigest", lambda: TDigestSketch(delta=100), "x"),
+    ("kll", lambda: KllSketch(k=64, seed=7), "x"),
+    ("bloom", lambda: None, "v"),
+]
+
+
+def _narrow_input(spark, n: int, partitions: int):
+    """``n`` rows in ``partitions`` partitions and no shuffle: string
+    ``v`` and double ``x``, each NULL on a few rows, checkpointed so that
+    they are plain columns to the optimizer."""
+    return spark.range(0, n, 1, partitions).select(
+        F.when(F.col("id") % 37 == 0, F.lit(None))
+        .otherwise(F.concat(F.lit("v"), (F.col("id") * 7919 % 10007)
+                            .cast("string"))).alias("v"),
+        F.when(F.col("id") % 41 == 0, F.lit(None))
+        .otherwise(((F.col("id") * 13) % 4001).cast("double")).alias("x")) \
+        .localCheckpoint()
+
+
+def _jobs_and_plans(spark, monkeypatch, group: str, fn):
+    """``fn()``, the Spark jobs it ran (job group ``group``) and the
+    executed plans of the frames it collected."""
+    frame = type(spark.range(1))  # the classic DataFrame implementation
+    plans = []
+    for name in ("toPandas", "collect"):
+        def recording(self, *a, _real=getattr(frame, name), **kw):
+            out = _real(self, *a, **kw)
+            plans.append(self._jdf.queryExecution().executedPlan()
+                         .toString())
+            return out
+        monkeypatch.setattr(frame, name, recording)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count global build jobs", False)
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.undo()
+    return out, jobs, plans
+
+
+@pytest.mark.parametrize("name,make,col", GLOBAL_BUILDS,
+                         ids=[b[0] for b in GLOBAL_BUILDS])
+def test_global_build_runs_one_job(spark, monkeypatch, name, make, col):
+    """Under the driver budget at P <= fanin every global build is one
+    Spark job: the partials' Arrow collect, folded on the driver. No
+    merge tree (FlatMapGroupsInPandas) is planned, rank sketches
+    included."""
+    slots = spark.sparkContext.defaultParallelism
+    df = _narrow_input(spark, 4000, slots)  # not widened: P = slots
+    impl = make()
+    build = _bloom_build if impl is None else sketch_build
+    df.rdd.getNumPartitions()  # the caller's frame, as on repeat calls
+    (_, seen), jobs, plans = _jobs_and_plans(
+        spark, monkeypatch, f"one_job_{name}",
+        lambda: build(df, col, impl))
+    assert seen == df.filter(F.col(col).isNotNull()).count()
+    assert len(jobs) == 1, (name, jobs)
+    assert plans and not any("FlatMapGroupsInPandas" in p for p in plans), \
+        plans
+
+
+@pytest.mark.parametrize("make", [lambda: TDigestSketch(delta=100),
+                                  lambda: KllSketch(k=64, seed=7)],
+                         ids=["tdigest", "kll"])
+def test_rank_sketch_build_folds_in_partition_order(spark, make):
+    """A t-digest/KLL global build equals ``reduce(merge)`` over its
+    per-partition partial states in ``partition_id`` order, bitwise, and
+    does not move with ``spark.sql.shuffle.partitions``."""
+    import functools
+
+    from fastbloom_spark.kernel import decode_state
+
+    impl = make()
+    df = _narrow_input(spark, 6000, 5)
+    parts = sketch_partials(df, "x", impl).toPandas() \
+        .sort_values("partition_id")
+    assert list(parts["partition_id"]) == list(range(5))
+    want = impl.serialize(functools.reduce(impl.merge, (
+        impl.deserialize(decode_state(b)) for b in parts["sketch"])))
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for n_shuffle in (3, 11):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
+            state, seen = sketch_build(df, "x", impl)
+            assert seen == int(parts["rows_seen"].sum())
+            got.append(impl.serialize(state))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
+    assert got == [want, want]
+
+
+@pytest.mark.parametrize("force", ["over_fanin", "over_budget"])
+def test_rank_sketch_build_keeps_tree_past_one_fold(spark, monkeypatch,
+                                                    force):
+    """Above ``fanin`` partitions, or above the driver budget, t-digest
+    and KLL builds take the two-phase merge tree, and their quantiles
+    stay within their rank bounds."""
+    import importlib
+
+    from fastbloom_spark.plans import planner
+
+    mod = importlib.import_module("fastbloom_spark.operators.sketch_agg")
+    n = 8000
+    df = spark.range(0, n, 1, 4).select(F.col("id").cast("double")
+                                        .alias("x"))
+    fanin = 2 if force == "over_fanin" else 16
+    if force == "over_budget":
+        monkeypatch.setattr(planner, "DRIVER_MERGE_BUDGET", 1)
+    trees = []
+    real_merge = mod.sketch_merge
+    monkeypatch.setattr(mod, "sketch_merge", lambda *a, **kw: trees.append(
+        kw["fanin"]) or real_merge(*a, **kw))
+    for impl in (TDigestSketch(delta=200), KllSketch(k=200, seed=3)):
+        state, seen = sketch_build(df, "x", impl, fanin=fanin)
+        assert seen == n
+        for q in (0.1, 0.5, 0.9):
+            rank = impl.quantile(state, q) / n
+            assert abs(rank - q) < 0.03, (impl.name, force, q, rank)
+    assert trees == [fanin, fanin]
+
+
+# -- the _prepare funnel -----------------------------------------------------
+
+@pytest.mark.parametrize("kind,keyed,widened", [
+    ("digest", False, False), ("digest", True, False),
+    ("digest", False, True), ("digest", True, True),
+    ("double", False, False), ("double", True, False)])
+def test_prepare_filters_raw_column_below_one_digest(spark, kind, keyed,
+                                                     widened):
+    """In the optimized plan of :func:`_prepare` the ``isnotnull`` filter
+    sits on the raw column below the value projection, ``sha2`` is
+    evaluated exactly once, and a widened input repartitions between the
+    two, so the digest runs on the wide side."""
+    from fastbloom_spark.operators.sketch_agg import _prepare
+
+    slots = spark.sparkContext.defaultParallelism
+    partitions = 1 if widened else slots
+    df = _narrow_input(spark, 1000, partitions).withColumn(
+        "g", F.col("x") % 3)
+    impl = (HllSketch(precision=10, seed=7) if kind == "digest"
+            else TDigestSketch(delta=100))
+    col = "v" if kind == "digest" else "x"
+    keys = ["g"] if keyed else []
+    prepared = _prepare(df, col, impl, keys, False, partitions=partitions)
+    assert prepared.columns == [*keys, "__value"]
+    lines = prepared._jdf.queryExecution().optimizedPlan().toString() \
+        .splitlines()
+    plan = "\n".join(lines)
+    value = [i for i, l in enumerate(lines) if "AS __value" in l]
+    guard = [i for i, l in enumerate(lines)
+             if f"isnotnull({col}#" in l and "Filter" in l]
+    assert len(value) == 1 and len(guard) == 1 and value[0] < guard[0], plan
+    assert plan.count("sha2(") == (1 if kind == "digest" else 0), plan
+    wide = [i for i, l in enumerate(lines) if "Repartition" in l]
+    if widened:
+        assert len(wide) == 1 and value[0] < wide[0] < guard[0], plan
+        assert "sha2(" not in "\n".join(lines[wide[0]:]), plan
+    else:
+        assert not wide, plan
