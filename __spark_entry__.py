@@ -1131,10 +1131,7 @@ def q_bloom_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from fastbloom_spark import BloomConfig
-    from fastbloom_spark.sources import prune_index, pruned_read, \
-        write_indexed_table
-    from fastbloom_spark.sources.index import (BUCKET_COL, probe_digests,
-                                               read_table_index)
+    from fastbloom_spark.sources import IndexHandle, write_indexed_table
 
     docs = _read(spark, sf_dir, "documents")
     cfg = BloomConfig.from_false_pos(0.02, expected_items=128, seed=42)
@@ -1147,16 +1144,14 @@ def q_bloom_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = [(f"doc:{r.doc_id}", 1, r.text) for r in members] \
         + [(f"absent:{i}", 0, f"absent:{i}") for i in range(5)]
 
-    index_pdf = read_table_index(spark, path)
-    rows = [(pid, mem,
-             prune_index(index_pdf, probe_digests([val]),
-                         key_field=BUCKET_COL).units_survived, val)
+    handle = IndexHandle(spark, path)
+    rows = [(pid, mem, handle.prune([val]).units_survived, val)
             for pid, mem, val in probes]
     probe_df = spark.createDataFrame(
         rows, "probe_id string, is_member int, buckets_survived long, "
               "val string")
 
-    pruned, _stats = pruned_read(spark, path, [p[2] for p in probes])
+    pruned, _stats = handle.pruned_read([p[2] for p in probes])
     counts = pruned.groupBy("text").agg(F.count("*").alias("n"))
     return probe_df.join(counts, probe_df.val == counts.text, "left") \
         .select("probe_id", "is_member", "buckets_survived",
@@ -1182,8 +1177,8 @@ def q_rowgroup_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     from fastbloom_spark import BloomConfig
-    from fastbloom_spark.sources import (index_parquet_row_groups,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import (IndexHandle,
+                                         index_parquet_row_groups)
 
     docs_pdf = _read(spark, sf_dir, "documents") \
         .select("doc_id", "text").orderBy("doc_id").toPandas()
@@ -1201,9 +1196,10 @@ def q_rowgroup_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = [(f"doc:{i}", by_id[i]) for i in member_ids] \
         + [("absent:0", "absent-rgprobe-0")]
     rgs_total = -(-len(docs_pdf) // 100)
+    handle = IndexHandle(spark, idx, data=data)
     out = []
     for pid, val in probes:
-        got, stats = pruned_read_row_groups(spark, data, idx, [val])
+        got, stats = handle.pruned_read([val])
         out.append((pid, int(got.count()), rgs_total,
                     bool(stats.units_survived < stats.units_total)))
     return spark.createDataFrame(
@@ -1294,9 +1290,10 @@ def q_index_append_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fastbloom_spark import BloomConfig
     from fastbloom_spark.kernel import decode_words
-    from fastbloom_spark.sources import (append_to_indexed_table,
-                                         pruned_read, write_indexed_table)
-    from fastbloom_spark.sources.index import BUCKET_COL, read_table_index
+    from fastbloom_spark.sources import (IndexHandle,
+                                         append_to_indexed_table,
+                                         write_indexed_table)
+    from fastbloom_spark.sources.index import BUCKET_COL
 
     docs = _read(spark, sf_dir, "documents")
     cfg = BloomConfig.from_false_pos(0.02, expected_items=128, seed=42)
@@ -1310,19 +1307,19 @@ def q_index_append_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_indexed_table(docs, full, index_col="text", cfg=cfg,
                         bucket_source="doc_id", num_buckets=8)
 
-    def words_of(p):
-        pdf = read_table_index(spark, p)
+    def words_of(pdf):
         return {int(r[BUCKET_COL]): decode_words(bytes(r["sketch"])).tolist()
                 for _, r in pdf.iterrows()}
 
+    handle = IndexHandle(spark, inc)
     probe = rest.orderBy("doc_id").first().text
-    pruned, stats = pruned_read(spark, inc, [probe])
+    pruned, stats = handle.pruned_read([probe])
+    inc_pdf = handle.index_pdf
     return spark.createDataFrame(pd.DataFrame([{
         "buckets": 8,
-        "rows_total": int(sum(
-            r["rows_seen"] for _, r in
-            read_table_index(spark, inc).iterrows())),
-        "bitwise_equal_full_rebuild": words_of(inc) == words_of(full),
+        "rows_total": int(inc_pdf["rows_seen"].sum()),
+        "bitwise_equal_full_rebuild": words_of(inc_pdf) == words_of(
+            IndexHandle(spark, full).index_pdf),
         "appended_probe_matches": int(pruned.count()),
     }]))
 

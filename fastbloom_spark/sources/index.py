@@ -9,7 +9,9 @@ filters implement at the format layer, built here from the engine's own
 mergeable sketch rows so it works over any column expression and any
 digest strategy. The three granularities nest: buckets prune at directory
 listing, files at the read-path list, row groups at the granule decode
-(index_parquet_row_groups / pruned_read_row_groups).
+(index_parquet_row_groups, or write_indexed_table's rgbloom sidecar).
+Every index, over an indexed table or standalone over existing parquet,
+opens one way: :class:`IndexHandle`.
 
 Why this is the 100 TB shape:
 
@@ -63,6 +65,12 @@ from ..plans import planner
 BUCKET_COL = "bucket_id"
 #: grouping column used by the per-file index
 FILE_COL = "file_path"
+#: row-group index columns
+RG_COL = "row_group"
+#: an index's granularity, from the key columns of its sidecar rows (the
+#: first match: row-group sidecars also carry FILE_COL; see _UnitFilters)
+_UNIT_KEYS = {(FILE_COL, RG_COL): "row_group", (FILE_COL,): "file",
+              (BUCKET_COL,): "partition"}
 #: versioned index layout: {path}/index_versions/v<N>/{bloom,zones/<col>}
 #: with a _COMMITTED marker written LAST — readers resolve the highest
 #: committed version, so an index rewrite never mutates what a concurrent
@@ -164,16 +172,6 @@ def _read_index_meta(index_pdf: pd.DataFrame) -> _IndexMeta:
         cfg=sketch_row_config(meta))
 
 
-def _read_meta_pdf(spark: SparkSession, bloom_dir: str) -> pd.DataFrame:
-    """Index rows WITHOUT the sketch payloads — meta consumers (range
-    reads, compaction) need row-0 scalars + index_col values only, not
-    KBs-to-MBs of filter blobs collected per call."""
-    pdf = spark.read.parquet(bloom_dir).drop("sketch").toPandas()
-    if not len(pdf):
-        raise ValueError(f"empty bloom index at {bloom_dir}")
-    return pdf
-
-
 def _hadoop_fs(spark: SparkSession, p: str):
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(p)
@@ -250,9 +248,11 @@ def committed_commit_tokens(spark: SparkSession, path: str) -> dict[int, str]:
 def _committed_root(spark: SparkSession,
                     path: str) -> tuple[str, str] | None:
     """(bloom_dir, zones_dir) of the CURRENT index: the highest COMMITTED
-    version, else the legacy in-place layout; None when there is neither
-    (uncommitted version dirs are invisible). Listing errors propagate:
-    an unlistable index is not a missing one."""
+    version, else a legacy in-place layout — a table's ``{path}/index``,
+    or a standalone index's parquet written directly at ``path`` (then
+    ``bloom_dir == path``); None when there is none of these (uncommitted
+    version dirs are invisible). Listing errors propagate: an unlistable
+    index is not a missing one."""
     versions = _list_versions(spark, path)
     committed = [v for v, ok in versions if ok]
     if committed:
@@ -261,6 +261,11 @@ def _committed_root(spark: SparkSession,
     fs, legacy = _hadoop_fs(spark, f"{path}/index")
     if fs.exists(legacy):
         return f"{path}/index", f"{path}/zones"
+    fs, root = _hadoop_fs(spark, path)
+    if fs.exists(root) and any(
+            st.isFile() and st.getPath().getName().endswith(".parquet")
+            for st in fs.listStatus(root)):
+        return path, f"{path}/zones"
     return None
 
 
@@ -372,15 +377,19 @@ def _in_flight(spark: SparkSession, path: str, v: int) -> bool | None:
     return int(time.time() * 1000) - mtime <= STALE_UNCOMMITTED_TTL_MS
 
 
-def _data_rel_files(spark: SparkSession, path: str) -> list[str]:
-    """Sorted data-relative paths of every live file under {path}/data."""
-    files = spark.read.parquet(f"{path}/data").inputFiles()
-    return sorted(f.split("/data/", 1)[1] if "/data/" in f else f
-                  for f in files)
+def _data_rel_files(spark: SparkSession, data: str) -> dict[str, str]:
+    """``{name: listed URI}`` of every live file under the data root
+    ``data``, sorted by name. A name (what ``_FILES`` records) is the URI
+    after its FIRST ``/data/``, or the whole URI: committed manifests
+    hold that rule, so a root under a ``/data/`` dir keeps it too — act
+    on a file through its URI, never a path rebuilt from its name."""
+    files = spark.read.parquet(data).inputFiles()
+    return dict(sorted((f.split("/data/", 1)[1] if "/data/" in f else f, f)
+                       for f in files))
 
 
 def _fingerprint_of(rel: list[str]) -> tuple[int, str]:
-    """(file_count, sha256) of {path}/data's sorted relative paths — a
+    """(file_count, sha256) of the data root's sorted file names — a
     LISTING-only staleness witness: pruned reads compare it against the
     value the index recorded at publish time and refuse to prune when they
     differ (e.g. a crash between a data append and its index publish, or
@@ -392,20 +401,24 @@ def _fingerprint_of(rel: list[str]) -> tuple[int, str]:
 
 
 def _check_index_fresh(index_pdf: pd.DataFrame, spark: SparkSession,
-                       path: str) -> None:
+                       data: str) -> None:
+    """The one freshness rule: the data root's live fingerprint equals
+    the one the index recorded at publish (pre-fingerprint legacy
+    indexes carry none)."""
     if "data_files_sha" not in index_pdf.columns:
-        return  # pre-fingerprint index (legacy layout)
-    n, sha = _fingerprint_of(_data_rel_files(spark, path))
+        return
+    n, sha = _fingerprint_of(list(_data_rel_files(spark, data)))
     want_n = int(index_pdf["data_file_count"].iloc[0])
     want_sha = str(index_pdf["data_files_sha"].iloc[0])
     if (n, sha) != (want_n, want_sha):
         raise ValueError(
-            f"bloom index at {path} is STALE: it was built over "
+            f"bloom index over {data} is STALE: it was built over "
             f"{want_n} data files but the table now has {n} — a crashed "
             "append (data written, index publish lost) or a concurrent "
             "writer. Pruning would silently skip rows the filters never "
-            "saw; re-run append_to_indexed_table's index rebuild or "
-            f"compact_indexed_table, or read {path}/data directly.")
+            "saw; rebuild the index (compact_indexed_table for an indexed "
+            "table, index_parquet_files/index_parquet_row_groups for a "
+            f"standalone index), or read {data} directly.")
 
 
 def _unit_sketches(df: DataFrame, cols: Sequence[str], cfg: BloomConfig,
@@ -570,7 +583,7 @@ def _rebuild_index(spark: SparkSession, path: str, meta: _IndexMeta,
     append) would otherwise produce an index missing rows that ARE in the
     data files, silently breaking the zero-FN pruning contract."""
     written = spark.read.parquet(f"{path}/data")
-    rel_files = _data_rel_files(spark, path)
+    rel_files = list(_data_rel_files(spark, f"{path}/data"))
     n_files, files_sha = _fingerprint_of(rel_files)
     index_rows = _build_index_rows(written, meta.cols, meta.cfg,
                                    meta.num_buckets, meta.bucket_source) \
@@ -629,23 +642,90 @@ def index_parquet_files(
     sketch per physical file per indexed column, keyed by
     ``input_file_name()`` — pass a list to index several columns in the
     same single scan (the one-pass digest stack write_indexed_table
-    uses); probe with ``pruned_read_files(..., on=<column>)``. Strategy
-    is pinned to ``"partial"`` because a task only ever reads a handful
-    of files, so the per-(file, partition) partial count collapses to
-    ~one sketch per file with zero row shuffle — the auto cost model's
+    uses); probe with ``IndexHandle(spark, index_path,
+    data=data_path).pruned_read(..., on=<column>)``. Strategy is pinned
+    to ``"partial"`` because a task only ever reads a handful of files,
+    so the per-(file, partition) partial count collapses to ~one sketch
+    per file with zero row shuffle — the auto cost model's
     ``min(keys, P) * P`` worst case cannot happen for this key.
+    Published like every index (:func:`_publish_standalone`).
     """
+    _publish_standalone(
+        spark, data_path, index_path, index_col, cfg, mode,
+        lambda cols: _unit_sketches(
+            spark.read.parquet(data_path).withColumn(
+                FILE_COL, F.input_file_name()), cols, cfg, [FILE_COL],
+            strategy="partial"))
+
+
+def index_parquet_row_groups(
+    spark: SparkSession,
+    data_path: str,
+    index_path: str,
+    *,
+    index_col: str | Sequence[str],
+    cfg: BloomConfig,
+    mode: str = "overwrite",
+) -> None:
+    """Row-group-granularity skip index over an EXISTING parquet table —
+    one Bloom sketch per (file, row group, indexed column), the
+    ClickHouse-granule / native-parquet-bloom analogue one level below
+    :func:`index_parquet_files`; pass a column list to index several in
+    the same scan.
+
+    Build is one data scan, all JVM/Arrow-side: row groups are recovered
+    by joining the scan's ``_metadata.row_index`` against a broadcast of
+    per-file row-group boundaries (a distributed FOOTER-only pyarrow pass
+    — data pages are read exactly once, by the digest scan itself), then
+    one ``bloom_agg`` keyed by (file, row group). Index size is
+    ``row_groups * m/8`` bytes, governed by granule count and FPR, not
+    table size.
+
+    Hive-partitioned layouts (including write_indexed_table's
+    ``bucket_id=N`` dirs) work: the build scan reads partition values
+    from directory names as usual, and the probe-side granule reader
+    reconstructs them from file paths. The indexed column itself must be
+    a physical (non-partition) column. Probe with ``IndexHandle(spark,
+    index_path, data=data_path).pruned_read``.
+    """
+    _publish_standalone(
+        spark, data_path, index_path, index_col, cfg, mode,
+        lambda cols: _build_rg_index_rows(spark, data_path, cols, cfg))
+
+
+def _publish_standalone(spark: SparkSession, data_path: str,
+                        index_path: str, index_col: str | Sequence[str],
+                        cfg: BloomConfig, mode: str,
+                        build: Callable[[list[str]], DataFrame],
+                        ) -> None:
+    """Publish ``build(cols)``'s sketch rows over ``data_path``
+    as a new version under ``index_path`` with the fingerprint columns
+    and ``_FILES`` manifest an indexed table's index carries, so
+    :class:`IndexHandle` checks a standalone index with the same
+    freshness rule — complete at file and row-group granularity too,
+    since parquet files are immutable (appends create files, never new
+    row groups inside existing ones). ``mode="overwrite"`` first clears a
+    legacy in-place index at ``index_path``; any other accepted mode
+    refuses an existing ``index_path``."""
     cols = _index_build_cols(index_col, cfg, mode)
-    index = _unit_sketches(
-        spark.read.parquet(data_path).withColumn(FILE_COL,
-                                                 F.input_file_name()),
-        cols, cfg, [FILE_COL], strategy="partial")
-    _meta_cols(index, num_buckets=0, bucket_source=FILE_COL) \
-        .write.mode(mode).parquet(index_path)
-
-
-#: row-group index columns
-RG_COL = "row_group"
+    fs, hpath = _hadoop_fs(spark, index_path)
+    if mode != "overwrite" and fs.exists(hpath):
+        raise ValueError(f"index path {index_path} already exists "
+                         f"(mode={mode!r}); pass mode='overwrite'")
+    if (_committed_root(spark, index_path) or (None,))[0] == index_path:
+        _delete_dir(spark, index_path)  # a legacy in-place index
+    # list BEFORE the build's scan lists: a file landing in between is
+    # then indexed but unrecorded (STALE at read), never recorded but
+    # unindexed (silently pruned away)
+    rel_files = list(_data_rel_files(spark, data_path))
+    n_files, files_sha = _fingerprint_of(rel_files)
+    rows = _meta_cols(build(cols), num_buckets=0, bucket_source=FILE_COL) \
+        .withColumn("data_file_count", F.lit(n_files).cast("long")) \
+        .withColumn("data_files_sha", F.lit(files_sha))
+    _publish_index_version(
+        spark, index_path,
+        lambda vdir: rows.write.mode("overwrite").parquet(f"{vdir}/bloom"),
+        data_files=rel_files)
 
 
 def _norm_file(f: str) -> str:
@@ -729,10 +809,13 @@ def _build_rg_index_rows(spark: SparkSession, data_path: str,
 
 
 def _check_file_set(index_files, current_files, what: str) -> None:
-    """Staleness witness for standalone file/row-group indexes: the
-    sidecar lists exactly the files it covers, so a listing-only compare
-    catches appends the index never saw (silent false negatives
-    otherwise) and indexed files that vanished."""
+    """Staleness witness for LEGACY in-place standalone file/row-group
+    indexes, which carry no fingerprint: the sidecar lists the files it
+    covers, so a listing-only compare catches appends the index never saw
+    (silent false negatives otherwise) and indexed files that vanished.
+    A file with no sketch row (zero rows, or only NULLs in the indexed
+    column) reads as unseen here: rebuild such an index to publish it
+    with a manifest."""
     idx = {_norm_file(str(f)) for f in index_files}
     cur = {_norm_file(str(f)) for f in current_files}
     if idx != cur:
@@ -744,104 +827,6 @@ def _check_file_set(index_files, current_files, what: str) -> None:
             f"file(s) no longer present (e.g. {gone[:2]}) — pruning would "
             "silently lose rows; rebuild the index over the current "
             "files, or pass verify_files=False for forensics")
-
-
-def _rg_sidecar(spark: SparkSession, bloom_dir: str) -> str | None:
-    """The rgbloom sidecar dir of a resolved version, or None when it has
-    none (the legacy in-place layout never has one)."""
-    if not bloom_dir.endswith("/bloom"):
-        return None
-    rgdir = bloom_dir[:-len("/bloom")] + "/rgbloom"
-    fs, rgp = _hadoop_fs(spark, rgdir)
-    return rgdir if fs.exists(rgp) else None
-
-
-def index_parquet_row_groups(
-    spark: SparkSession,
-    data_path: str,
-    index_path: str,
-    *,
-    index_col: str | Sequence[str],
-    cfg: BloomConfig,
-    mode: str = "overwrite",
-) -> None:
-    """Row-group-granularity skip index over an EXISTING parquet table —
-    one Bloom sketch per (file, row group, indexed column), the
-    ClickHouse-granule / native-parquet-bloom analogue one level below
-    :func:`index_parquet_files`; pass a column list to index several in
-    the same scan.
-
-    Build is one data scan, all JVM/Arrow-side: row groups are recovered
-    by joining the scan's ``_metadata.row_index`` against a broadcast of
-    per-file row-group boundaries (a distributed FOOTER-only pyarrow pass
-    — data pages are read exactly once, by the digest scan itself), then
-    one ``bloom_agg`` keyed by (file, row group). Index size is
-    ``row_groups * m/8`` bytes, governed by granule count and FPR, not
-    table size.
-
-    Hive-partitioned layouts (including write_indexed_table's
-    ``bucket_id=N`` dirs) work: the build scan reads partition values
-    from directory names as usual, and the probe-side granule reader
-    reconstructs them from file paths. The indexed column itself must be
-    a physical (non-partition) column. Probe with
-    :func:`pruned_read_row_groups`.
-    """
-    cols = _index_build_cols(index_col, cfg, mode)
-    index = _build_rg_index_rows(spark, data_path, cols, cfg)
-    _meta_cols(index, num_buckets=0, bucket_source=FILE_COL) \
-        .write.mode(mode).parquet(index_path)
-
-
-def pruned_read_row_groups(
-    spark: SparkSession,
-    data_path: str,
-    index_path: str,
-    probe_values: Sequence,
-    *,
-    on: str | None = None,
-    exact: bool = True,
-    verify_files: bool = True,
-) -> tuple[DataFrame, PruneStats]:
-    """Point-lookup scan OPENING only surviving row groups.
-
-    Two-level prune, both driver-side numpy over the KB-scale index: a
-    file survives iff ANY of its row-group filters says maybe-contains
-    (no separate file index needed — the OR of a file's row groups IS its
-    file filter), then surviving (file, row group) pairs are read on the
-    driver while they fit the budget (:func:`_read_survivors`), else via a
-    distributed Arrow task per slice (``pyarrow read_row_group`` —
-    non-surviving row groups are never decoded, which Spark's own parquet
-    reader cannot be told to do from a row-index predicate). Zero FN: the
-    reference contains() contract per granule.
-
-    ``stats.survivors`` are ``"<file>#<row_group>"``; ``units_total`` is
-    the table's row-group count. Hive-partitioned tables (including
-    write_indexed_table's ``bucket_id=N`` layout) are supported: partition
-    columns live in directory names, not data pages, so the granule
-    reader reconstructs them from each surviving file's path."""
-    units = _load_units(spark, index_path, (FILE_COL, RG_COL), "row_group")
-    table = spark.read.parquet(data_path)
-    if verify_files:
-        # parquet files are immutable, so a file-set compare is a
-        # complete staleness witness at this granularity too (appends
-        # create files, never new row groups inside existing ones)
-        _check_file_set(units.pdf[FILE_COL].unique(), table.inputFiles(),
-                        "row-group")
-    return _read_row_groups(spark, table.schema, units, probe_values, on,
-                            exact)
-
-
-def _read_row_groups(spark: SparkSession, schema, units: "_UnitFilters",
-                     values: Sequence, on: str | None, exact: bool,
-                     ) -> tuple[DataFrame, PruneStats]:
-    """Probe a row-group sidecar and read its surviving (file, row group)
-    granules, in sidecar order (:func:`_read_survivors`)."""
-    icol, hits, stats = units.probe(values, on=on)
-    survivors = [(f, int(rg)) for f, rg in (h.rsplit("#", 1) for h in hits)]
-    return _read_survivors(
-        spark, schema, list(dict.fromkeys(f for f, _ in survivors)),
-        lambda: _read_row_group_slices(spark, schema, survivors), icol,
-        values, exact, stats, row_groups=survivors)
 
 
 def _partition_fields(spark: SparkSession, schema, first_file: str) -> list:
@@ -974,12 +959,12 @@ def _pushable(atype, values: Sequence) -> bool:
 
 
 def _driver_table(spark: SparkSession, schema, files: list[str],
-                  row_groups: list[tuple[str, int]] | None, col: str,
-                  values: Sequence | None):
+                  row_groups: list[tuple[str, int]] | None,
+                  isin: tuple[str, Sequence] | None):
     """``(table, filtered)``: the survivors as one Arrow table in
     ``schema``'s columns (whole files, or single granules when
     ``row_groups`` is given, read with :func:`_read_unit` on this
-    thread), and whether ``values`` (exact reads) already filtered its
+    thread), and whether ``isin = (col, values)`` already filtered its
     rows as ``col IN values``, which happens when :func:`_pushable`.
 
     Plain ``ParquetFile`` reads, not ``pyarrow.dataset``: the dataset
@@ -997,20 +982,23 @@ def _driver_table(spark: SparkSession, schema, files: list[str],
     tbl = pa.concat_tables(
         _read_unit(f, rg, part_fields, arrow_schema)
         for f, rg in (row_groups or [(f, None) for f in files]))
-    if values is not None and _pushable(arrow_schema.field(col).type,
-                                        values):
-        return tbl.filter(pc.field(col).isin(values)), True
+    if isin is not None and _pushable(arrow_schema.field(isin[0]).type,
+                                      isin[1]):
+        return tbl.filter(pc.field(isin[0]).isin(isin[1])), True
     return tbl, False
 
 
 def _read_survivors(spark: SparkSession, schema, files: Sequence[str],
-                    spark_read: Callable[[], DataFrame], col: str,
-                    values: Sequence, exact: bool, stats: PruneStats,
+                    spark_read: Callable[[], DataFrame], stats: PruneStats,
+                    pred: Callable[[], Column] | None, *,
+                    isin: tuple[str, Sequence] | None = None,
                     row_groups: list[tuple[str, int]] | None = None,
                     ) -> tuple[DataFrame, PruneStats]:
-    """The one read behind every index lookup: the surviving ``files``
-    (or their ``row_groups``) of an indexed table, then Spark's
-    ``col IN values`` when ``exact``.
+    """The one read behind every index lookup and range read: the
+    surviving ``files`` (or their ``row_groups``) of a table, then the
+    exact predicate ``pred()`` (an ``IN`` or ``BETWEEN`` Column, built
+    only when Spark must filter: each costs py4j round trips; None reads
+    every candidate row).
 
     :func:`~fastbloom_spark.plans.planner.plan_survivor_read` picks the
     path from the files' local sizes (:func:`_local_sizes`; a file the
@@ -1018,25 +1006,41 @@ def _read_survivors(spark: SparkSession, schema, files: Sequence[str],
     the survivors with pyarrow at call time and wraps them with
     ``createDataFrame`` — a ``LocalTableScan`` that runs no Spark job and
     has no ``input_file_name()``. ``"spark"`` returns ``spark_read()``,
-    the lazy distributed scan. Both return ``schema``. Spark's IN
-    decides the rows unless the driver read already kept exactly them
-    (pyarrow's ``isin`` under :func:`_pushable`: same types, no NULL), so
-    casts and NULLs behave alike on both paths. Returns ``df`` and
-    ``stats`` with the path it took as ``read``."""
+    the lazy distributed scan. Both return ``schema``. Spark's ``pred``
+    decides the rows unless the driver read already kept exactly them:
+    ``isin = (col, values)`` is ``pred``'s IN list, which pyarrow's
+    ``isin`` applies under :func:`_pushable` (same types, no NULL), so
+    casts and NULLs behave alike on both paths. Over a LocalTableScan
+    the optimizer folds ``pred`` into the relation, so a driver read
+    stays job-free. Returns ``df`` and ``stats`` with the path it took
+    as ``read``."""
     files = [_norm_file(f) for f in files]
     path = planner.plan_survivor_read(_local_sizes(files))
     filtered = False
     if path == "driver":
-        tbl, filtered = _driver_table(spark, schema, files, row_groups, col,
-                                      values if exact else None)
+        tbl, filtered = _driver_table(spark, schema, files, row_groups, isin)
         # one chunk: createDataFrame drops rows of a table whose chunks
         # include empty ones (a filtered multi-file read yields them)
         df = spark.createDataFrame(tbl.combine_chunks(), schema)
     else:
         df = spark_read()
-    if exact and not filtered:
-        df = df.filter(F.col(col).isin(list(values)))
+    if pred is not None and not filtered:
+        df = df.filter(pred())
     return df, dataclasses.replace(stats, read=path)
+
+
+def _read_granules(spark: SparkSession, schema, names: Sequence[str],
+                   stats: PruneStats, pred: Callable[[], Column] | None,
+                   isin: tuple[str, Sequence] | None = None,
+                   ) -> tuple[DataFrame, PruneStats]:
+    """:func:`_read_survivors` of the (file, row group) granules
+    ``names`` (``"<file>#<row_group>"``), in their order; the distributed
+    read is :func:`_read_row_group_slices`."""
+    rgs = [(f, int(rg)) for f, rg in (n.rsplit("#", 1) for n in names)]
+    return _read_survivors(
+        spark, schema, list(dict.fromkeys(f for f, _ in rgs)),
+        lambda: _read_row_group_slices(spark, schema, rgs), stats, pred,
+        isin=isin, row_groups=rgs)
 
 
 def rowgroup_zone_stats(spark: SparkSession, data_path: str,
@@ -1083,22 +1087,21 @@ def pruned_range_read_row_groups(
     clustered layout to make them tight). Granules without statistics
     always survive, so pruning keeps zero false negatives; string stats
     may be writer-truncated, which only ever WIDENS bounds (extra
-    survivors, never lost rows). ``exact=True`` finishes with BETWEEN."""
+    survivors, never lost rows). ``exact=True`` finishes with BETWEEN.
+    The survivors are read like an index lookup's
+    (:func:`_read_survivors`: on the driver within the budget)."""
     stats_rows = rowgroup_zone_stats(spark, data_path, col).collect()
-    surv = [(r["file_path"], int(r["row_group"])) for r in stats_rows
+    surv = [f"{r['file_path']}#{int(r['row_group'])}" for r in stats_rows
             if (not r["has_stats"]) or (r["vmin"] is not None
                                         and r["vmax"] >= lo
                                         and r["vmin"] <= hi)]
-    stats = PruneStats(
-        granularity="row_group",
-        units_total=len(stats_rows),
-        units_survived=len(surv),
-        survivors=tuple(sorted(f"{f}#{rg}" for f, rg in surv)))
-    df = _read_row_group_slices(spark, spark.read.parquet(data_path).schema,
-                                surv)
-    if exact and len(df.columns):
-        df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-    return df, stats
+    stats = PruneStats(granularity="row_group",
+                       units_total=len(stats_rows),
+                       units_survived=len(surv),
+                       survivors=tuple(sorted(surv)))
+    return _read_granules(
+        spark, spark.read.parquet(data_path).schema, surv, stats,
+        (lambda: F.col(col).between(F.lit(lo), F.lit(hi))) if exact else None)
 
 
 def probe_digests(values: Iterable, digest: str = "sha256") -> list[int]:
@@ -1129,16 +1132,19 @@ def probe_digests(values: Iterable, digest: str = "sha256") -> list[int]:
 
 class _UnitFilters:
     """The per-unit filters of one index sidecar — bucket, file or row
-    group rows, each keyed by its ``keys`` columns — and the one survival
-    rule: a unit survives iff its filter may contain ANY probe digest.
+    group rows, each keyed by its key columns (the first of
+    :data:`_UNIT_KEYS` the rows carry, which also names the granularity)
+    — and the one survival rule: a unit survives iff its filter may
+    contain ANY probe digest.
     Microseconds per unit (vectorized kernel over the whole digest
     vector); no Spark job. Filters hydrate per indexed column on first
     probe and are cached, so a single-column workload over a wide
     multi-column index never pays hydration for the others."""
 
-    def __init__(self, pdf: pd.DataFrame, keys: tuple[str, ...],
-                 granularity: str):
-        self.pdf, self._keys, self._granularity = pdf, keys, granularity
+    def __init__(self, pdf: pd.DataFrame):
+        self.pdf = pdf
+        self._keys = next(k for k in _UNIT_KEYS if set(k) <= set(pdf))
+        self.granularity = _UNIT_KEYS[self._keys]
         self._digest = {str(c): str(d) for c, d in pdf.groupby(
             "index_col", sort=True)["digest"].first().items()}
         self._filters: dict[str | None, list] = {}
@@ -1176,7 +1182,7 @@ class _UnitFilters:
         units = self.filters(icol)
         hits = [name for name, filt in units
                 if digs and bool(filt.contains_digests(digs).any())]
-        return hits, PruneStats(granularity=self._granularity,
+        return hits, PruneStats(granularity=self.granularity,
                                 units_total=len(units),
                                 units_survived=len(hits),
                                 survivors=tuple(sorted(hits)))
@@ -1192,42 +1198,6 @@ class _UnitFilters:
         return (icol, *self.survive(icol, digests))
 
 
-def _load_units(spark: SparkSession, index_dir: str, keys: tuple[str, ...],
-                granularity: str) -> _UnitFilters:
-    pdf = read_index(spark, index_dir)
-    if not len(pdf):
-        raise ValueError(f"empty bloom index at {index_dir}")
-    return _UnitFilters(pdf, keys, granularity)
-
-
-def prune_index(
-    index_pdf: pd.DataFrame,
-    digests: Sequence[int],
-    *,
-    key_field: str,
-    granularity: str = "partition",
-) -> PruneStats:
-    """Pure driver-side prune of every row of ``index_pdf``, keyed by
-    ``key_field`` (see :class:`_UnitFilters`)."""
-    return _UnitFilters(index_pdf, (key_field,), granularity) \
-        .survive(None, digests)[1]
-
-
-def read_index(spark: SparkSession, index_path: str) -> pd.DataFrame:
-    """Load index rows from an EXPLICIT parquet dir driver-side (Arrow
-    path — binary-heavy collect). For write_indexed_table tables use
-    :class:`IndexHandle` / :func:`read_table_index`, which resolve the
-    current committed version."""
-    return spark.read.parquet(index_path).toPandas()
-
-
-def read_table_index(spark: SparkSession, path: str) -> pd.DataFrame:
-    """Index rows of the CURRENT committed version of a
-    write_indexed_table table."""
-    bloom_dir, _ = _resolve_index_root(spark, path)
-    return read_index(spark, bloom_dir)
-
-
 def _bucket_scan(data: DataFrame, survivors: Sequence[str]) -> DataFrame:
     """``data`` cut to the surviving bucket directories: a partition
     predicate Catalyst resolves at file listing (``PartitionFilters``), so
@@ -1236,49 +1206,25 @@ def _bucket_scan(data: DataFrame, survivors: Sequence[str]) -> DataFrame:
         [int(s) for s in survivors] or [-1]))
 
 
-def _load_zones(spark: SparkSession, zones_dir: str, meta: _IndexMeta,
-                col: str) -> list:
-    """Zone-map rows of ``col``, collected (not toPandas: zone values must
-    stay py4j-native — an all-NULL bucket would float64-corrupt an int64
-    zone column)."""
-    if col not in meta.zone_cols:
-        raise ValueError(
-            f"no zone map for column {col!r} (indexed zone_cols: "
-            f"{list(meta.zone_cols)}) — pass zone_cols=[...] to "
-            "write_indexed_table")
-    return spark.read.parquet(f"{zones_dir}/{col}").collect()
-
-
-def _zone_range_read(data: DataFrame, zones: list, col: str, lo, hi,
-                     exact: bool) -> tuple[DataFrame, PruneStats]:
-    """Buckets whose zone [vmin, vmax] overlaps [lo, hi] (inclusive), as a
-    :func:`_bucket_scan` of ``data``; ``exact`` adds the BETWEEN filter."""
-    surv = [r for r in zones
-            if r["vmin"] is not None and r["vmax"] >= lo
-            and r["vmin"] <= hi]
-    stats = PruneStats(granularity="partition",
-                       units_total=len(zones),
-                       units_survived=len(surv),
-                       survivors=tuple(sorted(
-                           str(int(r[BUCKET_COL])) for r in surv)))
-    df = _bucket_scan(data, stats.survivors)
-    if exact:
-        df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-    return df, stats
-
-
 class IndexHandle:
-    """Load-once / probe-many driver handle over one indexed table.
+    """Load-once / probe-many driver handle over one index, and the one
+    way to open any: ``IndexHandle(spark, path)`` for a
+    :func:`write_indexed_table` table (data under ``{path}/data``),
+    ``IndexHandle(spark, index_path, data=data_path)`` for a standalone
+    :func:`index_parquet_files` / :func:`index_parquet_row_groups` index.
+    Its granularity (buckets, files or row groups) comes from the
+    sidecar's key columns.
 
     The one-shot entry points (:func:`pruned_read` & co.) re-read and
     re-hydrate the KB-scale index parquet on EVERY call — at bench scale
     the index load IS the lookup cost (~0.2 s vs microseconds of numpy for
-    the probe). A handle pays that load exactly once: construction resolves
-    the current committed version, collects the index rows, and verifies
-    the data-file fingerprint; per-column filters hydrate on first probe
-    and are cached, so each subsequent lookup is numpy over the filters
-    plus the survivors' read: a driver-side pyarrow read returned as a
-    ``LocalTableScan`` (no Spark job) while they fit
+    the probe). A handle pays that load exactly once: construction
+    resolves the current committed version, collects the index rows, and
+    verifies the data-file fingerprint (a legacy in-place standalone
+    index, which has none, its file set); per-column filters hydrate on
+    first probe and are cached, so each subsequent lookup is numpy over
+    the filters plus the survivors' read: a driver-side pyarrow read
+    returned as a ``LocalTableScan`` (no Spark job) while they fit
     ``planner.DRIVER_READ_BUDGET`` on a local root, else the pruned Spark
     scan (see :func:`_read_survivors`).
 
@@ -1292,28 +1238,41 @@ class IndexHandle:
     """
 
     def __init__(self, spark: SparkSession, path: str, *,
-                 verify_files: bool = True):
+                 data: str | None = None, verify_files: bool = True):
         self.spark, self.path = spark, path
+        self.data_path = f"{path}/data" if data is None else data
         self._verify_files = verify_files
         self._bloom_dir, self._zones_dir = _resolve_index_root(spark, path)
-        self._units = _load_units(spark, self._bloom_dir, (BUCKET_COL,),
-                                  "partition")
-        self._index_pdf = self._units.pdf
+        self._units = self._units_at(self._bloom_dir)
+        #: the index rows as loaded (sketch payloads included)
+        self.index_pdf = self._units.pdf
+        self._data_df: DataFrame | None = None
         if verify_files:
-            _check_index_fresh(self._index_pdf, spark, path)
-        self.meta = _read_index_meta(self._index_pdf)
+            if self._bloom_dir == path:  # legacy in-place standalone
+                _check_file_set(self.index_pdf[FILE_COL].unique(),
+                                self._data().inputFiles(),
+                                self._units.granularity)
+            else:
+                _check_index_fresh(self.index_pdf, spark, self.data_path)
+        self.meta = _read_index_meta(self.index_pdf)
         self._zones_cache: dict[str, list] = {}
         self._union_cache: dict[str, object] = {}
-        self._data_df: DataFrame | None = None
         self._files_by_bucket: dict[str, list[str]] | None = None
         self._rg_units: _UnitFilters | None = None
 
+    def _units_at(self, index_dir: str) -> _UnitFilters:
+        """The sidecar rows under ``index_dir``."""
+        pdf = self.spark.read.parquet(index_dir).toPandas()
+        if not len(pdf):
+            raise ValueError(f"empty bloom index at {index_dir}")
+        return _UnitFilters(pdf)
+
     def _data(self) -> DataFrame:
-        """The {path}/data relation, created once: repeated lookups reuse
-        the resolved file listing instead of re-listing per call (at bench
+        """The data relation, created once: repeated lookups reuse the
+        resolved file listing instead of re-listing per call (at bench
         scale the listing is a visible slice of a point lookup)."""
         if self._data_df is None:
-            self._data_df = self.spark.read.parquet(f"{self.path}/data")
+            self._data_df = self.spark.read.parquet(self.data_path)
         return self._data_df
 
     def _bucket_files(self) -> dict[str, list[str]]:
@@ -1328,6 +1287,45 @@ class IndexHandle:
             self._files_by_bucket = files
         return self._files_by_bucket
 
+    def _read(self, hits: list[str], stats: PruneStats,
+              pred: Callable[[], Column] | None,
+              isin: tuple[str, Sequence] | None = None,
+              ) -> tuple[DataFrame, PruneStats]:
+        """:func:`_read_survivors` of the units ``stats`` kept: bucket
+        directories and files in name order, row-group granules in
+        sidecar order (``hits``)."""
+        spark, schema = self.spark, self._data().schema
+        if stats.granularity == "row_group":
+            return _read_granules(spark, schema, hits, stats, pred, isin)
+        if stats.granularity == "partition":
+            by_bucket = self._bucket_files()
+            return _read_survivors(
+                spark, schema,
+                [f for s in stats.survivors for f in by_bucket.get(s, ())],
+                lambda: _bucket_scan(self._data(), stats.survivors), stats,
+                pred, isin=isin)
+        files = list(stats.survivors)
+        if files:
+            # basePath keeps hive partition columns when the data root is
+            # a partitioned table (leaf-file reads drop them otherwise);
+            # only the survivors are listed
+            scan = spark.read.option("basePath", self.data_path) \
+                .parquet(*map(_file_of, files))
+            schema = scan.schema
+        return _read_survivors(
+            spark, schema, files,
+            lambda: scan if files else spark.createDataFrame([], schema),
+            stats, pred, isin=isin)
+
+    def _lookup(self, units: _UnitFilters, probe_values: Sequence,
+                on: str | None, exact: bool) -> tuple[DataFrame, PruneStats]:
+        icol, hits, stats = units.probe(probe_values, on=on)
+        if not exact:
+            return self._read(hits, stats, None)
+        return self._read(hits, stats,
+                          lambda: F.col(icol).isin(list(probe_values)),
+                          (icol, probe_values))
+
     # -- probing ---------------------------------------------------------
 
     def prune(self, probe_values: Sequence, *, on: str | None = None,
@@ -1340,44 +1338,67 @@ class IndexHandle:
     def pruned_read(self, probe_values: Sequence, *,
                     on: str | None = None, exact: bool = True,
                     ) -> tuple[DataFrame, PruneStats]:
-        """Point lookup reading only surviving bucket directories: on the
-        driver while they fit the budget (:func:`_read_survivors`), else
-        ``bucket_id IN (...)`` — Catalyst PartitionFilters prune at file
-        listing. Semantics identical to module-level :func:`pruned_read`;
-        the index load is already paid."""
-        icol, _, stats = self._units.probe(probe_values, on=on)
-        files = self._bucket_files()
-        return _read_survivors(
-            self.spark, self._data().schema,
-            [f for s in stats.survivors for f in files.get(s, ())],
-            lambda: _bucket_scan(self._data(), stats.survivors),
-            icol, probe_values, exact, stats)
+        """Point lookup reading only the surviving units: on the driver
+        while they fit the budget (:func:`_read_survivors`), else bucket
+        directories as ``bucket_id IN (...)`` (Catalyst PartitionFilters
+        prune at file listing), files as the explicit read-path list, row
+        groups as distributed granule reads. Semantics of ``on`` and
+        ``exact`` as in module-level :func:`pruned_read`; the index load
+        is already paid."""
+        return self._lookup(self._units, probe_values, on, exact)
 
     def zones(self, col: str) -> list:
-        """Zone-map rows of one column (py4j-native values — see
-        _zone_agg_rows), loaded once and cached."""
+        """Zone-map rows of one column, loaded once and cached — collected,
+        not toPandas: zone values must stay py4j-native (an all-NULL
+        bucket would float64-corrupt an int64 zone column)."""
+        if col not in self.meta.zone_cols:
+            raise ValueError(
+                f"no zone map for column {col!r} (indexed zone_cols: "
+                f"{list(self.meta.zone_cols)}) — pass zone_cols=[...] to "
+                "write_indexed_table")
         if col not in self._zones_cache:
-            self._zones_cache[col] = _load_zones(
-                self.spark, self._zones_dir, self.meta, col)
+            self._zones_cache[col] = self.spark.read.parquet(
+                f"{self._zones_dir}/{col}").collect()
         return self._zones_cache[col]
 
     def pruned_range_read(self, col: str, lo, hi, *, exact: bool = True,
                           ) -> tuple[DataFrame, PruneStats]:
-        """Range scan through the cached zone maps (see module-level
-        :func:`pruned_range_read`)."""
-        return _zone_range_read(self._data(), self.zones(col), col, lo, hi,
-                                exact)
+        """Range scan through the cached zone maps: reads only buckets
+        whose [vmin, vmax] overlaps [lo, hi] (inclusive), like
+        :meth:`pruned_read` (see module-level :func:`pruned_range_read`);
+        ``exact`` adds the BETWEEN filter."""
+        zones = self.zones(col)
+        hits = [str(int(r[BUCKET_COL])) for r in zones
+                if r["vmin"] is not None and r["vmax"] >= lo
+                and r["vmin"] <= hi]
+        stats = PruneStats(granularity="partition", units_total=len(zones),
+                           units_survived=len(hits),
+                           survivors=tuple(sorted(hits)))
+        return self._read(hits, stats, (lambda: F.col(col).between(
+            F.lit(lo), F.lit(hi))) if exact else None)
+
+    def _rg_dir(self) -> str | None:
+        """The rgbloom sidecar dir of the pinned version, or None when it
+        has none (legacy layouts and standalone indexes never have one)."""
+        if not self._bloom_dir.endswith("/bloom"):
+            return None
+        rgdir = self._bloom_dir[:-len("/bloom")] + "/rgbloom"
+        fs, rgp = _hadoop_fs(self.spark, rgdir)
+        return rgdir if fs.exists(rgp) else None
 
     def _rg_index(self) -> _UnitFilters:
+        """Row-group filters: this index's own when it is a row-group
+        index, else the rgbloom sidecar, loaded once."""
+        if self._units.granularity == "row_group":
+            return self._units
         if self._rg_units is None:
-            rgdir = _rg_sidecar(self.spark, self._bloom_dir)
+            rgdir = self._rg_dir()
             if rgdir is None:
                 raise ValueError(
                     f"no rgbloom sidecar next to {self._bloom_dir} — write "
                     "the table with write_indexed_table(row_group_index="
                     "True) for granule-level pruning")
-            self._rg_units = _load_units(self.spark, rgdir,
-                                         (FILE_COL, RG_COL), "row_group")
+            self._rg_units = self._units_at(rgdir)
         return self._rg_units
 
     def pruned_read_row_groups(self, probe_values: Sequence, *,
@@ -1385,18 +1406,17 @@ class IndexHandle:
                                ) -> tuple[DataFrame, PruneStats]:
         """Granule-level point lookup through the ``rgbloom`` sidecar:
         prunes (file, row group) pairs driver-side and DECODES only
-        survivors (distributed pyarrow granule reads — finer than the
-        bucket-level :meth:`pruned_read`, which stops at directory
-        pruning). Zero FN per granule; sidecar loaded + hydrated once per
-        handle."""
-        return _read_row_groups(self.spark, self._data().schema,
-                                self._rg_index(), probe_values, on, exact)
+        survivors (finer than the bucket-level :meth:`pruned_read`, which
+        stops at directory pruning). Zero FN per granule; sidecar loaded
+        + hydrated once per handle."""
+        return self._lookup(self._rg_index(), probe_values, on, exact)
 
     def refresh(self) -> "IndexHandle":
         """A fresh handle over the CURRENT committed version (this handle
-        stays pinned and usable); keeps this handle's verify_files
-        setting (a forensics handle must stay openable on refresh)."""
-        return IndexHandle(self.spark, self.path,
+        stays pinned and usable); keeps this handle's data root and
+        verify_files setting (a forensics handle must stay openable on
+        refresh)."""
+        return IndexHandle(self.spark, self.path, data=self.data_path,
                            verify_files=self._verify_files)
 
     def verify_route(self, rows: DataFrame, col: str, *,
@@ -1413,7 +1433,11 @@ class IndexHandle:
         may hold a ``maybe`` digest (:meth:`prune`, ``stats``); over
         ``max_keys`` distinct digests it is the whole table and ``stats``
         None. Joining ``maybe`` to ``data`` equals joining it to the whole
-        table."""
+        table. Bucketed indexed tables only."""
+        if self._units.granularity != "partition":
+            raise ValueError(
+                f"verify_route needs an indexed table's bucket index; "
+                f"{self.path} is a {self._units.granularity} index")
         icol = self._units.column(on)
         probed = rows.withColumn(_DIGEST_COL, digest64(
             F.col(col), self._units.digest(icol)))
@@ -1480,43 +1504,6 @@ def pruned_read(
                                                 exact=exact)
 
 
-def pruned_read_files(
-    spark: SparkSession,
-    data_path: str,
-    index_path: str,
-    probe_values: Sequence,
-    *,
-    on: str | None = None,
-    exact: bool = True,
-    verify_files: bool = True,
-) -> tuple[DataFrame, PruneStats]:
-    """File-granularity variant: survivors become the explicit read-path
-    list, so the scan's input is exactly the surviving files. ``on``
-    names the probed column when the index covers several.
-    ``verify_files`` (default on) compares the sidecar's covered file set
-    against the live listing and refuses a stale index (files appended
-    after the index build would otherwise be silently skipped)."""
-    units = _load_units(spark, index_path, (FILE_COL,), "file")
-    full = spark.read.parquet(data_path) if verify_files else None
-    if full is not None:
-        _check_file_set(units.pdf[FILE_COL].unique(), full.inputFiles(),
-                        "per-file")
-    icol, _, stats = units.probe(probe_values, on=on)
-    files = list(stats.survivors)
-    if files:
-        # basePath keeps hive partition columns when data_path is a
-        # partitioned table (leaf-file reads drop them otherwise); only
-        # the survivors are listed
-        scan = spark.read.option("basePath", data_path) \
-            .parquet(*map(_file_of, files))
-    else:  # nothing can match: empty frame, full-table schema
-        scan = full if full is not None else spark.read.parquet(data_path)
-    return _read_survivors(
-        spark, scan.schema, files,
-        lambda: scan if files else spark.createDataFrame([], scan.schema),
-        icol, probe_values, exact, stats)
-
-
 def append_to_indexed_table(df_new: DataFrame, path: str, *,
                             commit_token: str | None = None) -> None:
     """Incremental ingest: append rows to ``{path}/data`` and OR the new
@@ -1548,23 +1535,20 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
     (a missing column raises): a bucket holding files of two physical
     types for one column fails every later Spark read of that bucket."""
     spark = df_new.sparkSession
-    bloom_dir, zones_dir = _resolve_index_root(spark, path)
-    idx_df = spark.read.parquet(bloom_dir)
-    index_pdf = idx_df.toPandas()
-    if not len(index_pdf):
-        raise ValueError(f"empty bloom index at {bloom_dir}")
-    # refuse to append onto a STALE index: a prior crashed append left
-    # data files the filters never digested, and appending now would
-    # refresh the fingerprint over them — laundering the staleness
-    # witness while the orphaned files stay un-indexed (silent zero-FN
-    # break). Recovery for that state is compact_indexed_table / a fresh
-    # write_indexed_table, as the stale error says.
-    _check_index_fresh(index_pdf, spark, path)
-    index_schema = idx_df.schema
-    meta = _read_index_meta(index_pdf)
+    # refuse to append onto a STALE index (the handle's freshness check):
+    # a prior crashed append left data files the filters never digested,
+    # and appending now would refresh the fingerprint over them —
+    # laundering the staleness witness while the orphaned files stay
+    # un-indexed (silent zero-FN break). Recovery for that state is
+    # compact_indexed_table / a fresh write_indexed_table, as the stale
+    # error says.
+    handle = IndexHandle(spark, path)
+    bloom_dir, zones_dir = handle._bloom_dir, handle._zones_dir
+    index_pdf, meta = handle.index_pdf, handle.meta
+    index_schema = spark.read.parquet(bloom_dir).schema
     num_buckets, bucket_source = meta.num_buckets, meta.bucket_source
-    rgdir = _rg_sidecar(spark, bloom_dir)
-    table = spark.read.parquet(f"{path}/data")
+    rgdir = handle._rg_dir()
+    table = handle._data()
     fields = [f for f in table.schema.fields if f.name != BUCKET_COL]
     missing = [f.name for f in fields if f.name not in df_new.columns]
     if missing:
@@ -1584,58 +1568,54 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
                    f"{path}/data", num_buckets, "append")
     new_files = [f for f in spark.read.parquet(f"{path}/data").inputFiles()
                  if f not in before]
-    if not new_files:
-        if commit_token is None:
-            _delete_dir(spark, claimed[1])  # release the unused claim
-            return
-        # Zero-row append WITH a commit token: the caller's exactly-once
-        # contract needs THIS batch's token committed even though no data
-        # changed — releasing the claim here made a replay of an
-        # all-duplicate batch recompute and re-emit (ADVICE r06). Publish
-        # a token-only version: sidecars carried over unchanged, the
-        # manifest re-recording the (unchanged) live file set.
-        def publish_unchanged(vdir: str) -> None:
-            spark.createDataFrame(index_pdf, schema=index_schema) \
-                .write.mode("overwrite").parquet(f"{vdir}/bloom")
-            for c in meta.zone_cols or ():
-                spark.read.parquet(f"{zones_dir}/{c}") \
-                    .write.mode("overwrite").parquet(f"{vdir}/zones/{c}")
-            if rgdir is not None:
-                spark.read.parquet(rgdir).write.mode("overwrite") \
-                    .parquet(f"{vdir}/rgbloom")
-
-        rel = (_data_rel_files(spark, path)
-               if "data_files_sha" in index_pdf.columns else None)
-        _publish_index_version(spark, path, publish_unchanged,
-                               claimed=claimed, commit_token=commit_token,
-                               data_files=rel)
+    if not new_files and commit_token is None:
+        _delete_dir(spark, claimed[1])  # release the unused claim
         return
-    written_new = spark.read.option("basePath", f"{path}/data") \
-        .parquet(*new_files)
-    new_pdf = _build_index_rows(written_new, list(meta.cols), meta.cfg,
-                                num_buckets, bucket_source).toPandas()
-    for c in index_pdf.columns:  # carry meta-only columns (zone_cols, ...)
-        if c not in new_pdf.columns:
-            new_pdf[c] = index_pdf.iloc[0][c]
+    # A zero-row append WITH a commit token still publishes: the caller's
+    # exactly-once contract needs THIS batch's token committed even though
+    # no data changed — releasing the claim here made a replay of an
+    # all-duplicate batch recompute and re-emit (ADVICE r06). That
+    # version carries the sidecars over unchanged, the manifest
+    # re-recording the (unchanged) live file set.
+    merged, new_zones = index_pdf, dict.fromkeys(meta.zone_cols, [])
+    rg_union = None if rgdir is None else spark.read.parquet(rgdir)
+    if new_files:
+        written_new = spark.read.option("basePath", f"{path}/data") \
+            .parquet(*new_files)
+        new_pdf = _build_index_rows(written_new, list(meta.cols), meta.cfg,
+                                    num_buckets, bucket_source).toPandas()
+        for c in index_pdf.columns:  # carry meta-only columns (zone_cols, ...)
+            if c not in new_pdf.columns:
+                new_pdf[c] = index_pdf.iloc[0][c]
 
-    from ..kernel import decode_words, encode_words
+        from ..kernel import decode_words, encode_words
 
-    combined = pd.concat([index_pdf, new_pdf], ignore_index=True)
-    out = []
-    for (bucket, icol), grp in combined.groupby([BUCKET_COL, "index_col"],
-                                                sort=True):
-        words = functools.reduce(BloomSketch.merge, (
-            decode_words(bytes(b), copy=False) for b in grp["sketch"]))
-        row = grp.iloc[0].to_dict()
-        row.update({BUCKET_COL: bucket, "index_col": icol,
-                    "rows_seen": int(grp["rows_seen"].sum()),
-                    "sketch": encode_words(words)})
-        out.append(row)
-    merged = pd.DataFrame(out, columns=list(index_pdf.columns))
+        combined = pd.concat([index_pdf, new_pdf], ignore_index=True)
+        out = []
+        for (bucket, icol), grp in combined.groupby([BUCKET_COL, "index_col"],
+                                                    sort=True):
+            words = functools.reduce(BloomSketch.merge, (
+                decode_words(bytes(b), copy=False) for b in grp["sketch"]))
+            row = grp.iloc[0].to_dict()
+            row.update({BUCKET_COL: bucket, "index_col": icol,
+                        "rows_seen": int(grp["rows_seen"].sum()),
+                        "sketch": encode_words(words)})
+            out.append(row)
+        merged = pd.DataFrame(out, columns=list(index_pdf.columns))
+        if meta.zone_cols:
+            new_zones = _zone_agg_rows(written_new, meta.zone_cols)
+        # rg sidecar (if present): new files are NEW (file, row_group)
+        # keys, so the append is a pure union of old rows + the new files'
+        # rows — no sketch merge at this granularity, ever
+        if rg_union is not None:
+            rg_union = rg_union.unionByName(_build_rg_index_rows(
+                spark, f"{path}/data", list(meta.cols),
+                sketch_row_config(rg_union.first()), files=new_files,
+                base_path=f"{path}/data"))
     # refresh the staleness witness to cover the appended files
     rel_files = None
     if "data_files_sha" in merged.columns:
-        rel_files = _data_rel_files(spark, path)
+        rel_files = list(_data_rel_files(spark, f"{path}/data"))
         n_files, files_sha = _fingerprint_of(rel_files)
         merged["data_file_count"] = n_files
         merged["data_files_sha"] = files_sha
@@ -1644,9 +1624,8 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
     # append-then-merge equals a full rebuild exactly. Values stay in
     # py4j-native Python objects end-to-end (see _zone_agg_rows: pandas
     # would float64-corrupt nullable int64 zones above 2^53).
-    merged_zones = (_zone_agg_rows(written_new, meta.zone_cols)
-                    if meta.zone_cols else {})
-    for c, new in merged_zones.items():
+    merged_zones = {}
+    for c, new in new_zones.items():
         by: dict = {}
         for b, vmin, vmax, n in spark.read.parquet(
                 f"{zones_dir}/{c}").collect() + new:
@@ -1657,22 +1636,10 @@ def append_to_indexed_table(df_new: DataFrame, path: str, *,
                          default=None), seen + n)
         merged_zones[c] = [(b, *v) for b, v in sorted(by.items())]
 
-    # rg sidecar (if present): new files are NEW (file, row_group) keys,
-    # so the append is a pure union of old rows + the new files' rows —
-    # no sketch merge at this granularity, ever
-    rg_union = None
-    if rgdir is not None:
-        old_rg = spark.read.parquet(rgdir)
-        new_rg = _build_rg_index_rows(
-            spark, f"{path}/data", list(meta.cols),
-            sketch_row_config(old_rg.first()), files=new_files,
-            base_path=f"{path}/data")
-        rg_union = old_rg.unionByName(new_rg)
-
     def publish(vdir: str) -> None:
         spark.createDataFrame(merged, schema=index_schema) \
             .write.mode("overwrite").parquet(f"{vdir}/bloom")
-        _write_zone_maps(written_new, merged_zones, f"{vdir}/zones")
+        _write_zone_maps(table, merged_zones, f"{vdir}/zones")
         if rg_union is not None:
             rg_union.write.mode("overwrite").parquet(f"{vdir}/rgbloom")
 
@@ -1724,15 +1691,15 @@ def heal_indexed_table(spark: SparkSession, path: str, *,
             f"{FILES_MANIFEST} manifest (published before manifests "
             "existed) — cannot heal; rebuild via compact_indexed_table")
     recorded = {x for x in raw.decode("utf-8").split("\n") if x}
-    live = set(_data_rel_files(spark, path))
-    missing = sorted(recorded - live)
+    live = _data_rel_files(spark, f"{path}/data")
+    missing = sorted(recorded - live.keys())
     if missing:
         raise ValueError(
             f"{len(missing)} data files recorded by the committed index "
             f"are MISSING from {path}/data (first: {missing[0]}) — that "
             "is data loss or manual deletion, not a crashed append; "
             "refusing to delete anything")
-    orphans = sorted(live - recorded)
+    orphans = sorted(live.keys() - recorded)
     if orphans and not force:
         # the in-flight guard runs AFTER the (slow) listing work and
         # immediately BEFORE the destructive step, minimizing the
@@ -1748,8 +1715,8 @@ def heal_indexed_table(spark: SparkSession, path: str, *,
                     "not-yet-indexed data files would be deleted as "
                     "orphans; ensure no writer is active, then retry "
                     "with force=True (or wait out the TTL)")
-    for rel in orphans:
-        _delete_dir(spark, f"{path}/data/{rel}")
+    for rel in orphans:  # by the listed URI (see _data_rel_files)
+        _delete_dir(spark, _file_of(live[rel]))
     return orphans
 
 
@@ -1840,17 +1807,11 @@ def pruned_range_read(
 
     Bloom meta and zones resolve from ONE committed index version, so a
     concurrent append can never pair fresh zones with stale filters or
-    vice versa. Deliberately LIGHTWEIGHT: a range read needs zone rows
-    and row-0 meta only, so this path reads the index WITHOUT the sketch
-    payloads (_read_meta_pdf exists for exactly this) and hydrates no
-    Bloom filters — use an :class:`IndexHandle` when mixing ranges with
-    point probes."""
-    bloom_dir, zones_dir = _resolve_index_root(spark, path)
-    meta_pdf = _read_meta_pdf(spark, bloom_dir)
-    _check_index_fresh(meta_pdf, spark, path)
-    zones = _load_zones(spark, zones_dir, _read_index_meta(meta_pdf), col)
-    return _zone_range_read(spark.read.parquet(f"{path}/data"), zones, col,
-                            lo, hi, exact)
+    vice versa. A range read hydrates no Bloom filter. One-shot: repeated
+    reads should hold an :class:`IndexHandle`
+    (``handle.pruned_range_read``)."""
+    return IndexHandle(spark, path).pruned_range_read(col, lo, hi,
+                                                      exact=exact)
 
 
 def describe_index(spark: SparkSession, path: str) -> pd.DataFrame:
@@ -1864,7 +1825,7 @@ def describe_index(spark: SparkSession, path: str) -> pd.DataFrame:
 
     from ..kernel import decode_words
 
-    index_pdf = read_table_index(spark, path)
+    index_pdf = IndexHandle(spark, path, verify_files=False).index_pdf
     out = []
     for _, r in index_pdf.iterrows():
         words = decode_words(bytes(r["sketch"]))
@@ -1901,11 +1862,11 @@ def compact_indexed_table(
 
     Returns ``{"buckets", "files_before", "files_after"}``.
     """
-    bloom_dir, _ = _resolve_index_root(spark, path)
-    meta = _read_index_meta(_read_meta_pdf(spark, bloom_dir))
+    handle = IndexHandle(spark, path, verify_files=False)
+    meta = handle.meta
     # the rg sidecar (if the pre-compaction index carried one) is rebuilt
     # over the rewritten files with its own geometry
-    rgdir = _rg_sidecar(spark, bloom_dir)
+    rgdir = handle._rg_dir()
     rg_cfg = (None if rgdir is None
               else sketch_row_config(spark.read.parquet(rgdir).first()))
 

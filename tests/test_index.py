@@ -8,18 +8,15 @@ from pyspark.sql import functions as F
 
 from fastbloom_spark import BloomConfig
 from fastbloom_spark.sources import (
+    IndexHandle,
     index_parquet_files,
-    prune_index,
     pruned_read,
-    pruned_read_files,
     write_indexed_table,
 )
 from fastbloom_spark.sources.index import (
     BUCKET_COL,
     FILE_COL,
     probe_digests,
-    read_index,
-    read_table_index,
 )
 from tests.test_plan_shapes import formatted
 
@@ -37,6 +34,11 @@ def indexed_path(spark, docs, tmp_path_factory):
     write_indexed_table(docs, path, index_col="text", cfg=CFG,
                         bucket_source="doc_id", num_buckets=8)
     return path
+
+
+def index_rows(spark, path, data=None):
+    """The index rows as stored: a handle's load, freshness unchecked."""
+    return IndexHandle(spark, path, data=data, verify_files=False).index_pdf
 
 
 def member_texts(docs, n=5):
@@ -97,8 +99,7 @@ def test_absent_probe_returns_nothing(spark, indexed_path):
 
 
 def test_prune_index_empty_probe_list(spark, indexed_path):
-    index_pdf = read_table_index(spark, indexed_path)
-    stats = prune_index(index_pdf, [], key_field=BUCKET_COL)
+    stats = IndexHandle(spark, indexed_path).prune([])
     assert stats.units_survived == 0 and stats.survivors == ()
 
 
@@ -110,9 +111,9 @@ def test_index_is_deterministic(spark, docs, tmp_path):
         write_indexed_table(docs, p, index_col="text", cfg=CFG,
                             bucket_source="doc_id", num_buckets=8)
     rows_a = {r[BUCKET_COL]: bytes(r["sketch"])
-              for _, r in read_table_index(spark, a).iterrows()}
+              for _, r in index_rows(spark, a).iterrows()}
     rows_b = {r[BUCKET_COL]: bytes(r["sketch"])
-              for _, r in read_table_index(spark, b).iterrows()}
+              for _, r in index_rows(spark, b).iterrows()}
     assert rows_a == rows_b and len(rows_a) == 8
 
 
@@ -121,11 +122,11 @@ def test_file_granularity_roundtrip(spark, docs, tmp_path):
     idx = str(tmp_path / "idx")
     docs.repartition(4).write.parquet(data)
     index_parquet_files(spark, data, idx, index_col="text", cfg=CFG)
-    index_pdf = read_index(spark, idx)
+    index_pdf = index_rows(spark, idx, data)
     assert len(index_pdf) == 4  # one sketch row per physical file
 
     probes = member_texts(docs)
-    got, stats = pruned_read_files(spark, data, idx, probes)
+    got, stats = IndexHandle(spark, idx, data=data).pruned_read(probes)
     want = docs.filter(F.col("text").isin(probes))
     assert sorted(r.doc_id for r in got.collect()) \
         == sorted(r.doc_id for r in want.collect())
@@ -139,7 +140,8 @@ def test_file_granularity_no_survivors_empty_frame(spark, docs, tmp_path):
     idx = str(tmp_path / "idx2")
     docs.repartition(3).write.parquet(data)
     index_parquet_files(spark, data, idx, index_col="text", cfg=CFG)
-    got, stats = pruned_read_files(spark, data, idx, ["absent-abcdef"])
+    got, stats = IndexHandle(spark, idx, data=data) \
+        .pruned_read(["absent-abcdef"])
     if stats.units_survived == 0:  # FPR makes a stray survivor possible
         assert got.count() == 0
         assert got.schema == spark.read.parquet(data).schema
@@ -165,7 +167,7 @@ def test_multi_column_index_one_pass(spark, docs, tmp_path):
     path = str(tmp_path / "multi")
     write_indexed_table(docs, path, index_col=["text", "source"], cfg=CFG,
                         bucket_source="doc_id", num_buckets=8)
-    index_pdf = read_table_index(spark, path)
+    index_pdf = index_rows(spark, path)
     assert sorted(index_pdf["index_col"].unique()) == ["source", "text"]
     assert len(index_pdf) == 16  # 8 buckets x 2 columns
 
@@ -205,7 +207,7 @@ def test_append_equals_full_rebuild_bitwise(spark, docs, tmp_path):
                         bucket_source="doc_id", num_buckets=8)
 
     def words_by_bucket(p):
-        pdf = read_table_index(spark, p)
+        pdf = index_rows(spark, p)
         return {int(r[BUCKET_COL]):
                 (decode_words(bytes(r["sketch"])).tolist(),
                  int(r["rows_seen"]))
@@ -224,9 +226,9 @@ def test_append_empty_frame_is_noop(spark, docs, tmp_path):
     path = str(tmp_path / "noop")
     write_indexed_table(docs, path, index_col="text", cfg=CFG,
                         bucket_source="doc_id", num_buckets=8)
-    before = read_table_index(spark, path)
+    before = index_rows(spark, path)
     append_to_indexed_table(docs.filter(F.lit(False)), path)
-    after = read_table_index(spark, path)
+    after = index_rows(spark, path)
     assert sorted(bytes(b) for b in before["sketch"]) \
         == sorted(bytes(b) for b in after["sketch"])
 
@@ -261,7 +263,7 @@ def test_streaming_ingest_maintains_index(spark, docs, tmp_path):
                         bucket_source="doc_id", num_buckets=8)
 
     def words_of(p):
-        pdf = read_table_index(spark, p)
+        pdf = index_rows(spark, p)
         return {int(r[BUCKET_COL]): decode_words(bytes(r["sketch"])).tolist()
                 for _, r in pdf.iterrows()}
     assert words_of(path) == words_of(full)
@@ -301,7 +303,7 @@ def test_block64_layout_index(spark, docs, tmp_path):
                                              seed=42)
     write_indexed_table(docs, path, index_col="text", cfg=cfg,
                         bucket_source="doc_id", num_buckets=8)
-    index_pdf = read_table_index(spark, path)
+    index_pdf = index_rows(spark, path)
     assert set(index_pdf["layout"]) == {"block64"}
     probes = member_texts(docs)
     got, stats = pruned_read(spark, path, probes)
@@ -451,7 +453,7 @@ def test_compaction_physical_only(spark, docs, tmp_path):
         append_to_indexed_table(p, path)
 
     def index_words(p):
-        pdf = read_table_index(spark, p)
+        pdf = index_rows(spark, p)
         return {(int(r[BUCKET_COL]), r["index_col"]):
                 decode_words(bytes(r["sketch"])).tolist()
                 for _, r in pdf.iterrows()}
@@ -593,7 +595,7 @@ def test_append_after_compaction_stays_bitwise(spark, docs, tmp_path):
                         zone_cols=["n_chars"])
 
     def words_of(p):
-        pdf = read_table_index(spark, p)
+        pdf = index_rows(spark, p)
         return {int(r[BUCKET_COL]): decode_words(bytes(r["sketch"])).tolist()
                 for _, r in pdf.iterrows()}
     assert words_of(path) == words_of(full)
@@ -617,7 +619,7 @@ def test_publish_is_atomic_for_readers(spark, docs, tmp_path):
     write_indexed_table(docs.filter("doc_id < 300"), path, index_col="text",
                         cfg=CFG, bucket_source="doc_id", num_buckets=8)
     bloom_v1, _ = _resolve_index_root(spark, path)
-    before = read_table_index(spark, path)
+    before = index_rows(spark, path)
 
     # simulate the in-flight window: a higher version dir WITHOUT a marker
     import os
@@ -627,7 +629,7 @@ def test_publish_is_atomic_for_readers(spark, docs, tmp_path):
     shutil.copytree(v1_dir, v_bad)
     os.remove(f"{v_bad}/{COMMIT_MARKER}")
     assert _resolve_index_root(spark, path)[0] == bloom_v1
-    assert read_table_index(spark, path).equals(before)
+    assert index_rows(spark, path).equals(before)
     shutil.rmtree(v_bad)
 
     # a real append publishes a NEW committed version; the pre-append one
@@ -757,7 +759,6 @@ def test_stale_index_refused_after_untracked_append(spark, docs, tmp_path):
     with pytest.raises(ValueError, match="STALE"):
         pruned_read(spark, path, probes)
     # escape hatch for forensics: verify_files=False still reads
-    from fastbloom_spark.sources import IndexHandle
     IndexHandle(spark, path, verify_files=False).pruned_read(probes)
 
 
@@ -788,10 +789,8 @@ def test_index_handle_matches_one_shot_reads(spark, docs, indexed_path,
     module pruned_read, range reads vs module pruned_range_read, and
     sidecar row-group reads vs a standalone row-group index built over
     the same data files with the sidecar's geometry."""
-    from fastbloom_spark.sources import (IndexHandle,
-                                         index_parquet_row_groups,
-                                         pruned_range_read,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import (index_parquet_row_groups,
+                                         pruned_range_read)
 
     def same(h, m):
         (got_h, st_h), (got_m, st_m) = h, m
@@ -820,14 +819,14 @@ def test_index_handle_matches_one_shot_reads(spark, docs, indexed_path,
                              index_col="text", cfg=CFG)
     for probes in probe_sets:
         same(handle.pruned_read_row_groups(probes),
-             pruned_read_row_groups(spark, f"{path}/data", rgidx, probes))
+             IndexHandle(spark, rgidx, data=f"{path}/data")
+             .pruned_read(probes))
 
 
 def test_index_handle_union_filter_and_zones(spark, docs, tmp_path):
     """union_filter == module index_filter bitwise (and cached); zone
     range reads through the handle match the one-shot path."""
-    from fastbloom_spark.sources import (IndexHandle, index_filter,
-                                         pruned_range_read)
+    from fastbloom_spark.sources import index_filter, pruned_range_read
 
     path = str(tmp_path / "handle2")
     write_indexed_table(
@@ -853,18 +852,18 @@ def test_index_handle_pins_version_across_append(spark, docs, tmp_path):
     """A handle keeps serving the version it resolved even after an append
     publishes a newer one (GC retains the previous version for exactly
     this); a FRESH handle sees the appended rows."""
-    from fastbloom_spark.sources import IndexHandle, append_to_indexed_table
+    from fastbloom_spark.sources import append_to_indexed_table
 
     path = str(tmp_path / "pin")
     write_indexed_table(docs.filter("doc_id < 300"), path, index_col="text",
                         cfg=CFG, bucket_source="doc_id", num_buckets=8)
     old_handle = IndexHandle(spark, path)
-    n_old = int(old_handle._index_pdf["rows_seen"].sum())
+    n_old = int(old_handle.index_pdf["rows_seen"].sum())
     append_to_indexed_table(docs.filter("doc_id >= 300"), path)
     # pinned: same totals as at load time
-    assert int(old_handle._index_pdf["rows_seen"].sum()) == n_old
+    assert int(old_handle.index_pdf["rows_seen"].sum()) == n_old
     fresh = IndexHandle(spark, path)
-    assert int(fresh._index_pdf["rows_seen"].sum()) == docs.count()
+    assert int(fresh.index_pdf["rows_seen"].sum()) == docs.count()
 
 
 # ------------------------------------------- row-group granularity (r4) --
@@ -894,18 +893,17 @@ def test_rowgroup_index_opens_strict_subset(spark, clustered_table,
     """On a clustered table a point probe opens a STRICT subset of row
     groups (1 + FPR-bounded extras out of 10) and still returns exactly
     the matching rows — zero-FN extended to granule level."""
-    from fastbloom_spark.sources import (index_parquet_row_groups,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import index_parquet_row_groups
 
     idx = str(tmp_path / "rgidx")
     cfg = BloomConfig.from_false_pos(0.01, expected_items=128, seed=42)
     index_parquet_row_groups(spark, clustered_table, idx,
                              index_col="key", cfg=cfg)
-    index_pdf = read_index(spark, idx)
+    index_pdf = index_rows(spark, idx, clustered_table)
     assert len(index_pdf) == 10  # one sketch per row group
 
-    got, stats = pruned_read_row_groups(spark, clustered_table, idx,
-                                        ["k00342"])
+    got, stats = IndexHandle(spark, idx, data=clustered_table) \
+        .pruned_read(["k00342"])
     assert stats.granularity == "row_group"
     assert stats.units_total == 10
     assert stats.units_survived <= 2            # 1 true + FPR slack
@@ -921,8 +919,7 @@ def test_rowgroup_index_zero_fn_and_parity(spark, clustered_table,
     """Every probe's rows equal the full-scan filter (zero FN), including
     multi-granule probes; absent probes return an empty frame with the
     table schema."""
-    from fastbloom_spark.sources import (index_parquet_row_groups,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import index_parquet_row_groups
 
     idx = str(tmp_path / "rgidx2")
     cfg = BloomConfig.from_false_pos(0.01, expected_items=128, seed=42)
@@ -930,14 +927,15 @@ def test_rowgroup_index_zero_fn_and_parity(spark, clustered_table,
                              index_col="key", cfg=cfg)
     full = spark.read.parquet(clustered_table)
     probes = ["k00000", "k00099", "k00100", "k00555", "k00999"]
-    got, stats = pruned_read_row_groups(spark, clustered_table, idx, probes)
+    got, stats = IndexHandle(spark, idx, data=clustered_table) \
+        .pruned_read(probes)
     want = full.filter(F.col("key").isin(probes))
     assert sorted(r.payload for r in got.collect()) \
         == sorted(r.payload for r in want.collect())
     assert stats.units_survived < stats.units_total
 
-    empty, st0 = pruned_read_row_groups(spark, clustered_table, idx,
-                                        ["absent-zzz"])
+    empty, st0 = IndexHandle(spark, idx, data=clustered_table) \
+        .pruned_read(["absent-zzz"])
     if st0.units_survived == 0:
         assert empty.count() == 0
         assert empty.schema == full.schema
@@ -948,19 +946,18 @@ def test_rowgroup_index_zero_fn_and_parity(spark, clustered_table,
 def test_rowgroup_index_multifile(spark, docs, tmp_path):
     """Spark-written multi-file table: the row-group index covers every
     (file, row group) and pruned reads match the full filter."""
-    from fastbloom_spark.sources import (index_parquet_row_groups,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import index_parquet_row_groups
 
     data = str(tmp_path / "mfdata")
     docs.repartition(4).write.parquet(data)
     idx = str(tmp_path / "mfidx")
     index_parquet_row_groups(spark, data, idx, index_col="text", cfg=CFG)
-    index_pdf = read_index(spark, idx)
+    index_pdf = index_rows(spark, idx, data)
     assert index_pdf[FILE_COL].nunique() == 4
     assert int(index_pdf["rows_seen"].sum()) == docs.count()
 
     probes = member_texts(docs, 3)
-    got, stats = pruned_read_row_groups(spark, data, idx, probes)
+    got, stats = IndexHandle(spark, idx, data=data).pruned_read(probes)
     want = docs.filter(F.col("text").isin(probes))
     assert sorted(r.doc_id for r in got.collect()) \
         == sorted(r.doc_id for r in want.collect())
@@ -971,9 +968,7 @@ def test_rowgroup_index_on_bucketed_table(spark, docs, tmp_path):
     """Row-group skipping composes with write_indexed_table's hive layout:
     partition columns (bucket_id) are reconstructed from file paths by the
     granule reader, and results match the full scan column-for-column."""
-    from fastbloom_spark.sources import (index_parquet_row_groups,
-                                         pruned_read_row_groups,
-                                         write_indexed_table)
+    from fastbloom_spark.sources import index_parquet_row_groups
 
     path = str(tmp_path / "rgbucketed")
     write_indexed_table(docs, path, index_col="text", cfg=CFG,
@@ -983,7 +978,8 @@ def test_rowgroup_index_on_bucketed_table(spark, docs, tmp_path):
                              index_col="text", cfg=CFG)
     full = spark.read.parquet(f"{path}/data")
     probes = member_texts(docs, 3)
-    got, stats = pruned_read_row_groups(spark, f"{path}/data", idx, probes)
+    got, stats = IndexHandle(spark, idx, data=f"{path}/data") \
+        .pruned_read(probes)
     assert got.schema == full.schema  # incl. the bucket_id partition col
     want = full.filter(F.col("text").isin(probes))
     key = lambda r: (r["doc_id"], r["bucket_id"])
@@ -999,7 +995,7 @@ def test_rowgroup_sidecar_integrated(spark, docs, tmp_path):
     appends extend the sidecar with the new files' granule rows (pure
     union — new files are new keys); results stay exact across the
     append."""
-    from fastbloom_spark.sources import IndexHandle, append_to_indexed_table
+    from fastbloom_spark.sources import append_to_indexed_table
 
     path = str(tmp_path / "rgsidecar")
     write_indexed_table(docs.filter("doc_id < 400"), path,
@@ -1029,7 +1025,6 @@ def test_rowgroup_sidecar_integrated(spark, docs, tmp_path):
 
 
 def test_rowgroup_sidecar_absent_raises(spark, docs, indexed_path):
-    from fastbloom_spark.sources import IndexHandle
 
     handle = IndexHandle(spark, indexed_path)
     with pytest.raises(ValueError, match="row_group_index=True"):
@@ -1068,7 +1063,7 @@ def test_rowgroup_range_read_from_footer_stats(spark, clustered_table):
 def test_block64_layout_index_end_to_end(spark, docs, tmp_path):
     """A block64-layout config rides through the whole index lifecycle:
     write, pruned read (zero FN), handle probe, append OR-merge."""
-    from fastbloom_spark.sources import IndexHandle, append_to_indexed_table
+    from fastbloom_spark.sources import append_to_indexed_table
 
     cfg = BloomConfig.block64_from_false_pos(0.01, expected_items=80,
                                              seed=42)
@@ -1099,28 +1094,28 @@ def test_file_index_multi_column(spark, docs, tmp_path):
     docs.repartition(4).write.parquet(data)
     index_parquet_files(spark, data, idx, index_col=["text", "source"],
                         cfg=CFG)
-    index_pdf = read_index(spark, idx)
+    index_pdf = index_rows(spark, idx, data)
     assert sorted(index_pdf["index_col"].unique()) == ["source", "text"]
     assert len(index_pdf) == 8  # 4 files x 2 columns
 
     probes = member_texts(docs, 3)
-    got, _ = pruned_read_files(spark, data, idx, probes, on="text")
+    got, _ = IndexHandle(spark, idx, data=data).pruned_read(probes, on="text")
     want = docs.filter(F.col("text").isin(probes))
     assert sorted(r.doc_id for r in got.collect()) \
         == sorted(r.doc_id for r in want.collect())
     src = docs.select("source").first().source
-    got_s, _ = pruned_read_files(spark, data, idx, [src], on="source")
+    got_s, _ = IndexHandle(spark, idx, data=data).pruned_read([src],
+                                                               on="source")
     assert got_s.count() == docs.filter(F.col("source") == src).count()
     with pytest.raises(ValueError, match="pass on="):
-        pruned_read_files(spark, data, idx, probes)
+        IndexHandle(spark, idx, data=data).pruned_read(probes)
 
 
 def test_standalone_file_and_rg_index_refuse_stale(spark, docs, tmp_path):
     """Files appended AFTER a standalone per-file / per-row-group index
     was built are caught by the file-set witness: pruned reads refuse
     loudly instead of silently skipping the new files' rows."""
-    from fastbloom_spark.sources import (index_parquet_row_groups,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import index_parquet_row_groups
 
     data = str(tmp_path / "stale_rg_data")
     docs.filter("doc_id < 400").repartition(2).write.parquet(data)
@@ -1129,18 +1124,20 @@ def test_standalone_file_and_rg_index_refuse_stale(spark, docs, tmp_path):
     index_parquet_files(spark, data, fidx, index_col="text", cfg=CFG)
     index_parquet_row_groups(spark, data, rgidx, index_col="text", cfg=CFG)
     probes = member_texts(docs, 2)
-    pruned_read_files(spark, data, fidx, probes)          # fresh: fine
-    pruned_read_row_groups(spark, data, rgidx, probes)    # fresh: fine
+    IndexHandle(spark, fidx, data=data).pruned_read(probes)   # fresh: fine
+    IndexHandle(spark, rgidx, data=data).pruned_read(probes)  # fresh: fine
 
     docs.filter("doc_id >= 400").repartition(1) \
         .write.mode("append").parquet(data)
     with pytest.raises(ValueError, match="STALE"):
-        pruned_read_files(spark, data, fidx, probes)
+        IndexHandle(spark, fidx, data=data).pruned_read(probes)
     with pytest.raises(ValueError, match="STALE"):
-        pruned_read_row_groups(spark, data, rgidx, probes)
+        IndexHandle(spark, rgidx, data=data).pruned_read(probes)
     # forensics escape hatch still reads (over the indexed files only)
-    pruned_read_files(spark, data, fidx, probes, verify_files=False)
-    pruned_read_row_groups(spark, data, rgidx, probes, verify_files=False)
+    IndexHandle(spark, fidx, data=data, verify_files=False) \
+        .pruned_read(probes)
+    IndexHandle(spark, rgidx, data=data, verify_files=False) \
+        .pruned_read(probes)
 
 
 def test_rowgroup_zone_stats_exact_above_2p53(spark, tmp_path):
@@ -1222,6 +1219,106 @@ def test_standalone_index_rejects_append_mode(spark, docs, tmp_path):
                                  index_col="text", cfg=CFG, mode="ignore")
 
 
+def test_standalone_index_fresh_when_a_file_has_no_sketch_row(spark,
+                                                              tmp_path):
+    """A file whose indexed column is all NULL, or that has no rows,
+    contributes no sketch row. The manifest still lists it, so a fresh
+    standalone file or row-group index opens (no STALE) and reads every
+    matching row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fastbloom_spark.sources import index_parquet_row_groups
+
+    data = str(tmp_path / "nullfile_data")
+    os.makedirs(data)
+    for i, (ns, texts) in enumerate((([1, 2], ["a", "b"]), ([3], [None]),
+                                     ([], []))):
+        pq.write_table(pa.table({"n": pa.array(ns, pa.int64()),
+                                 "text": pa.array(texts, pa.string())}),
+                       f"{data}/part-{i}.parquet")
+    for build in (index_parquet_files, index_parquet_row_groups):
+        idx = str(tmp_path / f"nullfile_{build.__name__}")
+        build(spark, data, idx, index_col="text", cfg=CFG)
+        handle = IndexHandle(spark, idx, data=data)
+        assert len(handle.index_pdf) == 1  # only part-0 has a sketch row
+        for probes, want in ((["a"], [(1, "a")]), (["c"], [])):
+            got, _ = handle.pruned_read(probes)
+            assert [tuple(r) for r in got.collect()] == want
+        # the bucket-only route refuses loudly, not with a bad int() cast
+        with pytest.raises(ValueError, match="bucket index"):
+            handle.verify_route(spark.createDataFrame([("a",)], "k string"),
+                                "k", max_keys=10)
+
+
+@pytest.fixture()
+def legacy_standalone(spark, docs, tmp_path):
+    """Standalone file and row-group indexes in the legacy in-place
+    layout: sidecar rows written with a plain ``.write.parquet`` straight
+    at the index path, no version dir, no fingerprint, no manifest."""
+    from fastbloom_spark.sources.index import (_build_rg_index_rows,
+                                               _meta_cols, _unit_sketches)
+
+    data = str(tmp_path / "legacy_data")
+    docs.repartition(3).write.parquet(data)
+    src = spark.read.parquet(data)
+    rows = {
+        "file": _unit_sketches(
+            src.withColumn(FILE_COL, F.input_file_name()), ["text"], CFG,
+            [FILE_COL], strategy="partial"),
+        "row_group": _build_rg_index_rows(spark, data, ["text"], CFG),
+    }
+    paths = {}
+    for kind, sketches in rows.items():
+        paths[kind] = str(tmp_path / f"legacy_{kind}")
+        _meta_cols(sketches, num_buckets=0, bucket_source=FILE_COL) \
+            .write.parquet(paths[kind])
+    return data, paths
+
+
+def test_legacy_standalone_index_reads_and_refuses_stale(
+        spark, docs, tmp_path, legacy_standalone):
+    """The handle opens a legacy in-place standalone index and returns
+    the rows and stats of the same index published today; after an
+    untracked append its file-set witness still refuses it with STALE.
+    Rebuilding over it with mode="overwrite" clears the in-place files
+    and publishes a version."""
+    import os
+
+    from fastbloom_spark.sources import index_parquet_row_groups
+
+    data, paths = legacy_standalone
+    build_index = {"file": index_parquet_files,
+                "row_group": index_parquet_row_groups}
+    probes = member_texts(docs, 3)
+    for kind, idx in paths.items():
+        current = str(tmp_path / f"current_{kind}")
+        build_index[kind](spark, data, current, index_col="text", cfg=CFG)
+        got, stats = IndexHandle(spark, idx, data=data).pruned_read(probes)
+        want, want_stats = IndexHandle(spark, current, data=data) \
+            .pruned_read(probes)
+        assert stats == want_stats and stats.granularity == kind
+        assert sorted(map(tuple, got.collect())) \
+            == sorted(map(tuple, want.collect()))
+        assert sorted(r.doc_id for r in got.collect()) == sorted(
+            r.doc_id for r in docs.filter(F.col("text").isin(probes))
+            .collect())
+
+    extra = docs.orderBy("doc_id").limit(3)
+    extra.write.mode("append").parquet(data)
+    n_want = docs.filter(F.col("text").isin(probes)).count() + sum(
+        r.text in probes for r in extra.collect())
+    for kind, idx in paths.items():
+        with pytest.raises(ValueError, match="STALE"):
+            IndexHandle(spark, idx, data=data)
+        build_index[kind](spark, data, idx, index_col="text", cfg=CFG)
+        assert not [f for f in os.listdir(idx) if f.endswith(".parquet")]
+        got, _ = IndexHandle(spark, idx, data=data).pruned_read(probes)
+        assert got.count() == n_want
+
+
 # ------------------------------------- driver read vs distributed read --
 
 
@@ -1276,7 +1373,6 @@ def test_driver_read_equals_spark_read_every_key(spark, seeded_table,
     multi-value probe and an absent key, the driver read returns the
     distributed read's rows and schema; an absent key reads 0 rows with
     the full schema."""
-    from fastbloom_spark.sources import IndexHandle
 
     path, keys = seeded_table
     handle = IndexHandle(spark, path)
@@ -1294,7 +1390,6 @@ def test_driver_read_int_probes(spark, seeded_table):
     """An int probe on a string column is not pushed into pyarrow (no
     cast there); Spark's IN casts on both paths, so rows are equal. Int
     probes on a bigint column are pushed down, with the same rows."""
-    from fastbloom_spark.sources import IndexHandle
 
     path, _ = seeded_table
     handle = IndexHandle(spark, path)
@@ -1314,7 +1409,6 @@ def test_driver_read_plans_spark_in_only_where_pyarrow_did_not_filter(
     IN. Both return the distributed read's rows. (The analyzed plan:
     the optimizer folds a Filter over a LocalRelation into the relation.)
     """
-    from fastbloom_spark.sources import IndexHandle
 
     def analyzed(df):
         return df._jdf.queryExecution().analyzed().toString()
@@ -1335,13 +1429,11 @@ def test_driver_read_plans_spark_in_only_where_pyarrow_did_not_filter(
 
 def test_driver_read_files_and_row_groups_equal_spark(spark, docs,
                                                       tmp_path):
-    """pruned_read_files and pruned_read_row_groups (module and handle)
+    """Standalone file and row-group indexes and the rgbloom sidecar
     over a hive-partitioned table (bucket_id dirs): driver and
     distributed reads agree on rows and schema, partition column
     included."""
-    from fastbloom_spark.sources import (IndexHandle,
-                                         index_parquet_row_groups,
-                                         pruned_read_row_groups)
+    from fastbloom_spark.sources import index_parquet_row_groups
 
     path = str(tmp_path / "hive")
     write_indexed_table(docs, path, index_col="text", cfg=CFG,
@@ -1352,14 +1444,14 @@ def test_driver_read_files_and_row_groups_equal_spark(spark, docs,
     index_parquet_files(spark, data, fidx, index_col="text", cfg=CFG)
     index_parquet_row_groups(spark, data, rgidx, index_col="text", cfg=CFG)
     handle = IndexHandle(spark, path)
+    fhandle = IndexHandle(spark, fidx, data=data)
+    rghandle = IndexHandle(spark, rgidx, data=data)
     texts = member_texts(docs, 3)
     for probes in ([texts[0]], texts, ["absent-abcdef"]):
         for exact in (True, False):
             for read in (
-                    lambda: pruned_read_files(spark, data, fidx, probes,
-                                              exact=exact),
-                    lambda: pruned_read_row_groups(spark, data, rgidx,
-                                                   probes, exact=exact),
+                    lambda: fhandle.pruned_read(probes, exact=exact),
+                    lambda: rghandle.pruned_read(probes, exact=exact),
                     lambda: handle.pruned_read_row_groups(probes,
                                                           exact=exact)):
                 got, want = _driver_and_spark(read)
@@ -1373,8 +1465,7 @@ def test_driver_read_merges_appended_file_schemas(spark, tmp_path):
     whose parquet fields are required where the first write's are
     optional; the driver read casts each file to the table's schema, as
     Spark's read does, and returns the distributed read's rows."""
-    from fastbloom_spark.sources import (IndexHandle,
-                                         append_to_indexed_table)
+    from fastbloom_spark.sources import append_to_indexed_table
 
     path = str(tmp_path / "appended")
     first = spark.createDataFrame(
@@ -1401,8 +1492,7 @@ def test_append_casts_to_table_schema(spark, tmp_path):
     append lacking a table column is refused before anything is
     written."""
     from fastbloom_spark.plans import planner
-    from fastbloom_spark.sources import (IndexHandle,
-                                         append_to_indexed_table)
+    from fastbloom_spark.sources import append_to_indexed_table
 
     path = str(tmp_path / "append_types")
     write_indexed_table(
@@ -1439,7 +1529,6 @@ def test_file_index_over_timestamp_partitions(spark, tmp_path):
 
     from fastbloom_spark.sources import (index_parquet_row_groups,
                                          pruned_range_read_row_groups,
-                                         pruned_read_row_groups,
                                          rowgroup_zone_stats)
 
     tz = spark.conf.get("spark.sql.session.timeZone")
@@ -1451,16 +1540,17 @@ def test_file_index_over_timestamp_partitions(spark, tmp_path):
         spark.createDataFrame(rows, "key string, n int, ts timestamp") \
             .write.partitionBy("ts").parquet(data)
         index_parquet_files(spark, data, idx, index_col="key", cfg=CFG)
+        handle = IndexHandle(spark, idx, data=data)
         for probes in (["k3"], ["k0", "k7", "k19"], ["absent"]):
             got = _assert_same_read(*_driver_and_spark(
-                lambda: pruned_read_files(spark, data, idx, probes)))
+                lambda: handle.pruned_read(probes)))
             assert got == sorted((r for r in rows if r[0] in probes),
                                  key=repr)
         rg = str(tmp_path / "ts_rg")
         index_parquet_row_groups(spark, data, rg, index_col="key", cfg=CFG)
         for probes in (["k3"], ["k0", "k7", "k19"], ["absent"]):
             got = _assert_same_read(*_driver_and_spark(
-                lambda: pruned_read_row_groups(spark, data, rg, probes)))
+                lambda: IndexHandle(spark, rg, data=data).pruned_read(probes)))
             assert got == sorted((r for r in rows if r[0] in probes),
                                  key=repr)
         zones = rowgroup_zone_stats(spark, data, "n").collect()
@@ -1472,15 +1562,16 @@ def test_file_index_over_timestamp_partitions(spark, tmp_path):
         spark.createDataFrame(rows[:1], "key string, n int, ts timestamp") \
             .write.mode("append").partitionBy("ts").parquet(data)
         with pytest.raises(ValueError, match="STALE"):
-            pruned_read_files(spark, data, idx, ["k3"])
+            IndexHandle(spark, idx, data=data).pruned_read(["k3"])
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def test_one_shot_range_read_loads_no_filters(spark, docs, tmp_path,
                                               monkeypatch):
-    """Module pruned_range_read needs zone rows and row-0 meta only: with
-    filter hydration made to fail it still returns the exact rows."""
+    """Module pruned_range_read (a handle's range read) needs zone rows
+    and meta only: with filter hydration made to fail it still returns
+    the exact rows."""
     from fastbloom_spark.operators import bloom
     from fastbloom_spark.sources import index, pruned_range_read
 

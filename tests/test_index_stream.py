@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 
 from fastbloom_spark import BloomConfig
 from fastbloom_spark.sources import index as index_mod
-from fastbloom_spark.sources import (committed_commit_tokens,
+from fastbloom_spark.sources import (IndexHandle, committed_commit_tokens,
                                      heal_indexed_table, pruned_read,
-                                     read_table_index, write_indexed_table)
+                                     write_indexed_table)
 from fastbloom_spark.streaming import indexed_ingest_batch_fn
 
 CFG = BloomConfig.from_false_pos(0.01, expected_items=500, seed=42)
@@ -36,7 +36,7 @@ def _ingest_fn(path):
 def _index_words(spark, path):
     from fastbloom_spark.kernel import decode_words
 
-    pdf = read_table_index(spark, path)
+    pdf = IndexHandle(spark, path, verify_files=False).index_pdf
     return {(int(r["bucket_id"]), r["index_col"]):
             decode_words(bytes(r["sketch"])).tolist()
             for _, r in pdf.iterrows()}
@@ -105,6 +105,31 @@ def test_crash_between_data_and_publish_heals_on_replay(
     assert df.count() == want
 
 
+def test_heal_deletes_orphans_of_a_table_under_a_data_dir(
+        spark, events, tmp_path):
+    """A table root inside a directory named ``data`` (``.../data/tbl``):
+    a file's manifest name starts after the URI's FIRST ``/data/``, so a
+    path rebuilt from the name does not exist. Heal deletes each orphan
+    by its listed URI, and the table opens fresh again."""
+    from fastbloom_spark.sources.index import BUCKET_COL, bucket_col
+
+    path = str(tmp_path / "data" / "tbl")
+    b0 = events.filter(F.col("event_id") % 3 == 0)
+    write_indexed_table(b0, path, index_col="event_type", cfg=CFG,
+                        bucket_source="event_id", num_buckets=4)
+    # a crashed append: data files written, no index publish
+    events.filter(F.col("event_id") % 3 == 1) \
+        .withColumn(BUCKET_COL, bucket_col("event_id", 4)) \
+        .write.mode("append").partitionBy(BUCKET_COL) \
+        .parquet(f"{path}/data")
+    with pytest.raises(ValueError, match="STALE"):
+        IndexHandle(spark, path)
+    assert heal_indexed_table(spark, path, force=True)
+    assert spark.read.parquet(f"{path}/data").count() == b0.count()
+    df, _ = IndexHandle(spark, path).pruned_read(["click"], on="event_type")
+    assert df.count() == b0.filter(F.col("event_type") == "click").count()
+
+
 def test_heal_noop_when_consistent_and_refuses_missing(
         spark, events, tmp_path):
     path = str(tmp_path / "tbl")
@@ -115,7 +140,7 @@ def test_heal_noop_when_consistent_and_refuses_missing(
 
     # delete a RECORDED data file: that is data loss, not a crashed
     # append — heal must refuse to touch anything
-    a_file = index_mod._data_rel_files(spark, path)[0]
+    a_file = next(iter(index_mod._data_rel_files(spark, f"{path}/data")))
     index_mod._delete_dir(spark, f"{path}/data/{a_file}")
     with pytest.raises(ValueError, match="MISSING"):
         heal_indexed_table(spark, path)

@@ -385,3 +385,83 @@ def test_index_lookup_falls_back_to_partition_pruned_file_scan(
     plan = formatted(df)
     scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert scan and index_mod.BUCKET_COL in scan[0], plan
+
+
+@pytest.fixture(scope="module")
+def range_tables(spark, sf_dir, tmp_path_factory):
+    """An indexed documents table with an ``n_chars`` zone map, and the
+    documents sorted by doc_id in one parquet file of 100-row row
+    groups (footer statistics)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fastbloom_spark.sources import write_indexed_table
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = tmp_path_factory.mktemp("ranges")
+    path = str(base / "docs")
+    cfg = BloomConfig.from_false_pos(0.01, expected_items=80, seed=42)
+    write_indexed_table(docs, path, index_col="text", cfg=cfg,
+                        bucket_source="doc_id", num_buckets=8,
+                        zone_cols=["n_chars"])
+    (base / "flat").mkdir()
+    pq.write_table(pa.Table.from_pandas(
+        docs.select("doc_id", "text").orderBy("doc_id").toPandas(),
+        preserve_index=False), str(base / "flat" / "part-0.parquet"),
+        row_group_size=100)
+    return path, str(base / "flat")
+
+
+def _range_read(spark, range_tables, kind):
+    from fastbloom_spark.sources import (IndexHandle,
+                                         pruned_range_read_row_groups)
+
+    path, flat = range_tables
+    if kind == "zone":
+        return IndexHandle(spark, path).pruned_range_read("n_chars", 100,
+                                                          140)
+    return pruned_range_read_row_groups(spark, flat, "doc_id", 150, 249)
+
+
+@pytest.mark.parametrize("kind", ["zone", "footer"])
+def test_range_read_under_budget_is_local_scan_without_jobs(
+        spark, range_tables, kind):
+    """Under the driver-read budget, zone-map and footer-range reads are
+    a LocalTableScan: Spark's BETWEEN folds into it, and collecting it
+    starts no Spark job (the footer statistics scan runs at call time)."""
+    df, stats = _range_read(spark, range_tables, kind)
+    sc = spark.sparkContext
+    sc.setJobGroup("driver_range", "count range read jobs", False)
+    try:
+        rows = df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("driver_range")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats.read == "driver"
+    assert rows and 0 < stats.units_survived
+    plan = plan_of(df)
+    assert plan.startswith("LocalTableScan"), plan
+    assert "FileScan" not in plan
+    assert list(jobs) == []
+
+
+@pytest.mark.parametrize("kind", ["zone", "footer"])
+def test_range_read_over_budget_keeps_distributed_read(
+        spark, range_tables, monkeypatch, kind):
+    """With the budget at 0, a zone-map range read keeps the surviving
+    buckets as PartitionFilters of the parquet scan, and a footer range
+    read keeps the distributed granule read."""
+    from fastbloom_spark.plans import planner
+    from fastbloom_spark.sources.index import BUCKET_COL
+
+    monkeypatch.setattr(planner, "DRIVER_READ_BUDGET", 0)
+    df, stats = _range_read(spark, range_tables, kind)
+    assert stats.read == "spark"
+    assert df.count() > 0
+    if kind == "zone":
+        plan = formatted(df)
+        scan = [l for l in plan.splitlines() if "PartitionFilters" in l]
+        assert scan and BUCKET_COL in scan[0], plan
+    else:
+        plan = plan_of(df)
+        assert "MapInArrow" in plan and "FileScan" not in plan, plan

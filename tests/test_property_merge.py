@@ -116,20 +116,21 @@ def test_prune_zero_fn_and_monotone(data, extra):
     survivors; (2) monotonicity — adding probes never shrinks the
     survivor set (more lookups can only open more units)."""
     from fastbloom_spark.kernel import digest64_bytes
-    from fastbloom_spark.sources.index import prune_index
+    from fastbloom_spark.sources.index import _UnitFilters
 
     cfg = BloomConfig.with_num_bits(1 << 10, num_hashes=4, seed=3)
     pdf = _index_frame(data, cfg)
     members = sorted({v for vals in data.values() for v in vals})
     probes = members[:3]
     digs = [digest64_bytes(v.encode()) for v in probes]
-    stats = prune_index(pdf, digs, key_field="bucket_id")
+    units = _UnitFilters(pdf)
+    stats = units.survive(None, digs)[1]
     for v in probes:  # zero-FN: every home bucket survives
         for b, vals in data.items():
             if v in vals:
                 assert str(b) in stats.survivors
     digs2 = digs + [digest64_bytes(v.encode()) for v in extra]
-    stats2 = prune_index(pdf, digs2, key_field="bucket_id")
+    stats2 = units.survive(None, digs2)[1]
     assert set(stats.survivors) <= set(stats2.survivors)
     assert stats2.units_total == stats.units_total == len(data)
 
